@@ -71,6 +71,24 @@ def fit_line(line_obj: dict, budget: int = LINE_BUDGET) -> dict:
     return out
 
 
+def write_new_attempt(base: str, record: dict) -> str:
+    """Write ``record`` as JSON to the first free ``<stem>_a<N><ext>``
+    next to ``base`` and return that path.  Exclusive create: a rerun
+    adds an attempt and never overwrites one (the r5 round record was
+    lost to a plain ``"w"``).  Promoting an attempt to ``base`` stays a
+    deliberate copy, made by hand."""
+    stem, ext = os.path.splitext(base)
+    n = 1
+    while True:
+        path = f"{stem}_a{n}{ext}"
+        try:
+            with open(path, "x") as f:
+                json.dump(record, f, indent=1)
+            return path
+        except FileExistsError:
+            n += 1
+
+
 def main() -> None:
     # hold the shared worklock for the whole bench: a live calm_hunt
     # (scripts/calm_hunt.py) defers while it exists, so the round's
@@ -718,9 +736,8 @@ def _main_inner() -> None:
         os.path.join(_REPO, "bench_artifacts", _suite_name))
     try:
         os.makedirs(os.path.dirname(suite_out), exist_ok=True)
-        with open(suite_out, "w") as f:
-            json.dump(full, f, indent=1)
-        suite_ref = os.path.relpath(suite_out, _REPO)
+        suite_ref = os.path.relpath(write_new_attempt(suite_out, full),
+                                    _REPO)
     except OSError as e:  # read-only checkout: keep the line parseable
         suite_ref = f"unwritable ({e})"
 

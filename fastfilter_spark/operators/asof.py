@@ -108,6 +108,8 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
     the newest ``right`` row with ``right[right_time] <=
     left[left_time]`` on the same ``on`` key (inclusive; ties take
     the right row).  Unmatched left rows keep null right columns.
+    Null ``on`` keys match each other, on the bucketed path too (both
+    windows group nulls together).
 
     ``right_cols`` defaults to every right column except ``on`` and
     ``right_time``; each is emitted as ``<name><suffix>`` (the
@@ -145,7 +147,8 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
         raise ValueError(
             f"suffixed right columns {sorted(clash)} collide with left "
             f"columns; pass a different suffix")
-    for rc in (_TAG, "_ff_t", "_ff_payload", "_ff_m", "_ff_bkt", "_ff_s"):
+    for rc in (_TAG, "_ff_t", "_ff_payload", "_ff_m", "_ff_bkt", "_ff_s",
+               "_ff_rk", "_ff_rb"):
         if rc in left.columns or rc in right.columns:
             raise ValueError(
                 f"reserved column {rc!r} present in input; rename it")
@@ -231,12 +234,19 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
             # window's tie-break (docstring above)
             newest = F.max_by("_ff_payload", "_ff_t")
         rsum = (unioned.where(F.col(_TAG) == 0)
-                .groupBy(_q(on), "_ff_bkt")
-                .agg(newest.alias("_ff_s")))
+                .groupBy(_q(on).alias("_ff_rk"), "_ff_bkt")
+                .agg(newest.alias("_ff_s"))
+                .withColumnRenamed("_ff_bkt", "_ff_rb"))
         occupied = unioned.select(_q(on).alias(on), "_ff_bkt").distinct()
         wseed = (Window.partitionBy(_q(on)).orderBy("_ff_bkt")
                  .rowsBetween(Window.unboundedPreceding, -1))
-        seeds = (occupied.join(rsum, [on, "_ff_bkt"], "left")
+        # null-safe on the key: both windows group null keys together,
+        # so a null key carries its seed like any other key (a plain
+        # equi-join would drop it and lose cross-bucket matches the
+        # unbucketed path returns)
+        seed_on = (_q(on).eqNullSafe(F.col("_ff_rk"))
+                   & (F.col("_ff_bkt") == F.col("_ff_rb")))
+        seeds = (occupied.join(rsum, seed_on, "left")
                  .select(_q(on).alias(on), "_ff_bkt",
                          F.last("_ff_s", ignorenulls=True).over(wseed)
                           .alias("_ff_payload"))

@@ -15,11 +15,15 @@ Unlike the byte-blob sketches in functions/sketches.py, KMV is
 expressed directly as DataFrame algebra, which buys three things at
 100 TB:
 
-- **Map-side reduction to O(k) rows per partition** before any
-  shuffle: ``mapInPandas`` folds each partition's batches into its
-  running bottom-k, so the exchange moves ``<= k * num_partitions``
-  8-byte rows instead of the distinct key set (the groupBy-distinct
-  alternative shuffles every distinct key — terabytes at 10^12 keys).
+- **Map-side reduction to O(k) rows per fold task** before any
+  shuffle: ``mapInPandas`` folds each task's batches into its running
+  bottom-k, so the exchange moves ``<= k * fold_tasks`` 8-byte rows
+  instead of the distinct key set (the groupBy-distinct alternative
+  shuffles every distinct key — terabytes at 10^12 keys).  Fold tasks
+  are sized by input bytes, not scan splits (``plans.size_python_fold``):
+  a Python task has a fixed start-up cost, so a small input folds in
+  ``ceil(bytes / spark.sql.files.openCostInBytes)`` tasks while a large
+  one keeps one task per input partition.
 - **Everything after the fold is exact integer arithmetic** (the
   estimator divides in DECIMAL(38,0) / HUGEINT), so results are
   bit-identical under any partitioning and hash-checkable by a DuckDB
@@ -41,6 +45,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from fastfilter_spark.plans import size_python_fold
 
 __all__ = ["portable_hash60", "bottomk_hashes", "kmv_distinct",
            "kmv_jaccard", "HMAX60"]
@@ -70,12 +76,21 @@ def bottomk_hashes(df: DataFrame, key_col: str, k: int,
     single-column DataFrame ``h: long`` (``< k`` rows when the input
     has fewer distinct keys; null keys are ignored).
 
-    Plan shape: one narrow ``mapInPandas`` pass folds every partition
-    to its own bottom-k (numpy ``np.unique`` keeps the running set
+    Plan shape: one narrow ``mapInPandas`` pass folds every fold task's
+    rows to its own bottom-k (numpy ``np.unique`` keeps the running set
     sorted, so each batch merge is O(batch log batch)), then a global
-    ``TakeOrderedAndProject`` over the ``<= k * partitions`` survivors.
+    ``TakeOrderedAndProject`` over the ``<= k * fold_tasks`` survivors.
     No wide exchange of the key set ever happens.
     """
+    partials = _bottomk_partials(df, key_col, k, hash_expr)
+    # distinct() first: the same hash can survive in several fold tasks'
+    # bottom-k; the sets are tiny so this exchange is O(k * fold_tasks)
+    return partials.distinct().orderBy("h").limit(k)
+
+
+def _bottomk_partials(df: DataFrame, key_col: str, k: int,
+                      hash_expr=None) -> DataFrame:
+    """Each fold task's own bottom-k as ``h: long`` rows."""
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
     h = hash_expr if hash_expr is not None \
@@ -92,10 +107,7 @@ def bottomk_hashes(df: DataFrame, key_col: str, k: int,
         if len(best):
             yield pd.DataFrame({"h": best})
 
-    partials = hashed.mapInPandas(fold, schema="h long")
-    # distinct() first: the same hash can survive in several partitions'
-    # bottom-k; the sets are tiny so this exchange is O(k * partitions)
-    return partials.distinct().orderBy("h").limit(k)
+    return size_python_fold(hashed).mapInPandas(fold, schema="h long")
 
 
 def kmv_distinct(df: DataFrame, key_col: str, k: int = 1024,

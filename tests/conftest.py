@@ -53,6 +53,32 @@ def poison_collect(message: str):
         cls.collect = orig
 
 
+@contextlib.contextmanager
+def sql_conf(spark, key: str, value: str):
+    """Set one session conf for the block, then restore it."""
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def one_fold_task_per_partition(spark):
+    """Lower ``spark.sql.files.openCostInBytes`` (the unit the library's
+    Python-fold sizing divides input bytes by) to one byte, so a tiny
+    test input keeps its own partitioning and its sketch folds emit one
+    partial per partition: merge-path tests then merge several partials
+    instead of one."""
+    return sql_conf(spark, "spark.sql.files.openCostInBytes", "1")
+
+
+def count_partials(partials) -> int:
+    """Fold tasks that emitted at least one partial row."""
+    from pyspark.sql import functions as F
+    return partials.select(F.spark_partition_id()).distinct().count()
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

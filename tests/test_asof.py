@@ -231,6 +231,22 @@ def test_bucketed_null_times_and_map_payload(spark):
     assert got == {"a": {"ua": "deny"}, "b": None}
 
 
+def test_bucketed_null_keys_match_unbucketed(spark):
+    # a null key's only candidate sits in an EARLIER bucket, so it
+    # arrives through the seed carry; both windows group null keys
+    # together, so both paths must match it
+    left = spark.createDataFrame(
+        [(None, 100, "n_late"), (None, 3, "n_early"), (1, 100, "one")],
+        "k long, t long, lv string")
+    right = spark.createDataFrame(
+        [(None, 2, 20), (1, 5, 50)], "k long, rt long, rv long")
+    outs = [{r["lv"]: r["rv_r"]
+             for r in asof_join(left, right, "k", "t", "rt",
+                                bucket=b).collect()}
+            for b in (None, 10)]
+    assert outs[0] == outs[1] == {"n_late": 20, "n_early": 20, "one": 50}
+
+
 def test_property_bucketed_equals_unbucketed_and_python_oracle(spark):
     """Randomized equivalence: both execution paths against a direct
     python greatest-lower-bound oracle (hypothesis drives the data; a
@@ -238,10 +254,11 @@ def test_property_bucketed_equals_unbucketed_and_python_oracle(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    rows_l = st.lists(st.tuples(st.integers(0, 3),
-                                st.integers(-50, 50)),
+    # null keys group together on both paths (the oracle's None == None)
+    keys = st.one_of(st.none(), st.integers(0, 3))
+    rows_l = st.lists(st.tuples(keys, st.integers(-50, 50)),
                       min_size=1, max_size=40)
-    rows_r = st.lists(st.tuples(st.integers(0, 3),
+    rows_r = st.lists(st.tuples(keys,
                                 st.integers(-50, 50),
                                 st.integers(0, 9)),
                       min_size=0, max_size=40)

@@ -41,11 +41,20 @@ def test_hll_by_key_within_bound(spark, keyed_df):
 
 
 def test_grouped_estimates_partition_invariant(spark, keyed_df):
-    outs = []
-    for parts in (1, 3, 16):
-        got = hll_distinct_by_key(keyed_df.repartition(parts), ["k"], "v")
-        outs.append(sorted((r["k"], r["approx_distinct"])
-                           for r in got.collect()))
+    from fastfilter_spark.operators.sketch_agg import _by_key_partials
+    from tests.conftest import count_partials, one_fold_task_per_partition
+    outs, partials = [], []
+    # keep one partial per partition: the fold sizing would run this
+    # tiny input as one task, and the per-key merge would merge nothing
+    with one_fold_task_per_partition(spark):
+        for parts in (1, 3, 16):
+            src = keyed_df.repartition(parts)
+            got = hll_distinct_by_key(src, ["k"], "v")
+            outs.append(sorted((r["k"], r["approx_distinct"])
+                               for r in got.collect()))
+            partials.append(count_partials(_by_key_partials(
+                src, ["k"], "v", lambda: HyperLogLog(12), False, 4096)))
+    assert partials == [1, 3, 16]
     assert outs[0] == outs[1] == outs[2]
 
 
@@ -102,9 +111,19 @@ def test_no_row_shuffle_in_plan(spark, keyed_df):
     """The exchange must carry partial BLOBS, not rows: the plan's
     only shuffle sits above the first mapInPandas (map-side combine),
     so raw rows never cross the cluster."""
-    df = sketch_by_key(keyed_df, ["k"], "v", lambda: HyperLogLog(10))
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # one partial stage feeding one hash-partitioned exchange
+    from tests.conftest import one_fold_task_per_partition
+
+    def plan_of():
+        df = sketch_by_key(keyed_df, ["k"], "v", lambda: HyperLogLog(10))
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    # a tiny input folds in ONE task, so the per-key merge needs no
+    # exchange at all
+    assert "Exchange" not in plan_of()
+    # the shape of an input too large to coalesce: one partial stage
+    # feeding one hash-partitioned exchange
+    with one_fold_task_per_partition(spark):
+        plan = plan_of()
     first_exchange = plan.find("Exchange hashpartitioning")
     first_partial = plan.find("MapInPandas")
     assert first_exchange != -1 and first_partial != -1

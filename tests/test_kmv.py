@@ -37,11 +37,19 @@ def test_bottomk_matches_python_replay(spark):
 
 
 def test_bottomk_partitioning_invariance(spark):
+    from fastfilter_spark.operators.kmv import _bottomk_partials
+    from tests.conftest import count_partials, one_fold_task_per_partition
     keys = _keys("u", 800)
-    a = [r.h for r in
-         bottomk_hashes(_df(spark, keys, 1), "key", 64).collect()]
-    b = [r.h for r in
-         bottomk_hashes(_df(spark, keys, 13), "key", 64).collect()]
+    # keep one bottom-k partial per partition, so the 13-way run merges
+    # 13 partials instead of the fold sizing's one
+    with one_fold_task_per_partition(spark):
+        a = [r.h for r in
+             bottomk_hashes(_df(spark, keys, 1), "key", 64).collect()]
+        b = [r.h for r in
+             bottomk_hashes(_df(spark, keys, 13), "key", 64).collect()]
+        partials = [count_partials(_bottomk_partials(
+            _df(spark, keys, n), "key", 64)) for n in (1, 13)]
+    assert partials == [1, 13]
     assert sorted(a) == sorted(b) == sorted({_h60(s) for s in keys})[:64]
 
 

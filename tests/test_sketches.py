@@ -157,9 +157,18 @@ def test_spark_hll_vs_exact(spark, lineitem):
 
 def test_spark_hll_partition_order_invariance(spark, lineitem):
     from fastfilter_spark.functions.sketches import HyperLogLog
+    from fastfilter_spark.operators.sketch_agg import _sketch_partials
+    from tests.conftest import count_partials, one_fold_task_per_partition
     keyed = lineitem.select(F.col("l_orderkey").cast("long").alias("k"))
-    a = sketch_column(keyed.repartition(3), "k", lambda: HyperLogLog(11))
-    b = sketch_column(keyed.repartition(11, "k"), "k", lambda: HyperLogLog(11))
+    # the fold sizing would run this tiny input as ONE task, which
+    # merges nothing: keep one partial per partition so both plans
+    # really merge (3 and 11 partials)
+    with one_fold_task_per_partition(spark):
+        ins = (keyed.repartition(3), keyed.repartition(11, "k"))
+        a, b = (sketch_column(d, "k", lambda: HyperLogLog(11)) for d in ins)
+        partials = [count_partials(_sketch_partials(
+            d, "k", {"s": lambda: HyperLogLog(11)}, False)) for d in ins]
+    assert partials == [3, 11]
     assert a.to_bytes() == b.to_bytes()
 
 
