@@ -4,10 +4,14 @@ training-data-pipeline operators around them.  See README.md."""
 
 __version__ = "0.1.0"
 
-from fastfilter_spark.operators.dist import (  # noqa: F401
+from fastfilter_spark._worker import install_zip_invalidation_hook
+
+install_zip_invalidation_hook()
+
+from fastfilter_spark.operators.dist import (  # noqa: F401,E402
     ShardedFilter, build_sharded, semi_join_prune,
 )
-from fastfilter_spark.operators.local import (  # noqa: F401
+from fastfilter_spark.operators.local import (  # noqa: F401,E402
     FuseFilter, XorFilter, build_filter, filter_from_bytes,
 )
 

@@ -11,8 +11,9 @@ its Arrow batches into ONE sketch and emits one binary row:
 
 Fold tasks are sized by input bytes, not by scan splits
 (``plans.size_python_fold``): every Python task pays a fixed start-up
-cost (~0.27 CPU-s on CPython 3.11, mostly PySpark's worker file set-up),
-which dwarfs the rows of a small input, so an input estimated below
+cost (~0.07 CPU-s on CPython 3.11 with the zip-invalidation hook in
+``fastfilter_spark/_worker.py``, ~0.27 without it), which dwarfs the
+rows of a small input, so an input estimated below
 ``defaultParallelism`` x ``spark.sql.files.openCostInBytes`` bytes folds
 in ``ceil(bytes / openCostInBytes)`` tasks.  Larger inputs, and inputs
 Spark cannot size, fold one partial per input partition.
