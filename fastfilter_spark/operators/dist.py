@@ -32,7 +32,7 @@ Scale design notes (targeting a 10^12-key Iceberg table, tested locally):
   fingerprints), persisted as one row per shard ``(shard, kind, payload
   binary, lineage...)`` in a parquet "filter table", and broadcast for
   probe-side use.
-- Probing is a scalar Arrow pandas UDF over the broadcast shard list:
+- Probing is a scalar Arrow UDF over the broadcast shard list:
   route each probe key by the same hash prefix, gather 3 fingerprint cells,
   xor, compare.  Used via ``df.filter(sf.contains_udf()(col))`` this is the
   distributed analog of a broadcast left-semi join with the exact hash
@@ -57,6 +57,7 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BinaryType, BooleanType, DoubleType, IntegerType, LongType, StringType,
@@ -188,6 +189,30 @@ def shard_of_hash(keys_u64: np.ndarray, shard_bits: int) -> np.ndarray:
     return (h % (1 << shard_bits)).astype(np.int32)  # numpy % is pmod
 
 
+def _contain_routed(filters: list, keys: np.ndarray,
+                    shard_bits: int) -> np.ndarray:
+    """Membership bits for uint64 ``keys``: route each key to its shard
+    filter by the build's hash, then probe shard by shard."""
+    out = np.zeros(keys.size, dtype=bool)
+    shards = shard_of_hash(keys, shard_bits)
+    for s in np.unique(shards):
+        m = shards == s
+        out[m] = filters[s].contain(keys[m])
+    return out
+
+
+def _contain_arrow(filters: list, keys: "pa.Array",
+                   shard_bits: int) -> np.ndarray:
+    """``_contain_routed`` over an Arrow key column; a null key is never
+    a member.  Nulls are masked on the Arrow side: converting a column
+    with nulls to numpy yields float64, which rounds keys above 2^53."""
+    bits = _contain_routed(filters, K.to_uint64(
+        keys.fill_null(0).to_numpy(zero_copy_only=False)), shard_bits)
+    if keys.null_count:
+        bits &= keys.is_valid().to_numpy(zero_copy_only=False)
+    return bits
+
+
 def choose_shard_bits(approx_distinct: int, target_keys_per_shard: int = 1 << 22,
                       max_bits: int = 16) -> int:
     """Smallest power-of-two shard count keeping shards under the target.
@@ -242,11 +267,19 @@ def keys_with_shard(df: DataFrame, key_col: str, shard_bits: int) -> DataFrame:
     ``pmod(xxhash64(key), S)`` stays inside whole-stage codegen, so the
     scan -> project -> shuffle stage never crosses into Python; the only
     Python in the whole build is the per-shard kernel itself.
+
+    Null keys, and keys whose cast yields null (a malformed string with
+    ANSI mode off), are dropped here, JVM-side: one null in a
+    shard's Arrow int64 column turns it into float64 in the kernel,
+    which then builds that shard over keys rounded to 53 bits (false
+    negatives for every key above 2^53) plus a bogus key.  A null is
+    never a member, so dropping it is exact.
     """
+    key = F.col(key_col).cast(LongType())
     return df.select(
-        F.col(key_col).cast(LongType()).alias("key"),
-        F.pmod(F.xxhash64(F.col(key_col).cast(LongType())),
-               F.lit(1 << shard_bits)).cast(IntegerType()).alias("shard"))
+        key.alias("key"),
+        F.pmod(F.xxhash64(key), F.lit(1 << shard_bits))
+        .cast(IntegerType()).alias("shard")).where(F.col("key").isNotNull())
 
 
 @dataclass
@@ -308,28 +341,19 @@ class ShardedFilter:
 
     def contain_np(self, keys) -> np.ndarray:
         """Driver-side vectorized probe (for tests / small batches)."""
-        keys = K.to_uint64(np.asarray(keys))
-        out = np.zeros(keys.size, dtype=bool)
-        filters = self._filters()
-        shards = shard_of_hash(keys, self.shard_bits)
-        for s in np.unique(shards):
-            m = shards == s
-            out[m] = filters[s].contain(keys[m])
-        return out
+        return _contain_routed(self._filters(),
+                               K.to_uint64(np.asarray(keys)), self.shard_bits)
 
-    def contains_udf(self, spark: SparkSession | None = None):
-        """Scalar pandas UDF ``long -> boolean`` probing the broadcast filter.
-
-        The shard payload list is broadcast once (torrent distribution).
-        Deserialized filters live in a module-level worker cache keyed by
-        a cheap content fingerprint, so they survive task boundaries —
-        without it every task re-deserializes every shard it touches
-        (keys are hash-distributed, so that is ALL shards x ALL tasks).
-        A probe batch then does 3 gathers + xor + compare per key
-        (xorfilter.h:96-108, binaryfusefilter.h:178-187).
-        """
-        kind, shard_bits = self.kind, self.shard_bits
-        cache_key = self._cache_token
+    def _worker_filters(self, spark: SparkSession | None):
+        """Zero-arg callable for executor closures: the deserialized
+        shard filters, from the worker-process cache.  The payload list
+        is broadcast once when ``spark`` is given (torrent distribution)
+        and pickled into the closure otherwise.  The cache is keyed by
+        this instance's token, so deserialization happens once per
+        worker per filter — without it every task re-deserializes every
+        shard it touches (keys are hash-distributed, so that is ALL
+        shards x ALL tasks)."""
+        kind, cache_key = self.kind, self._cache_token
         if spark is not None:
             bc = spark.sparkContext.broadcast(self.payloads)
             get_payloads = lambda: bc.value  # noqa: E731
@@ -337,20 +361,31 @@ class ShardedFilter:
             payloads = self.payloads
             get_payloads = lambda: payloads  # noqa: E731
 
-        @F.pandas_udf(BooleanType())
-        def contains(s: pd.Series) -> pd.Series:
-            filters = _worker_cache_get(cache_key)
-            if filters is None:
-                filters = [filter_from_bytes(p, kind, view=True)
-                           for p in get_payloads()]
-                _worker_cache_put(cache_key, filters)
-            keys = K.to_uint64(s.to_numpy())
-            out = np.zeros(keys.size, dtype=bool)
-            shards = shard_of_hash(keys, shard_bits)
-            for sh in np.unique(shards):
-                m = shards == sh
-                out[m] = filters[sh].contain(keys[m])
-            return pd.Series(out)
+        def filters():
+            cached = _worker_cache_get(cache_key)
+            if cached is None:
+                cached = [filter_from_bytes(p, kind, view=True)
+                          for p in get_payloads()]
+                _worker_cache_put(cache_key, cached)
+            return cached
+
+        return filters
+
+    def contains_udf(self, spark: SparkSession | None = None):
+        """Scalar Arrow UDF ``long -> boolean`` probing the broadcast
+        filter.
+
+        A probe batch does 3 gathers + xor + compare per key
+        (xorfilter.h:96-108, binaryfusefilter.h:178-187).  A null key
+        is never a member: it probes False.  The UDF takes the Arrow
+        column as is — a pandas Series with one null would turn the
+        whole batch into float64 and round every key above 2^53.
+        """
+        filters, shard_bits = self._worker_filters(spark), self.shard_bits
+
+        @F.arrow_udf(BooleanType())
+        def contains(keys: pa.Array) -> pa.Array:
+            return pa.array(_contain_arrow(filters(), keys, shard_bits))
 
         return contains
 
@@ -373,42 +408,24 @@ class ShardedFilter:
                        spark: SparkSession | None = None,
                        negate: bool = False) -> DataFrame:
         """Arrow-native row filter: keep rows whose ``key_col`` passes the
-        probe (or fails it, with ``negate``).
+        probe (or fails it, with ``negate``).  A null key fails the
+        probe, as in :meth:`contains_udf`.
 
         Trade-off (measured): for NARROW frames (key-only or few
         columns) this beats ``df.where(contains_udf(col))`` — the batch
-        stays a pyarrow RecordBatch end-to-end, no pandas Series.  For
-        WIDE frames the where() form wins (~2x on 11-column lineitem):
-        there only the key column crosses into Python and the JVM
-        filters the full rows, whereas mapInArrow ships every column
-        through Python both ways.  semi_join_prune therefore uses
-        where(); use this for key streams and projected scans.
+        stays a pyarrow RecordBatch end-to-end.  For WIDE frames the
+        where() form wins (~2x on 11-column lineitem): there only the
+        key column crosses into Python and the JVM filters the full
+        rows, whereas mapInArrow ships every column through Python both
+        ways.  semi_join_prune therefore uses where(); use this for key
+        streams and projected scans.
         """
-        import pyarrow as pa
-
-        kind, shard_bits = self.kind, self.shard_bits
-        cache_key = self._cache_token
-        if spark is not None:
-            bc = spark.sparkContext.broadcast(self.payloads)
-            get_payloads = lambda: bc.value  # noqa: E731
-        else:
-            payloads = self.payloads
-            get_payloads = lambda: payloads  # noqa: E731
+        filters, shard_bits = self._worker_filters(spark), self.shard_bits
 
         def probe_batches(batches):
-            filters = _worker_cache_get(cache_key)
-            if filters is None:
-                filters = [filter_from_bytes(p, kind, view=True)
-                           for p in get_payloads()]
-                _worker_cache_put(cache_key, filters)
+            fs = filters()
             for batch in batches:
-                keys = K.to_uint64(
-                    batch.column(key_col).to_numpy(zero_copy_only=False))
-                out = np.zeros(keys.size, dtype=bool)
-                shards = shard_of_hash(keys, shard_bits)
-                for sh in np.unique(shards):
-                    m = shards == sh
-                    out[m] = filters[sh].contain(keys[m])
+                out = _contain_arrow(fs, batch.column(key_col), shard_bits)
                 if negate:
                     out = ~out
                 if out.all():
@@ -679,9 +696,16 @@ def write_bucketed_keys(df: DataFrame, key_col: str, shard_bits: int,
     distribution — asserted in tests/test_plans.py).  This is the
     SCALE.md deployment for a 10^12-key corpus that gets re-filtered
     repeatedly: an Iceberg/bucketBy layout choice, not an engine change.
+
+    The keyed frame is hash-partitioned by ``shard`` into exactly the
+    bucket count first: a bucket id is that same hash, so each write
+    task holds one bucket and writes one file (straight off the scan,
+    every task wrote one file per bucket it held).
     """
-    keyed = keys_with_shard(df, key_col, shard_bits)
-    keyed.write.bucketBy(1 << shard_bits, "shard").sortBy("shard") \
+    num_buckets = 1 << shard_bits
+    keyed = keys_with_shard(df, key_col, shard_bits) \
+        .repartition(num_buckets, "shard")
+    keyed.write.bucketBy(num_buckets, "shard").sortBy("shard") \
         .mode(mode).saveAsTable(table_name)
 
 
@@ -729,7 +753,10 @@ def probe_via_join(probes: DataFrame, key_col: str,
     is one sub-filter + its probes regardless of total filter size.
 
     Returns (key, member boolean); rows with keys only (no extra
-    columns) — join back on key for row-level filtering.
+    columns) — join back on key for row-level filtering.  Null (and
+    uncastable) probe keys are dropped by the shard projection, so they
+    get no output row; a left join back on key reads them as
+    non-members, which is what the broadcast probes return for them.
     """
     if num_shards is None:
         # when filter_table is an unmaterialized build plan, reading

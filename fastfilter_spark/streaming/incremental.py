@@ -6,7 +6,8 @@ binaryfusefilter.h:280) — so the streaming story is *incremental
 rebuild*: maintain an up-to-date sharded filter over an append-only key
 stream by rebuilding only the shards that received new keys each
 micro-batch.  That keeps per-batch work proportional to touched shards
-x shard size, not the total key count, and the result after any batch is
+x shard size, not the total key count — one key-store file per touched
+shard per micro-batch — and the result after any batch is
 byte-identical to a from-scratch batch build over the same key set
 (np.unique in the shard kernel makes bytes order-invariant).
 
@@ -48,7 +49,8 @@ class IncrementalFilterMaintainer:
     State = per-shard key stores (parquet of raw keys, partitioned by
     shard) plus an append-only filter-table LOG (parquet rows of
     ``FILTER_TABLE_SCHEMA`` + ``batch_id`` + ``seq``).  A micro-batch
-    appends its keys to the key store, rebuilds ONLY the shards it
+    appends its keys to the key store (one new file per touched shard;
+    nothing compacts the store), rebuilds ONLY the shards it
     touched from their full key sets (partition-pruned read), and
     APPENDS the rebuilt rows stamped with a log-local monotonic ``seq``
     (restart-safe, see TABLE_LOG_SCHEMA).  Readers resolve latest-wins
@@ -108,7 +110,16 @@ class IncrementalFilterMaintainer:
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         self._recover_compact()
-        keyed = keys_with_shard(batch_df, self.key_col, self.shard_bits)
+        # shuffle by shard BEFORE the cache: each shard's batch keys then
+        # sit in one task, so the partitioned append below writes one
+        # file per touched shard (straight off the source it wrote one
+        # per task x shard — on a local FS each file also costs several
+        # chmod forks), and the touched-shard distinct needs no further
+        # exchange.  Not coalesce (collapses a large batch's whole stage
+        # into a few tasks) and not rebalance (AQE may split a shard
+        # across tasks, i.e. more than one file per shard).
+        keyed = keys_with_shard(batch_df, self.key_col, self.shard_bits) \
+            .repartition("shard")
         # one source scan per trigger: cache the keyed batch, derive the
         # touched-shard list (doubles as the empty check), then append —
         # without the cache this pipeline would re-read the micro-batch
@@ -127,8 +138,12 @@ class IncrementalFilterMaintainer:
         # rebuild touched shards from their full key history (partition
         # pruning: the key store is partitioned by shard, so untouched
         # shards are never read), then append to the log — executors
-        # write their own shard rows, the driver moves only shard IDS
-        store = spark.read.parquet(self.keys_dir) \
+        # write their own shard rows, the driver moves only shard IDS.
+        # The declared schema (keys_with_shard's) skips parquet schema
+        # inference, a Spark job of its own; `shard` stays the
+        # discovered partition column
+        store = spark.read.schema("key long, shard int") \
+            .parquet(self.keys_dir) \
             .where(F.col("shard").isin([int(s) for s in touched]))
         rebuilt = build_filter_rows(store, self.kind, 1 << self.shard_bits)
         seq = self._next_seq(spark)

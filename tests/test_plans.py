@@ -142,6 +142,29 @@ def test_bucketed_source_build_is_shuffle_free(spark, lineitem, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+def test_bucketed_write_is_one_file_per_bucket(spark, lineitem):
+    """write_bucketed_keys writes one file per bucket, however many
+    tasks feed it (straight off a 4-partition input each task wrote one
+    file per bucket it held)."""
+    import os
+    import re
+
+    from fastfilter_spark.operators.dist import write_bucketed_keys
+    table = "keys_bucketed_files_test"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    try:
+        write_bucketed_keys(lineitem.repartition(4), "l_orderkey", 3, table)
+        loc = {r["col_name"]: r["data_type"] for r in
+               spark.sql(f"DESCRIBE EXTENDED {table}").collect()}["Location"]
+        path = re.sub(r"^file:(//)?", "", loc)
+        files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+        buckets = [re.search(r"_(\d{5})\.", f).group(1) for f in files]
+        # 8 shard values hash to at most 8 buckets, some of them empty
+        assert files and len(files) == len(set(buckets)), files
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 def test_build_sharded_from_bucketed_rejects_unbucketed(spark, lineitem):
     from fastfilter_spark.operators.dist import build_sharded_from_bucketed
     table = "keys_plain_plan_test"

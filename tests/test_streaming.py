@@ -3,6 +3,7 @@ sketches, driven by a bounded file stream with availableNow triggers
 (deterministic micro-batches; a rate source would outpace the per-batch
 rebuild on a test box)."""
 
+import glob
 import os
 
 import numpy as np
@@ -225,3 +226,67 @@ def test_streaming_ams_f2_fold(spark, tmp_path):
     agg2 = StreamingSketchAggregator("value", {"f2": mk},
                                     state_dir=state)
     assert agg2.sketches["f2"].to_bytes() == local.to_bytes()
+
+
+def _store_files(maint) -> list:
+    return sorted(glob.glob(os.path.join(maint.keys_dir, "shard=*",
+                                         "*.parquet")))
+
+
+def test_keystore_appends_one_file_per_touched_shard(spark, tmp_path,
+                                                     monkeypatch):
+    """A micro-batch adds exactly one key-store file per shard it
+    touches, whatever the batch's partitioning (appending straight off
+    a 4-task batch makes one file per task and shard: 64 here);
+    the rebuild reads only the touched shards' files; and the result
+    equals a from-scratch build over the store."""
+    import fastfilter_spark.streaming.incremental as inc
+    from fastfilter_spark.operators.dist import build_sharded, shard_of_hash
+
+    src1 = str(tmp_path / "b1")
+    spark.range(0, 4000).select(
+        (F.col("id") * 2654435761).alias("value")) \
+        .repartition(4).write.parquet(src1)
+    batch1 = spark.read.parquet(src1)
+    assert len(batch1.inputFiles()) == 4
+
+    stores = []
+    orig_rows = inc.build_filter_rows
+    monkeypatch.setattr(inc, "build_filter_rows", lambda store, *a, **kw: (
+        stores.append(store) or orig_rows(store, *a, **kw)))
+
+    maint = IncrementalFilterMaintainer(str(tmp_path / "inc"),
+                                        key_col="value", kind="fuse8",
+                                        shard_bits=4)
+    maint.process_batch(batch1, 0)
+    files1 = _store_files(maint)
+    assert len(files1) == 16
+    assert len({os.path.dirname(f) for f in files1}) == 16
+
+    # a batch whose keys all route to one shard: one new file, and the
+    # rebuild scan is pruned to that shard's partition
+    cand = (np.arange(100_000, 120_000, dtype=np.int64) * 2654435761)
+    one = cand[shard_of_hash(cand.view(np.uint64), 4) == 5][:300]
+    src2 = str(tmp_path / "b2")
+    spark.createDataFrame([(int(k),) for k in one], _SCHEMA) \
+        .repartition(4).write.parquet(src2)
+    batch2 = spark.read.parquet(src2)
+    assert len(batch2.inputFiles()) == 4
+    maint.process_batch(batch2, 1)
+    files2 = _store_files(maint)
+    new = sorted(set(files2) - set(files1))
+    assert len(new) == 1 and os.sep + "shard=5" + os.sep in new[0]
+
+    store = stores[-1]
+    scan = [ln for ln in store._jdf.queryExecution().executedPlan()
+            .toString().splitlines() if "FileScan" in ln]
+    assert scan and "PartitionFilters: [" in scan[0] \
+        and "shard" in scan[0].split("PartitionFilters: [")[1], scan
+    read = {r[0] for r in store.select(F.input_file_name()).distinct()
+            .collect()}
+    assert len(read) == 2 and all("/shard=5/" in f for f in read), read
+
+    keys_df = spark.read.parquet(maint.keys_dir)
+    assert keys_df.count() == 4000 + one.size
+    batch_sf, _ = build_sharded(keys_df, "key", kind="fuse8", shard_bits=4)
+    assert maint.current_filter(spark).payloads == batch_sf.payloads
