@@ -1024,13 +1024,13 @@ def q_ams_f2_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ams_f2_oracle_sql(width: int = 256, depth: int = 5) -> str:
     # Mirrors operators/moments.py hash economy: ONE md5 digest per key
     # serves 8 rows; row i reads 16-bit field at hex chars [1+4*(i%8),4]
-    # of digest i//8 (digest 0 unsalted, digest j>0 salted 'key:j');
+    # of digest i//8 (digest j salted 'key:j', j = 0 included);
     # bucket = top 15 bits mod width, sign = low bit.
     assert depth <= 8, "oracle mirror written for the single-digest case"
     med_off = (depth - 1) // 2
     return (
         f"WITH {_KMV_TOK_CTE}, "
-        "dg AS (SELECT md5(token) AS d FROM tok), "
+        "dg AS (SELECT md5(token || ':0') AS d FROM tok), "
         "hs AS (SELECT i.i AS row, "
         "('0x' || substr(d, 1 + 4 * i.i, 4))::BIGINT AS f FROM dg, "
         f"(SELECT unnest(range({depth})) AS i) AS i(i)), "

@@ -4,7 +4,8 @@ sf0.1) on local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
 
     {"metric": ..., "value": total_sec, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ...,
-     "throughput": {...}, "parallelism": N}
+     "throughput": {...}, "parallelism": N, "n_url_keys": n,
+     "host_ref_s": [4 x sec], "scaling": {...}, "suite_artifact": path}
 
 The headline metric mirrors BASELINE.json: binary-fuse8 construction
 throughput (keys/sec) over the url-key stream, plus contain-probe q/s,
@@ -15,6 +16,11 @@ hardware; compiled on THIS machine the reference does 5.8-13.4M keys/s
 and our kernel is at parity-or-ahead per core (BENCH.md head-to-head),
 with sharded construction and Arrow-batched probes multiplying it at
 the job level.
+
+Host noise is not gated: the suite and every scaling level time a
+fixed-work, JVM-only reference job (scripts/scaling_bench.py
+``host_reference_s``) twice before and twice after their timed runs,
+so a slower host shows up as a ratio (``build_per_ref`` per level).
 
 Run directly: PYTHONPATH=. python bench.py
 """
@@ -90,73 +96,6 @@ def write_new_attempt(base: str, record: dict) -> str:
 
 
 def main() -> None:
-    # hold the shared worklock for the whole bench: a live calm_hunt
-    # (scripts/calm_hunt.py) defers while it exists, so the round's
-    # bench measurement and a hunter pair attempt can never interleave
-    # and poison each other's counters
-    _worklock = "/tmp/ff_worklock"
-    # a lock older than 2h is a leftover from a killed run (the
-    # creator's finally never fired) — holding it forever would
-    # silently disable the calm hunter's whole window
-    try:
-        if (os.path.exists(_worklock)
-                and time.time() - os.path.getmtime(_worklock) > 7200):
-            os.remove(_worklock)
-    except OSError:
-        pass
-    # atomic acquisition (O_CREAT|O_EXCL): two racing bench runs can't
-    # both think they own it; if another holder exists, wait a bounded
-    # 10 min for release, then proceed LOUDLY un-owned (a bench that
-    # never runs is worse than one with a contamination-counter note —
-    # every suite run records per-run steal anyway)
-    _own_lock = False
-    _t0 = time.time()
-    while True:
-        try:
-            os.close(os.open(_worklock, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-            _own_lock = True
-            break
-        except FileExistsError:
-            if time.time() - _t0 > 600:
-                print(f"bench: worklock {_worklock} held by another "
-                      "process for >10min; proceeding WITHOUT ownership "
-                      "(timings may interleave with that work)",
-                      file=sys.stderr)
-                break
-            time.sleep(10)
-        except OSError:
-            break
-    # refresh the lock mtime every 10 min from a daemon thread so a
-    # >2h bench run isn't reaped by the stale-lock sweep above
-    if _own_lock:
-        import threading
-
-        def _refresh() -> None:
-            while _own_lock:
-                time.sleep(600)
-                try:
-                    os.utime(_worklock, None)
-                except OSError:
-                    return
-        threading.Thread(target=_refresh, daemon=True).start()
-    # an already-FIRING pair holds /tmp/ff_pairlock for ~5-7 min; wait
-    # it out (bounded) rather than stomping its measurement
-    _t0 = time.time()
-    while (os.path.exists("/tmp/ff_pairlock")
-           and time.time() - _t0 < 600):
-        time.sleep(10)
-    try:
-        _main_inner()
-    finally:
-        if _own_lock:
-            _own_lock = False
-            try:
-                os.remove(_worklock)
-            except OSError:
-                pass
-
-
-def _main_inner() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf_label = sf_dir.rstrip("/").split("sf")[-1]
@@ -174,6 +113,7 @@ def _main_inner() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    from scripts import scaling_bench as _sb
     from fastfilter_spark.operators.dist import build_sharded
     from fastfilter_spark.operators.sketch_agg import (
         cms_sketch, hll_count_distinct, kll_quantiles)
@@ -184,67 +124,16 @@ def _main_inner() -> None:
     throughput: dict[str, float] = {}
     query_runs: dict[str, list] = {}
 
-    def steal_jiffies() -> int:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-
-    # bounded calm-wait shared by ALL suite queries: when even the best
-    # run of a query saw steal, retrying immediately retries INTO the
-    # same storm (round-3 observation: a storm poisoned all 5 runs of
-    # the headline build at 86-350 cpu-s steal each, and the recorded
-    # best was 13x the calm value).  Waiting out a bounded slice of the
-    # storm before the extra runs is the only in-process recovery; the
-    # budget is shared so one long storm cannot starve the whole suite.
-    suite_calm_budget = [float(os.environ.get("SPARK_GRAFT_SUITE_CALM_S",
-                                              "300"))]
-
-    def wait_calm_suite(window: float = 3.0, consecutive: int = 2) -> None:
-        clean = 0
-        while suite_calm_budget[0] > 0 and clean < consecutive:
-            s0 = steal_jiffies()
-            time.sleep(window)
-            suite_calm_budget[0] -= window
-            # steal-only gate: our idle JVM keeps background threads
-            # warm, so a busy-CPU threshold would misfire here (the
-            # scaling phase, where nothing of ours runs, checks all
-            # four counters)
-            clean = clean + 1 if (steal_jiffies() - s0) / 100.0 < 1.0 \
-                else 0
-
-    def timed(name: str, fn, extras: int = 2, consecutive: int = 2):
-        # best-of-3 with per-run steal recorded: this sandbox VM has
-        # random hypervisor/co-tenant CPU bursts, so single timings
-        # swing 2-4x (round-2 lesson: a recorded cms_sketch 2.8x
-        # "regression" was adjudicated as pure contamination by
-        # interleaved A/B against the prior tree — see BENCH.md).  The
-        # full distribution goes into the artifact so a slow best-of is
-        # distinguishable from a slow engine.  ``extras``/``consecutive``
-        # are raised for the HEADLINE query: a mid-round-4 run recorded
-        # 76-187 cpu-s of steal on every one of its five build runs (a
-        # storm with micro-lulls defeated the 2-window gate) while every
-        # later query ran calm — the binding metric deserves more of
-        # the shared calm budget than a secondary timing.
-        best, best_steal, out = float("inf"), 0.0, None
+    def timed(name: str, fn):
+        # best-of-3 with every run recorded: the full distribution goes
+        # into the suite artifact, so a slow best-of is distinguishable
+        # from a slow engine
         runs = []
-        todo = 3
-        while todo > 0:
-            todo -= 1
-            s0 = steal_jiffies()
+        for _ in range(3):
             t0 = time.perf_counter()
             out = fn()
-            dt = time.perf_counter() - t0
-            st = round((steal_jiffies() - s0) / 100.0, 1)
-            runs.append({"s": round(dt, 3), "steal_cpu_s": st})
-            if dt < best:
-                best, best_steal = dt, st
-            # a storm can poison all scheduled runs; if even the BEST
-            # run saw steal, wait out a bounded slice of the storm and
-            # spend extra runs so one query cannot decide the suite
-            # artifact from inside a storm
-            if todo == 0 and best_steal > 1 and extras > 0:
-                wait_calm_suite(consecutive=consecutive)
-                todo, extras = 1, extras - 1
-        timings[name] = round(best, 3)
+            runs.append(round(time.perf_counter() - t0, 3))
+        timings[name] = min(runs)
         query_runs[name] = runs
         return out
 
@@ -274,8 +163,12 @@ def _main_inner() -> None:
                                    shard_bits=6)
         return sfilter
 
-    sfilter = timed("fuse8_build_urls", build_urls, extras=5,
-                    consecutive=4)
+    # fixed-work host reference, twice before the first timed query and
+    # twice after the last: the suite's seconds divided by it compare
+    # across hosts and host states (scripts/scaling_bench.py)
+    _sb.host_reference_s(spark, cpus)  # untimed warm-up: its codegen and JIT
+    host_ref = [_sb.host_reference_s(spark, cpus) for _ in range(2)]
+    sfilter = timed("fuse8_build_urls", build_urls)
     throughput["fuse8_build_keys_per_sec"] = round(
         n_keys / timings["fuse8_build_urls"], 1)
 
@@ -384,8 +277,16 @@ def _main_inner() -> None:
           .agg(F.count("*").alias("n"),
                F.sum(F.col("l_quantity").cast("long")).alias("q")).collect())
 
+    host_ref += [_sb.host_reference_s(spark, cpus) for _ in range(2)]
+    host_ref = [round(t, 3) for t in host_ref]
     total = round(sum(timings.values()), 3)
     spark.stop()
+    # stop() leaves the gateway JVM and its heap alive (2.6 GB after an
+    # sf0.01 suite); closing its stdin ends it, so the scaling levels
+    # below do not share the host's memory with it
+    from pyspark import SparkContext
+    SparkContext._gateway.proc.stdin.close()
+    SparkContext._gateway.proc.wait()
 
     # -- two-parallelism scaling evidence (north_rule: N vs 4N executors)
     # The sandbox has no real cluster, so the same job (sharded fuse8
@@ -401,265 +302,23 @@ def _main_inner() -> None:
     scaling: dict = {}
     if not os.environ.get("SPARK_GRAFT_SKIP_SCALING"):
         import subprocess
-        script = os.path.join(_REPO, "scripts", "scaling_bench.py")
-        # 40M keys: large enough that fixed engine costs (stage
-        # scheduling, JVM codegen, python-worker spin-up) amortize —
-        # at 8M keys they dominate and the measured "efficiency" is
-        # mostly Amdahl overhead, not the engine's scaling
-        env = dict(os.environ, PYTHONPATH=_REPO,
-                   SCALING_N_KEYS=os.environ.get("SCALING_N_KEYS",
-                                                 "40000000"),
-                   SCALING_RUNS=os.environ.get("SCALING_RUNS", "4"))
-        # wall-clock budget: the north-rule pair (2 -> 8) runs first so a
-        # tight harness timeout still captures it; level 32 only runs
-        # with remaining budget.  Partial results are emitted as-is.
-        # 1800 s: a calm pair costs ~4 min and certifies on attempt 1,
-        # so the happy path never touches the headroom; a storm-hit
-        # attempt costs ~3 min before its level caps fire
-        # (SCALING_LEVEL_BUDGET_S).  Observed storms on this host run
-        # 5-10 min and RECUR on a 10-30 min cycle: 720 s died with
-        # "budget exhausted" after ONE poisoned level-2 twice in a row,
-        # and 1200 s was then exhausted by a storm that spanned the
-        # whole scaling phase (round-3 night, two separate runs) —
-        # 1800 s is sized to wait out one full storm AND still run the
-        # pair twice in the gap before the next one
-        budget = float(os.environ.get("SPARK_GRAFT_SCALING_BUDGET_S",
-                                      "1800"))
-        t_scale0 = time.perf_counter()
         levels = {}
-        retries: list[str] = []
-        # calm-wait sized to outlast one observed storm (5-10 min, and
-        # occasionally back-to-back): waiting is ~2x cheaper than
-        # burning a poisoned level-2 run (which costs its full level
-        # budget AND a retry of both levels)
-        calm_budget = [float(os.environ.get("SPARK_GRAFT_CALM_WAIT_S",
-                                            "900"))]
-        calm_log: list = []
-
-        _ncpu = os.cpu_count() or 1
-        # the contamination probes live in scripts/scaling_bench.py and
-        # are IMPORTED, not copied: the spin work loop must be identical
-        # across the driver and every level subprocess for the 0.85 *
-        # spin_max settled() comparison to be valid, and one definition
-        # enforces that
-        import importlib.util as _ilu
-        _sb_spec = _ilu.spec_from_file_location("ff_scaling_bench", script)
-        _sb = _ilu.module_from_spec(_sb_spec)
-        _sb_spec.loader.exec_module(_sb)
-        _steal_busy = _sb._stat_counters
-
-        # session-wide best effective-core-speed observation (Mops from
-        # the spin probe): the calm reference every sample is judged
-        # against.  SMT-sibling / frequency contamination slows runs
-        # with all jiffies counters clean — only relative core speed
-        # reveals it.
-        spin_max = [0.0]
-
-        def _spin_mops(dur: float = 0.25) -> float:
-            m = _sb._spin_mops(dur)
-            spin_max[0] = max(spin_max[0], m)
-            return m
-
-        def wait_calm(window: float = 3.0, steal_thresh: float = 1.0,
-                      busy_thresh: float = 2.5, consecutive: int = 2):
-            """Hold the next scaling level until `consecutive` back-to-
-            back `window`-second samples are clean — bounded by the
-            shared calm budget.  Clean = under `steal_thresh` cpu-s of
-            hypervisor steal AND under `busy_thresh` cpu-s of total busy
-            CPU (nothing of ours runs during the wait, so busy CPU is
-            co-tenant load, which slows our levels without showing as
-            steal).  A storm poisons EVERY run of a level (round-3
-            observation: 118 cpu-s of steal across one level turned a
-            4 s build into 16-50 s on all scheduled runs), so retrying
-            into the same storm is waste; waiting out a bounded slice
-            of it is the only in-process recovery.  Requiring two
-            consecutive clean windows avoids launching into the brief
-            lulls inside a storm."""
-            waited, clean = 0.0, 0
-            while calm_budget[0] > 0 and clean < consecutive:
-                s0, b0, j0 = _steal_busy()
-                t0 = time.perf_counter()
-                time.sleep(min(window, max(calm_budget[0], 0.1)))
-                dt = time.perf_counter() - t0
-                s1, b1, j1 = _steal_busy()
-                calm_budget[0] -= window
-                # lost = VM-pause time: wall advanced but jiffies (ALL
-                # fields) did not — shows in neither steal nor busy
-                lost = max(0.0, dt * _ncpu - (j1 - j0) / 100.0)
-                spin = _spin_mops()
-                if ((s1 - s0) / 100.0 < steal_thresh
-                        and (b1 - b0) / 100.0 < busy_thresh
-                        and lost < 1.0
-                        and spin >= 0.85 * spin_max[0]):
-                    clean += 1
-                else:
-                    clean = 0
-                    waited += window
-            if waited:
-                calm_log.append(round(waited, 1))
-
-        def run_level(c):
-            # more runs at the cheap high-parallelism levels: a run is
-            # ~6 s at local[8] vs ~24 s at local[2], and the one
-            # contamination mode no counter can bracket (a mid-run
-            # core-slowdown burst between the spin probes) is only
-            # beaten statistically — best-of over more runs raises the
-            # odds one lands in a calm window at almost no budget cost
-            runs = env.get("SCALING_RUNS", "4") if c <= 2 else \
-                str(int(env.get("SCALING_RUNS", "4")) + 4)
+        for c in (2, 8, 32):
             out = subprocess.run(
-                [sys.executable, script, "--level", str(c)],
+                [sys.executable, _sb.__file__, "--level", str(c)],
                 capture_output=True, text=True,
-                env=dict(env, SCALING_RUNS=runs), cwd=_REPO)
+                env=dict(os.environ, PYTHONPATH=_REPO), cwd=_REPO)
             lines = [ln for ln in out.stdout.splitlines()
                      if ln.startswith("{")]
-            return json.loads(lines[-1]) if lines else None
-
-        def merge_best(a, b):
-            """Keep the faster build/probe across two passes of one
-            level; concatenate the run distributions and contamination
-            accounting so the artifact shows everything that ran."""
-            if b is None:
-                return a
-            out = dict(b if b["build_s"] < a["build_s"] else a)
-            out["probe_s"] = min(a["probe_s"], b["probe_s"])
-            out["probe_keys_per_sec"] = round(
-                out["n_keys"] / out["probe_s"], 1)
-            out["build_runs"] = a["build_runs"] + b["build_runs"]
-            out["probe_runs_s"] = a["probe_runs_s"] + b["probe_runs_s"]
-            for k in ("level_wall_s", "level_steal_cpu_s",
-                      "level_external_busy_cpu_s", "level_lost_cpu_s"):
-                out[k] = round(a.get(k, 0.0) + b.get(k, 0.0), 1)
-            return out
-
-        def budget_left(frac=1.0):
-            return time.perf_counter() - t_scale0 < budget * frac
+            if lines:
+                levels[c] = json.loads(lines[-1])
+            else:
+                print(f"bench: scaling level {c} failed\n"
+                      f"{out.stderr[-2000:]}", file=sys.stderr)
 
         def eff(metric, lo, hi):
             return round((levels[hi][metric] / levels[lo][metric])
                          / (hi / lo), 3)
-
-        # the north-rule pair is the binding metric — settle it BEFORE
-        # spending budget on level 32.  Run the pair; if the efficiency
-        # misses target OR either level's best build was
-        # steal-contaminated, wait out the storm (bounded) and re-run
-        # BOTH levels, keeping each level's fastest runs.  Re-running
-        # both sides is the honest form of retry: a contaminated-slow
-        # local[2] INFLATES efficiency (it is the denominator), so a
-        # one-sided local[8]-only retry could pass the target off a
-        # poisoned baseline; best-of-across-attempts converges each
-        # level to its calm value.  Round-2 lesson: a single storm
-        # window poisoned all scheduled runs of one level and decided
-        # the round's artifact (the contamination never showed as steal
-        # during the best build, only at level granularity — both are
-        # recorded now, plus busy CPU outside our process tree).
-        def settled(c):
-            """A level is settled when its best build ran clean by ALL
-            THREE contamination counters — re-running it can only tie
-            (best-of keeps the faster pass), so later attempts spend
-            their budget on the level that actually took the storm.
-            steal alone is not enough: co-tenant load slows a run with
-            no steal (external busy catches it, the round-2 failure
-            mode), and a whole-VM hypervisor pause slows a run with
-            neither steal NOR busy (wall advances, jiffies freeze —
-            the 'lost' counter catches it; a recorded level-8 best of
-            17.3 s vs 4.2 s calm showed 0.6 steal and 0.8 external)."""
-            lv = levels.get(c)
-            if lv is None:
-                return False
-            for r in lv.get("build_runs", []):
-                if "spin_mops" in r:
-                    spin_max[0] = max(spin_max[0], r["spin_mops"])
-            # opt-in sixth-counter floor (same env contract as
-            # calm_hunt.py; BENCH.md round-4 "promotion recipe"):
-            # unset = round-4 behavior
-            _sync_base = {
-                int(p.split(":")[0]): float(p.split(":")[1])
-                for p in os.environ.get("CALM_SYNC_BASELINES",
-                                        "").split(",") if ":" in p}
-            base = _sync_base.get(lv.get("cpus"))
-            # 0.0/absent = probe-unavailable sentinel, not contamination
-            _sync = lv.get("sync_krps_during_best_build") or 0.0
-            sync_ok = (base is None or _sync <= 0.0
-                       or _sync >= float(os.environ.get(
-                           "CALM_SYNC_FRACTION", "0.5")) * base)
-            return (lv["steal_cpu_s_during_best_build"] <= 1
-                    and lv.get("external_busy_cpu_s_during_best_build",
-                               99) <= 2.5
-                    and lv.get("lost_cpu_s_during_best_build", 99)
-                    <= max(2.0, 0.02 * lv["build_s"] * _ncpu)
-                    and lv.get("spin_mops_during_best_build", 0)
-                    >= 0.85 * spin_max[0]
-                    and sync_ok)
-
-        attempt = 0
-        missed_clean = False
-        while attempt < 5:
-            attempt += 1
-            for c in (2, 8):
-                # skip a settled level UNLESS the last pair missed with
-                # both levels clean: a clean-looking miss means
-                # bracket-escaping contamination (a core-slowdown burst
-                # inside a build, between the spin probes) depressed a
-                # best run, and only a re-run in a calmer window can
-                # beat it — best-of keeps whatever was already good
-                if attempt > 1 and settled(c) and not missed_clean:
-                    continue
-                wait_calm()
-                r = run_level(c)
-                if r:
-                    levels[c] = merge_best(levels[c], r) \
-                        if c in levels else r
-            if 2 not in levels or 8 not in levels:
-                break
-            e = eff("build_keys_per_sec", 2, 8)
-            if e >= 0.8 and settled(2) and settled(8):
-                break
-            if not budget_left(0.85):
-                retries.append(
-                    f"pair attempt {attempt}: build efficiency {e} — "
-                    "scaling budget exhausted before a clean passing "
-                    "pair; per-run/per-level contamination columns "
-                    "explain the recorded levels")
-                break
-            missed_clean = settled(2) and settled(8)
-            retries.append(
-                f"pair attempt {attempt}: build efficiency {e} "
-                f"(target 0.8), settled: local2={settled(2)} "
-                f"local8={settled(8)}"
-                + (" — clean-looking miss, suspecting bracket-escaping "
-                   "contamination; re-running both levels"
-                   if missed_clean else " — re-running unsettled levels"))
-            retries.append(
-                f"pair attempt {attempt}: build efficiency {e} "
-                f"(target 0.8), best-build steal "
-                f"{[levels[c]['steal_cpu_s_during_best_build'] for c in (2, 8)]}, "
-                f"level steal "
-                f"{[levels[c]['level_steal_cpu_s'] for c in (2, 8)]}, "
-                f"external busy "
-                f"{[levels[c]['level_external_busy_cpu_s'] for c in (2, 8)]}"
-                " cpu-s — re-running both levels")
-        else:
-            # natural exit = attempt cap after a final miss: say so, or
-            # the trailing "re-running both levels" note would
-            # misrepresent a real measured miss as an aborted retry
-            if 2 in levels and 8 in levels:
-                retries.append(
-                    f"attempt cap reached: final build efficiency "
-                    f"{eff('build_keys_per_sec', 2, 8)} recorded as "
-                    f"measured (settled: local2={settled(2)} "
-                    f"local8={settled(8)})")
-
-        if budget_left():
-            wait_calm()
-            r = run_level(32)
-            if (r and r["steal_cpu_s_during_best_build"] > 5
-                    and budget_left(0.9)):
-                retries.append(f"local[32]: best-build steal "
-                               f"{r['steal_cpu_s_during_best_build']} cpu-s")
-                r = merge_best(r, run_level(32))
-            if r:
-                levels[32] = r
 
         if levels:
             scaling = {
@@ -667,22 +326,6 @@ def _main_inner() -> None:
                        f"{next(iter(levels.values()))['n_keys']} url keys",
                 "north_rule_pair": "local[2] -> local[8] (N -> 4N)",
                 "levels": {str(c): levels[c] for c in levels},
-                "retries": retries,
-                "calm_waits_s": calm_log,
-                # machine-readable certification: True ONLY when the
-                # north-rule pair hit the >=0.8 target AND both levels'
-                # best builds ran clean on all four contamination
-                # counters.  A False here with a numerically-passing
-                # efficiency means the number is storm-distorted (a
-                # contaminated-slow local[2] INFLATES the ratio) — read
-                # the per-level columns, and BENCH.md's certified calm
-                # table, instead of this run's ratio.
-                "levels_settled": {str(c): bool(settled(c))
-                                   for c in levels},
-                "pair_certified": bool(
-                    2 in levels and 8 in levels and settled(2)
-                    and settled(8)
-                    and eff("build_keys_per_sec", 2, 8) >= 0.8),
             }
             for c in levels:
                 scaling[f"local{c}_build_keys_per_sec"] = \
@@ -697,12 +340,10 @@ def _main_inner() -> None:
                         eff("probe_keys_per_sec", lo, hi)
 
     # ---- artifact split (round-3 failure: the single emitted JSON
-    # line, carrying per-run distributions and retry strings, outgrew
-    # the driver's stdout tail capture and BENCH_r03.json recorded
-    # parsed: null).  The FULL record — query_runs, per-run
-    # contamination arrays, level build_runs, retries, calm waits —
-    # goes to bench_artifacts/; the printed line is a compact summary
-    # guaranteed to stay a few hundred bytes.
+    # line, carrying per-run distributions, outgrew the 2000-char stdout
+    # tail BENCH_r03.json captured, which recorded parsed: null).  The
+    # FULL record — query_runs, host-reference times, level run lists —
+    # goes to bench_artifacts/; the printed line is a compact summary.
     full = {
         "metric": "fuse8 construction+probe over url keys (headline) "
                   "+ operator suite wall time",
@@ -710,9 +351,7 @@ def _main_inner() -> None:
         "unit": "sec",
         "queries": timings,
         "query_runs": query_runs,
-        "suite_calm_wait_spent_s": round(
-            float(os.environ.get("SPARK_GRAFT_SUITE_CALM_S", "300"))
-            - suite_calm_budget[0], 1),
+        "host_ref_s": host_ref,
         "sf": float(sf_label) if sf_label.replace(".", "").isdigit() else sf_label,
         "throughput": throughput,
         "parallelism": cpus,
@@ -743,81 +382,24 @@ def _main_inner() -> None:
 
     compact_scaling: dict = {}
     if scaling:
-        # per-level counters fold into ONE short string per level (the
-        # counter list is the single source of truth in
-        # scripts/scaling_bench.py, loaded above as _sb): the full
-        # per-key form costs ~330 chars/level and the driver's stdout
-        # capture keeps only the LAST 2000 chars — round 3's artifact
-        # failed to parse for exactly this reason.  Full per-key
-        # values live in the suite artifact.
-        def _ctr_str(lv):
-            short = {"steal_cpu_s_during_best_build": "steal",
-                     "external_busy_cpu_s_during_best_build": "ext",
-                     "lost_cpu_s_during_best_build": "lost",
-                     "spin_mops_during_best_build": "spin",
-                     "mem_gbps_during_best_build": "mem",
-                     "sync_krps_during_best_build": "sync"}
-            return " ".join(
-                f"{short.get(k, k)}={lv[k]}"
-                for k in _sb.BEST_BUILD_COUNTER_KEYS if k in lv)
         compact_scaling = {
             k: v for k, v in scaling.items()
-            if k not in ("levels", "retries", "calm_waits_s", "job")
+            if k not in ("levels", "job")
             # the per-level rates live in levels[..] — the flat
             # localN_*_keys_per_sec duplicates cost ~200 chars of the
             # 2000-char budget
             and not k.endswith("_keys_per_sec")}
-        if "north_rule_pair" in compact_scaling:
-            # derive the short form from the real value (no second
-            # hardcoded copy): "local[2] -> local[8] (N -> 4N)" ->
-            # "2 -> 8 (N -> 4N)"
-            compact_scaling["north_rule_pair"] = (
-                str(compact_scaling["north_rule_pair"])
-                .replace("local[", "").replace("]", ""))
+        # derive the short form from the real value (no second
+        # hardcoded copy): "local[2] -> local[8] (N -> 4N)" ->
+        # "2 -> 8 (N -> 4N)"
+        compact_scaling["north_rule_pair"] = (
+            str(compact_scaling["north_rule_pair"])
+            .replace("local[", "").replace("]", ""))
         compact_scaling["levels"] = {
-            c: {**{k: lv[k] for k in
-                   ("build_s", "build_keys_per_sec",
-                    "probe_s", "probe_keys_per_sec") if k in lv},
-                "best_counters": _ctr_str(lv)}
+            c: {k: lv[k] for k in
+                ("build_s", "build_keys_per_sec", "probe_s",
+                 "probe_keys_per_sec", "host_ref_s", "build_per_ref")}
             for c, lv in scaling["levels"].items()}
-        compact_scaling["n_retries"] = len(scaling.get("retries", []))
-
-    # embed the most recent CERTIFIED calm pair on record: a storm
-    # round whose live pair is refused still ships machine-readable
-    # >=0.8 evidence (the full pair JSON, with its four-counter
-    # certification, lives at the referenced path)
-    import glob
-    import re as _re
-
-    def _round_no(path: str) -> int:
-        m = _re.search(r"certified_pair_r(\d+)\.json$", path)
-        return int(m.group(1)) if m else -1
-
-    cert = None
-    # numeric round order: lexicographic would rank r4 above r10
-    for p in sorted(glob.glob(os.path.join(
-            _REPO, "bench_artifacts", "certified_pair_r*.json")),
-            key=_round_no, reverse=True):
-        try:
-            with open(p) as f:
-                d = json.load(f)
-            if d.get("certified"):
-                cert = {
-                    "artifact": os.path.relpath(p, _REPO),
-                    "build_efficiency_2_to_8":
-                        d["build_efficiency_2_to_8"],
-                    "probe_efficiency_2_to_8":
-                        d["probe_efficiency_2_to_8"],
-                    "n_keys": d["n_keys"],
-                    "finished_at": d["finished_at"],
-                }
-                if d.get("sync_floor"):
-                    cert["sync_floor_binding"] = True
-                break
-        except (OSError, ValueError, KeyError):
-            continue
-    if cert:
-        compact_scaling["certified_pair"] = cert
 
     line_obj = {
         "metric": full["metric"],
@@ -828,6 +410,7 @@ def _main_inner() -> None:
         "throughput": throughput,
         "parallelism": cpus,
         "n_url_keys": n_keys,
+        "host_ref_s": host_ref,
         "scaling": compact_scaling,
         "suite_artifact": suite_ref,
     }

@@ -48,9 +48,12 @@ def ams_f2_counters(df: DataFrame, key_col: str, width: int = 256,
     Hash economy: ONE md5 digest serves up to 8 sketch rows — the
     128-bit digest is sliced into disjoint 16-bit hex fields (4 hex
     chars each), and each field yields a row's bucket (its top 15 bits,
-    ``pmod width``) and sign (its low bit).  Only every 9th row costs
-    another md5 (salted ``key:j``), so the default depth=5 pays 1 md5
-    per key instead of 5.  The digest is physically named in its own
+    ``pmod width``) and sign (its low bit).  Digest j hashes the salted
+    ``key:j`` (j = 0 included), and only every 9th row costs another
+    md5, so the default depth=5 pays 1 md5 per key instead of 5.  The
+    salt keeps digest inputs injective: j is the only all-digit field
+    after the last ``:``, so key ``"a:1"``'s digest 0 never equals key
+    ``"a"``'s digest 1.  The digest is physically named in its own
     projection, so the cost model does not depend on codegen
     subexpression elimination.  Distinct md5 output bits are
     independent, so bucket/sign within and across rows are too; width
@@ -76,8 +79,8 @@ def ams_f2_counters(df: DataFrame, key_col: str, width: int = 256,
     k = F.col(key_col).cast("string")
     ndig = (depth + 7) // 8
     digests = [
-        F.md5(k if j == 0 else F.concat(k, F.lit(f":{j}")))
-         .alias(f"_d{j}") for j in range(ndig)]
+        F.md5(F.concat(k, F.lit(f":{j}"))).alias(f"_d{j}")
+        for j in range(ndig)]
     # 16-bit field for row i: hex chars [1+4*(i%8), 4] of digest i//8
     fields = {
         i: F.conv(F.substring(F.col(f"_d{i // 8}"), 1 + 4 * (i % 8), 4),

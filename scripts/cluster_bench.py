@@ -36,8 +36,11 @@ Usage:
     python scripts/cluster_bench.py                # pair (default 2,8)
     python scripts/cluster_bench.py --executors 8  # one size, JSON line
 
-Env: CLUSTER_N_KEYS (default 40M), CLUSTER_RUNS (default 3),
-CLUSTER_CORES_PER_EXEC (default 2), CLUSTER_SIZES (default "2,8").
+The job, its 40M url keys and its host-reference bracket are
+scaling_bench.measure_build_probe, shared with the local[N] levels.
+
+Env: CLUSTER_RUNS (default 3), CLUSTER_CORES_PER_EXEC (default 2),
+CLUSTER_SIZES (default "2,8").
 """
 
 from __future__ import annotations
@@ -56,11 +59,9 @@ sys.path.insert(0, _REPO)
 os.environ["PYTHONPATH"] = (
     _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")).rstrip(os.pathsep)
 
-import scaling_bench as _sb  # noqa: E402  (sibling module: shared probes)
+import scaling_bench as _sb  # noqa: E402  (sibling: the shared measurement)
 
-N_KEYS = int(os.environ.get("CLUSTER_N_KEYS", 40_000_000))
 RUNS = int(os.environ.get("CLUSTER_RUNS", 3))
-SHARD_BITS = int(os.environ.get("CLUSTER_SHARD_BITS", 6))
 # multi-core executors are the realistic shape (a 1-core executor
 # serializes each task's JVM shuffle work against its python kernel on
 # one CPU — measured ~75% slower than local[8] at the same core count
@@ -199,12 +200,12 @@ def _py_files() -> str:
 
 def run_size(n_execs: int) -> dict:
     """Bring up a cluster of n_execs CORES_PER_EXEC-core executors,
-    run the sharded fuse8 build + probe with the same contamination
-    accounting as scaling_bench, tear down, return the level dict."""
+    run scaling_bench's build + probe measurement on it, tear down,
+    return the size's dict."""
     work_dir = f"/tmp/ff_cluster_{n_execs}"
     zpath = _py_files()
     with Cluster(n_execs, work_dir, CORES_PER_EXEC):
-        from pyspark.sql import SparkSession, functions as F
+        from pyspark.sql import SparkSession
         spark = (
             SparkSession.builder
             .master(f"spark://127.0.0.1:{MASTER_PORT}")
@@ -214,9 +215,10 @@ def run_size(n_execs: int) -> dict:
             .config("spark.cores.max", str(n_execs * CORES_PER_EXEC))
             .config("spark.submit.pyFiles", zpath)
             .config("spark.sql.shuffle.partitions",
-                    str(max(n_execs, 1 << SHARD_BITS)))
+                    str(max(n_execs, 1 << _sb.SHARD_BITS)))
             .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
+            .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+                    _sb.ADVISORY)
             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "262144")
             .config("spark.shuffle.compress", "false")
             .config("spark.shuffle.spill.compress", "false")
@@ -239,67 +241,15 @@ def run_size(n_execs: int) -> dict:
             else:
                 raise TimeoutError(
                     f"only {n_up}/{n_execs} executors registered")
-
-            from fastfilter_spark.operators.dist import build_sharded
-            keys = spark.range(N_KEYS).select(
-                F.xxhash64(F.concat(F.lit("https://site.example.org/p/"),
-                                    F.col("id"))).alias("key")).persist()
-            n = keys.count()
-            sf_w, _ = build_sharded(keys, "key", kind="fuse8",
-                                    shard_bits=SHARD_BITS)
-            keys.where(sf_w.contains_udf(spark)(F.col("key"))).count()
-
-            best_build, best = float("inf"), None
-            build_runs = []
-            sf = None
-            for _ in range(RUNS):
-                spin_pre = _sb._spin_mops()
-                s0, b0, j0 = _sb._stat_counters()
-                tr0 = _sb._tree_jiffies()
-                t0 = time.perf_counter()
-                sf, _ = build_sharded(keys, "key", kind="fuse8",
-                                      shard_bits=SHARD_BITS)
-                dt = time.perf_counter() - t0
-                s1, b1, j1 = _sb._stat_counters()
-                rec = {
-                    "s": round(dt, 3),
-                    "steal_cpu_s": round((s1 - s0) / 100.0, 1),
-                    "external_busy_cpu_s": round(max(
-                        0.0, (b1 - b0 - (_sb._tree_jiffies() - tr0))
-                        / 100.0), 1),
-                    "lost_cpu_s": round(_sb._lost_cpu_s(dt, j1 - j0), 1),
-                    "spin_mops": round(min(spin_pre, _sb._spin_mops()), 2),
-                }
-                build_runs.append(rec)
-                if dt < best_build:
-                    best_build, best = dt, rec
-
-            contains = sf.contains_udf(spark)
-            assert keys.where(contains(F.col("key"))).count() == n
-            best_probe = float("inf")
-            probe_runs = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                n_pass = keys.where(contains(F.col("key"))).count()
-                dt = time.perf_counter() - t0
-                probe_runs.append(round(dt, 3))
-                best_probe = min(best_probe, dt)
-                assert n_pass == n
+            m = _sb.measure_build_probe(spark, RUNS)
         finally:
             spark.stop()
 
     return {
         "executors": n_execs, "cores_per_executor": CORES_PER_EXEC,
-        "n_keys": n,
         "deploy": f"standalone master + pinned {CORES_PER_EXEC}-core "
                   "worker JVMs, submitted over spark:// with --py-files",
-        "build_s": round(best_build, 3),
-        "build_keys_per_sec": round(n / best_build, 1),
-        "probe_s": round(best_probe, 3),
-        "probe_keys_per_sec": round(n / best_probe, 1),
-        "best_run": best,
-        "build_runs": build_runs,
-        "probe_runs_s": probe_runs,
+        **m,
     }
 
 
@@ -313,33 +263,8 @@ def main():
 
     sizes = [int(x) for x in
              os.environ.get("CLUSTER_SIZES", "2,8").split(",")]
-    calm_budget = [float(os.environ.get("CLUSTER_CALM_WAIT_S", "300"))]
-    spin_max = [0.0]
-
-    def wait_calm(window: float = 3.0, consecutive: int = 2):
-        """Same storm gate as bench.py's scaling block: hold the next
-        cluster until back-to-back windows are clean on steal, machine
-        busy AND relative core speed (bounded by the shared budget)."""
-        clean = 0
-        while calm_budget[0] > 0 and clean < consecutive:
-            s0, b0, j0 = _sb._stat_counters()
-            t0 = time.perf_counter()
-            time.sleep(window)
-            dt = time.perf_counter() - t0
-            s1, b1, j1 = _sb._stat_counters()
-            calm_budget[0] -= window
-            # lost = VM-pause: wall advances, ALL jiffies freeze —
-            # invisible to steal, busy and the bracketing spin probes
-            lost = _sb._lost_cpu_s(dt, j1 - j0)
-            spin = _sb._spin_mops()
-            spin_max[0] = max(spin_max[0], spin)
-            if ((s1 - s0) / 100.0 < 1.0 and (b1 - b0) / 100.0 < 2.5
-                    and lost < 1.0 and spin >= 0.9 * spin_max[0]):
-                clean += 1
-            else:
-                clean = 0
-
-    def run_size_sub(n_execs: int):
+    results = {}
+    for n_execs in sizes:
         # fresh subprocess per size: a clean JVM/python for each cluster
         out = subprocess.run(
             [sys.executable, os.path.abspath(__file__),
@@ -350,28 +275,7 @@ def main():
         if not lines:
             print(out.stdout[-3000:], out.stderr[-3000:], file=sys.stderr)
             raise SystemExit(f"cluster size {n_execs} failed")
-        return json.loads(lines[-1])
-
-    results = {}
-    for n_execs in sizes:
-        wait_calm()
-        r = run_size_sub(n_execs)
-        br = r["best_run"]
-        spin_max[0] = max(spin_max[0],
-                          *(x["spin_mops"] for x in r["build_runs"]))
-        if (br["steal_cpu_s"] > 1 or br["external_busy_cpu_s"] > 2.5
-                or br["lost_cpu_s"] > 2.0
-                or br["spin_mops"] < 0.85 * spin_max[0]):
-            # best run contaminated: wait out the storm once and keep
-            # the faster of the two passes
-            wait_calm()
-            r2 = run_size_sub(n_execs)
-            if r2["build_s"] < r["build_s"]:
-                r2["build_runs"] = r["build_runs"] + r2["build_runs"]
-                r = r2
-            else:
-                r["build_runs"] += r2["build_runs"]
-        results[n_execs] = r
+        results[n_execs] = json.loads(lines[-1])
         print(json.dumps(results[n_execs]))
 
     lo, hi = sizes[0], sizes[-1]

@@ -1,18 +1,25 @@
 #!/usr/bin/env python
-"""Two-parallelism-level scaling benchmark (north_rule evidence).
+"""One scaling level (north_rule evidence).
 
 The rule's two-cluster-size criterion (N vs 4N executors, efficiency
->= 0.8) cannot use a real cluster in this sandbox; per the driver
-instruction it is evidenced by running the SAME job at local[8] and
-local[32] on the SAME input and reporting throughput at both.
+>= 0.8) cannot use a real cluster on one host; it is evidenced by
+running the SAME job at local[2], local[8] and local[32] on the SAME
+input.  bench.py drives the levels,
+one fresh JVM each; scripts/cluster_bench.py runs the same measurement
+(``measure_build_probe``) on a standalone cluster.
 
-Job: sharded binary-fuse8 construction over n url keys
+Job: sharded binary-fuse8 construction over 40M url keys
 (xxhash64 of synthetic urls, JVM-generated => the measured time is the
 engine: shuffle + Arrow + per-shard native kernel), plus the probe pass.
 
+Host noise is neither gated nor waited out.  Each level times a
+fixed-work, JVM-only reference job (``host_reference_s``) twice before
+and twice after its timed runs and reports ``build_per_ref``: the best
+build over the median reference time.  A slower host moves both, so
+the ratio stays comparable where the raw seconds are not.
+
 Usage:
-    python scripts/scaling_bench.py            # runs both levels, writes BENCH.md
-    python scripts/scaling_bench.py --level 8  # single level, prints JSON
+    python scripts/scaling_bench.py --level 8  # one level, prints JSON
 """
 
 from __future__ import annotations
@@ -20,7 +27,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
+import statistics
 import sys
 import time
 
@@ -32,247 +39,63 @@ sys.path.insert(0, _REPO)
 os.environ["PYTHONPATH"] = (
     _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")).rstrip(os.pathsep)
 
-N_KEYS = int(os.environ.get("SCALING_N_KEYS", 20_000_000))
-RUNS = int(os.environ.get("SCALING_RUNS", 5))
-SHARD_BITS = int(os.environ.get("SCALING_SHARD_BITS", 6))
+# 40M keys: large enough that fixed engine costs (stage scheduling, JVM
+# codegen, python-worker spin-up) amortize — at 8M keys they dominate
+# and the measured "efficiency" is mostly Amdahl overhead, not the
+# engine's scaling
+N_KEYS = 40_000_000
+SHARD_BITS = 6
 # AQE advisory partition size for the shuffle-read side of the build.
 # At cluster scale a 64-shard-of-40M-keys shuffle is GBs per shard and
 # the default 64 MB advisory never merges shards; at this bench's input
 # size each shard's shuffle blocks are ~7 MB, so the default coalesces
 # ~6 shards into one fat task and the level-8 build ends in a 2-core
 # straggler tail (~23% of wall, measured with a 100 ms utilization
-# timeline).  SCALING_ADVISORY below shard size keeps one task per
-# shard — the SAME task granularity a real deployment has.
-ADVISORY = os.environ.get("SCALING_ADVISORY", "4m")
-# Pin the level's process tree to exactly `cpus` CPUs (the subprocess
-# calls sched_setaffinity before the JVM starts, so every JVM/python
-# descendant inherits it).  local[N] caps concurrent TASKS, not CPUs:
-# GC, shuffle-netty and python workers run beside the N task slots, and
-# a 100 ms utilization timeline showed an unpinned local[2] consuming
-# 2.6 cores — inflating the small-N baseline and understating true
-# scaling.  A real N-core executor is cgroup-bound to N CPUs (YARN/K8s
-# cpuset); pinning reproduces that resource boundary.  SCALING_PIN=0
-# restores the old unpinned behavior.
-PIN = os.environ.get("SCALING_PIN", "1") == "1"
-
-
-def _busy_jiffies() -> int:
-    """Machine-wide busy jiffies (user+nice+system+irq+softirq+steal):
-    everything that is not idle/iowait, summed over all cpus."""
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    u, n, s = int(parts[1]), int(parts[2]), int(parts[3])
-    irq, sirq, steal = int(parts[6]), int(parts[7]), int(parts[8])
-    return u + n + s + irq + sirq + steal
-
-
+# timeline).  An advisory below shard size keeps one task per shard —
+# the SAME task granularity a real deployment has.
+ADVISORY = "4m"
+# Each level's process tree is pinned to exactly `cpus` CPUs when the
+# host has more (run_level calls sched_setaffinity before the JVM
+# starts, so every JVM/python descendant inherits it).  local[N] caps
+# concurrent TASKS, not CPUs: GC, shuffle-netty and python workers run
+# beside the N task slots, and a 100 ms utilization timeline showed an
+# unpinned local[2] consuming 2.6 cores — inflating the small-N
+# baseline and understating true scaling.  A real N-core executor is
+# cgroup-bound to N CPUs (YARN/K8s cpuset); pinning reproduces that
+# resource boundary.
 _NCPU = os.cpu_count() or 1
+# JVM heap: 16g, capped at a quarter of the host's RAM.  local[32] runs
+# 32 python workers (~0.12 GB each) beside the JVM; on a 4-CPU, 16 GB
+# host an uncapped 16g heap grew to 9.6 GB and the kernel OOM-killed it.
+_RAM_GB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+DRIVER_MEMORY = f"{max(1, min(16, int(_RAM_GB / 4)))}g"
+REF_ROWS = 16_000_000
 
 
-def _total_jiffies() -> int:
-    """ALL jiffies on the aggregate cpu line, idle and iowait included.
-    On a healthy host this advances at ~NCPU * 100 per wall second; a
-    whole-VM hypervisor pause freezes it while the TSC-backed wall
-    clock keeps running — the one contamination mode that shows up in
-    NEITHER the steal column (the kernel is not running, so steal does
-    not accrue) NOR external busy.  wall*NCPU minus the delta is the
-    'lost' CPU time of a window."""
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    return sum(int(x) for x in parts[1:])
+def runs_for(cpus: int) -> int:
+    """Timed builds per level: more at the cheap high-parallelism
+    levels (a run is ~6 s at local[8] vs ~24 s at local[2] on 40M keys),
+    where best-of over more runs costs almost nothing."""
+    return 4 if cpus <= 2 else 8
 
 
-def _lost_cpu_s(wall_s: float, jiffies_delta: int) -> float:
-    return max(0.0, wall_s * _NCPU - jiffies_delta / 100.0)
-
-
-def _stat_counters() -> tuple[int, int, int]:
-    """(steal, busy, total) jiffies from ONE /proc/stat read — the
-    shared reader for callers (bench.py's calm gate) that sample all
-    three counters at the same instant.  bench.py imports this module
-    rather than keeping its own copy: the spin-probe work loop below
-    MUST be byte-identical across processes for the settled() 0.85 *
-    spin_max comparison to mean anything, and one definition enforces
-    that."""
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    busy = sum(int(parts[i]) for i in (1, 2, 3, 6, 7, 8))
-    total = sum(int(x) for x in parts[1:])
-    return int(parts[8]), busy, total
-
-
-def _spin_mops(dur: float = 0.25) -> float:
-    """Effective single-core speed probe (fixed integer work per
-    iteration): the fourth contamination counter.  A co-tenant VM on
-    the SIBLING HYPERTHREADS (or host-side frequency throttling) slows
-    every instruction we retire while showing zero steal, zero
-    external busy, and zero lost time — jiffies tick normally, we are
-    'running' the whole time, each cycle just does less.  Observed: a
-    13.3 s local[8] build (4.2 s calm) with all three jiffies counters
-    clean.  Absolute Mops are comparable across processes on one host,
-    so the caller judges a run against the session-wide maximum."""
+def host_reference_s(spark, partitions: int) -> float:
+    """Wall seconds of one fixed-work reference job: a ``spark.range``
+    aggregate of ``xxhash64`` over the ids as strings, the same job
+    perfbench divides by.  It runs in the JVM only and calls nothing in
+    fastfilter_spark, so no library change can move it; only the host
+    can."""
     t0 = time.perf_counter()
-    n = 0
-    x = 1
-    while time.perf_counter() - t0 < dur:
-        for _ in range(10000):
-            x = (x * 1103515245 + 12345) & 0xFFFFFFFF
-        n += 10000
-    return n / (time.perf_counter() - t0) / 1e6
+    (spark.range(0, REF_ROWS, numPartitions=partitions)
+     .selectExpr("sum(xxhash64(cast(id as string)) % 1000)").collect())
+    return time.perf_counter() - t0
 
 
-# the contamination-counter fields a level's best build reports — the
-# ONE list bench.py and calm_hunt.py compose their compact artifact
-# views from (adding a counter here propagates to every consumer;
-# previously each site kept its own copy and a new counter meant three
-# lock-step edits)
-BEST_BUILD_COUNTER_KEYS = (
-    "steal_cpu_s_during_best_build",
-    "external_busy_cpu_s_during_best_build",
-    "lost_cpu_s_during_best_build",
-    "spin_mops_during_best_build",
-    "mem_gbps_during_best_build",
-    "sync_krps_during_best_build",
-)
-
-def _sync_worker(barrier, rounds):
-    for _ in range(rounds):
-        barrier.wait()
-
-
-def _sync_krps(rounds: int = 1500) -> float:
-    """Multi-process barrier-round rate (kilo-rounds/s) across THIS
-    process's allowed CPUs (capped at 8 workers): the sixth
-    contamination counter, INFORMATIONAL.
-
-    Why: the round-4 night misses ran the BUILD at ~0.73 efficiency
-    while the probe scaled at 0.97 on the same attempt — degradation
-    concentrated in the barrier/shuffle-heavy phase, which is the
-    signature of hypervisor vCPU co-scheduling latency under host
-    load: every stage boundary waits for all vCPUs to be scheduled
-    together, a cost that grows with parallelism and shows in NO
-    per-cpu counter (steal/busy/lost clean, spin at parity, bus
-    healthy).  A fixed-round barrier storm measures exactly that
-    co-scheduling latency.  Compare within one level across attempts
-    (the rate depends on the pinned core count, so cross-level
-    comparison is invalid); not part of settled()."""
-    import multiprocessing as mp
-    try:
-        procs = min(8, len(os.sched_getaffinity(0)))
-        if procs < 2:
-            return 0.0
-        ctx = mp.get_context("fork")
-        barrier = ctx.Barrier(procs + 1)
-        ps = [ctx.Process(target=_sync_worker, args=(barrier, rounds))
-              for _ in range(procs)]
-        for p in ps:
-            p.start()
-        t0 = time.perf_counter()
-        try:
-            # per-round timeout: a worker dying without breaking the
-            # barrier (OOM kill) must not hang the unattended bench —
-            # BrokenBarrierError falls through to the except below
-            for _ in range(rounds):
-                barrier.wait(timeout=5)
-            dt = time.perf_counter() - t0
-        finally:
-            for p in ps:
-                p.join(timeout=10)
-                if p.is_alive():
-                    p.terminate()
-        return rounds / dt / 1e3
-    except Exception:
-        # an INFORMATIONAL counter must never abort or hang the level
-        # measurement it decorates; 0.0 marks "probe unavailable"
-        return 0.0
-
-
-_MEM_BUFS = None
-
-
-def _mem_gbps(mb: int = 256, reps: int = 3) -> float:
-    """Single-thread DRAM bandwidth probe (numpy memcpy, read+write
-    bytes counted like scripts/dram_ceiling.py): the fifth
-    contamination counter, INFORMATIONAL — it does not gate settled().
-
-    Why it exists: the round-4 attempt-1 miss (2026-08-18) ran both
-    levels 1.5-1.8x slower than the round-3 certified calm pass on
-    byte-identical code with all four counters clean and spin probes
-    within parity — consistent with a co-tenant VM saturating the
-    shared memory bus, which the cache-resident integer spin loop
-    cannot see but the memory-random-access peel kernel pays for
-    directly.  Recording bus bandwidth per run makes such windows
-    distinguishable in the artifact instead of reading as an
-    unexplained engine slowdown.  Kept out of the certification
-    criteria mid-hunt so certified pairs stay comparable across
-    rounds; a future round may add a parity bar once a session's
-    calm-window range is established."""
-    global _MEM_BUFS
-    import numpy as np
-    if _MEM_BUFS is None:
-        a = np.empty(mb << 20, dtype=np.uint8)
-        b = np.empty(mb << 20, dtype=np.uint8)
-        np.copyto(b, a)                      # fault the pages
-        _MEM_BUFS = (a, b)
-    a, b = _MEM_BUFS
-    best = 0.0
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        np.copyto(b, a)
-        dt = time.perf_counter() - t0
-        best = max(best, a.nbytes * 2 / dt / 1e9)
-    return best
-
-
-def _tree_jiffies() -> int:
-    """utime+stime summed over THIS process and every live descendant
-    (the JVM and its python workers are our children).  Used to split
-    machine-wide busy time into ours vs external: hypervisor steal shows
-    in /proc/stat col 9, but a co-tenant *process* on this VM (harness,
-    monitor, another bench) does not — it shows up only as busy CPU we
-    did not spend, which is exactly what poisoned the round-2 level-8
-    recording (steal 0.1 s yet half the curated throughput)."""
-    me = os.getpid()
-    kids: dict[int, list[int]] = {}
-    cost: dict[int, int] = {}
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                rest = f.read().rsplit(")", 1)[1].split()
-            p = int(pid)
-            kids.setdefault(int(rest[1]), []).append(p)
-            cost[p] = int(rest[11]) + int(rest[12])
-        except (OSError, IndexError, ValueError):
-            continue
-    total, stack = 0, [me]
-    while stack:
-        p = stack.pop()
-        total += cost.get(p, 0)
-        stack.extend(kids.get(p, ()))
-    return total
-
-
-def run_level(cpus: int) -> dict:
-    if PIN and cpus < _NCPU:
-        # before the JVM starts: every descendant inherits the mask
-        os.sched_setaffinity(0, set(range(cpus)))
-    from pyspark.sql import SparkSession, functions as F
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"scaling-bench-{cpus}")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 1 << SHARD_BITS)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", ADVISORY)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "262144")
-        .config("spark.shuffle.compress", "false")
-        .config("spark.shuffle.spill.compress", "false")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+def measure_build_probe(spark, runs: int) -> dict:
+    """The scaling job on ``spark``: best-of-``runs`` sharded fuse8 build
+    and best-of-3 probe over N_KEYS url keys, after a full-scale warm-up,
+    bracketed by two host-reference runs on each side."""
+    from pyspark.sql import functions as F
     from fastfilter_spark.operators.dist import build_sharded
 
     keys = spark.range(N_KEYS).select(
@@ -282,217 +105,79 @@ def run_level(cpus: int) -> dict:
 
     # Full-scale warm-up run before timing: spawns/reuses all python
     # workers, compiles/loads the native kernel, touches the broadcast and
-    # JIT paths.  The reference benchmark does the same (warm build before
-    # 5 timed runs, /root/reference/benchmarks/bench.c:119-146).
+    # JIT paths.  The reference C benchmark (benchmarks/bench.c) also
+    # warms up before its timed runs.
     sf_w, _ = build_sharded(keys, "key", kind="fuse8", shard_bits=SHARD_BITS)
     keys.where(sf_w.contains_udf(spark)(F.col("key"))).count()
 
-    def steal_jiffies() -> int:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-
-    # whole-level contamination accounting (round-2 lesson: sampling
-    # steal only inside the best build window cleared a level whose
-    # OTHER runs were poisoned — and co-tenant processes never show as
-    # steal at all, only as busy CPU this process tree did not spend)
-    lvl_t0 = time.perf_counter()
-    lvl_steal0, lvl_busy0, lvl_tree0, lvl_j0 = (
-        steal_jiffies(), _busy_jiffies(), _tree_jiffies(),
-        _total_jiffies())
-
-    # best-of-N with per-run wall AND per-run steal recorded: this
-    # sandbox VM suffers steal bursts, so single runs are noisy and the
-    # full distribution is emitted for the round artifact.  If even the
-    # BEST run was steal-contaminated, take up to 2 extra runs — a
-    # storm that poisons all N scheduled runs otherwise decides the
-    # level (and the round's efficiency figure) by itself.
-    best_build, steal_s, ext_s, lost_s = float("inf"), 0.0, 0.0, 0.0
-    spin_best, mem_best, sync_best = 0.0, 0.0, 0.0
-    build_runs: list[dict] = []
-    sf = None
-    # wall-clock cap on the timed-run loop: in a calm window RUNS runs
-    # cost well under this, but inside a storm each 6 s build can take
-    # 30-70 s and one level would otherwise eat the caller's whole pair
-    # budget — better to stop, let the caller wait out the storm, and
-    # spend the budget on a fresh attempt of the whole level
-    level_budget = float(os.environ.get("SCALING_LEVEL_BUDGET_S", "150"))
-    runs_t0 = time.perf_counter()
-    runs_left, extras_left = RUNS, 2
-    while runs_left > 0:
-        if (build_runs
-                and time.perf_counter() - runs_t0 > level_budget):
-            break
-        runs_left -= 1
-        mem_pre = _mem_gbps()
-        sync_pre = _sync_krps()
-        spin_pre = _spin_mops()
-        s0 = steal_jiffies()
-        b0, tr0, j0 = _busy_jiffies(), _tree_jiffies(), _total_jiffies()
+    partitions = spark.sparkContext.defaultParallelism
+    host_reference_s(spark, partitions)  # untimed warm-up: its codegen and JIT
+    host_ref = [host_reference_s(spark, partitions) for _ in range(2)]
+    build_runs: list[float] = []
+    for _ in range(runs):
         t0 = time.perf_counter()
         sf, _ = build_sharded(keys, "key", kind="fuse8",
                               shard_bits=SHARD_BITS)
-        dt = time.perf_counter() - t0
-        st = (steal_jiffies() - s0) / 100.0
-        ext = max(0.0, (_busy_jiffies() - b0 - (_tree_jiffies() - tr0))
-                  / 100.0)
-        lost = _lost_cpu_s(dt, _total_jiffies() - j0)
-        spin = min(spin_pre, _spin_mops())   # worse of the two brackets
-        mem = min(mem_pre, _mem_gbps())      # worse of the two brackets
-        sync = min(sync_pre, _sync_krps())   # worse of the two brackets
-        build_runs.append({"s": round(dt, 3), "steal_cpu_s": round(st, 1),
-                           "external_busy_cpu_s": round(ext, 1),
-                           "lost_cpu_s": round(lost, 1),
-                           "spin_mops": round(spin, 2),
-                           "mem_gbps": round(mem, 1),
-                           "sync_krps": round(sync, 2)})
-        if dt < best_build:
-            best_build, steal_s, ext_s, lost_s = dt, st, ext, lost
-            spin_best, mem_best, sync_best = spin, mem, sync
-        if runs_left == 0 and extras_left > 0 and (
-                steal_s > 2
-                # best run's bracketing spin probes ran >15% below the
-                # fastest spin this level observed: the best build
-                # likely ran on degraded cores — worth another attempt
-                or spin_best < 0.85 * max(r["spin_mops"]
-                                          for r in build_runs)):
-            runs_left, extras_left = 1, extras_left - 1
-        # early abort: once the best run is CLEAN, a storm-hit run
-        # (2x the best) says further runs can only tie — stop burning
-        # wall-clock the caller could spend waiting out the storm and
-        # retrying the whole pair (best-of keeps what we have)
-        if runs_left > 0 and steal_s <= 1 and dt > 2 * best_build:
-            break
+        build_runs.append(time.perf_counter() - t0)
     # ONE probe udf, warmed once then timed: a fresh udf per iteration
     # would re-broadcast the payloads and re-deserialize all shards in
     # every worker, timing one-off setup instead of steady-state probes
     contains = sf.contains_udf(spark)
     assert keys.where(contains(F.col("key"))).count() == n  # warm + check
-    best_probe = float("inf")
     probe_runs: list[float] = []
     for _ in range(3):
         t0 = time.perf_counter()
         n_pass = keys.where(contains(F.col("key"))).count()
-        dt = time.perf_counter() - t0
-        probe_runs.append(round(dt, 3))
-        best_probe = min(best_probe, dt)
-        assert n_pass == n
-    build_s, probe_s = best_build, best_probe
+        probe_runs.append(time.perf_counter() - t0)
+        assert n_pass == n, "false negatives detected"
+    host_ref += [host_reference_s(spark, partitions) for _ in range(2)]
 
-    lvl_wall = time.perf_counter() - lvl_t0
-    lvl_steal = (steal_jiffies() - lvl_steal0) / 100.0
-    # external busy = machine busy CPU minus our own tree's: co-tenant
-    # processes and anything else eating cores without showing as steal
-    lvl_external = max(
-        0.0, (_busy_jiffies() - lvl_busy0 - (_tree_jiffies() - lvl_tree0))
-        / 100.0)
-    lvl_lost = _lost_cpu_s(lvl_wall, _total_jiffies() - lvl_j0)
-
-    spark.stop()
+    build_s, probe_s = min(build_runs), min(probe_runs)
     return {
-        "cpus": cpus, "n_keys": n,
-        "pinned": bool(PIN and cpus < _NCPU), "advisory": ADVISORY,
+        "n_keys": n,
         "build_s": round(build_s, 3),
         "build_keys_per_sec": round(n / build_s, 1),
         "probe_s": round(probe_s, 3),
         "probe_keys_per_sec": round(n / probe_s, 1),
-        "steal_cpu_s_during_best_build": round(steal_s, 1),
-        "external_busy_cpu_s_during_best_build": round(ext_s, 1),
-        "lost_cpu_s_during_best_build": round(lost_s, 1),
-        "spin_mops_during_best_build": round(spin_best, 2),
-        "mem_gbps_during_best_build": round(mem_best, 1),
-        "sync_krps_during_best_build": round(sync_best, 2),
-        "build_runs": build_runs,
-        "probe_runs_s": probe_runs,
-        "level_wall_s": round(lvl_wall, 1),
-        "level_steal_cpu_s": round(lvl_steal, 1),
-        "level_external_busy_cpu_s": round(lvl_external, 1),
-        "level_lost_cpu_s": round(lvl_lost, 1),
+        "build_runs_s": [round(t, 3) for t in build_runs],
+        "probe_runs_s": [round(t, 3) for t in probe_runs],
+        "host_ref_s": [round(t, 3) for t in host_ref],
+        "build_per_ref": round(build_s / statistics.median(host_ref), 3),
     }
+
+
+def run_level(cpus: int) -> dict:
+    pinned = cpus < _NCPU
+    if pinned:
+        # before the JVM starts: every descendant inherits the mask
+        os.sched_setaffinity(0, set(range(cpus)))
+    from pyspark.sql import SparkSession
+    spark = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName(f"scaling-bench-{cpus}")
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 1 << SHARD_BITS)))
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", ADVISORY)
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "262144")
+        .config("spark.shuffle.compress", "false")
+        .config("spark.shuffle.spill.compress", "false")
+        .config("spark.driver.memory", DRIVER_MEMORY)
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        m = measure_build_probe(spark, runs_for(cpus))
+    finally:
+        spark.stop()
+    return {"cpus": cpus, "pinned": pinned, "advisory": ADVISORY, **m}
 
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--level", type=int, default=None)
+    ap.add_argument("--level", type=int, required=True)
     args = ap.parse_args()
-
-    if args.level:
-        print(json.dumps(run_level(args.level)))
-        return
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    levels = [int(x) for x in
-              os.environ.get("SCALING_LEVELS", "2,8,32").split(",")]
-    results = {}
-    for cpus in levels:
-        env = dict(os.environ, PYTHONPATH=repo)
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--level", str(cpus)],
-            capture_output=True, text=True, env=env, cwd=repo)
-        line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
-        if not line:
-            print(out.stdout[-2000:], out.stderr[-2000:], file=sys.stderr)
-            raise SystemExit(f"level {cpus} failed")
-        results[cpus] = json.loads(line[-1])
-        print(json.dumps(results[cpus]))
-
-    def eff(metric: str, lo: int, hi: int) -> float:
-        return (results[hi][metric] / results[lo][metric]) / (hi / lo)
-
-    rows = "\n".join(
-        f"| local[{c}] | {results[c]['build_s']} | "
-        f"{results[c]['build_keys_per_sec']:,.0f} | {results[c]['probe_s']} | "
-        f"{results[c]['probe_keys_per_sec']:,.0f} | "
-        f"{results[c]['steal_cpu_s_during_best_build']} | "
-        f"{results[c]['level_steal_cpu_s']} | "
-        f"{results[c]['level_external_busy_cpu_s']} | "
-        f"{[r['s'] for r in results[c]['build_runs']]} |"
-        for c in levels)
-    pairs = [(lo, hi) for lo, hi in zip(levels, levels[1:]) if hi == 4 * lo]
-    effs = "\n".join(
-        f"- N={lo} → 4N={hi}: **build efficiency "
-        f"{eff('build_keys_per_sec', lo, hi):.2f}**, probe efficiency "
-        f"{eff('probe_keys_per_sec', lo, hi):.2f}"
-        for lo, hi in pairs)
-    md = f"""# BENCH — two-parallelism scaling evidence
-
-Same job, same input ({results[levels[0]]['n_keys']:,} url keys), multiple
-parallelism levels on one host (local[N] standing in for N executors per
-the driver instruction).  Job = sharded binary-fuse8 construction
-({1 << SHARD_BITS} shards) + full membership probe; best of {RUNS} timed runs
-after a full-scale warm-up, with hypervisor steal time during the best
-build run recorded (this sandbox VM suffers heavy steal bursts under
-load — single-run numbers are noisy).
-
-| level | build s | build keys/s | probe s | probe keys/s | steal@best | level steal | level external busy | build runs s |
-|---|---|---|---|---|---|---|---|---|
-{rows}
-
-{effs}
-
-Caveats for reading these against the >=0.8 target:
-
-- The 8→32 step on this single-JVM host is NOT DRAM-capped: the raw
-  peel kernel scales 0.77 from 8 to 32 procs (scripts/dram_ceiling.py
-  measured ~36 GB/s used against a ~209 GB/s memcpy ceiling — BENCH.md
-  "Construction-compute scaling").  The job-level gap at 32 is
-  single-JVM shuffle/Arrow/task-scheduling overhead — exactly the
-  components a real N→4N *cluster* scales out (and the Exchange-free
-  bucketed build removes from the plan entirely); the in-sandbox
-  substitute under-reports that step.  The binding north-rule pair is
-  2→8; see BENCH.md's certified calm table.
-- Reference single-thread baselines (README sample runs, desktop-class
-  cache/DRAM): 27.9M keys/s construction, 8.1M probes/s.  The job-level
-  numbers above are the end-to-end engine (scan, shuffle, Arrow,
-  kernel); the raw per-core kernel does ~9-13M keys/s build and 39M+
-  probes/s, and the 32-core probe pass exceeds the reference's
-  single-thread query throughput by ~5x end-to-end.
-"""
-    # BENCH.md is the curated round document (incl. kernel-only scaling
-    # and the same-machine reference head-to-head); raw full runs land in
-    # BENCH_SCALING.md so they never clobber it
-    with open(os.path.join(repo, "BENCH_SCALING.md"), "w") as f:
-        f.write(md)
-    print(md)
+    print(json.dumps(run_level(args.level)))
 
 
 if __name__ == "__main__":

@@ -86,16 +86,16 @@ def test_ams_in_multi_sketch_column(spark):
 
 def _py_ams_f2(keys, width: int, depth: int) -> int:
     """Pure-python replay of the portable-hash DataFrame estimator:
-    one md5 digest covers 8 rows (16-bit hex fields); digest j > 0 is
-    salted ``key:j``; bucket = field >> 1 mod width, sign = low bit."""
+    one md5 digest covers 8 rows (16-bit hex fields); digest j is
+    salted ``key:j``, j = 0 included; bucket = field >> 1 mod width,
+    sign = low bit."""
     table = [[0] * width for _ in range(depth)]
     for key in keys:
         digests = {}
         for i in range(depth):
             j = i // 8
             if j not in digests:
-                s = key if j == 0 else f"{key}:{j}"
-                digests[j] = hashlib.md5(s.encode()).hexdigest()
+                digests[j] = hashlib.md5(f"{key}:{j}".encode()).hexdigest()
             f = int(digests[j][4 * (i % 8):4 * (i % 8) + 4], 16)
             table[i][(f >> 1) % width] += 1 - 2 * (f % 2)
     ests = sorted(sum(c * c for c in row) for row in table)
@@ -116,6 +116,18 @@ def test_ams_f2_multi_digest_depth(spark):
     df = spark.createDataFrame([(s,) for s in keys], "key string")
     row = ams_f2(df, "key", width=16, depth=11).collect()[0]
     assert row.f2_est == _py_ams_f2(keys, 16, 11)
+
+
+def test_ams_f2_digests_do_not_alias_across_keys(spark):
+    """Digest 1 of key "a" must not be digest 0 of key "a:1": with an
+    unsalted digest 0, rows 8-15 of one key reused rows 0-7 of the
+    other."""
+    def cells(key):
+        df = spark.createDataFrame([(key,)], "key string")
+        got = ams_f2_counters(df, "key", width=256, depth=16).collect()
+        return {r.row: (r.bucket, r.c) for r in got}
+    a, a1 = cells("a"), cells("a:1")
+    assert [a[8 + i] for i in range(8)] != [a1[i] for i in range(8)]
 
 
 def test_ams_f2_partition_invariant_and_accurate(spark):

@@ -218,21 +218,6 @@ def test_audio_zero_length_clip_raises_valueerror(spark):
     assert "zero-length clip" in str(ei.value)
 
 
-def test_bench_certified_pair_numeric_round_order(tmp_path):
-    """r10 must outrank r4 (lexicographic sort would invert them) —
-    replicates bench.py's _round_no key inline (bench.py is a script,
-    importing it would execute main)."""
-    import re
-
-    def round_no(path):
-        m = re.search(r"certified_pair_r(\d+)\.json$", path)
-        return int(m.group(1)) if m else -1
-    files = [str(tmp_path / f"certified_pair_r{i}.json")
-             for i in (4, 10, 2)]
-    ordered = sorted(files, key=round_no, reverse=True)
-    assert ordered[0].endswith("r10.json")
-
-
 def test_embedding_near_dup_tolerates_null_vectors(spark):
     """Null vectors mixed with real rows must be dropped JVM-side, not
     crash np.stack inside the Arrow batch; an exact-dup pair among the
@@ -261,16 +246,21 @@ def test_bench_fit_line_budget_ladder():
     """The printed bench line must fit the driver's 2000-char stdout
     capture; fit_line degrades deterministically and names each drop."""
     import json
+    import os
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     import bench
 
-    big_levels = {str(c): {"build_s": 1.0, "best_counters": "x" * 300}
+    big_levels = {str(c): {"build_s": 1.0, "build_per_ref": 0.5,
+                           "host_ref_s": [1.234] * 4, "pad": "x" * 300}
                   for c in (2, 8, 32)}
     obj = {"metric": "m" * 100,
            "queries": {f"q{i:02d}": 1.234 for i in range(30)},
+           "host_ref_s": [1.1, 1.2, 1.3, 1.4],
            "scaling": {"levels": big_levels,
-                       "build_efficiency_2_to_8": 0.84},
+                       "build_efficiency_2_to_8": 0.84,
+                       "probe_efficiency_2_to_8": 0.9},
            "value": 1.0}
     # generous budget: untouched, no truncated marker
     assert bench.fit_line(dict(obj), budget=10_000) == obj
@@ -278,6 +268,8 @@ def test_bench_fit_line_budget_ladder():
     out = bench.fit_line(dict(obj), budget=1000)
     assert "levels" not in out["scaling"]
     assert out["scaling"]["build_efficiency_2_to_8"] == 0.84
+    assert out["scaling"]["probe_efficiency_2_to_8"] == 0.9
+    assert out["host_ref_s"] == [1.1, 1.2, 1.3, 1.4]
     assert "scaling.levels" in out["truncated"]
     assert len(json.dumps(out)) <= 1000
     # brutal budget: queries shrink to 5, still valid JSON
@@ -286,6 +278,8 @@ def test_bench_fit_line_budget_ladder():
     assert out2["truncated"] == ["scaling.levels", "metric.shorten",
                                  "queries"]
     assert out2["metric"] == "m" * 40  # derived from the real metric
+    assert out2["host_ref_s"] == [1.1, 1.2, 1.3, 1.4]
+    assert out2["scaling"]["build_efficiency_2_to_8"] == 0.84
     assert len(json.dumps(out2)) <= 400
     # impossible budget: terminal fallback is minimal but PARSEABLE
     out3 = bench.fit_line(dict(obj), budget=120)
