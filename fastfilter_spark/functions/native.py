@@ -109,51 +109,13 @@ class _Kernel:
             self._pool[name] = a
         return a[:n]
 
-    # ---- index computation ----
-
-    def fuse_index(self, keys: np.ndarray, seed: int, seg_len: int,
-                   seg_cnt_len: int):
-        n = keys.size
-        keys = np.ascontiguousarray(keys, dtype=np.uint64)
-        mixed = self._buf("mixed", n, np.uint64)
-        g0 = self._buf("g0", n, np.int32)
-        g1 = self._buf("g1", n, np.int32)
-        g2 = self._buf("g2", n, np.int32)
-        self.lib.ff_fuse_index(
-            _ptr(keys, _c_u64p), ctypes.c_int64(n),
-            ctypes.c_uint64(seed), ctypes.c_uint32(seg_len),
-            ctypes.c_uint32(seg_cnt_len),
-            _ptr(mixed, _c_u64p), _ptr(g0, _c_i32p), _ptr(g1, _c_i32p),
-            _ptr(g2, _c_i32p))
-        return mixed, g0, g1, g2
-
-    def fuse_index_sorted(self, keys: np.ndarray, seed: int, seg_len: int,
-                          seg_cnt_len: int, seg_cnt: int):
-        """Mixed hashes in segment order + cell indices (locality-optimal
-        layout for accumulate/peel/assign)."""
-        n = keys.size
-        keys = np.ascontiguousarray(keys, dtype=np.uint64)
-        tmp = self._buf("tmp", n, np.uint64)
-        bucket_pos = self._buf("bucket_pos", seg_cnt + 2, np.int64)
-        mixed = self._buf("mixed", n, np.uint64)
-        g0 = self._buf("g0", n, np.int32)
-        g1 = self._buf("g1", n, np.int32)
-        g2 = self._buf("g2", n, np.int32)
-        self.lib.ff_fuse_index_sorted(
-            _ptr(keys, _c_u64p), ctypes.c_int64(n), ctypes.c_uint64(seed),
-            ctypes.c_uint32(seg_len), ctypes.c_uint32(seg_cnt_len),
-            ctypes.c_uint32(seg_cnt),
-            _ptr(tmp, _c_u64p), _ptr(bucket_pos, ctypes.POINTER(ctypes.c_int64)),
-            _ptr(mixed, _c_u64p), _ptr(g0, _c_i32p), _ptr(g1, _c_i32p),
-            _ptr(g2, _c_i32p))
-        return mixed, g0, g1, g2
+    # ---- build: prepare -> peel_pre -> assign ----
 
     def fuse_prepare(self, keys: np.ndarray, seed: int, seg_len: int,
                      seg_cnt_len: int, seg_cnt: int, n_cells: int,
                      arity: int = 3):
         """Fused segment-sorted index + cell-state accumulation; pair
-        with :meth:`peel_pre` (one fewer sweep than index+peel).
-        Returns (mixed, g0..g{arity-1})."""
+        with :meth:`peel_pre`.  Returns (mixed, g0..g{arity-1})."""
         n = keys.size
         keys = np.ascontiguousarray(keys, dtype=np.uint64)
         tmp = self._buf("tmp", n, np.uint64)
@@ -215,77 +177,40 @@ class _Kernel:
                 self._buf("ohash", full, np.uint64),
                 self._buf("queue", n_cells, np.int32))
 
-    def _peel_call(self, fn3, fn4, n_cells: int, mixed, gs):
+    def peel_pre(self, n_cells: int, mixed, *gs):
+        """Peel using the state filled by :meth:`fuse_prepare` or
+        :meth:`xor_prepare` (the state pool buffer is shared between the
+        two calls).  Returns (peel_out, n_peeled); feed peel_out straight
+        to :meth:`assign`.  peel_out is a tagged tuple — for large builds
+        it carries each peeled row's cells + hash (sequential assign),
+        for small ones just the peel order (lean assign over the g
+        arrays).  Pass 3 or 4 g arrays; arity is inferred from the
+        count."""
         n = gs[0].size
         arity = len(gs)
         emit = n >= self.EMIT_MIN_N
         state = self._buf("state", n_cells, np.int64)
         order, ocell, oc0, oc1, oc2, oc3, ohash, queue = \
             self._peel_bufs(n, n_cells, emit, arity)
-        common = [ctypes.c_int64(n), ctypes.c_int64(n_cells),
-                  _ptr(mixed, _c_u64p)]
-        common += [_ptr(g, _c_i32p) for g in gs]
-        common += [_ptr(state, ctypes.POINTER(ctypes.c_int64)),
-                   ctypes.c_int32(1 if emit else 0),
-                   _ptr(order, _c_i32p), _ptr(ocell, _c_i32p),
-                   _ptr(oc0, _c_i32p), _ptr(oc1, _c_i32p),
-                   _ptr(oc2, _c_i32p)]
+        args = [ctypes.c_int64(n), ctypes.c_int64(n_cells),
+                _ptr(mixed, _c_u64p)]
+        args += [_ptr(g, _c_i32p) for g in gs]
+        args += [_ptr(state, ctypes.POINTER(ctypes.c_int64)),
+                 ctypes.c_int32(1 if emit else 0),
+                 _ptr(order, _c_i32p), _ptr(ocell, _c_i32p),
+                 _ptr(oc0, _c_i32p), _ptr(oc1, _c_i32p),
+                 _ptr(oc2, _c_i32p)]
         if arity == 4:
-            common.append(_ptr(oc3, _c_i32p))
-        common += [_ptr(ohash, _c_u64p), _ptr(queue, _c_i32p)]
-        np_peeled = (fn4 if arity == 4 else fn3)(*common)
+            args.append(_ptr(oc3, _c_i32p))
+        args += [_ptr(ohash, _c_u64p), _ptr(queue, _c_i32p)]
+        fn = self.lib.ff_peel_pre4 if arity == 4 else self.lib.ff_peel_pre
+        np_peeled = fn(*args)
         if emit:
             po = ("cells", ocell, oc0, oc1, oc2, ohash) if arity == 3 \
                 else ("cells4", ocell, oc0, oc1, oc2, oc3, ohash)
         else:
             po = ("order", order, ocell, mixed) + tuple(gs)
         return po, int(np_peeled)
-
-    def peel_pre(self, n_cells: int, mixed, *gs):
-        """Peel using the state filled by :meth:`fuse_prepare` (the
-        state pool buffer is shared between the two calls).  Returns
-        (peel_out, n_peeled); feed peel_out straight to :meth:`assign`.
-        peel_out is a tagged tuple — for large builds it carries each
-        peeled row's cells + hash (sequential assign), for small ones
-        just the peel order (lean assign over the g arrays).  Pass 3 or
-        4 g arrays; arity is inferred from the count."""
-        return self._peel_call(self.lib.ff_peel_pre, self.lib.ff_peel_pre4,
-                               n_cells, mixed, gs)
-
-    def fuse_index_pre(self, mixed: np.ndarray, seg_len: int,
-                       seg_cnt_len: int, arity: int = 3):
-        n = mixed.size
-        mixed = np.ascontiguousarray(mixed, dtype=np.uint64)
-        g0 = self._buf("g0", n, np.int32)
-        g1 = self._buf("g1", n, np.int32)
-        g2 = self._buf("g2", n, np.int32)
-        if arity == 4:
-            g3 = self._buf("g3", n, np.int32)
-            self.lib.ff_fuse_index_pre4(
-                _ptr(mixed, _c_u64p), ctypes.c_int64(n),
-                ctypes.c_uint32(seg_len), ctypes.c_uint32(seg_cnt_len),
-                _ptr(g0, _c_i32p), _ptr(g1, _c_i32p), _ptr(g2, _c_i32p),
-                _ptr(g3, _c_i32p))
-            return g0, g1, g2, g3
-        self.lib.ff_fuse_index_pre(
-            _ptr(mixed, _c_u64p), ctypes.c_int64(n),
-            ctypes.c_uint32(seg_len), ctypes.c_uint32(seg_cnt_len),
-            _ptr(g0, _c_i32p), _ptr(g1, _c_i32p), _ptr(g2, _c_i32p))
-        return g0, g1, g2
-
-    def xor_index(self, keys: np.ndarray, seed: int, block_length: int):
-        n = keys.size
-        keys = np.ascontiguousarray(keys, dtype=np.uint64)
-        mixed = self._buf("mixed", n, np.uint64)
-        g0 = self._buf("g0", n, np.int32)
-        g1 = self._buf("g1", n, np.int32)
-        g2 = self._buf("g2", n, np.int32)
-        self.lib.ff_xor_index(
-            _ptr(keys, _c_u64p), ctypes.c_int64(n), ctypes.c_uint64(seed),
-            ctypes.c_uint32(block_length),
-            _ptr(mixed, _c_u64p), _ptr(g0, _c_i32p), _ptr(g1, _c_i32p),
-            _ptr(g2, _c_i32p))
-        return mixed, g0, g1, g2
 
     def xor_prepare(self, keys: np.ndarray, seed: int, block_length: int,
                     n_cells: int, nbuckets: int = 1024):
@@ -309,28 +234,8 @@ class _Kernel:
             _ptr(g2, _c_i32p), _ptr(state, ctypes.POINTER(ctypes.c_int64)))
         return mixed, g0, g1, g2
 
-    def xor_index_pre(self, mixed: np.ndarray, block_length: int):
-        n = mixed.size
-        mixed = np.ascontiguousarray(mixed, dtype=np.uint64)
-        g0 = self._buf("g0", n, np.int32)
-        g1 = self._buf("g1", n, np.int32)
-        g2 = self._buf("g2", n, np.int32)
-        self.lib.ff_xor_index_pre(
-            _ptr(mixed, _c_u64p), ctypes.c_int64(n),
-            ctypes.c_uint32(block_length),
-            _ptr(g0, _c_i32p), _ptr(g1, _c_i32p), _ptr(g2, _c_i32p))
-        return g0, g1, g2
-
-    # ---- peel + assign ----
-
-    def peel(self, n_cells: int, mixed, *gs):
-        """Returns (peel_out, n_peeled) — see :meth:`peel_pre`.  Pass 3
-        or 4 g arrays; arity is inferred from the count."""
-        return self._peel_call(self.lib.ff_peel, self.lib.ff_peel4,
-                               n_cells, mixed, gs)
-
     def assign(self, n_peeled: int, peel_out, fp: np.ndarray):
-        """Reverse-order fingerprint assignment over peel() output."""
+        """Reverse-order fingerprint assignment over peel_pre() output."""
         fptr = {1: _c_u8p, 2: _c_u16p, 4: _c_u32p}[fp.itemsize]
         if peel_out[0] == "cells":
             _, ocell, oc0, oc1, oc2, ohash = peel_out
@@ -413,9 +318,7 @@ def get_kernel() -> _Kernel | None:
         if so is None:
             return None
         lib = ctypes.CDLL(so)
-        lib.ff_peel.restype = ctypes.c_int64
         lib.ff_peel_pre.restype = ctypes.c_int64
-        lib.ff_peel4.restype = ctypes.c_int64
         lib.ff_peel_pre4.restype = ctypes.c_int64
         _kernel = _Kernel(lib)
     except Exception:

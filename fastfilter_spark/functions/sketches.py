@@ -50,26 +50,6 @@ def _hash_values(values: np.ndarray, seed: int = 0) -> np.ndarray:
     return K.mix_split(K.to_uint64(np.asarray(values)), seed)
 
 
-def hash_strings(values, seed: int = 0) -> np.ndarray:
-    """Deterministic 64-bit hash of a string sequence: first 8 bytes of
-    md5 (big-endian), mixed with murmur64.
-
-    md5 is C-backed (hashlib) and reproducible in DuckDB/Spark SQL, which
-    keeps driver-side oracles possible.  In Spark pipelines prefer the
-    JVM-side ``F.xxhash64(col)`` and feed longs to the sketches — this
-    helper exists for driver-side tests and small batches.
-    """
-    import hashlib
-
-    import pandas as pd
-    s = pd.Series(values, dtype="object").fillna("")
-    out = np.fromiter(
-        (int.from_bytes(hashlib.md5(v.encode("utf-8", "surrogatepass"))
-                        .digest()[:8], "big") for v in s.to_numpy()),
-        dtype=np.uint64, count=len(s))
-    return K.mix_split(out, seed)
-
-
 # ---------------------------------------------------------------------------
 # HyperLogLog
 # ---------------------------------------------------------------------------

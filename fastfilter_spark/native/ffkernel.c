@@ -6,13 +6,14 @@
  * hypergraph peeling); the algorithmic contract matches the reference
  * library (FastFilter/xor_singleheader — see SURVEY.md §2 for the
  * file:line inventory) but the code is written independently for the
- * ctypes boundary: Python owns allocation, seeding and the retry chain,
- * C owns the per-attempt O(n) loops.
+ * ctypes boundary: Python owns allocation, seeding and the retry chain
+ * (a duplicate retry re-runs prepare), C owns the per-attempt loops.
  *
  * Compiled on demand by fastfilter_spark/functions/native.py with
- * `cc -O2 -shared -fPIC`; everything is optional — the numpy kernels in
- * operators/local.py are the portable fallback and the two paths are
- * differential-tested against each other (tests/test_native.py).
+ * `cc -O3 -march=native -shared -fPIC`; everything is optional — the
+ * numpy kernels in operators/local.py are the portable fallback and the
+ * two paths are differential-tested against each other
+ * (tests/test_native.py).
  */
 
 #include <stdint.h>
@@ -35,87 +36,14 @@ static inline uint32_t lemire_reduce(uint32_t v, uint32_t range) {
     return (uint32_t)(((uint64_t)v * (uint64_t)range) >> 32);
 }
 
-/* ---- per-attempt hash + cell-index computation ------------------------ */
+/* ---- per-attempt hash, cell indices and cell state -------------------- */
 
-/* binary fuse: writes the three global cell indices and the mixed hash
- * per key.  seg_len_mask = segment_length - 1. */
-void ff_fuse_index(const uint64_t *keys, int64_t n, uint64_t seed,
-                   uint32_t segment_length, uint32_t seg_count_length,
-                   uint64_t *mixed, int32_t *g0, int32_t *g1, int32_t *g2) {
-    uint32_t mask = segment_length - 1;
-    for (int64_t i = 0; i < n; i++) {
-        uint64_t h = mm64(keys[i] + seed);
-        mixed[i] = h;
-        uint32_t a = (uint32_t)(((unsigned __int128)h * seg_count_length) >> 64);
-        uint32_t b = a + segment_length;
-        uint32_t c = a + 2 * segment_length;
-        b ^= (uint32_t)(h >> 18) & mask;
-        c ^= (uint32_t)h & mask;
-        g0[i] = (int32_t)a;
-        g1[i] = (int32_t)b;
-        g2[i] = (int32_t)c;
-    }
-}
-
-/* xor filter: three block-local indices offset into 3 contiguous blocks. */
-void ff_xor_index(const uint64_t *keys, int64_t n, uint64_t seed,
-                  uint32_t block_length,
-                  uint64_t *mixed, int32_t *g0, int32_t *g1, int32_t *g2) {
-    for (int64_t i = 0; i < n; i++) {
-        uint64_t h = mm64(keys[i] + seed);
-        mixed[i] = h;
-        g0[i] = (int32_t)lemire_reduce((uint32_t)h, block_length);
-        g1[i] = (int32_t)(lemire_reduce((uint32_t)rot64(h, 21), block_length)
-                          + block_length);
-        g2[i] = (int32_t)(lemire_reduce((uint32_t)rot64(h, 42), block_length)
-                          + 2 * block_length);
-    }
-}
-
-/* Segment-ordered variant: counting-sorts the mixed hashes by their h0
- * segment before computing indices, so the accumulate/peel/assign loops
- * touch cells in a sliding ~3-segment window instead of randomly across
- * the whole array — the cache-locality technique that makes binary-fuse
- * construction fast (cf. SURVEY.md §4.1).  h0 = mulhi(h, scl) is
- * monotone in h, so bucketing by h0/segment_length yields ascending g0.
- * tmp is caller-provided uint64 scratch of n; bucket_pos is int64
- * scratch of (seg_count+2). */
-void ff_fuse_index_sorted(const uint64_t *keys, int64_t n, uint64_t seed,
-                          uint32_t segment_length, uint32_t seg_count_length,
-                          uint32_t segment_count,
-                          uint64_t *tmp, int64_t *bucket_pos,
-                          uint64_t *mixed, int32_t *g0, int32_t *g1,
-                          int32_t *g2) {
-    uint32_t mask = segment_length - 1;
-    int log2sl = 0;
-    while ((1u << log2sl) < segment_length) log2sl++;
-    int64_t nbuckets = segment_count;
-    for (int64_t b = 0; b <= nbuckets; b++) bucket_pos[b] = 0;
-    for (int64_t i = 0; i < n; i++) {
-        uint64_t h = mm64(keys[i] + seed);
-        tmp[i] = h;
-        uint32_t a = (uint32_t)(((unsigned __int128)h * seg_count_length) >> 64);
-        bucket_pos[(a >> log2sl) + 1]++;
-    }
-    for (int64_t b = 1; b <= nbuckets; b++) bucket_pos[b] += bucket_pos[b - 1];
-    for (int64_t i = 0; i < n; i++) {
-        uint64_t h = tmp[i];
-        uint32_t a = (uint32_t)(((unsigned __int128)h * seg_count_length) >> 64);
-        mixed[bucket_pos[a >> log2sl]++] = h;
-    }
-    for (int64_t i = 0; i < n; i++) {
-        uint64_t h = mixed[i];
-        uint32_t a = (uint32_t)(((unsigned __int128)h * seg_count_length) >> 64);
-        g0[i] = (int32_t)a;
-        g1[i] = (int32_t)((a + segment_length) ^ ((uint32_t)(h >> 18) & mask));
-        g2[i] = (int32_t)((a + 2 * segment_length) ^ ((uint32_t)h & mask));
-    }
-}
-
-/* Fused variant: segment-sorted index computation AND cell-state
- * accumulation in one pass (state[c] = count<<32 | xor of row ids),
- * feeding ff_peel_pre — one fewer full sweep over g0/g1/g2 than
- * index_sorted + ff_peel.  state must hold m entries (zeroed here). */
+/* A build attempt is prepare -> ff_peel_pre -> assign.  Prepare
+ * counting-sorts the mixed hashes by h0 segment (h0 = mulhi(h, scl) is
+ * monotone in h), so later loops touch cells in a sliding ~3-segment
+ * window (the binary-fuse locality technique, SURVEY.md §4.1), then
+ * writes the cell indices and accumulates state[c] = count<<32 | xor of
+ * row ids.  tmp: n u64; bucket_pos: segment_count+2; state: m. */
 void ff_fuse_prepare(const uint64_t *keys, int64_t n, uint64_t seed,
                      uint32_t segment_length, uint32_t seg_count_length,
                      uint32_t segment_count, int64_t m,
@@ -201,7 +129,8 @@ void ff_xor_prepare(const uint64_t *keys, int64_t n, uint64_t seed,
     }
 }
 
-/* Peel over pre-accumulated state (from ff_fuse_prepare).
+/* Queue peel over the state a prepare call accumulated (a count-1
+ * cell's row-id xor IS its remaining row); returns the number peeled.
  *
  * With emit != 0, besides the peel order (order/ocell) it emits per
  * peeled row its THREE cell indices (oc0/oc1/oc2 — already in registers
@@ -251,64 +180,6 @@ int64_t ff_peel_pre(int64_t n, int64_t m, const uint64_t *mixed,
                     int32_t *oc0, int32_t *oc1, int32_t *oc2,
                     uint64_t *ohash, int32_t *queue) {
     const int64_t ONE = (int64_t)1 << 32;
-    int64_t qhead = 0, qtail = 0;
-    for (int64_t c = 0; c < m; c++)
-        if ((state[c] >> 32) == 1) queue[qtail++] = (int32_t)c;
-    int64_t np = 0;
-    if (emit) { PEEL_LOOP(1) } else { PEEL_LOOP(0) }
-    return np;
-}
-
-/* Index-only variants over already-mixed hashes (used on the
- * duplicate-retry path, where Python dedups the mixed hash array). */
-void ff_fuse_index_pre(const uint64_t *mixed, int64_t n,
-                       uint32_t segment_length, uint32_t seg_count_length,
-                       int32_t *g0, int32_t *g1, int32_t *g2) {
-    uint32_t mask = segment_length - 1;
-    for (int64_t i = 0; i < n; i++) {
-        uint64_t h = mixed[i];
-        uint32_t a = (uint32_t)(((unsigned __int128)h * seg_count_length) >> 64);
-        g0[i] = (int32_t)a;
-        g1[i] = (int32_t)((a + segment_length) ^ ((uint32_t)(h >> 18) & mask));
-        g2[i] = (int32_t)((a + 2 * segment_length) ^ ((uint32_t)h & mask));
-    }
-}
-
-void ff_xor_index_pre(const uint64_t *mixed, int64_t n, uint32_t block_length,
-                      int32_t *g0, int32_t *g1, int32_t *g2) {
-    for (int64_t i = 0; i < n; i++) {
-        uint64_t h = mixed[i];
-        g0[i] = (int32_t)lemire_reduce((uint32_t)h, block_length);
-        g1[i] = (int32_t)(lemire_reduce((uint32_t)rot64(h, 21), block_length)
-                          + block_length);
-        g2[i] = (int32_t)(lemire_reduce((uint32_t)rot64(h, 42), block_length)
-                          + 2 * block_length);
-    }
-}
-
-/* ---- peel ------------------------------------------------------------- */
-
-/* Sequential queue peel of the 3-regular hypergraph.
- *
- * Per cell: key_count and the XOR of incident row ids (when count==1 the
- * xor IS the remaining row).  Emits rows/cells in peel order; returns the
- * number peeled (== n on success).  order/ocell must hold n entries;
- * scratch int32 arrays counts/rowxor must hold m entries (zeroed here).
- */
-int64_t ff_peel(int64_t n, int64_t m, const uint64_t *mixed,
-                const int32_t *g0, const int32_t *g1, const int32_t *g2,
-                int64_t *state,  /* m entries: count<<32 | rowxor */
-                int32_t emit,
-                int32_t *order, int32_t *ocell,
-                int32_t *oc0, int32_t *oc1, int32_t *oc2,
-                uint64_t *ohash, int32_t *queue) {
-    const int64_t ONE = (int64_t)1 << 32;
-    memset(state, 0, (size_t)m * sizeof(int64_t));
-    for (int64_t i = 0; i < n; i++) {
-        state[g0[i]] += ONE; state[g0[i]] ^= (uint32_t)i;
-        state[g1[i]] += ONE; state[g1[i]] ^= (uint32_t)i;
-        state[g2[i]] += ONE; state[g2[i]] ^= (uint32_t)i;
-    }
     int64_t qhead = 0, qtail = 0;
     for (int64_t c = 0; c < m; c++)
         if ((state[c] >> 32) == 1) queue[qtail++] = (int32_t)c;
@@ -465,19 +336,6 @@ void ff_fuse_prepare4(const uint64_t *keys, int64_t n, uint64_t seed,
     }
 }
 
-void ff_fuse_index_pre4(const uint64_t *mixed, int64_t n,
-                        uint32_t segment_length, uint32_t seg_count_length,
-                        int32_t *g0, int32_t *g1, int32_t *g2, int32_t *g3) {
-    uint32_t mask = segment_length - 1;
-    for (int64_t i = 0; i < n; i++) {
-        uint64_t h = mixed[i];
-        uint32_t a, b2, c2, d2;
-        FUSE4_CELLS(h, a, b2, c2, d2);
-        g0[i] = (int32_t)a; g1[i] = (int32_t)b2;
-        g2[i] = (int32_t)c2; g3[i] = (int32_t)d2;
-    }
-}
-
 /* 4-ary peel loop — identical bookkeeping to PEEL_LOOP with one more
  * incident cell per row (and an oc3 emit stream). */
 #define PEEL_LOOP_4(EMIT)                                                \
@@ -514,31 +372,6 @@ int64_t ff_peel_pre4(int64_t n, int64_t m, const uint64_t *mixed,
                      int32_t *oc0, int32_t *oc1, int32_t *oc2, int32_t *oc3,
                      uint64_t *ohash, int32_t *queue) {
     const int64_t ONE = (int64_t)1 << 32;
-    int64_t qhead = 0, qtail = 0;
-    for (int64_t c = 0; c < m; c++)
-        if ((state[c] >> 32) == 1) queue[qtail++] = (int32_t)c;
-    int64_t np = 0;
-    if (emit) { PEEL_LOOP_4(1) } else { PEEL_LOOP_4(0) }
-    return np;
-}
-
-/* Accumulate-then-peel over caller-provided g arrays (the arity-4 twin
- * of ff_peel; used on the duplicate-retry path). */
-int64_t ff_peel4(int64_t n, int64_t m, const uint64_t *mixed,
-                 const int32_t *g0, const int32_t *g1,
-                 const int32_t *g2, const int32_t *g3,
-                 int64_t *state, int32_t emit,
-                 int32_t *order, int32_t *ocell,
-                 int32_t *oc0, int32_t *oc1, int32_t *oc2, int32_t *oc3,
-                 uint64_t *ohash, int32_t *queue) {
-    const int64_t ONE = (int64_t)1 << 32;
-    memset(state, 0, (size_t)m * sizeof(int64_t));
-    for (int64_t i = 0; i < n; i++) {
-        state[g0[i]] += ONE; state[g0[i]] ^= (uint32_t)i;
-        state[g1[i]] += ONE; state[g1[i]] ^= (uint32_t)i;
-        state[g2[i]] += ONE; state[g2[i]] ^= (uint32_t)i;
-        state[g3[i]] += ONE; state[g3[i]] ^= (uint32_t)i;
-    }
     int64_t qhead = 0, qtail = 0;
     for (int64_t c = 0; c < m; c++)
         if ((state[c] >> 32) == 1) queue[qtail++] = (int32_t)c;

@@ -414,8 +414,10 @@ class FuseFilter:
         keys — possible only for true duplicates since the seeded hash is a
         bijection) and backs out the extra copy (:359-373), leaving exactly
         the state of the unique key set with `duplicates` = extras; we
-        compute the same state directly from np.unique(hashes) and the same
-        success condition peeled + duplicates == size (:425).
+        compute the same state by re-running the attempt over
+        np.unique(keys) (same hash set, since the seeded hash is a
+        bijection) and the same success condition peeled + duplicates ==
+        size (:425).
 
         ``arity=4`` builds a 4-wise fuse filter with the reference's
         arity-4 sizing constants (binaryfusefilter.h:196-198/214-216 —
@@ -447,29 +449,23 @@ class FuseFilter:
         rng_state, seed = K.splitmix64(rng_state)
         nat = native.get_kernel()
 
-        def triple(hashes):
+        def attempt_seed(current, seed):
+            # peeled = -1 on a cell of 64+ keys: the reference's 6-bit
+            # counter wraps there and aborts (binaryfusefilter.h:374-377)
             if nat is not None:
-                return nat.fuse_index_pre(hashes, seg_len, seg_cnt_len,
-                                          arity=arity)
-            if arity == 4:
-                return tuple(g.astype(np.int32) for g in K.fuse_index_quad(
-                    hashes, seg_len, mask, seg_cnt_len))
-            g0, g1, g2 = K.fuse_index_triple(hashes, seg_len, mask, seg_cnt_len)
-            return (g0.astype(np.int32), g1.astype(np.int32), g2.astype(np.int32))
-
-        def peel(hashes, gs):
-            # fail on any cell with 64+ keys: the reference's 6-bit packed
-            # counter wraps there and aborts the attempt
-            # (binaryfusefilter.h:374-377) — both tiers must mirror it so
-            # the seed chains stay identical
-            if nat is not None:
-                counts = np.bincount(gs[0], minlength=array_length)
-                for g in gs[1:]:
-                    counts += np.bincount(g, minlength=array_length)
-                if int(counts.max()) >= 64:
-                    return None, -1
-                return nat.peel(array_length, hashes, *gs)
-            return _peel(array_length, *gs, fail_if_count_ge=64)
+                hashes, *gs = nat.fuse_prepare(
+                    current, seed, seg_len, seg_cnt_len, seg_cnt,
+                    array_length, arity=arity)
+                if nat.state_overflow(array_length):
+                    return hashes, gs, None, -1
+                return (hashes, gs,
+                        *nat.peel_pre(array_length, hashes, *gs))
+            hashes = K.mix_split(current, seed)
+            index = K.fuse_index_quad if arity == 4 else K.fuse_index_triple
+            gs = [g.astype(np.int32)
+                  for g in index(hashes, seg_len, mask, seg_cnt_len)]
+            return (hashes, gs,
+                    *_peel(array_length, *gs, fail_if_count_ge=64))
 
         current = keys
         attempt = 0
@@ -477,35 +473,17 @@ class FuseFilter:
             attempt += 1
             if attempt > K.XOR_MAX_ITERATIONS:
                 raise ConstructionError("fuse populate failed after 100 seeds")
-            if nat is not None:
-                # fused index+accumulate pass, then peel over the
-                # pre-filled state (one fewer sweep than index + peel)
-                hashes, *gs = nat.fuse_prepare(
-                    current, seed, seg_len, seg_cnt_len, seg_cnt,
-                    array_length, arity=arity)
-                gs = tuple(gs)
-                if nat.state_overflow(array_length):
-                    rounds, peeled = None, -1  # counter-wrap abort (see peel)
-                else:
-                    rounds, peeled = nat.peel_pre(array_length, hashes, *gs)
-            else:
-                hashes = K.mix_split(current, seed)
-                gs = triple(hashes)
-                rounds, peeled = peel(hashes, gs)
-            if peeled == hashes.size:
+            hashes, gs, rounds, peeled = attempt_seed(current, seed)
+            if peeled != current.size:
+                # duplicates never peel: rerun this seed over the unique
+                # keys, as the reference backs them out in-attempt
+                # (:359-373, :425), and keep them for later seeds (:430)
+                uniq = np.unique(current)
+                if uniq.size < current.size:
+                    current = uniq
+                    hashes, gs, rounds, peeled = attempt_seed(current, seed)
+            if peeled == current.size:
                 break
-            # duplicate handling: duplicate keys (identical seeded hashes —
-            # the hash is a bijection) can never peel, so retry this seed
-            # over the deduplicated set, matching the reference's back-out
-            # of detected duplicates within the attempt (:359-373, :425)
-            uniq = np.unique(hashes)
-            if uniq.size < hashes.size:
-                hashes = uniq
-                gs = triple(hashes)
-                rounds, peeled = peel(hashes, gs)
-                if peeled == hashes.size:
-                    break
-                current = np.unique(current)  # dedup before next attempt (:430-432)
             rng_state, seed = K.splitmix64(rng_state)
 
         fp = np.zeros(array_length, dtype=dtype)

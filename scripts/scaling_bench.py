@@ -15,8 +15,9 @@ engine: shuffle + Arrow + per-shard native kernel), plus the probe pass.
 Host noise is neither gated nor waited out.  Each level times a
 fixed-work, JVM-only reference job (``host_reference_s``) twice before
 and twice after its timed runs and reports ``build_per_ref``: the best
-build over the median reference time.  A slower host moves both, so
-the ratio stays comparable where the raw seconds are not.
+build over the fastest reference time (the first timed pair still
+carries codegen/JIT warm-up, so best over best).  A slower host moves
+both, so the ratio stays comparable where the raw seconds are not.
 
 Usage:
     python scripts/scaling_bench.py --level 8  # one level, prints JSON
@@ -27,7 +28,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import statistics
 import sys
 import time
 
@@ -133,6 +133,7 @@ def measure_build_probe(spark, runs: int) -> dict:
     host_ref += [host_reference_s(spark, partitions) for _ in range(2)]
 
     build_s, probe_s = min(build_runs), min(probe_runs)
+    host_ref = [round(t, 3) for t in host_ref]
     return {
         "n_keys": n,
         "build_s": round(build_s, 3),
@@ -141,8 +142,9 @@ def measure_build_probe(spark, runs: int) -> dict:
         "probe_keys_per_sec": round(n / probe_s, 1),
         "build_runs_s": [round(t, 3) for t in build_runs],
         "probe_runs_s": [round(t, 3) for t in probe_runs],
-        "host_ref_s": [round(t, 3) for t in host_ref],
-        "build_per_ref": round(build_s / statistics.median(host_ref), 3),
+        "host_ref_s": host_ref,
+        # from the reported values, so the ratio can be checked from them
+        "build_per_ref": round(round(build_s, 3) / min(host_ref), 3),
     }
 
 

@@ -145,18 +145,54 @@ def test_native_arity4_vs_numpy(bits):
 
 
 def test_native_arity4_index_map_matches_numpy():
-    """The 4-wise cell map itself must agree element-wise (this is what
-    guarantees cross-tier compatibility above)."""
+    """The cell maps fuse_prepare returns must agree element-wise with the
+    numpy tier's for both arities (this is what guarantees cross-tier
+    compatibility above), over hashes that are exactly the seeded mix of
+    the input keys, reordered."""
     from fastfilter_spark.functions import kernels as K
     from fastfilter_spark.operators.local import fuse_layout
     nat = get_kernel()
-    seg_len, seg_cnt, seg_cnt_len, m = fuse_layout(50_000, 4)
-    hashes = np.random.default_rng(2).integers(
+    keys = np.random.default_rng(2).integers(
         0, 1 << 63, size=10_000, dtype=np.uint64)
-    g_nat = nat.fuse_index_pre(hashes, seg_len, seg_cnt_len, arity=4)
-    g_np = K.fuse_index_quad(hashes, seg_len, seg_len - 1, seg_cnt_len)
-    for a, b in zip(g_nat, g_np):
-        assert (a.astype(np.int64) == b.astype(np.int64)).all()
+    seed = 0x9E3779B97F4A7C15
+    for arity, index in ((3, K.fuse_index_triple), (4, K.fuse_index_quad)):
+        seg_len, seg_cnt, seg_cnt_len, m = fuse_layout(50_000, arity)
+        mixed, *g_nat = nat.fuse_prepare(keys, seed, seg_len, seg_cnt_len,
+                                         seg_cnt, m, arity=arity)
+        assert len(g_nat) == arity
+        assert (np.sort(mixed) == np.sort(K.mix_split(keys, seed))).all()
+        g_np = index(mixed, seg_len, seg_len - 1, seg_cnt_len)
+        for a, b in zip(g_nat, g_np, strict=True):
+            assert (a.astype(np.int64) == b.astype(np.int64)).all()
+
+
+def test_kernel_surface_is_all_used():
+    """No dead native route: every ff_* symbol the compiled kernel exports
+    is bound in functions/native.py, and every public _Kernel method is
+    called by operators/local.py."""
+    import re
+    import shutil
+    from fastfilter_spark.functions import native
+    from fastfilter_spark.operators import local
+    nm = shutil.which("nm")
+    so = native._compile()
+    if nm is None or so is None:
+        pytest.skip("nm or the compiled kernel is unavailable")
+    out = subprocess.run([nm, "-D", "--defined-only", so],
+                         capture_output=True, text=True, check=True).stdout
+    symbols = {f[-1] for f in map(str.split, out.splitlines())
+               if f and f[-1].startswith("ff_")}
+    assert symbols
+    with open(native.__file__) as f:
+        native_src = f.read()
+    with open(local.__file__) as f:
+        local_src = f.read()
+    assert sorted(s for s in symbols
+                  if not re.search(rf"\b{s}\b", native_src)) == []
+    methods = [name for name, v in vars(native._Kernel).items()
+               if callable(v) and not name.startswith("_")]
+    assert sorted(m for m in methods
+                  if not re.search(rf"\.{m}\(", local_src)) == []
 
 
 def test_native_arity4_emit_path():
