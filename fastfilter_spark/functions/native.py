@@ -192,8 +192,7 @@ class _Kernel:
         state = self._buf("state", n_cells, np.int64)
         order, ocell, oc0, oc1, oc2, oc3, ohash, queue = \
             self._peel_bufs(n, n_cells, emit, arity)
-        args = [ctypes.c_int64(n), ctypes.c_int64(n_cells),
-                _ptr(mixed, _c_u64p)]
+        args = [ctypes.c_int64(n_cells), _ptr(mixed, _c_u64p)]
         args += [_ptr(g, _c_i32p) for g in gs]
         args += [_ptr(state, ctypes.POINTER(ctypes.c_int64)),
                  ctypes.c_int32(1 if emit else 0),

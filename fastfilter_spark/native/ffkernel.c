@@ -173,7 +173,7 @@ void ff_xor_prepare(const uint64_t *keys, int64_t n, uint64_t seed,
         }                                                                \
     }
 
-int64_t ff_peel_pre(int64_t n, int64_t m, const uint64_t *mixed,
+int64_t ff_peel_pre(int64_t m, const uint64_t *mixed,
                     const int32_t *g0, const int32_t *g1, const int32_t *g2,
                     int64_t *state, int32_t emit,
                     int32_t *order, int32_t *ocell,
@@ -364,7 +364,7 @@ void ff_fuse_prepare4(const uint64_t *keys, int64_t n, uint64_t seed,
         }                                                                \
     }
 
-int64_t ff_peel_pre4(int64_t n, int64_t m, const uint64_t *mixed,
+int64_t ff_peel_pre4(int64_t m, const uint64_t *mixed,
                      const int32_t *g0, const int32_t *g1,
                      const int32_t *g2, const int32_t *g3,
                      int64_t *state, int32_t emit,

@@ -23,7 +23,8 @@ import os
 import shutil
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from fastfilter_spark.operators.dist import (
@@ -49,22 +50,21 @@ class IncrementalFilterMaintainer:
     State = per-shard key stores (parquet of raw keys, partitioned by
     shard) plus an append-only filter-table LOG (parquet rows of
     ``FILTER_TABLE_SCHEMA`` + ``batch_id`` + ``seq``).  A micro-batch
-    appends its keys to the key store (one new file per touched shard;
-    nothing compacts the store), rebuilds ONLY the shards it
-    touched from their full key sets (partition-pruned read), and
-    APPENDS the rebuilt rows stamped with a log-local monotonic ``seq``
-    (restart-safe, see TABLE_LOG_SCHEMA).  Readers resolve latest-wins
-    per shard, so untouched shards keep serving their previous rows — and,
-    unlike a read-modify-write of the whole table, nothing is ever
-    collected to the driver: per-batch cost is touched-shards only,
-    regardless of total filter size (at 2^18 shards the old
-    collect-and-rewrite was ~the whole TB-scale filter per batch).
+    appends its keys to the key store in one pass over the batch (one
+    new file per touched shard; nothing compacts the store) whose
+    observed metric names the touched shards, rebuilds ONLY those from
+    their full key sets (partition-pruned read), and APPENDS the rebuilt
+    rows stamped with a log-local monotonic ``seq`` (restart-safe, see
+    TABLE_LOG_SCHEMA), memoised against the log's file listing.  Readers
+    resolve latest-wins per shard, so untouched shards keep serving
+    their previous rows, and no batch row or payload is ever collected
+    to the driver: per-batch cost is touched shards only, regardless of
+    total filter size.
 
     Re-delivered batches (foreachBatch is at-least-once) are harmless:
-    the duplicate keys collapse in the in-kernel np.unique and the
-    duplicate log rows carry identical payloads; latest-wins picks one
-    deterministically.  ``compact()`` folds the log back to one row per
-    shard when it grows long.
+    duplicate keys collapse in the in-kernel np.unique and duplicate log
+    rows carry identical payloads; latest-wins picks one deterministically.
+    ``compact()`` folds the log back to one row per shard.
     """
 
     def __init__(self, base_dir: str, key_col: str = "key",
@@ -80,68 +80,67 @@ class IncrementalFilterMaintainer:
         # is driver-serial per query, so this can never race an append
         self.compact_every = compact_every
         self._batches_seen = 0
+        # (log part-file names, max seq) at the last log append or read
+        self._seq_memo = (frozenset(), 0)
+
+    def _log_files(self) -> frozenset:
+        """Names of the log's parquet part files; empty when the log dir
+        is missing or holds none (e.g. mid-compact): 'empty log'."""
+        if not os.path.isdir(self.table_dir):
+            return frozenset()
+        return frozenset(name for name in os.listdir(self.table_dir)
+                         if name.endswith(".parquet"))
 
     def _next_seq(self, spark: SparkSession) -> int:
         """Log-local monotonic sequence: max existing + 1 (survives
         stream restarts with fresh checkpoints, unlike batch_id).  The
-        log holds tiny per-shard rows, so the max() agg reads KBs."""
-        if not self._log_has_files():
+        memo answers only while the log's part files are exactly those
+        recorded at this maintainer's last append or read; any other
+        writer, compact(), recovered swap or corrupt file changes that
+        set and falls through to a Spark max(seq) over the log."""
+        files = self._log_files()
+        if not files:
             return 1
-        # NO broad except here: a transient read error defaulting to
-        # seq=1 would stamp new rows BELOW the existing max, so
-        # latest-wins would serve stale shard payloads — silent false
-        # negatives.  Only a genuinely empty/missing log maps to 1;
-        # unexpected read errors propagate (retryable by the stream).
-        cur = spark.read.schema(TABLE_LOG_SCHEMA) \
-            .parquet(self.table_dir).agg(F.max("seq")).first()[0]
-        return int(cur or 0) + 1
-
-    def _log_has_files(self) -> bool:
-        """True iff the filter-table log dir holds at least one parquet
-        part file (an existing-but-empty dir, e.g. mid-compact, is
-        'empty log')."""
-        if not os.path.isdir(self.table_dir):
-            return False
-        return any(name.endswith(".parquet")
-                   for name in os.listdir(self.table_dir))
+        if files == self._seq_memo[0]:
+            return self._seq_memo[1] + 1
+        # NO broad except: a read error defaulting to seq=1 would stamp
+        # new rows BELOW the existing max, so latest-wins would serve
+        # stale shard payloads (silent false negatives).  Only an empty
+        # or missing log maps to 1; read errors propagate (retryable).
+        cur = int(spark.read.schema(TABLE_LOG_SCHEMA)
+                  .parquet(self.table_dir).agg(F.max("seq")).first()[0] or 0)
+        self._seq_memo = (files, cur)
+        return cur + 1
 
     # -- foreachBatch entry ----------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         self._recover_compact()
-        # shuffle by shard BEFORE the cache: each shard's batch keys then
-        # sit in one task, so the partitioned append below writes one
-        # file per touched shard (straight off the source it wrote one
-        # per task x shard — on a local FS each file also costs several
-        # chmod forks), and the touched-shard distinct needs no further
-        # exchange.  Not coalesce (collapses a large batch's whole stage
-        # into a few tasks) and not rebalance (AQE may split a shard
-        # across tasks, i.e. more than one file per shard).
-        keyed = keys_with_shard(batch_df, self.key_col, self.shard_bits) \
-            .repartition("shard")
-        # one source scan per trigger: cache the keyed batch, derive the
-        # touched-shard list (doubles as the empty check), then append —
-        # without the cache this pipeline would re-read the micro-batch
-        # source three times (empty-probe, write, distinct)
-        keyed.persist()
-        try:
-            touched = [r["shard"] for r in
-                       keyed.select("shard").distinct().collect()]
-            if not touched:
-                return
-            keyed.write.mode("append") \
-                .partitionBy("shard").parquet(self.keys_dir)
-        finally:
-            keyed.unpersist()
+        # shuffle by shard before the append: each shard's batch keys
+        # then sit in one task, so the partitioned write adds one file
+        # per touched shard (straight off the source: one per task x
+        # shard, each costing several chmod forks on a local FS).  Not
+        # coalesce (collapses a large batch's stage into a few tasks),
+        # not rebalance (AQE may split a shard across tasks).  The write
+        # observes the touched shards itself: one scan of the source,
+        # no cache, no distinct job; an empty or all-null batch
+        # observes none and writes no key file.
+        obs = Observation()
+        keys_with_shard(batch_df, self.key_col, self.shard_bits) \
+            .repartition("shard") \
+            .observe(obs, F.collect_set("shard").alias("shards")) \
+            .write.mode("append").partitionBy("shard").parquet(self.keys_dir)
+        touched = obs.get["shards"]
+        if not touched:
+            return
 
         # rebuild touched shards from their full key history (partition
-        # pruning: the key store is partitioned by shard, so untouched
-        # shards are never read), then append to the log — executors
-        # write their own shard rows, the driver moves only shard IDS.
-        # The declared schema (keys_with_shard's) skips parquet schema
-        # inference, a Spark job of its own; `shard` stays the
-        # discovered partition column
+        # pruning: untouched shards are never read), then append to the
+        # log — executors write their own shard rows, the driver moves
+        # only shard IDS.  The declared schema (keys_with_shard's) skips
+        # parquet schema inference, a Spark job of its own; `shard`
+        # stays the discovered partition column
         store = spark.read.schema("key long, shard int") \
             .parquet(self.keys_dir) \
             .where(F.col("shard").isin([int(s) for s in touched]))
@@ -150,6 +149,7 @@ class IncrementalFilterMaintainer:
         rebuilt.withColumn("batch_id", F.lit(int(batch_id)).cast("long")) \
             .withColumn("seq", F.lit(seq).cast("long")) \
             .write.mode("append").parquet(self.table_dir)
+        self._seq_memo = (self._log_files(), seq)
         self._batches_seen += 1
         if self.compact_every and self._batches_seen % self.compact_every == 0:
             self.compact(spark)

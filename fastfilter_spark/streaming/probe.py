@@ -68,8 +68,9 @@ class StreamingFilterProbe:
 
     def _refresh(self, spark: SparkSession) -> None:
         """Reload the filter snapshot iff the maintainer's log advanced
-        (seq probe = one small parquet column read of the compacted
-        log; the payloads are only re-broadcast on actual change)."""
+        (seq probe = a listing of the log dir while it still holds the
+        files the maintainer last appended or read, else one small
+        parquet column read; payloads re-broadcast only on change)."""
         try:
             seq = self.maintainer._next_seq(spark)
         except Exception:

@@ -195,6 +195,21 @@ def test_kernel_surface_is_all_used():
                   if not re.search(rf"\.{m}\(", local_src)) == []
 
 
+def test_kernel_compiles_warning_free():
+    """ffkernel.c builds clean under -Wall -Wextra: an unused parameter
+    or variable there is dead interface the ctypes bindings still pay
+    to pass."""
+    import shutil
+    from fastfilter_spark.functions import native
+    cc = shutil.which("cc")
+    if cc is None:
+        pytest.skip("no C compiler available")
+    out = subprocess.run([cc, "-Wall", "-Wextra", "-Werror",
+                          "-fsyntax-only", native._SRC],
+                         capture_output=True, text=True)
+    assert out.returncode == 0, out.stderr
+
+
 def test_native_arity4_emit_path():
     """>= EMIT_MIN_N keys exercises the emit-cells peel + sequential
     assign variant (oc0..oc3 streams)."""

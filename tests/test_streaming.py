@@ -290,3 +290,99 @@ def test_keystore_appends_one_file_per_touched_shard(spark, tmp_path,
     assert keys_df.count() == 4000 + one.size
     batch_sf, _ = build_sharded(keys_df, "key", kind="fuse8", shard_bits=4)
     assert maint.current_filter(spark).payloads == batch_sf.payloads
+
+
+def _keys(spark, lo: int, hi: int):
+    return spark.range(lo, hi).select(
+        (F.col("id") * 2654435761).alias("value"))
+
+
+def test_second_micro_batch_collects_nothing(spark, tmp_path):
+    """Once a maintainer has appended to the log, a further micro-batch
+    and the seq read after it collect nothing to the driver: the touched
+    shards come from the key-store write's observed metric and the seq
+    from the memo of the log's file listing.  A fresh maintainer over an
+    existing log collects exactly once, for its seq read."""
+    from tests.conftest import poison_collect, spy_collect
+    base = str(tmp_path / "inc")
+    maint = IncrementalFilterMaintainer(base, key_col="value",
+                                        kind="fuse8", shard_bits=2)
+    maint.process_batch(_keys(spark, 0, 2000), 0)
+    with poison_collect("driver collect in a second micro-batch"):
+        maint.process_batch(_keys(spark, 2000, 3000), 1)
+        assert maint._next_seq(spark) == 3
+
+    collected = []
+    fresh = IncrementalFilterMaintainer(base, key_col="value",
+                                        kind="fuse8", shard_bits=2)
+    with spy_collect(collected):
+        fresh.process_batch(_keys(spark, 3000, 4000), 2)
+        assert fresh._next_seq(spark) == 4
+    assert collected == [["max(seq)"]], collected
+
+
+def test_seq_memo_never_hides_another_writer(spark, tmp_path):
+    """Two maintainers on one base_dir alternate batches A, B, A: each
+    sees the other's appends (seq 1, 2, 3), the resolved filter equals a
+    from-scratch build over the key store, and a corrupt part file
+    dropped into the log after A's append makes A's seq read raise."""
+    from fastfilter_spark.operators.dist import build_sharded
+    base = str(tmp_path / "inc")
+    a, b = (IncrementalFilterMaintainer(base, key_col="value", kind="fuse8",
+                                        shard_bits=2) for _ in range(2))
+    a.process_batch(_keys(spark, 0, 2000), 0)
+    b.process_batch(_keys(spark, 2000, 3000), 0)
+    a.process_batch(_keys(spark, 3000, 3500), 1)
+    log = spark.read.parquet(a.table_dir)
+    assert sorted(r["seq"] for r in log.select("seq").distinct()
+                  .collect()) == [1, 2, 3]
+
+    keys_df = spark.read.parquet(a.keys_dir)
+    batch_sf, _ = build_sharded(keys_df, "key", kind="fuse8", shard_bits=2)
+    assert a.current_filter(spark).payloads == batch_sf.payloads
+
+    with open(os.path.join(a.table_dir, "part-x.parquet"), "wb") as f:
+        f.write(b"this is not parquet")
+    with pytest.raises(Exception):
+        a._next_seq(spark)
+
+
+def test_empty_and_all_null_micro_batches(spark, tmp_path, monkeypatch):
+    """A zero-row batch and a batch whose keys are all null (dropped by
+    keys_with_shard) observe no touched shard, add no key-store file and
+    no log row, and leave the next seq where it was, both before and
+    after the log's first append."""
+    import fastfilter_spark.streaming.incremental as inc
+
+    observed = []
+
+    class Recording(inc.Observation):
+        @property
+        def get(self):
+            got = super().get
+            observed.append(got)
+            return got
+
+    monkeypatch.setattr(inc, "Observation", Recording)
+    maint = IncrementalFilterMaintainer(str(tmp_path / "inc"),
+                                        key_col="value", kind="fuse8",
+                                        shard_bits=2)
+    empty = _keys(spark, 0, 0)
+    nulls = spark.range(0, 500).select(F.lit(None).cast("long")
+                                       .alias("value"))
+
+    def log_rows():
+        files = maint._log_files()
+        return spark.read.parquet(maint.table_dir).count() if files else 0
+
+    for real in (None, _keys(spark, 0, 1000)):
+        if real is not None:
+            maint.process_batch(real, 0)
+        before = (_store_files(maint), log_rows(), maint._next_seq(spark))
+        for batch_id, df in enumerate((empty, nulls), start=1):
+            observed.clear()
+            maint.process_batch(df, batch_id)
+            assert observed == [{"shards": []}]
+            assert (_store_files(maint), log_rows(),
+                    maint._next_seq(spark)) == before
+    assert before[1] > 0 and before[2] == 2
