@@ -25,6 +25,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from fastfilter_spark.operators.kmv import portable_hash60_sql
+
 SF_DEFAULT = "/root/testdata/sf0.001"
 
 
@@ -967,7 +969,7 @@ _KMV_TOK_CTE = (
     "tok AS (SELECT tok.t AS token FROM documents, "
     "UNNEST(list_filter(string_split_regex(lower(text), '[^a-z]+'), "
     "x -> x <> '')) AS tok(t))")
-_KMV_H = "('0x' || substr(md5(token), 1, 15))::BIGINT"
+_KMV_H = portable_hash60_sql("token")
 
 
 def _kmv_sketches_oracle_sql(kd: int = 512, kj: int = 256) -> str:
@@ -1074,8 +1076,7 @@ def q_priority_sample_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _priority_sample_oracle_sql(k: int = 64) -> str:
-    h = ("('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT"
-         " + 1")
+    h = portable_hash60_sql("CAST(doc_id AS VARCHAR)") + " + 1"
     return (
         "WITH w AS (SELECT doc_id, source, "
         "len(list_filter(string_split_regex(lower(text), '[^a-z]+'), "
@@ -1119,7 +1120,7 @@ def _pack_sequences_oracle_sql(seq_len: int = 2048) -> str:
         "WITH w AS (SELECT doc_id, "
         "len(list_filter(string_split_regex(lower(text), '[^a-z]+'), "
         "x -> x <> '')) AS ntok, "
-        "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT "
+        f"{portable_hash60_sql('CAST(doc_id AS VARCHAR)')} "
         "AS h FROM documents), "
         "q AS (SELECT doc_id, ntok, sum(ntok) OVER (ORDER BY h, doc_id "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - ntok AS s "
@@ -2022,7 +2023,7 @@ def oracle_sql() -> dict[str, str]:
             "FROM orders), "
             "r AS (SELECT host, row_number() OVER (PARTITION BY host "
             "ORDER BY prio DESC) - 1 AS wave, "
-            "('0x' || substr(md5(host), 1, 15))::BIGINT % 16 AS worker "
+            f"{portable_hash60_sql('host')} % 16 AS worker "
             "FROM u) "
             "SELECT worker, count(*) AS n_urls, "
             "count(DISTINCT host) AS n_domains, max(wave) AS max_wave "
@@ -2066,9 +2067,9 @@ def oracle_sql() -> dict[str, str]:
         "leakage_safe_split": (
             "WITH d AS (SELECT doc_id, 'site' || CAST(doc_id % 101 AS "
             "VARCHAR) AS domain FROM documents), "
-            "b AS (SELECT doc_id, domain, ('0x' || substr(md5("
-            "'split-v1|' || domain), 1, 15))::BIGINT % 1000000 AS bucket "
-            "FROM d), "
+            "b AS (SELECT doc_id, domain, "
+            + portable_hash60_sql("'split-v1|' || domain")
+            + " % 1000000 AS bucket FROM d), "
             "s AS (SELECT domain, CASE WHEN bucket < 900000 THEN 'train' "
             "WHEN bucket < 950000 THEN 'val' ELSE 'test' END AS split "
             "FROM b) "

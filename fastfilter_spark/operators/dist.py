@@ -34,9 +34,11 @@ Scale design notes (targeting a 10^12-key Iceberg table, tested locally):
   probe-side use.
 - Probing is a scalar Arrow UDF over the broadcast shard list:
   route each probe key by the same hash prefix, gather 3 fingerprint cells,
-  xor, compare.  Used via ``df.filter(sf.contains_udf()(col))`` this is the
-  distributed analog of a broadcast left-semi join with the exact hash
-  table replaced by a 9-bit/key approximate one.
+  xor, compare.  Used via ``df.filter(sf.contains_udf(spark)(col))`` this
+  is the distributed analog of a broadcast left-semi join with the exact
+  hash table replaced by a 9-bit/key approximate one.  ``broadcast_probe``
+  is the one broadcast probe path; the Bloom probe
+  (sketch_agg.bloom_contains_udf) runs through it too.
 
 Checkpoint/resume (BASELINE.json:north_rule): ``build_sharded`` with a
 ``checkpoint_dir`` writes each shard's row as soon as its build task
@@ -65,27 +67,29 @@ from pyspark.sql.types import (
 )
 
 from fastfilter_spark.functions import kernels as K
-from fastfilter_spark.operators.local import build_filter, filter_from_bytes
+from fastfilter_spark.operators.local import (
+    build_filter, empty_filter, filter_from_bytes,
+)
 
-# Worker-process-global cache of deserialized shard filters (see
-# ShardedFilter.contains_udf); python workers are reused across tasks, so
+# Worker-process-global cache of decoded probe payloads (see
+# broadcast_probe); python workers are reused across tasks, so
 # this amortizes deserialization to once per worker per filter.  Bounded
 # LRU: long-lived workers probing many distinct filters must not
 # accumulate every shard list forever (each can be GBs at high
 # shard_bits).  4 concurrent filters per worker covers realistic probe
 # fan-in; an evicted filter just re-deserializes on next touch.
 _WORKER_CACHE_MAX = 4
-_worker_filter_cache: "dict[str, list]" = {}
+_worker_filter_cache: dict = {}
 
 
-def _worker_cache_put(token: str, filters: list) -> None:
+def _worker_cache_put(token: str, entry) -> None:
     if token in _worker_filter_cache:
         return
     while len(_worker_filter_cache) >= _WORKER_CACHE_MAX:
         # dicts iterate in insertion order -> least-recently-used first
         # (_worker_cache_get re-inserts on hit)
         _worker_filter_cache.pop(next(iter(_worker_filter_cache)))
-    _worker_filter_cache[token] = filters
+    _worker_filter_cache[token] = entry
 
 
 def _worker_cache_get(token: str):
@@ -93,10 +97,10 @@ def _worker_cache_get(token: str):
     recency of USE, not insertion — with >max filters in rotation the
     hottest one must not be evicted while stale ones persist (each
     re-deserialization can be GBs at high shard_bits)."""
-    filters = _worker_filter_cache.pop(token, None)
-    if filters is not None:
-        _worker_filter_cache[token] = filters
-    return filters
+    entry = _worker_filter_cache.pop(token, None)
+    if entry is not None:
+        _worker_filter_cache[token] = entry
+    return entry
 
 # One row per shard; `payload` is the reference wire format (to_bytes).
 FILTER_TABLE_SCHEMA = StructType([
@@ -201,16 +205,34 @@ def _contain_routed(filters: list, keys: np.ndarray,
     return out
 
 
-def _contain_arrow(filters: list, keys: "pa.Array",
-                   shard_bits: int) -> np.ndarray:
-    """``_contain_routed`` over an Arrow key column; a null key is never
-    a member.  Nulls are masked on the Arrow side: converting a column
-    with nulls to numpy yields float64, which rounds keys above 2^53."""
-    bits = _contain_routed(filters, K.to_uint64(
-        keys.fill_null(0).to_numpy(zero_copy_only=False)), shard_bits)
-    if keys.null_count:
-        bits &= keys.is_valid().to_numpy(zero_copy_only=False)
-    return bits
+def broadcast_probe(spark: SparkSession, payload, decode):
+    """The library's one broadcast probe: a scalar Arrow UDF
+    ``long -> boolean``.
+
+    ``payload`` is broadcast once (torrent distribution).  Each python
+    worker calls ``decode(payload)`` at most once per returned UDF and
+    keeps the result, a callable ``uint64 keys -> bool bits``, in the
+    bounded worker cache under a token minted here; without it every
+    task would re-deserialize the payload.  A null key is never a
+    member: it probes False.  Nulls are masked on the Arrow side — a
+    pandas Series or numpy conversion of a column with one null turns
+    the whole batch into float64 and rounds every key above 2^53."""
+    token = uuid.uuid4().hex
+    bc = spark.sparkContext.broadcast(payload)
+
+    @F.arrow_udf(BooleanType())
+    def contains(keys: pa.Array) -> pa.Array:
+        contain = _worker_cache_get(token)
+        if contain is None:
+            contain = decode(bc.value)
+            _worker_cache_put(token, contain)
+        bits = contain(K.to_uint64(
+            keys.fill_null(0).to_numpy(zero_copy_only=False)))
+        if keys.null_count:
+            bits &= keys.is_valid().to_numpy(zero_copy_only=False)
+        return pa.array(bits)
+
+    return contains
 
 
 def choose_shard_bits(approx_distinct: int, target_keys_per_shard: int = 1 << 22,
@@ -294,15 +316,6 @@ class ShardedFilter:
     shard_bits: int
     payloads: list[bytes]
 
-    def __post_init__(self):
-        # unique token per filter INSTANCE: the worker-side cache key.
-        # A content fingerprint is not safe here — an incremental rebuild
-        # can change middle shards while the edges stay identical — and
-        # hashing every payload on each udf creation is wasted work, so
-        # identity it is (cache reuse across tasks of one probe matters;
-        # reuse across distinct ShardedFilter objects does not).
-        self._cache_token = uuid.uuid4().hex
-
     @property
     def num_shards(self) -> int:
         return 1 << self.shard_bits
@@ -344,50 +357,24 @@ class ShardedFilter:
         return _contain_routed(self._filters(),
                                K.to_uint64(np.asarray(keys)), self.shard_bits)
 
-    def _worker_filters(self, spark: SparkSession | None):
-        """Zero-arg callable for executor closures: the deserialized
-        shard filters, from the worker-process cache.  The payload list
-        is broadcast once when ``spark`` is given (torrent distribution)
-        and pickled into the closure otherwise.  The cache is keyed by
-        this instance's token, so deserialization happens once per
-        worker per filter — without it every task re-deserializes every
-        shard it touches (keys are hash-distributed, so that is ALL
-        shards x ALL tasks)."""
-        kind, cache_key = self.kind, self._cache_token
-        if spark is not None:
-            bc = spark.sparkContext.broadcast(self.payloads)
-            get_payloads = lambda: bc.value  # noqa: E731
-        else:
-            payloads = self.payloads
-            get_payloads = lambda: payloads  # noqa: E731
-
-        def filters():
-            cached = _worker_cache_get(cache_key)
-            if cached is None:
-                cached = [filter_from_bytes(p, kind, view=True)
-                          for p in get_payloads()]
-                _worker_cache_put(cache_key, cached)
-            return cached
-
-        return filters
-
-    def contains_udf(self, spark: SparkSession | None = None):
+    def contains_udf(self, spark: SparkSession):
         """Scalar Arrow UDF ``long -> boolean`` probing the broadcast
-        filter.
+        filter (``broadcast_probe``; a null key probes False).
 
-        A probe batch does 3 gathers + xor + compare per key
-        (xorfilter.h:96-108, binaryfusefilter.h:178-187).  A null key
-        is never a member: it probes False.  The UDF takes the Arrow
-        column as is — a pandas Series with one null would turn the
-        whole batch into float64 and round every key above 2^53.
+        A probe batch routes each key to its shard, then does 3 gathers
+        + xor + compare per key (xorfilter.h:96-108,
+        binaryfusefilter.h:178-187).  Each worker deserializes the
+        shards once per UDF: keys are hash-distributed, so every task
+        touches every shard.
         """
-        filters, shard_bits = self._worker_filters(spark), self.shard_bits
+        kind, shard_bits = self.kind, self.shard_bits
 
-        @F.arrow_udf(BooleanType())
-        def contains(keys: pa.Array) -> pa.Array:
-            return pa.array(_contain_arrow(filters(), keys, shard_bits))
+        def decode(payloads):
+            filters = [filter_from_bytes(p, kind, view=True)
+                       for p in payloads]
+            return lambda keys: _contain_routed(filters, keys, shard_bits)
 
-        return contains
+        return broadcast_probe(spark, self.payloads, decode)
 
     def register_sql_udf(self, spark: SparkSession,
                          name: str = "ff_contains"):
@@ -403,37 +390,6 @@ class ShardedFilter:
         """
         spark.udf.register(name, self.contains_udf(spark))
         return name
-
-    def filter_members(self, df: DataFrame, key_col: str,
-                       spark: SparkSession | None = None,
-                       negate: bool = False) -> DataFrame:
-        """Arrow-native row filter: keep rows whose ``key_col`` passes the
-        probe (or fails it, with ``negate``).  A null key fails the
-        probe, as in :meth:`contains_udf`.
-
-        Trade-off (measured): for NARROW frames (key-only or few
-        columns) this beats ``df.where(contains_udf(col))`` — the batch
-        stays a pyarrow RecordBatch end-to-end.  For WIDE frames the
-        where() form wins (~2x on 11-column lineitem): there only the
-        key column crosses into Python and the JVM filters the full
-        rows, whereas mapInArrow ships every column through Python both
-        ways.  semi_join_prune therefore uses where(); use this for key
-        streams and projected scans.
-        """
-        filters, shard_bits = self._worker_filters(spark), self.shard_bits
-
-        def probe_batches(batches):
-            fs = filters()
-            for batch in batches:
-                out = _contain_arrow(fs, batch.column(key_col), shard_bits)
-                if negate:
-                    out = ~out
-                if out.all():
-                    yield batch
-                elif out.any():
-                    yield batch.filter(pa.array(out))
-
-        return df.mapInArrow(probe_batches, df.schema)
 
     # -- sizing -----------------------------------------------------------
 
@@ -662,29 +618,36 @@ def build_sharded(
     probing goes through ``probe_via_join``, use ``build_sharded_table``
     instead (same build plan, no driver materialization).
     """
-    spark = df.sparkSession
     shard_bits = _resolve_shard_bits(df, key_col, shard_bits,
                                      target_keys_per_shard)
-    num_shards = 1 << shard_bits
     table = build_sharded_table(
         df, key_col, kind=kind, shard_bits=shard_bits,
         checkpoint_dir=checkpoint_dir, validate_checkpoint=validate_checkpoint,
         arity=arity)
 
-    rows = [r.asDict() for r in table.collect()]
-    # shards that received zero keys produce no kernel row (groupBy only
-    # emits non-empty groups) — fill them with a valid empty filter so an
-    # oversized explicit shard_bits still yields a complete filter
+    return complete_filter(table.collect(), kind, 1 << shard_bits), table
+
+
+def complete_filter(rows: Iterable, kind: str,
+                    num_shards: int) -> ShardedFilter:
+    """``ShardedFilter`` over collected filter-table rows, each absent
+    shard filled with a valid empty filter.
+
+    A shard that received zero keys produces no kernel row (groupBy
+    emits non-empty groups only), so an oversized explicit shard_bits
+    or a young incremental stream still yields a complete filter.
+    ``from_filter_table`` itself keeps refusing missing shards: there
+    they mean a partial checkpoint table."""
+    rows = [r.asDict() for r in rows]
     present = {r["shard"] for r in rows}
     if len(present) < num_shards:
-        from fastfilter_spark.operators.local import empty_filter
         payload = empty_filter(kind).to_bytes()
         rows += [{"shard": s, "kind": kind, "num_shards": num_shards,
                   "input_rows": 0, "distinct_keys": 0, "seed": 0,
                   "size_bytes": len(payload), "build_ms": 0.0,
                   "payload": payload}
                  for s in range(num_shards) if s not in present]
-    return ShardedFilter.from_filter_table(rows), table
+    return ShardedFilter.from_filter_table(rows)
 
 
 def write_bucketed_keys(df: DataFrame, key_col: str, shard_bits: int,
@@ -757,6 +720,8 @@ def probe_via_join(probes: DataFrame, key_col: str,
     uncastable) probe keys are dropped by the shard projection, so they
     get no output row; a left join back on key reads them as
     non-members, which is what the broadcast probes return for them.
+    An explicit ``num_shards`` that differs from the table's raises
+    inside the probe task.
     """
     if num_shards is None:
         # when filter_table is an unmaterialized build plan, reading
@@ -791,6 +756,13 @@ def probe_via_join(probes: DataFrame, key_col: str,
                 f"{int(filt_pdf['shard'].iloc[0])} (overlapping builds "
                 "appending to one checkpoint_dir?); deduplicate the table "
                 "(latest-wins) before probing")
+        if int(filt_pdf["num_shards"].iloc[0]) != num_shards:
+            # keys were routed by the caller's num_shards: against a
+            # table built with another count most members land in the
+            # wrong shard and silently probe False
+            raise ValueError(
+                f"num_shards={num_shards} but the filter table was built "
+                f"with num_shards={int(filt_pdf['num_shards'].iloc[0])}")
         f = filter_from_bytes(bytes(filt_pdf["payload"].iloc[0]),
                               filt_pdf["kind"].iloc[0], view=True)
         return pd.DataFrame({"key": keys.view(np.int64),
@@ -813,8 +785,7 @@ def build_filter_rows(keyed: DataFrame, kind: str,
 
 
 def semi_join_prune(fact: DataFrame, fact_key: str, sf: ShardedFilter,
-                    dim_keys: DataFrame, dim_key: str,
-                    broadcast_dim: bool = True) -> DataFrame:
+                    dim_keys: DataFrame, dim_key: str) -> DataFrame:
     """Exact left-semi join accelerated by a filter pre-probe.
 
     The contains() probe (no false negatives) discards ~all non-matching
@@ -823,26 +794,18 @@ def semi_join_prune(fact: DataFrame, fact_key: str, sf: ShardedFilter,
     shuffling the ~matching fraction.  The final exact join removes the
     <=2^-8/2^-16 false positives, so results are exact.
 
-    ``broadcast_dim=True`` (default) force-broadcasts the dim side with
-    no size check — right for this function's target shape (a dim small
-    enough that its keys also fit in the broadcast filter), and
-    deliberate rather than autoBroadcastJoinThreshold-dependent (a dim
-    just past the threshold would silently become a full shuffle of the
-    pruned fact side).  For a dim too large to broadcast (Spark's 8 GB
-    broadcast-table limit / executor memory), pass
-    ``broadcast_dim=False`` to get a shuffle semi join — and consider
-    ``probe_via_join``, the driver-free path built for that regime.
+    The dim side is force-broadcast with no size check — right for this
+    function's target shape (a dim small enough that its keys also fit
+    in the broadcast filter), and deliberate rather than
+    autoBroadcastJoinThreshold-dependent (a dim just past the threshold
+    would silently become a full shuffle of the pruned fact side).  A
+    dim too large to broadcast belongs to ``probe_via_join``, the
+    driver-free path built for that regime.
     """
-    spark = fact.sparkSession
-    # where(udf) over mapInArrow: only the key column crosses to Python,
-    # the JVM filters the (wide) fact rows — see filter_members docstring
-    pruned = fact.where(sf.contains_udf(spark)(F.col(fact_key)))
+    # where(udf): only the key column crosses to Python, the JVM
+    # filters the (wide) fact rows
+    pruned = fact.where(sf.contains_udf(fact.sparkSession)(F.col(fact_key)))
     # bind the dim side explicitly: an unbound F.col(dim_key) is ambiguous
     # whenever fact has a same-named column (incl. fact_key == dim_key)
-    dim = dim_keys.select(dim_key).distinct()
-    if broadcast_dim:
-        # explicit hint, not autoBroadcastJoinThreshold: a dim just past
-        # the threshold would otherwise silently become a full shuffle
-        # of the (huge) pruned fact side
-        dim = F.broadcast(dim)
+    dim = F.broadcast(dim_keys.select(dim_key).distinct())
     return pruned.join(dim, pruned[fact_key] == dim[dim_key], "left_semi")

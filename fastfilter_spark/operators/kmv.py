@@ -60,7 +60,7 @@ def portable_hash60(col) -> "F.Column":
     """60-bit uniform hash of a column, identical in Spark and DuckDB:
     ``conv(substring(md5(CAST(x AS STRING)), 1, 15), 16, 10)`` as
     BIGINT.  Non-string inputs hash their canonical decimal rendering
-    (DuckDB twin: ``md5(CAST(x AS VARCHAR))``).
+    (DuckDB twin: ``portable_hash60_sql("CAST(x AS VARCHAR)")``).
 
     15 hex chars keep the value positive in int64 (so signed and
     unsigned order agree) while leaving collision mass negligible for
@@ -69,6 +69,13 @@ def portable_hash60(col) -> "F.Column":
     """
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 15),
                   16, 10).cast("long")
+
+
+def portable_hash60_sql(expr: str) -> str:
+    """``portable_hash60`` as DuckDB SQL over the SQL expression
+    ``expr`` (a VARCHAR; cast other types first), for the oracles that
+    replay a hashed operator."""
+    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
 
 
 def bottomk_hashes(df: DataFrame, key_col: str, k: int,

@@ -42,6 +42,7 @@ from fastfilter_spark.functions.sketches import (
     Bloom, CountMin, HyperLogLog, KLL, MisraGries, TDigest, ThetaKMV,
     sketch_from_bytes,
 )
+from fastfilter_spark.operators.dist import broadcast_probe
 from fastfilter_spark.plans import size_python_fold
 
 def sketch_column(df: DataFrame, col: str, factory: Callable[[], object],
@@ -290,8 +291,7 @@ def theta_intersection(df_a: DataFrame, col_a: str,
     return sa.intersect_estimate(sb)
 
 
-def bloom_contains_udf(bloom: Bloom, spark=None,
-                       hashed_input: bool | None = None):
+def bloom_contains_udf(bloom: Bloom, spark):
     """Probe column builder mirroring the build-side key prep of
     ``bloom_sketch``: returns a callable ``Column -> Column``.
 
@@ -299,58 +299,30 @@ def bloom_contains_udf(bloom: Bloom, spark=None,
     JVM ``xxhash64(col)`` values (string/binary columns); a probe that
     does not apply the SAME transform silently returns ~100% false
     negatives (or crashes on strings).  ``bloom_sketch`` records its
-    choice on the returned sketch; this reads it (override with
-    ``hashed_input`` for hand-built Blooms) and applies the matching
-    JVM-side prep before the pandas-UDF probe — so the hashing stays in
-    whole-stage codegen and the UDF always receives longs.  Probe the
-    same column TYPE as the build: Spark's xxhash64 of a long and of
-    its string form differ.
+    choice on the returned sketch as ``spark_hashed_input``; this reads
+    it and applies the matching JVM-side prep before the UDF — so the
+    hashing stays in whole-stage codegen and the UDF always receives
+    longs.  Probe the same column TYPE as the build: Spark's xxhash64
+    of a long and of its string form differ.
 
-    Wire bytes are broadcast once, deserialized at most once per python
-    worker (bounded cache shared with the filter probes); no driver-side
-    collect of probe keys, so ``df.where(bloom_contains_udf(b, spark)
-    (col))`` scales with executor count, not driver memory.
+    The UDF is the library's one broadcast probe
+    (``dist.broadcast_probe``): wire bytes broadcast once, decoded at
+    most once per python worker, no driver-side collect of probe keys.
+    A null probe key probes False (never a member: ``_keyed_long``
+    drops source nulls before the build).  On the hashed path the key
+    stays null for a null source — Spark's xxhash64(NULL) is 42, not
+    NULL — and a failed cast is null too, so the Arrow-side null mask
+    answers both.
     """
-    import uuid
-
-    import fastfilter_spark.operators.dist as _dist
-
-    if hashed_input is None:
-        hashed_input = bool(getattr(bloom, "spark_hashed_input", False))
-    token = uuid.uuid4().hex
-    if spark is not None:
-        bc = spark.sparkContext.broadcast(bloom.to_bytes())
-        get_bytes = lambda: bc.value  # noqa: E731
-    else:
-        blob = bloom.to_bytes()
-        get_bytes = lambda: blob  # noqa: E731
-
-    @F.pandas_udf("boolean")
-    def contains(s: pd.Series) -> pd.Series:
-        cached = _dist._worker_cache_get(token)
-        if cached is None:
-            cached = [Bloom.from_bytes(get_bytes())]
-            _dist._worker_cache_put(token, cached)
-        vals = s.to_numpy().astype(np.int64)
-        return pd.Series(cached[0].contains(vals))
+    contains = broadcast_probe(spark, bloom.to_bytes(),
+                               lambda blob: Bloom.from_bytes(blob).contains)
+    hashed = bool(getattr(bloom, "spark_hashed_input", False))
 
     def probe(col):
         if isinstance(col, str):
             col = F.col(col)   # accept a column name like F.* builtins
-        # NULL probe keys -> False JVM-side, BEFORE the UDF (build-side
-        # _keyed_long drops source nulls pre-hash, so "not a member" is
-        # exact).  The guard must test the SOURCE column, not the keyed
-        # expression: xxhash64(NULL) is 42 (never NULL), so a
-        # keyed.isNull() check is dead code on the hashed path and a
-        # null probe would hit contains(42) at the bloom's fpp rate.
-        # The mask cannot live inside the UDF: one null in an Arrow
-        # int64 batch degrades the whole pandas series to float64,
-        # corrupting every hash > 2^53 into false negatives.  coalesce
-        # keeps the UDF input non-null (the placeholder 0 probe is
-        # discarded by the outer when); this also covers failed casts.
-        keyed = F.xxhash64(col) if hashed_input else col.cast("long")
-        return F.when(col.isNull() | keyed.isNull(), F.lit(False)) \
-            .otherwise(contains(F.coalesce(keyed, F.lit(0))))
+        return contains(F.when(col.isNotNull(), F.xxhash64(col)) if hashed
+                        else col.cast("long"))
 
     return probe
 

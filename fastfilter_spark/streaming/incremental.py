@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from fastfilter_spark.operators.dist import (
-    FILTER_TABLE_SCHEMA, ShardedFilter, build_filter_rows, keys_with_shard,
+    FILTER_TABLE_SCHEMA, ShardedFilter, build_filter_rows, complete_filter,
+    keys_with_shard,
 )
 
 # filter-table LOG row: one filter row per (shard, micro-batch that
@@ -165,38 +166,28 @@ class IncrementalFilterMaintainer:
             raise ValueError(
                 f"no micro-batch has been processed yet ({self.table_dir} "
                 "does not exist); attach() the stream first")
-        log = spark.read.schema(TABLE_LOG_SCHEMA).parquet(self.table_dir)
-        # input_rows tiebreak: a re-delivered batch can log the same
-        # shard twice at the same seq (identical payload, but the later
-        # row saw the re-appended keys, so input_rows is higher) — make
-        # the winner deterministic
-        w = Window.partitionBy("shard").orderBy(
-            F.desc("seq"), F.desc("input_rows"))
-        return (log.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .drop("_rn", "batch_id", "seq"))
+        return self._latest_rows(spark).drop("batch_id", "seq")
 
     def current_filter(self, spark: SparkSession) -> ShardedFilter:
         """Materialize the latest rows into a broadcastable ShardedFilter
         (driver holds one copy — fine for broadcastable sizes; use
         ``current_table`` + ``probe_via_join`` beyond that)."""
-        rows = [r.asDict() for r in self.current_table(spark).collect()]
-        present = {r["shard"] for r in rows}
-        num_shards = 1 << self.shard_bits
-        if len(present) < num_shards:
-            # shards with no keys yet: fill with a valid empty filter
-            # (works for every kind — see local.empty_filter)
-            from fastfilter_spark.operators.local import empty_filter
-            payload = empty_filter(self.kind).to_bytes()
-            rows += [
-                {"shard": s, "kind": self.kind, "num_shards": num_shards,
-                 "input_rows": 0, "distinct_keys": 0, "seed": 0,
-                 "size_bytes": len(payload), "build_ms": 0.0,
-                 "payload": payload}
-                for s in range(num_shards) if s not in present]
-        return ShardedFilter.from_filter_table(rows)
+        return complete_filter(self.current_table(spark).collect(),
+                               self.kind, 1 << self.shard_bits)
 
     # -- maintenance -------------------------------------------------------
+
+    def _latest_rows(self, spark: SparkSession) -> DataFrame:
+        """Latest-wins log resolution: the highest-``seq`` row per shard.
+        The input_rows tiebreak makes the winner deterministic when a
+        re-delivered batch logs the same shard twice at one seq
+        (identical payload, but the later row saw the re-appended keys,
+        so its input_rows is higher)."""
+        log = spark.read.schema(TABLE_LOG_SCHEMA).parquet(self.table_dir)
+        w = Window.partitionBy("shard").orderBy(
+            F.desc("seq"), F.desc("input_rows"))
+        return (log.withColumn("_rn", F.row_number().over(w))
+                .where(F.col("_rn") == 1).drop("_rn"))
 
     def _recover_compact(self) -> None:
         """Heal a compact() interrupted between its two renames: if the
@@ -217,11 +208,7 @@ class IncrementalFilterMaintainer:
         object store / Iceberg deployment this is a dynamic partition
         overwrite instead."""
         self._recover_compact()
-        log = spark.read.schema(TABLE_LOG_SCHEMA).parquet(self.table_dir)
-        w = Window.partitionBy("shard").orderBy(
-            F.desc("seq"), F.desc("input_rows"))
-        latest = log.withColumn("_rn", F.row_number().over(w)) \
-            .where(F.col("_rn") == 1).drop("_rn")
+        latest = self._latest_rows(spark)
         tmp = self.table_dir + ".compact.tmp"
         shutil.rmtree(tmp, ignore_errors=True)
         latest.write.parquet(tmp)

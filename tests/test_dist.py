@@ -115,3 +115,19 @@ def test_driver_and_udf_probe_agree(spark, lineitem):
     keys = np.array([r["l_orderkey"] for r in udf_rows], dtype=np.int64)
     np_hits = sf.contain_np(keys)
     assert all(bool(r["hit"]) == bool(h) for r, h in zip(udf_rows, np_hits))
+
+
+def test_one_broadcast_probe_site():
+    """Every broadcast probe goes through dist.broadcast_probe: the
+    library broadcasts from exactly one place, so swapping the probe
+    implementation is one edit."""
+    import pathlib
+
+    import fastfilter_spark
+    root = pathlib.Path(fastfilter_spark.__file__).parent
+    sites = [f"{p.relative_to(root)}:{i}"
+             for p in sorted(root.rglob("*.py"))
+             for i, line in enumerate(p.read_text().splitlines(), 1)
+             if "sparkContext.broadcast(" in line]
+    assert len(sites) == 1 and sites[0].startswith("operators/dist.py:"), \
+        sites

@@ -20,6 +20,7 @@ from fastfilter_spark.operators.dist import (
 )
 from fastfilter_spark.operators.local import build_filter, empty_filter
 from fastfilter_spark.streaming.incremental import IncrementalFilterMaintainer
+from fastfilter_spark.streaming.probe import StreamingFilterProbe
 
 _KEY = StructType([StructField("k", LongType())])
 _ID_KEY = StructType([StructField("id", LongType(), False),
@@ -107,6 +108,20 @@ def _sharded(members: list, shard_bits: int, kind: str) -> ShardedFilter:
     return ShardedFilter(kind=kind, shard_bits=shard_bits, payloads=payloads)
 
 
+class _Serving:
+    """Maintainer stand-in for StreamingFilterProbe: a log that has
+    advanced once, serving one fixed ShardedFilter."""
+
+    def __init__(self, sf: ShardedFilter):
+        self.sf = sf
+
+    def _next_seq(self, spark):
+        return 2
+
+    def current_filter(self, spark):
+        return self.sf
+
+
 @given(members=st.lists(st.one_of(INT64, st.sampled_from(
            [-2**63, 2**63 - 1, -1, 0, 2**53 + 1])), max_size=300),
        others=st.lists(st.one_of(st.none(), INT64), max_size=60),
@@ -114,7 +129,8 @@ def _sharded(members: list, shard_bits: int, kind: str) -> ShardedFilter:
        kind=st.sampled_from(["fuse8", "xor8", "fuse16"]))
 @settings(deadline=None, max_examples=8,
           suppress_health_check=[HealthCheck.too_slow])
-def test_probe_surfaces_agree(spark, members, others, shard_bits, kind):
+def test_probe_surfaces_agree(spark, tmp_path_factory, members, others,
+                              shard_bits, kind):
     """One ShardedFilter through all five probe surfaces gives the same
     membership bit for every row: members (duplicated) probe True, null
     keys False, and every other key its driver-side contain_np bit."""
@@ -136,8 +152,15 @@ def test_probe_surfaces_agree(spark, members, others, shard_bits, kind):
         "id", sf.contains_udf(spark)("k").alias("m")).collect()}
     assert [udf_bits[i] for i in range(len(probe_keys))] == want
 
-    assert bits_of(r["id"] for r in
-                   sf.filter_members(df, "k", spark).collect()) == want
+    # the streaming sink, served this one filter: drop_members keeps
+    # exactly the False rows (null keys included), keep_members the True
+    for mode, kept_want in (("drop_members", [not w for w in want]),
+                            ("keep_members", want)):
+        out = str(tmp_path_factory.mktemp(mode))
+        StreamingFilterProbe(_Serving(sf), "k", out, mode=mode) \
+            .process_batch(df, 0)
+        assert bits_of(r["id"] for r in
+                       spark.read.parquet(out).collect()) == kept_want
 
     name = sf.register_sql_udf(spark, "ff_contains_prop")
     df.createOrReplaceTempView("probe_surfaces_t")

@@ -1,5 +1,6 @@
 """Cogrouped join probe (the too-big-to-broadcast deployment mode)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from fastfilter_spark.operators.dist import build_sharded, probe_via_join
@@ -31,6 +32,20 @@ def test_probe_via_join_missing_shard_rows(spark, sf_dir):
     # keys routed to missing shards come back member=false, none crash
     counts = dict(res.groupBy("member").count().collect())
     assert counts.get(True, 0) > 0 and counts.get(False, 0) > 0
+
+
+def test_probe_via_join_rejects_wrong_num_shards(spark):
+    """Probe keys are routed by the caller's num_shards: against a table
+    built with another count most members would land in the wrong shard
+    and silently probe False, so the mismatch must raise."""
+    keys = spark.range(20_000).select(
+        (F.col("id") * 2654435761).alias("k"))
+    _, table = build_sharded(keys, "k", kind="fuse8", shard_bits=2)
+    with pytest.raises(Exception, match="num_shards=2 but the filter "
+                                        "table was built with num_shards=4"):
+        probe_via_join(keys, "k", table, num_shards=2).collect()
+    res = probe_via_join(keys, "k", table, num_shards=4)
+    assert res.where("member").count() == 20_000
 
 
 def test_register_sql_udf_probes_in_pure_sql(spark):
