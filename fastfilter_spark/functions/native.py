@@ -9,20 +9,30 @@ the numpy implementations in operators/local.py.  The two paths are
 differential-tested (tests/test_native.py) — probes agree bit-for-bit,
 builds succeed on identical seed chains (any valid peel order yields a
 correct filter; see operators/local.py module docstring).
+
+The same cache holds the JVM probe: ``probe_jar()`` compiles
+fastfilter_spark/native/FilterProbe.java with ``javac`` into a jar that
+operators/dist.py ``broadcast_probe`` loads into the Spark session; with
+no ``javac`` it returns None and the probe stays an Arrow UDF.
 """
 
 from __future__ import annotations
 
 import ctypes
+import functools
 import hashlib
 import os
+import shutil
 import subprocess
 import tempfile
+import zipfile
 
 import numpy as np
 
-_SRC = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                    "native", "ffkernel.c")
+_NATIVE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "native")
+_SRC = os.path.join(_NATIVE_DIR, "ffkernel.c")
+_JAVA_SRC = os.path.join(_NATIVE_DIR, "FilterProbe.java")
 _kernel = None
 _tried = False
 
@@ -37,53 +47,83 @@ def _ptr(arr: np.ndarray, ctype):
     return arr.ctypes.data_as(ctype)
 
 
-def _read_source() -> bytes:
-    """Kernel C source — works from a plain checkout AND from a
-    --py-files zip (importlib.resources reads inside the archive)."""
+def _read_source(path: str) -> bytes:
+    """A source file of fastfilter_spark/native — works from a plain
+    checkout AND from a --py-files zip (importlib.resources reads
+    inside the archive)."""
     try:
-        with open(_SRC, "rb") as f:
+        with open(path, "rb") as f:
             return f.read()
     except OSError:
         from importlib import resources
-        return (resources.files("fastfilter_spark.native") / "ffkernel.c") \
-            .read_bytes()
+        return (resources.files("fastfilter_spark.native")
+                / os.path.basename(path)).read_bytes()
 
 
-def _compile() -> str | None:
-    src = _read_source()
+def _cached_build(src_path: str, suffix: str, build) -> str | None:
+    """Build ``src_path`` once per content hash into the user cache dir.
+
+    ``build(src, out)`` compiles a materialized copy of the source
+    (it may live inside a --py-files zip where no compiler can read
+    it) into ``out``; the finished artifact is published by an atomic
+    rename, so concurrent compiles on one host are safe.  Returns the
+    cached path, or None when the build fails."""
+    src = _read_source(src_path)
+    name, _ = os.path.splitext(os.path.basename(src_path))
     tag = hashlib.sha256(src).hexdigest()[:16]
     cache_dir = os.path.join(
         os.environ.get("XDG_CACHE_HOME", os.path.expanduser("~/.cache")),
         "fastfilter_spark")
-    so_path = os.path.join(cache_dir, f"ffkernel-{tag}.so")
-    if os.path.exists(so_path):
-        return so_path
+    path = os.path.join(cache_dir, f"{name}-{tag}{suffix}")
+    if os.path.exists(path):
+        return path
     os.makedirs(cache_dir, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(suffix=".so", dir=cache_dir)
-    os.close(fd)
-    # compile from a materialized copy: _SRC may live inside a
-    # --py-files zip where cc cannot read it
-    fd, tmp_c = tempfile.mkstemp(suffix=".c", dir=cache_dir)
-    with os.fdopen(fd, "wb") as f:
-        f.write(src)
+    work = tempfile.mkdtemp(dir=cache_dir)
     try:
-        subprocess.run(
-            ["cc", "-O3", "-march=native", "-funroll-loops", "-shared",
-             "-fPIC", "-o", tmp, tmp_c],
-            check=True, capture_output=True, timeout=120)
-        os.rename(tmp, so_path)  # atomic on one filesystem
-        return so_path
+        copy = os.path.join(work, os.path.basename(src_path))
+        with open(copy, "wb") as f:
+            f.write(src)
+        out = os.path.join(work, "out" + suffix)
+        build(copy, out)
+        os.rename(out, path)  # atomic on one filesystem
+        return path
     except Exception:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
         return None
     finally:
-        try:
-            os.unlink(tmp_c)
-        except OSError:
-            pass
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _compile() -> str | None:
+    def cc(src, out):
+        subprocess.run(
+            ["cc", "-O3", "-march=native", "-funroll-loops", "-shared",
+             "-fPIC", "-o", out, src],
+            check=True, capture_output=True, timeout=120)
+    return _cached_build(_SRC, ".so", cc)
+
+
+@functools.cache
+def probe_jar() -> str | None:
+    """The JVM probe (native/FilterProbe.java) as a jar, compiled with
+    ``javac`` against pyspark's jars once per content hash; memoised
+    per process.  None when there is no ``javac`` or the compile fails
+    (the broadcast probe then runs as an Arrow UDF)."""
+    return _cached_build(_JAVA_SRC, ".jar", _javac)
+
+
+def _javac(src: str, out: str) -> None:
+    import pyspark
+    jars = os.path.join(os.path.dirname(pyspark.__file__), "jars", "*")
+    classes = os.path.join(os.path.dirname(out), "classes")
+    # --release 17: loadable by every JVM Spark 4 runs on, whatever
+    # the javac version
+    subprocess.run(["javac", "--release", "17", "-cp", jars, "-d", classes,
+                    src], check=True, capture_output=True, timeout=300)
+    with zipfile.ZipFile(out, "w") as jar:
+        for root, _, files in os.walk(classes):
+            for f in files:
+                p = os.path.join(root, f)
+                jar.write(p, os.path.relpath(p, classes))
 
 
 class _Kernel:

@@ -32,13 +32,16 @@ Scale design notes (targeting a 10^12-key Iceberg table, tested locally):
   fingerprints), persisted as one row per shard ``(shard, kind, payload
   binary, lineage...)`` in a parquet "filter table", and broadcast for
   probe-side use.
-- Probing is a scalar Arrow UDF over the broadcast shard list:
-  route each probe key by the same hash prefix, gather 3 fingerprint cells,
-  xor, compare.  Used via ``df.filter(sf.contains_udf(spark)(col))`` this
-  is the distributed analog of a broadcast left-semi join with the exact
-  hash table replaced by a 9-bit/key approximate one.  ``broadcast_probe``
-  is the one broadcast probe path; the Bloom probe
-  (sketch_agg.bloom_contains_udf) runs through it too.
+- Probing is a JVM UDF over the broadcast shard list
+  (native/FilterProbe.java, compiled with javac at first use): route each
+  probe key by the same hash prefix, gather 3 or 4 fingerprint cells,
+  xor, compare — the key never crosses into Python.  Used via
+  ``df.filter(sf.contains_udf(spark)(col))`` this is the distributed
+  analog of a broadcast left-semi join with the exact hash table
+  replaced by a 9-bit/key approximate one.  ``broadcast_probe`` is the
+  one broadcast probe path; without javac or a py4j JVM it serves the
+  same probe as a scalar Arrow UDF, and the Bloom probe
+  (sketch_agg.bloom_contains_udf) runs through its Arrow tier too.
 
 Checkpoint/resume (BASELINE.json:north_rule): ``build_sharded`` with a
 ``checkpoint_dir`` writes each shard's row as soon as its build task
@@ -60,13 +63,14 @@ from typing import Iterable
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BinaryType, BooleanType, DoubleType, IntegerType, LongType, StringType,
     StructField, StructType,
 )
 
 from fastfilter_spark.functions import kernels as K
+from fastfilter_spark.functions import native
 from fastfilter_spark.operators.local import (
     build_filter, empty_filter, filter_from_bytes,
 )
@@ -206,17 +210,45 @@ def _contain_routed(filters: list, keys: np.ndarray,
 
 
 def broadcast_probe(spark: SparkSession, payload, decode):
-    """The library's one broadcast probe: a scalar Arrow UDF
-    ``long -> boolean``.
+    """The library's one broadcast probe: a ``long -> boolean`` Column
+    function whose ``tier`` says where it runs.  A null key is never a
+    member: it probes False on both tiers.
 
+    ``"jvm"``: a ShardedFilter of an xor/fuse kind probes inside
+    Spark's JVM when the session has a py4j JVM and ``javac`` built the
+    probe jar (``native.probe_jar``).  The jar is added to the session
+    once (``ADD JAR``); the driver parses each shard's header
+    (``filter_from_bytes(view=True)``) and one JVM Broadcast carries
+    seed, arity, layout ints and fingerprint bytes per shard; the UDF
+    (native/FilterProbe.java) routes each key by Spark's own xxhash64,
+    as the build does, so the key never crosses into Python.
+
+    ``"arrow"`` (the Bloom filter; no ``javac``; Spark Connect):
     ``payload`` is broadcast once (torrent distribution).  Each python
     worker calls ``decode(payload)`` at most once per returned UDF and
     keeps the result, a callable ``uint64 keys -> bool bits``, in the
     bounded worker cache under a token minted here; without it every
-    task would re-deserialize the payload.  A null key is never a
-    member: it probes False.  Nulls are masked on the Arrow side — a
-    pandas Series or numpy conversion of a column with one null turns
-    the whole batch into float64 and rounds every key above 2^53."""
+    task would re-deserialize the payload.  Nulls are masked on the
+    Arrow side — a pandas Series or numpy conversion of a column with
+    one null turns the whole batch into float64 and rounds every key
+    above 2^53."""
+    factory = (_jvm_probe_factory(spark)
+               if isinstance(payload, ShardedFilter) else None)
+    if factory is not None:
+        filters = payload._filters()
+        xor = payload.kind.startswith("xor")
+        fields = np.array(
+            [[f.seed, 3, f.block_length, 0] if xor else
+             [f.seed, f.arity, f.segment_length, f.segment_count_length]
+             for f in filters], dtype="<u8")
+        prints = [f.fingerprints.astype(
+            f.fingerprints.dtype.newbyteorder("<"), copy=False).tobytes()
+            for f in filters]
+        bc = spark.sparkContext._jsc.broadcast(
+            factory.payload(fields.tobytes(), prints))
+        return _JvmProbe(spark.sparkContext, factory.udf(
+            bc, xor, filters[0].fingerprints.itemsize))
+
     token = uuid.uuid4().hex
     bc = spark.sparkContext.broadcast(payload)
 
@@ -232,7 +264,46 @@ def broadcast_probe(spark: SparkSession, payload, decode):
             bits &= keys.is_valid().to_numpy(zero_copy_only=False)
         return pa.array(bits)
 
+    contains.tier = "arrow"
     return contains
+
+
+def _jvm_probe_factory(spark: SparkSession):
+    """The session's driver-side ``FilterProbe`` factory, or None when
+    the session has no py4j JVM (Spark Connect) or there is no probe
+    jar.  The class is looked up through the session's jar class loader,
+    which ``ADD JAR`` extends, whatever py4j thread asks."""
+    jsession = getattr(spark, "_jsparkSession", None)
+    jar = native.probe_jar() if jsession is not None else None
+    if jar is None:
+        return None
+    sc = spark.sparkContext
+    if os.path.basename(jar) not in sc._jsc.sc().listJars().mkString(" "):
+        spark.sql(f"ADD JAR '{jar}'")
+    jvm, gateway = sc._jvm, sc._gateway
+    cls = jvm.java.lang.Class.forName(
+        "fastfilter_spark.FilterProbe", True,
+        jsession.sharedState().jarClassLoader())
+    return cls.getConstructor(gateway.new_array(jvm.java.lang.Class, 0)) \
+        .newInstance(gateway.new_array(jvm.java.lang.Object, 0))
+
+
+class _JvmProbe:
+    """A compiled JVM probe UDF as a Column function: ``probe(col)``
+    casts the key column to long."""
+
+    tier = "jvm"
+
+    def __init__(self, sc, judf):
+        self.sc = sc
+        self.judf = judf
+
+    def __call__(self, col) -> Column:
+        from pyspark.sql.classic.column import (
+            Column as JColumn, _to_java_column, _to_seq)
+        key = (F.col(col) if isinstance(col, str) else col).cast(LongType())
+        return JColumn(self.judf.apply(
+            _to_seq(self.sc, [key], _to_java_column)))
 
 
 def choose_shard_bits(approx_distinct: int, target_keys_per_shard: int = 1 << 22,
@@ -304,6 +375,15 @@ def keys_with_shard(df: DataFrame, key_col: str, shard_bits: int) -> DataFrame:
         .cast(IntegerType()).alias("shard")).where(F.col("key").isNotNull())
 
 
+class SqlProbeName(str):
+    """A registered probe's SQL function name, with the probe's tier."""
+
+    def __new__(cls, name: str, tier: str):
+        self = super().__new__(cls, name)
+        self.tier = tier
+        return self
+
+
 @dataclass
 class ShardedFilter:
     """A distributed filter = 2^shard_bits independent reference filters.
@@ -358,38 +438,41 @@ class ShardedFilter:
                                K.to_uint64(np.asarray(keys)), self.shard_bits)
 
     def contains_udf(self, spark: SparkSession):
-        """Scalar Arrow UDF ``long -> boolean`` probing the broadcast
+        """``long -> boolean`` Column function probing the broadcast
         filter (``broadcast_probe``; a null key probes False).
 
-        A probe batch routes each key to its shard, then does 3 gathers
-        + xor + compare per key (xorfilter.h:96-108,
-        binaryfusefilter.h:178-187).  Each worker deserializes the
-        shards once per UDF: keys are hash-distributed, so every task
-        touches every shard.
+        A probe routes each key to its shard, then does 3 or 4 gathers
+        + xor + compare (xorfilter.h:96-108, binaryfusefilter.h:178-187).
+        ``tier`` is ``"jvm"`` when that runs inside Spark's JVM (the
+        key column is cast to long and never reaches Python), or
+        ``"arrow"`` for the Arrow UDF fallback, where each worker
+        deserializes the shards once per UDF.
         """
-        kind, shard_bits = self.kind, self.shard_bits
+        def decode(sf):
+            filters = sf._filters()
+            return lambda keys: _contain_routed(filters, keys, sf.shard_bits)
 
-        def decode(payloads):
-            filters = [filter_from_bytes(p, kind, view=True)
-                       for p in payloads]
-            return lambda keys: _contain_routed(filters, keys, shard_bits)
-
-        return broadcast_probe(spark, self.payloads, decode)
+        return broadcast_probe(spark, self, decode)
 
     def register_sql_udf(self, spark: SparkSession,
                          name: str = "ff_contains"):
         """Expose the probe to pure-SQL users:
         ``spark.sql("SELECT * FROM t WHERE ff_contains(key)")``.
 
-        Same broadcast + worker-cache path as :meth:`contains_udf`
-        (registration wraps that exact UDF, so SQL and DataFrame
-        probes share the deserialized-filter cache).  Re-registering
-        under the same name replaces the previous filter — the SQL
-        twin of rebinding a variable.  Returns the registered name so
-        callers can thread it into query strings.
+        Registers the exact UDF :meth:`contains_udf` returns.  On the
+        JVM tier the SQL argument is a BIGINT key (cast other key
+        types in the query).  Re-registering under the same name
+        replaces the previous filter — the SQL twin of rebinding a
+        variable.  Returns the registered name, a ``str`` whose
+        ``tier`` attribute is the probe's, so callers can thread it
+        into query strings.
         """
-        spark.udf.register(name, self.contains_udf(spark))
-        return name
+        probe = self.contains_udf(spark)
+        if probe.tier == "jvm":
+            spark._jsparkSession.udf().register(name, probe.judf)
+        else:
+            spark.udf.register(name, probe)
+        return SqlProbeName(name, probe.tier)
 
     # -- sizing -----------------------------------------------------------
 
@@ -727,13 +810,14 @@ def probe_via_join(probes: DataFrame, key_col: str,
         # when filter_table is an unmaterialized build plan, reading
         # num_shards would EXECUTE it once just for one number and the
         # cogroup below would execute it again — a full double build.
-        # Auto-persist before the lookup so the cogroup reuses the
-        # materialized shards; the caller may unpersist after the probe
-        # (passing num_shards explicitly skips both the job and the
-        # pin).
+        # An eager local checkpoint materializes the shards once for
+        # both.  Unlike persist() it registers no plan in the session's
+        # cache manager, which would serve these rows to every later
+        # query with an equal plan (a later build over the same
+        # input).  Passing num_shards explicitly skips both.
         from pyspark import StorageLevel
         if filter_table.storageLevel == StorageLevel.NONE:
-            filter_table = filter_table.persist()
+            filter_table = filter_table.localCheckpoint()
         num_shards = filter_table.select(F.first("num_shards")).first()[0]
     shard_bits = int(math.log2(num_shards))
     keyed = keys_with_shard(probes, key_col, shard_bits)
@@ -802,8 +886,8 @@ def semi_join_prune(fact: DataFrame, fact_key: str, sf: ShardedFilter,
     dim too large to broadcast belongs to ``probe_via_join``, the
     driver-free path built for that regime.
     """
-    # where(udf): only the key column crosses to Python, the JVM
-    # filters the (wide) fact rows
+    # where(udf): the JVM filters the (wide) fact rows; on the Arrow
+    # tier only the key column crosses to Python
     pruned = fact.where(sf.contains_udf(fact.sparkSession)(F.col(fact_key)))
     # bind the dim side explicitly: an unbound F.col(dim_key) is ambiguous
     # whenever fact has a same-named column (incl. fact_key == dim_key)

@@ -305,7 +305,7 @@ def bloom_contains_udf(bloom: Bloom, spark):
     longs.  Probe the same column TYPE as the build: Spark's xxhash64
     of a long and of its string form differ.
 
-    The UDF is the library's one broadcast probe
+    The UDF is the Arrow tier of the library's one broadcast probe
     (``dist.broadcast_probe``): wire bytes broadcast once, decoded at
     most once per python worker, no driver-side collect of probe keys.
     A null probe key probes False (never a member: ``_keyed_long``

@@ -210,6 +210,31 @@ def test_kernel_compiles_warning_free():
     assert out.returncode == 0, out.stderr
 
 
+def test_probe_source_compiles_warning_free():
+    """FilterProbe.java, the JVM probe, builds clean under javac
+    -Xlint:all.  The classpath is pyspark's jars minus derby and
+    scala-compiler, whose manifests name Class-Path jars pyspark does
+    not ship (javac's path lint reports those, not this source)."""
+    import glob
+    import shutil
+    import tempfile
+
+    import pyspark
+    from fastfilter_spark.functions import native
+    javac = shutil.which("javac")
+    if javac is None:
+        pytest.skip("no javac available")
+    jars = [j for j in glob.glob(os.path.join(
+                os.path.dirname(pyspark.__file__), "jars", "*.jar"))
+            if not os.path.basename(j).startswith(("derby", "scala-compiler"))]
+    with tempfile.TemporaryDirectory() as out:
+        res = subprocess.run(
+            [javac, "--release", "17", "-Xlint:all", "-Werror",
+             "-cp", os.pathsep.join(jars), "-d", out, native._JAVA_SRC],
+            capture_output=True, text=True)
+    assert res.returncode == 0, res.stderr
+
+
 def test_native_arity4_emit_path():
     """>= EMIT_MIN_N keys exercises the emit-cells peel + sequential
     assign variant (oc0..oc3 streams)."""

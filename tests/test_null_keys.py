@@ -6,6 +6,9 @@ uncastable) keys JVM-side, and every probe surface answers False for a
 null key: a null is never a member.
 """
 
+import contextlib
+from unittest import mock
+
 import numpy as np
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -13,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from fastfilter_spark.functions import kernels as K
+from fastfilter_spark.functions import native
 from fastfilter_spark.operators.dist import (
     FILTER_TABLE_SCHEMA, ShardedFilter, build_sharded,
     build_sharded_from_bucketed, build_sharded_table, probe_via_join,
@@ -97,15 +101,27 @@ def test_uncastable_keys_are_dropped(spark):
     assert sf.contain_np(np.array([12, -3], dtype=np.int64)).all()
 
 
-def _sharded(members: list, shard_bits: int, kind: str) -> ShardedFilter:
+def _sharded(members: list, shard_bits: int, kind: str,
+             arity: int = 3) -> ShardedFilter:
     """Driver-side ShardedFilter, routed like the Spark build; a shard
     with no members holds the empty filter."""
     keys = np.unique(K.to_uint64(np.array(members, dtype=np.int64)))
     shards = shard_of_hash(keys, shard_bits)
-    payloads = [(build_filter(keys[shards == s], kind)
+    payloads = [(build_filter(keys[shards == s], kind, arity=arity)
                  if (shards == s).any() else empty_filter(kind)).to_bytes()
                 for s in range(1 << shard_bits)]
     return ShardedFilter(kind=kind, shard_bits=shard_bits, payloads=payloads)
+
+
+@contextlib.contextmanager
+def _probe_tier(tier: str):
+    """Run the broadcast probes on ``tier``: "arrow" makes the probe
+    jar unavailable, as on a host without javac."""
+    if tier == "jvm":
+        yield "jvm" if native.probe_jar() else "arrow"
+    else:
+        with mock.patch.object(native, "probe_jar", lambda: None):
+            yield "arrow"
 
 
 class _Serving:
@@ -122,61 +138,80 @@ class _Serving:
         return self.sf
 
 
+# every xor/fuse kind, and the 4-wise fuse extension
+_KINDS = [("fuse8", 3), ("fuse16", 3), ("fuse32", 3), ("fuse8", 4),
+          ("xor8", 3), ("xor16", 3)]
+
+
 @given(members=st.lists(st.one_of(INT64, st.sampled_from(
            [-2**63, 2**63 - 1, -1, 0, 2**53 + 1])), max_size=300),
        others=st.lists(st.one_of(st.none(), INT64), max_size=60),
-       shard_bits=st.integers(0, 3),
-       kind=st.sampled_from(["fuse8", "xor8", "fuse16"]))
-@settings(deadline=None, max_examples=8,
+       shard_bits=st.integers(0, 3))
+@settings(deadline=None, max_examples=3,
           suppress_health_check=[HealthCheck.too_slow])
 def test_probe_surfaces_agree(spark, tmp_path_factory, members, others,
-                              shard_bits, kind):
-    """One ShardedFilter through all five probe surfaces gives the same
-    membership bit for every row: members (duplicated) probe True, null
-    keys False, and every other key its driver-side contain_np bit."""
-    sf = _sharded(members, shard_bits, kind)
+                              shard_bits):
+    """One ShardedFilter of each kind through all five probe surfaces,
+    on both probe tiers, gives the same membership bit for every row:
+    members (duplicated) probe True, null keys False, and every other
+    key its driver-side contain_np bit.  Shards without members hold
+    the empty filter (shard_bits 3 leaves some empty)."""
     probe_keys = members + members[:5] + others + [None]
     rows = [(i, k) for i, k in enumerate(probe_keys)]
     df = spark.createDataFrame(rows, _ID_KEY).repartition(2)
-
+    # dim = the probe keys themselves, so the exact join keeps every
+    # non-null key and the result is the filter's own bit
+    dim = spark.createDataFrame(rows, _ID_KEY)
+    df.createOrReplaceTempView("probe_surfaces_t")
     present = [k for k in probe_keys if k is not None]
-    bit = dict(zip(present, sf.contain_np(np.array(present, dtype=np.int64))))
-    want = [k is not None and bool(bit[k]) for k in probe_keys]
-    assert all(want[i] for i, k in enumerate(probe_keys) if k in members)
 
     def bits_of(kept_ids):
         kept = set(kept_ids)
         return [i in kept for i in range(len(probe_keys))]
 
-    udf_bits = {r["id"]: r["m"] for r in df.select(
-        "id", sf.contains_udf(spark)("k").alias("m")).collect()}
-    assert [udf_bits[i] for i in range(len(probe_keys))] == want
+    for kind, arity in _KINDS:
+        sf = _sharded(members, shard_bits, kind, arity)
+        bit = dict(zip(present,
+                       sf.contain_np(np.array(present, dtype=np.int64))))
+        want = [k is not None and bool(bit[k]) for k in probe_keys]
+        assert all(want[i] for i, k in enumerate(probe_keys)
+                   if k in members)
 
-    # the streaming sink, served this one filter: drop_members keeps
-    # exactly the False rows (null keys included), keep_members the True
-    for mode, kept_want in (("drop_members", [not w for w in want]),
-                            ("keep_members", want)):
-        out = str(tmp_path_factory.mktemp(mode))
-        StreamingFilterProbe(_Serving(sf), "k", out, mode=mode) \
-            .process_batch(df, 0)
-        assert bits_of(r["id"] for r in
-                       spark.read.parquet(out).collect()) == kept_want
+        table = spark.createDataFrame(
+            [(s, kind, sf.num_shards, 0, 0, 0, len(p), 0.0, p)
+             for s, p in enumerate(sf.payloads)], FILTER_TABLE_SCHEMA)
+        joined = {r["key"]: r["member"] for r in
+                  probe_via_join(df, "k", table).collect()}
+        assert [joined.get(k, False) for k in probe_keys] == want, \
+            (kind, arity)
 
-    name = sf.register_sql_udf(spark, "ff_contains_prop")
-    df.createOrReplaceTempView("probe_surfaces_t")
-    sql_bits = {r["id"]: r["m"] for r in spark.sql(
-        f"SELECT id, {name}(k) AS m FROM probe_surfaces_t").collect()}
-    assert [sql_bits[i] for i in range(len(probe_keys))] == want
+        for tier in ("jvm", "arrow"):
+            case = (kind, arity, tier)
+            with _probe_tier(tier) as expected:
+                probe = sf.contains_udf(spark)
+                assert probe.tier == expected, case
+                got = {r["id"]: r["m"] for r in df.select(
+                    "id", probe("k").alias("m")).collect()}
+                assert [got[i] for i in range(len(probe_keys))] == want, case
 
-    table = spark.createDataFrame(
-        [(s, kind, sf.num_shards, 0, 0, 0, len(p), 0.0, p)
-         for s, p in enumerate(sf.payloads)], FILTER_TABLE_SCHEMA)
-    joined = {r["key"]: r["member"] for r in
-              probe_via_join(df, "k", table).collect()}
-    assert [joined.get(k, False) for k in probe_keys] == want
+                # the streaming sink, served this one filter:
+                # drop_members keeps exactly the False rows (null keys
+                # included), keep_members the True
+                for mode, kept_want in (
+                        ("drop_members", [not w for w in want]),
+                        ("keep_members", want)):
+                    out = str(tmp_path_factory.mktemp(mode))
+                    StreamingFilterProbe(_Serving(sf), "k", out, mode=mode) \
+                        .process_batch(df, 0)
+                    assert bits_of(r["id"] for r in spark.read.parquet(
+                        out).collect()) == kept_want, case + (mode,)
 
-    # dim = the probe keys themselves, so the exact join keeps every
-    # non-null key and the result is the filter's own bit
-    dim = spark.createDataFrame(rows, _ID_KEY)
-    assert bits_of(r["id"] for r in
-                   semi_join_prune(df, "k", sf, dim, "k").collect()) == want
+                name = sf.register_sql_udf(spark, "ff_contains_prop")
+                assert name.tier == expected, case
+                got = {r["id"]: r["m"] for r in spark.sql(
+                    f"SELECT id, {name}(k) AS m FROM probe_surfaces_t")
+                    .collect()}
+                assert [got[i] for i in range(len(probe_keys))] == want, case
+
+                assert bits_of(r["id"] for r in semi_join_prune(
+                    df, "k", sf, dim, "k").collect()) == want, case

@@ -34,6 +34,24 @@ def test_probe_via_join_missing_shard_rows(spark, sf_dir):
     assert counts.get(True, 0) > 0 and counts.get(False, 0) > 0
 
 
+def test_probe_via_join_leaves_no_cached_plan(spark):
+    """num_shards=None must not leave the caller's build plan in the
+    session's cache manager: Spark would then serve any later build
+    over the same input from those rows (its plan an
+    InMemoryTableScan, not a build).  Seen as an order-dependent
+    failure of tests/test_plans.py::test_build_has_single_exchange run
+    after this file."""
+    from pyspark import StorageLevel
+
+    from fastfilter_spark.operators.dist import build_sharded_table
+    keys = spark.range(20_000).select(F.xxhash64("id").alias("key"))
+    table = build_sharded_table(keys, "key", kind="fuse8", shard_bits=2)
+    assert probe_via_join(keys, "key", table).where("member").count() \
+        == 20_000
+    again = build_sharded_table(keys, "key", kind="fuse8", shard_bits=2)
+    assert again.storageLevel == StorageLevel.NONE
+
+
 def test_probe_via_join_rejects_wrong_num_shards(spark):
     """Probe keys are routed by the caller's num_shards: against a table
     built with another count most members would land in the wrong shard

@@ -2,7 +2,7 @@
 
 Covers: reliable checkpointing + single-action rounds in
 connected_components (VERDICT #4/#5, ADVICE graph), timezone-safe
-TimestampNTZ sessionization (ADVICE #1), probe_via_join auto-persist
+TimestampNTZ sessionization (ADVICE #1), probe_via_join one-build lookup
 (VERDICT #7 'What's wrong'), the conditional broadcasts in
 ngram_decontaminate / remove_boilerplate_lines (ADVICE #2/#3), and the
 embedding_near_dup empty-input guard (ADVICE #5).
@@ -92,12 +92,16 @@ def test_sessionize_ntz_is_timezone_and_dst_independent(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 2}
 
 
-# -- probe_via_join auto-persist ----------------------------------------------
+# -- probe_via_join materializes an unbuilt table once ------------------------
 
-def test_probe_via_join_autopersists_unmaterialized_table(spark):
+def test_probe_via_join_builds_unmaterialized_table_once(spark):
     """num_shards=None on a raw build plan must not execute the build
-    twice: the table is auto-persisted before the num_shards lookup, so
-    the cogroup probe reuses the materialized shards."""
+    twice: the shards are materialized before the num_shards lookup, so
+    the cogroup probe reads them instead of re-running the build — and
+    the caller's plan is not left in the session's cache."""
+    import contextlib
+    import io
+
     from pyspark import StorageLevel
 
     from fastfilter_spark.operators.dist import (
@@ -106,12 +110,17 @@ def test_probe_via_join_autopersists_unmaterialized_table(spark):
     keys = spark.range(20_000).select(
         F.xxhash64(F.col("id")).alias("key"))
     ftable = build_sharded_table(keys, "key", kind="fuse8", shard_bits=2)
-    assert ftable.storageLevel == StorageLevel.NONE
     out = probe_via_join(keys, "key", ftable, num_shards=None)
-    assert ftable.storageLevel != StorageLevel.NONE, \
-        "filter table was not pinned before the num_shards lookup"
+    assert ftable.storageLevel == StorageLevel.NONE, \
+        "the caller's filter table was left in the session cache"
+    plan = io.StringIO()
+    with contextlib.redirect_stdout(plan):
+        out.explain()
+    # the build is a FlatMapGroupsInPandas; the probe's cogroup is a
+    # FlatMapCoGroupsInPandas
+    assert "FlatMapGroupsInPandas" not in plan.getvalue(), \
+        "the probe re-runs the build"
     assert out.where(F.col("member")).count() == 20_000
-    ftable.unpersist()
 
 
 # -- conditional broadcasts ---------------------------------------------------
