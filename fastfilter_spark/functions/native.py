@@ -10,10 +10,12 @@ differential-tested (tests/test_native.py) — probes agree bit-for-bit,
 builds succeed on identical seed chains (any valid peel order yields a
 correct filter; see operators/local.py module docstring).
 
-The same cache holds the JVM probe: ``probe_jar()`` compiles
-fastfilter_spark/native/FilterProbe.java with ``javac`` into a jar that
-operators/dist.py ``broadcast_probe`` loads into the Spark session; with
-no ``javac`` it returns None and the probe stays an Arrow UDF.
+The same cache holds the JVM jar: ``probe_jar()`` compiles
+fastfilter_spark/native/FilterProbe.java (the broadcast probe) and
+FilterBuild.java (the shard build) with ``javac`` into one jar that
+operators/dist.py loads into the Spark session; with no ``javac`` it
+returns None, the probe stays an Arrow UDF and the build a grouped-map
+pandas UDF.
 """
 
 from __future__ import annotations
@@ -32,7 +34,8 @@ import numpy as np
 _NATIVE_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "native")
 _SRC = os.path.join(_NATIVE_DIR, "ffkernel.c")
-_JAVA_SRC = os.path.join(_NATIVE_DIR, "FilterProbe.java")
+_JAVA_SRCS = [os.path.join(_NATIVE_DIR, f)
+              for f in ("FilterProbe.java", "FilterBuild.java")]
 _kernel = None
 _tried = False
 
@@ -60,17 +63,21 @@ def _read_source(path: str) -> bytes:
                 / os.path.basename(path)).read_bytes()
 
 
-def _cached_build(src_path: str, suffix: str, build) -> str | None:
-    """Build ``src_path`` once per content hash into the user cache dir.
+def _cached_build(src_paths: list[str], suffix: str, build) -> str | None:
+    """Build ``src_paths`` once per content hash into the user cache
+    dir, named after the first source.
 
-    ``build(src, out)`` compiles a materialized copy of the source
-    (it may live inside a --py-files zip where no compiler can read
-    it) into ``out``; the finished artifact is published by an atomic
+    ``build(srcs, out)`` compiles materialized copies of the sources
+    (they may live inside a --py-files zip where no compiler can read
+    them) into ``out``; the finished artifact is published by an atomic
     rename, so concurrent compiles on one host are safe.  Returns the
     cached path, or None when the build fails."""
-    src = _read_source(src_path)
-    name, _ = os.path.splitext(os.path.basename(src_path))
-    tag = hashlib.sha256(src).hexdigest()[:16]
+    srcs = [_read_source(p) for p in src_paths]
+    name, _ = os.path.splitext(os.path.basename(src_paths[0]))
+    h = hashlib.sha256()
+    for src in srcs:
+        h.update(hashlib.sha256(src).digest())
+    tag = h.hexdigest()[:16]
     cache_dir = os.path.join(
         os.environ.get("XDG_CACHE_HOME", os.path.expanduser("~/.cache")),
         "fastfilter_spark")
@@ -80,11 +87,12 @@ def _cached_build(src_path: str, suffix: str, build) -> str | None:
     os.makedirs(cache_dir, exist_ok=True)
     work = tempfile.mkdtemp(dir=cache_dir)
     try:
-        copy = os.path.join(work, os.path.basename(src_path))
-        with open(copy, "wb") as f:
-            f.write(src)
+        copies = [os.path.join(work, os.path.basename(p)) for p in src_paths]
+        for copy, src in zip(copies, srcs):
+            with open(copy, "wb") as f:
+                f.write(src)
         out = os.path.join(work, "out" + suffix)
-        build(copy, out)
+        build(copies, out)
         os.rename(out, path)  # atomic on one filesystem
         return path
     except Exception:
@@ -94,31 +102,32 @@ def _cached_build(src_path: str, suffix: str, build) -> str | None:
 
 
 def _compile() -> str | None:
-    def cc(src, out):
+    def cc(srcs, out):
         subprocess.run(
             ["cc", "-O3", "-march=native", "-funroll-loops", "-shared",
-             "-fPIC", "-o", out, src],
+             "-fPIC", "-o", out, *srcs],
             check=True, capture_output=True, timeout=120)
-    return _cached_build(_SRC, ".so", cc)
+    return _cached_build([_SRC], ".so", cc)
 
 
 @functools.cache
 def probe_jar() -> str | None:
-    """The JVM probe (native/FilterProbe.java) as a jar, compiled with
-    ``javac`` against pyspark's jars once per content hash; memoised
-    per process.  None when there is no ``javac`` or the compile fails
-    (the broadcast probe then runs as an Arrow UDF)."""
-    return _cached_build(_JAVA_SRC, ".jar", _javac)
+    """The JVM probe and build (native/FilterProbe.java and
+    FilterBuild.java) as one jar, compiled with ``javac`` against
+    pyspark's jars once per content hash; memoised per process.  None
+    when there is no ``javac`` or the compile fails (the broadcast
+    probe then runs as an Arrow UDF, the build as a pandas UDF)."""
+    return _cached_build(_JAVA_SRCS, ".jar", _javac)
 
 
-def _javac(src: str, out: str) -> None:
+def _javac(srcs: list[str], out: str) -> None:
     import pyspark
     jars = os.path.join(os.path.dirname(pyspark.__file__), "jars", "*")
     classes = os.path.join(os.path.dirname(out), "classes")
     # --release 17: loadable by every JVM Spark 4 runs on, whatever
     # the javac version
     subprocess.run(["javac", "--release", "17", "-cp", jars, "-d", classes,
-                    src], check=True, capture_output=True, timeout=300)
+                    *srcs], check=True, capture_output=True, timeout=300)
     with zipfile.ZipFile(out, "w") as jar:
         for root, _, files in os.walk(classes):
             for f in files:

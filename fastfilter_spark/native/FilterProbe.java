@@ -10,10 +10,12 @@
  * fingerprint gathers, an xor and a compare.  A key is routed to its
  * shard by Spark's own XXH64.hashLong(key, 42), the function that
  * F.xxhash64 runs in dist.keys_with_shard, so routing matches the build
- * bit for bit.  A null key is never a member.
+ * bit for bit.  A null key is never a member, nor is any key routed to
+ * a shard that holds no key.
  *
- * Compiled on demand by fastfilter_spark/functions/native.py (javac
- * against the pyspark jars) and wired by operators/dist.py
+ * Compiled on demand with FilterBuild.java into one jar by
+ * fastfilter_spark/functions/native.py (javac against the pyspark
+ * jars) and wired by operators/dist.py
  * broadcast_probe: ADD JAR, one JVM Broadcast of the shard payloads,
  * functions.udf.  The broadcast value holds JDK arrays only, because in
  * local mode the executors read the driver's object while loading this
@@ -37,8 +39,9 @@ import org.apache.spark.sql.types.DataTypes;
 public final class FilterProbe implements UDF1<Number, Boolean> {
     private static final long serialVersionUID = 1L;
 
-    /* Per shard, FIELDS longs: seed, arity, then the layout ints
-     * (xor: blockLength, 0; fuse: SegmentLength, SegmentCountLength). */
+    /* Per shard, FIELDS longs: seed, arity (0: the shard holds no key),
+     * then the layout ints (xor: blockLength, 0; fuse: SegmentLength,
+     * SegmentCountLength). */
     private static final int FIELDS = 4;
 
     private static final VarHandle U16 = MethodHandles.byteArrayViewVarHandle(
@@ -100,6 +103,9 @@ public final class FilterProbe implements UDF1<Number, Boolean> {
         /* pmod(xxhash64(key), S): the shard count is a power of two */
         int s = (int) (XXH64.hashLong(k, 42L) & (fingerprints.length - 1));
         int o = s * FIELDS;
+        if (params[o + 1] == 0) {
+            return Boolean.FALSE;
+        }
         byte[] fp = fingerprints[s];
         long h = murmur64(k + params[o]);
         int x = (int) (h ^ (h >>> 32));
@@ -112,8 +118,7 @@ public final class FilterProbe implements UDF1<Number, Boolean> {
             int sl = (int) params[o + 2];
             long scl = params[o + 3];
             int mask = sl - 1;
-            /* unsigned mulhi(h, scl); scl < 2^32, so the result fits */
-            int a = (int) (Math.multiplyHigh(h, scl) + ((h >> 63) & scl));
+            int a = mulhi(h, scl);
             if (params[o + 1] == 4) {
                 long oh = murmur64(h);
                 x ^= cell(fp, a)
@@ -141,7 +146,7 @@ public final class FilterProbe implements UDF1<Number, Boolean> {
         }
     }
 
-    private static long murmur64(long h) {
+    static long murmur64(long h) {
         h ^= h >>> 33;
         h *= 0xFF51AFD7ED558CCDL;
         h ^= h >>> 33;
@@ -151,7 +156,13 @@ public final class FilterProbe implements UDF1<Number, Boolean> {
     }
 
     /* Lemire range reduction of a 32-bit hash into [0, n) */
-    private static int reduce(int hash32, int n) {
+    static int reduce(int hash32, int n) {
         return (int) (((hash32 & 0xFFFFFFFFL) * (n & 0xFFFFFFFFL)) >>> 32);
+    }
+
+    /* the fuse segment map h0: unsigned mulhi(h, scl); scl < 2^32, so
+     * the result fits (--release 17 has no Math.unsignedMultiplyHigh) */
+    static int mulhi(long h, long scl) {
+        return (int) (Math.multiplyHigh(h, scl) + ((h >> 63) & scl));
     }
 }

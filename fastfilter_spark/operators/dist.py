@@ -5,27 +5,33 @@ process over an in-memory ``uint64_t*`` array (populate signatures at
 /root/reference/include/xorfilter.h:659 and
 /root/reference/include/binaryfusefilter.h:280).  Hypergraph peeling is a
 sequential global fixpoint, so the idiomatic distributed construction is
-*sharded*: route every key to one of S independent sub-filters by a stable
-unseeded hash prefix, build each shard entirely inside one
-``groupBy(shard).applyInPandas`` task with the exact reference algorithm
-(numpy-vectorized, see operators/local.py), and define the distributed
-filter as the sharded collection.  Each shard is a bona-fide reference
-filter over that shard's keys, so the per-shard fpp / bits-per-entry
-guarantees carry over unchanged and the overall fpp bound is identical.
+*sharded*: route every key to one of S independent sub-filters by a
+stable hash, build each shard entirely inside one task with the exact
+reference algorithm, and define the distributed filter as the sharded
+collection.  The shard build runs inside Spark's JVM
+(``groupBy(shard).agg(collect_list(key))``, then the compiled
+native/FilterBuild.java UDF); without javac or a py4j JVM it is one
+``groupBy(shard).applyInPandas`` task per shard over operators/local.py.
+Both give the same bytes (``build_filter_rows``).  Each shard is a
+bona-fide reference filter over that shard's keys, so the per-shard
+fpp / bits-per-entry guarantees carry over unchanged and the overall
+fpp bound is identical.
 
 Scale design notes (targeting a 10^12-key Iceberg table, tested locally):
 
 - ONE shuffle total: keys are repartitioned by shard id once; per-shard
-  deduplication happens inside the build kernel via ``np.unique`` (a key's
-  shard is a pure function of the key, so shard-local dedup is globally
-  exact).  No separate ``dropDuplicates`` pass — that would add a second
-  full shuffle on the raw keys.
-- Shard count is chosen so a shard's keys + ~24 B/key construction scratch
-  (reference README.md:153) fit comfortably in one executor task; default
-  target is 2^22 keys/shard (~32 MB keys + ~100 MB scratch).
-- Shard ids come from the top bits of an (unseeded) murmur64 finalizer of
-  the key — uniform for any input distribution, and skew-free because the
-  route hash is independent of the per-shard build seeds.  Hot-key skew in
+  deduplication happens inside the shard build (an unsigned sort, as
+  ``np.unique`` does; a key's shard is a pure function of the key, so
+  shard-local dedup is globally exact).  No separate ``dropDuplicates``
+  pass — that would add a second full shuffle on the raw keys.
+- Shard count is chosen so a shard's keys + construction scratch fit
+  comfortably in one executor task; default target is 2^22 keys/shard
+  (~380 MB of heap on the JVM tier, ~130 MB in the Python worker on the
+  Python tier; SCALE.md).
+- Shard ids are ``pmod(xxhash64(key), 2^bits)`` with Spark's own
+  xxhash64 (``keys_with_shard``, ``shard_of_hash``) — uniform for any
+  input distribution, and skew-free because the route hash is
+  independent of the per-shard build seeds.  Hot-key skew in
   the *input* (e.g. duplicate urls) is absorbed by in-kernel dedup; true
   volume skew is split by AQE skew-partition handling upstream.
 - The result is tiny relative to the input (~1.1 byte/key for 8-bit
@@ -232,14 +238,16 @@ def broadcast_probe(spark: SparkSession, payload, decode):
     Arrow side — a pandas Series or numpy conversion of a column with
     one null turns the whole batch into float64 and rounds every key
     above 2^53."""
-    factory = (_jvm_probe_factory(spark)
+    factory = (_jvm_factory(spark, "FilterProbe")
                if isinstance(payload, ShardedFilter) else None)
     if factory is not None:
         filters = payload._filters()
         xor = payload.kind.startswith("xor")
+        # arity 0 marks an empty shard, which probes False
         fields = np.array(
-            [[f.seed, 3, f.block_length, 0] if xor else
-             [f.seed, f.arity, f.segment_length, f.segment_count_length]
+            [[f.seed, 0 if f.empty else 3, f.block_length, 0] if xor else
+             [f.seed, 0 if f.empty else f.arity, f.segment_length,
+              f.segment_count_length]
              for f in filters], dtype="<u8")
         prints = [f.fingerprints.astype(
             f.fingerprints.dtype.newbyteorder("<"), copy=False).tobytes()
@@ -268,11 +276,13 @@ def broadcast_probe(spark: SparkSession, payload, decode):
     return contains
 
 
-def _jvm_probe_factory(spark: SparkSession):
-    """The session's driver-side ``FilterProbe`` factory, or None when
-    the session has no py4j JVM (Spark Connect) or there is no probe
-    jar.  The class is looked up through the session's jar class loader,
-    which ``ADD JAR`` extends, whatever py4j thread asks."""
+def _jvm_factory(spark: SparkSession, name: str):
+    """The session's driver-side factory of the jar class ``name``
+    (``FilterProbe`` or ``FilterBuild``), or None when the session has
+    no py4j JVM (Spark Connect) or there is no jar: the one place the
+    probe and the build choose between the JVM tier and their Python
+    fallback.  The class is looked up through the session's jar class
+    loader, which ``ADD JAR`` extends, whatever py4j thread asks."""
     jsession = getattr(spark, "_jsparkSession", None)
     jar = native.probe_jar() if jsession is not None else None
     if jar is None:
@@ -282,7 +292,7 @@ def _jvm_probe_factory(spark: SparkSession):
         spark.sql(f"ADD JAR '{jar}'")
     jvm, gateway = sc._jvm, sc._gateway
     cls = jvm.java.lang.Class.forName(
-        "fastfilter_spark.FilterProbe", True,
+        f"fastfilter_spark.{name}", True,
         jsession.sharedState().jarClassLoader())
     return cls.getConstructor(gateway.new_array(jvm.java.lang.Class, 0)) \
         .newInstance(gateway.new_array(jvm.java.lang.Object, 0))
@@ -299,11 +309,15 @@ class _JvmProbe:
         self.judf = judf
 
     def __call__(self, col) -> Column:
-        from pyspark.sql.classic.column import (
-            Column as JColumn, _to_java_column, _to_seq)
         key = (F.col(col) if isinstance(col, str) else col).cast(LongType())
-        return JColumn(self.judf.apply(
-            _to_seq(self.sc, [key], _to_java_column)))
+        return _jvm_apply(self.sc, self.judf, key)
+
+
+def _jvm_apply(sc, judf, *cols: Column) -> Column:
+    """A JVM ``UserDefinedFunction`` applied to ``cols``."""
+    from pyspark.sql.classic.column import (
+        Column as JColumn, _to_java_column, _to_seq)
+    return JColumn(judf.apply(_to_seq(sc, list(cols), _to_java_column)))
 
 
 def choose_shard_bits(approx_distinct: int, target_keys_per_shard: int = 1 << 22,
@@ -321,8 +335,9 @@ def choose_shard_bits(approx_distinct: int, target_keys_per_shard: int = 1 << 22
 
 
 def _build_shard_kernel(kind: str, num_shards: int, arity: int = 3):
-    """Grouped-map kernel: one shard's keys -> np.unique dedup -> exact
-    reference populate (operators/local.py) -> one filter-table row.
+    """The Python tier's grouped-map kernel (``build_filter_rows``):
+    one shard's keys -> np.unique dedup -> exact reference populate
+    (operators/local.py) -> one filter-table row.
 
     np.unique both dedups (the Spark-scale replacement for the
     reference's lazy sort-and-dedup, xorfilter.h:24-34; the in-kernel
@@ -358,14 +373,15 @@ def keys_with_shard(df: DataFrame, key_col: str, shard_bits: int) -> DataFrame:
     """Project to (key long, shard int) — entirely JVM-side.
 
     ``pmod(xxhash64(key), S)`` stays inside whole-stage codegen, so the
-    scan -> project -> shuffle stage never crosses into Python; the only
-    Python in the whole build is the per-shard kernel itself.
+    scan -> project -> shuffle stage never crosses into Python; on the
+    JVM build tier no stage does, and on the Python tier only the
+    per-shard kernel runs there.
 
     Null keys, and keys whose cast yields null (a malformed string with
-    ANSI mode off), are dropped here, JVM-side: one null in a
-    shard's Arrow int64 column turns it into float64 in the kernel,
-    which then builds that shard over keys rounded to 53 bits (false
-    negatives for every key above 2^53) plus a bogus key.  A null is
+    ANSI mode off), are dropped here, JVM-side: on the Python tier one
+    null in a shard's Arrow int64 column turns it into float64 in the
+    kernel, which then builds that shard over keys rounded to 53 bits
+    (false negatives for every key above 2^53) plus a bogus key.  A null is
     never a member, so dropping it is exact.
     """
     key = F.col(key_col).cast(LongType())
@@ -522,9 +538,13 @@ def build_sharded_table(
     shuffle; the shard column is JVM-side inside whole-stage codegen):
 
         scan -> select(key, shard = pmod(xxhash64(key), S))
+             -> partial collect_list(key) per shard  [map side]
              -> groupBy(shard)                       [THE shuffle]
-             -> applyInPandas(reference populate)    [one task per shard]
+             -> collect_list -> FilterBuild UDF      [reference populate]
              -> 2^bits tiny rows
+
+    (Python tier: the shuffle feeds ``applyInPandas`` instead, one
+    grouped-map call per shard; see ``build_filter_rows``.)
 
     With ``checkpoint_dir`` the filter table is appended per-shard to
     parquet and a rerun builds only missing shards (resume-by-shard-id,
@@ -714,7 +734,8 @@ def build_sharded(
 def complete_filter(rows: Iterable, kind: str,
                     num_shards: int) -> ShardedFilter:
     """``ShardedFilter`` over collected filter-table rows, each absent
-    shard filled with a valid empty filter.
+    shard filled with a valid empty filter, which probes False for every
+    key, as ``probe_via_join`` answers for a shard with no row.
 
     A shard that received zero keys produces no kernel row (groupBy
     emits non-empty groups only), so an oversized explicit shard_bits
@@ -738,7 +759,7 @@ def write_bucketed_keys(df: DataFrame, key_col: str, shard_bits: int,
     """Persist the key stream as a SHARD-BUCKETED table: the write pays
     the shuffle once, and every subsequent ``build_sharded_from_bucketed``
     is completely shuffle-free (Catalyst sees the scan's
-    HashPartitioning(shard) already satisfies the grouped-map
+    HashPartitioning(shard) already satisfies the shard grouping's
     distribution — asserted in tests/test_plans.py).  This is the
     SCALE.md deployment for a 10^12-key corpus that gets re-filtered
     repeatedly: an Iceberg/bucketBy layout choice, not an engine change.
@@ -774,7 +795,7 @@ def build_sharded_from_bucketed(spark: SparkSession, table_name: str,
             "of two (write with write_bucketed_keys)")
     # exact match, not substring: a table bucketed by shard_id or by
     # (key, shard) would pass a loose check but NOT satisfy the
-    # grouped-map distribution — Catalyst would silently reinsert the
+    # shard grouping's distribution — Catalyst would silently reinsert the
     # Exchange this function exists to avoid
     bucket_cols = [c.strip(" `") for c in
                    desc.get("Bucket Columns", "").strip("[]").split(",")]
@@ -857,15 +878,39 @@ def probe_via_join(probes: DataFrame, key_col: str,
         probe, schema="key long, member boolean")
 
 
+def build_tier(spark: SparkSession) -> str:
+    """Where ``build_filter_rows`` builds the shards in ``spark``:
+    ``"jvm"`` (the compiled FilterBuild UDF) or ``"python"`` (the
+    grouped-map pandas kernel, when there is no ``javac`` or no py4j
+    JVM)."""
+    return "jvm" if _jvm_factory(spark, "FilterBuild") is not None \
+        else "python"
+
+
 def build_filter_rows(keyed: DataFrame, kind: str,
                       num_shards: int, arity: int = 3) -> DataFrame:
     """Low-level: (key, shard) rows -> filter-table rows for the shards
     PRESENT in ``keyed`` (no completeness requirement — used by
     checkpoint resume and streaming incremental rebuild).  ``arity=4``
     builds 4-wise fuse shards; probes need no flag (deserialization
-    infers arity from each payload's layout)."""
-    return keyed.groupBy("shard").applyInPandas(
-        _build_shard_kernel(kind, num_shards, arity), schema=FILTER_TABLE_SCHEMA)
+    infers arity from each payload's layout).
+
+    JVM tier (``build_tier``): ``groupBy(shard).agg(collect_list(key))``,
+    then native/FilterBuild.java as a UDF returning the
+    ``FILTER_TABLE_SCHEMA`` struct, so the keys never leave the JVM.
+    Python tier: ``groupBy(shard).applyInPandas`` over the same kernel
+    in operators/local.py.  Both give the same payload bytes."""
+    spark = keyed.sparkSession
+    factory = _jvm_factory(spark, "FilterBuild")
+    if factory is None:
+        return keyed.groupBy("shard").applyInPandas(
+            _build_shard_kernel(kind, num_shards, arity),
+            schema=FILTER_TABLE_SCHEMA)
+    judf = factory.udf(kind, num_shards, arity, FILTER_TABLE_SCHEMA.json())
+    row = _jvm_apply(spark.sparkContext, judf, F.col("shard"), F.col("keys"))
+    return keyed.groupBy("shard") \
+        .agg(F.collect_list("key").alias("keys")) \
+        .select(row.alias("row")).select("row.*")
 
 
 def semi_join_prune(fact: DataFrame, fact_key: str, sf: ShardedFilter,

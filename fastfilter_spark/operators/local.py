@@ -246,6 +246,12 @@ class XorFilter:
     def kind(self) -> str:
         return self.KIND_BITS[self.fingerprint_bits]
 
+    @property
+    def empty(self) -> bool:
+        """Holds no key (``empty_filter``): a build over one or more
+        keys has a longer block."""
+        return self.block_length == xor_block_length(0)
+
     @classmethod
     def build(cls, keys, fingerprint_bits: int = 8) -> "XorFilter":
         """allocate+populate (xorfilter.h:134-156, 659-858): seed-retry chain
@@ -299,8 +305,11 @@ class XorFilter:
                    fingerprint_bits=fingerprint_bits)
 
     def contain(self, keys) -> np.ndarray:
-        """Vectorized membership probe (xorfilter.h:96-108)."""
+        """Vectorized membership probe (xorfilter.h:96-108); False
+        throughout for an empty filter."""
         keys = K.to_uint64(keys)
+        if self.empty:
+            return np.zeros(keys.size, dtype=bool)
         nat = native.get_kernel()
         if nat is not None:
             return nat.xor_contain(keys, self.seed, self.block_length,
@@ -402,6 +411,11 @@ class FuseFilter:
     def segment_length_mask(self) -> int:
         return self.segment_length - 1
 
+    @property
+    def empty(self) -> bool:
+        """Built over no key (the wire header's Size is 0)."""
+        return self.size == 0
+
     @classmethod
     def build(cls, keys, fingerprint_bits: int = 8,
               arity: int = 3) -> "FuseFilter":
@@ -499,8 +513,11 @@ class FuseFilter:
 
     def contain(self, keys) -> np.ndarray:
         """Vectorized probe (binaryfusefilter.h:178-187):
-        fingerprint ^ XOR_i fp[h_i] == 0 (3- or 4-wise per self.arity)."""
+        fingerprint ^ XOR_i fp[h_i] == 0 (3- or 4-wise per self.arity);
+        False throughout for an empty filter."""
         keys = K.to_uint64(keys)
+        if self.empty:
+            return np.zeros(keys.size, dtype=bool)
         nat = native.get_kernel()
         if nat is not None:
             return nat.fuse_contain(keys, self.seed, self.segment_length,
@@ -610,11 +627,11 @@ class FuseFilter:
 
 
 def empty_filter(kind: str):
-    """A valid filter over the empty key set (all-zero fingerprints:
-    trivially no false negatives; fpp is the usual 2^-bits chance of a
-    zero fingerprint).  Needed because the reference's xor populate
-    rejects size 0 (xorfilter.h:660) but a sharded/streaming engine must
-    represent 'shard with no keys yet' for every kind."""
+    """A valid filter over the empty key set (all-zero fingerprints)
+    that every probe answers False, as ``probe_via_join`` answers for a
+    shard with no filter row.  Needed because the reference's xor
+    populate rejects size 0 (xorfilter.h:660) but a sharded/streaming
+    engine must represent 'shard with no keys yet' for every kind."""
     if kind in ("xor8", "xor16"):
         bits = 8 if kind == "xor8" else 16
         _, seed = K.splitmix64(K.XOR_RNG_START)

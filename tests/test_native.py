@@ -211,7 +211,8 @@ def test_kernel_compiles_warning_free():
 
 
 def test_probe_source_compiles_warning_free():
-    """FilterProbe.java, the JVM probe, builds clean under javac
+    """Every Java source of the jar (FilterProbe.java, the JVM probe;
+    FilterBuild.java, the JVM shard build) builds clean under javac
     -Xlint:all.  The classpath is pyspark's jars minus derby and
     scala-compiler, whose manifests name Class-Path jars pyspark does
     not ship (javac's path lint reports those, not this source)."""
@@ -230,7 +231,7 @@ def test_probe_source_compiles_warning_free():
     with tempfile.TemporaryDirectory() as out:
         res = subprocess.run(
             [javac, "--release", "17", "-Xlint:all", "-Werror",
-             "-cp", os.pathsep.join(jars), "-d", out, native._JAVA_SRC],
+             "-cp", os.pathsep.join(jars), "-d", out, *native._JAVA_SRCS],
             capture_output=True, text=True)
     assert res.returncode == 0, res.stderr
 
