@@ -1,27 +1,28 @@
-"""Optional native (C) kernel loader for the filter hot loops.
+"""Native (C) kernel loader for the filter hot loops, and the JVM jar.
 
 Compiles fastfilter_spark/native/ffkernel.c on first use with the system
 C compiler into a content-addressed cached .so (atomic rename, safe for
 concurrent executor python workers on one host) and exposes thin
-ctypes wrappers.  Everything degrades gracefully: if no compiler / the
+ctypes wrappers.  The C kernel is optional: if no compiler / the
 compile fails, ``get_kernel()`` returns None and callers fall back to
 the numpy implementations in operators/local.py.  The two paths are
 differential-tested (tests/test_native.py) — probes agree bit-for-bit,
 builds succeed on identical seed chains (any valid peel order yields a
 correct filter; see operators/local.py module docstring).
 
-The same cache holds the JVM jar: ``probe_jar()`` compiles
+The same cache holds the JVM jar: ``probe_jar(spark)`` compiles
 fastfilter_spark/native/FilterProbe.java (the broadcast probe) and
-FilterBuild.java (the shard build) with ``javac`` into one jar that
-operators/dist.py loads into the Spark session; with no ``javac`` it
-returns None, the probe stays an Arrow UDF and the build a grouped-map
-pandas UDF.
+FilterBuild.java (the shard build) into one jar with the Janino
+compiler Spark ships for its own code generation, run inside the
+session's JVM over py4j, so any host that runs Spark can build it.
+operators/dist.py loads it into the Spark session; every shard build
+and broadcast probe runs there.
 """
 
 from __future__ import annotations
 
 import ctypes
-import functools
+import glob
 import hashlib
 import os
 import shutil
@@ -63,15 +64,15 @@ def _read_source(path: str) -> bytes:
                 / os.path.basename(path)).read_bytes()
 
 
-def _cached_build(src_paths: list[str], suffix: str, build) -> str | None:
+def _cached_build(src_paths: list[str], suffix: str, build) -> str:
     """Build ``src_paths`` once per content hash into the user cache
-    dir, named after the first source.
+    dir, named after the first source, and return the cached path.
 
     ``build(srcs, out)`` compiles materialized copies of the sources
     (they may live inside a --py-files zip where no compiler can read
     them) into ``out``; the finished artifact is published by an atomic
-    rename, so concurrent compiles on one host are safe.  Returns the
-    cached path, or None when the build fails."""
+    rename, so concurrent compiles on one host are safe.  A failed
+    build raises."""
     srcs = [_read_source(p) for p in src_paths]
     name, _ = os.path.splitext(os.path.basename(src_paths[0]))
     h = hashlib.sha256()
@@ -95,42 +96,72 @@ def _cached_build(src_paths: list[str], suffix: str, build) -> str | None:
         build(copies, out)
         os.rename(out, path)  # atomic on one filesystem
         return path
-    except Exception:
-        return None
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
 
 def _compile() -> str | None:
+    """The cached C kernel, or None without a C compiler or when the
+    compile fails (the numpy tier then runs)."""
     def cc(srcs, out):
         subprocess.run(
             ["cc", "-O3", "-march=native", "-funroll-loops", "-shared",
              "-fPIC", "-o", out, *srcs],
             check=True, capture_output=True, timeout=120)
-    return _cached_build([_SRC], ".so", cc)
+    try:
+        return _cached_build([_SRC], ".so", cc)
+    except Exception:
+        return None
 
 
-@functools.cache
-def probe_jar() -> str | None:
+def probe_jar(spark) -> str:
     """The JVM probe and build (native/FilterProbe.java and
-    FilterBuild.java) as one jar, compiled with ``javac`` against
-    pyspark's jars once per content hash; memoised per process.  None
-    when there is no ``javac`` or the compile fails (the broadcast
-    probe then runs as an Arrow UDF, the build as a pandas UDF)."""
-    return _cached_build(_JAVA_SRCS, ".jar", _javac)
+    FilterBuild.java) as one jar, compiled once per content hash by
+    Janino inside ``spark``'s JVM against pyspark's jars.  Raises
+    RuntimeError for a session without a py4j JVM (Spark Connect) or a
+    failed compile."""
+    if getattr(spark, "_jsparkSession", None) is None:
+        raise RuntimeError(
+            "fastfilter_spark builds and probes filters inside Spark's "
+            "JVM through py4j, and this session has no py4j JVM (Spark "
+            "Connect?); use a classic SparkSession")
+    return _cached_build(_JAVA_SRCS, ".jar",
+                         lambda srcs, out: _janino(spark.sparkContext,
+                                                   srcs, out))
 
 
-def _javac(srcs: list[str], out: str) -> None:
+def _janino(sc, srcs: list[str], out: str) -> None:
+    """Compile ``srcs`` into the jar ``out`` with
+    org.codehaus.janino.Compiler in ``sc``'s JVM, with line and source
+    debug info."""
+    from py4j.protocol import Py4JJavaError
     import pyspark
-    jars = os.path.join(os.path.dirname(pyspark.__file__), "jars", "*")
+    jvm, gateway = sc._jvm, sc._gateway
+
+    def files(paths):
+        arr = gateway.new_array(jvm.java.io.File, len(paths))
+        for i, p in enumerate(paths):
+            arr[i] = jvm.java.io.File(p)
+        return arr
+
+    jars = sorted(glob.glob(os.path.join(
+        os.path.dirname(pyspark.__file__), "jars", "*.jar")))
     classes = os.path.join(os.path.dirname(out), "classes")
-    # --release 17: loadable by every JVM Spark 4 runs on, whatever
-    # the javac version
-    subprocess.run(["javac", "--release", "17", "-cp", jars, "-d", classes,
-                    *srcs], check=True, capture_output=True, timeout=300)
+    os.makedirs(classes)
+    compiler = jvm.org.codehaus.janino.Compiler()
+    compiler.setClassPath(files(jars))
+    compiler.setDestinationDirectory(jvm.java.io.File(classes), False)
+    compiler.setDebugLines(True)
+    compiler.setDebugSource(True)
+    try:
+        compiler.compile(files(srcs))
+    except Py4JJavaError as e:
+        raise RuntimeError(
+            f"Janino could not compile the fastfilter_spark jar: "
+            f"{e.java_exception.toString()}") from None
     with zipfile.ZipFile(out, "w") as jar:
-        for root, _, files in os.walk(classes):
-            for f in files:
+        for root, _, names in os.walk(classes):
+            for f in names:
                 p = os.path.join(root, f)
                 jar.write(p, os.path.relpath(p, classes))
 

@@ -11,13 +11,14 @@
  * duplicate handling as operators/local.py build_filter: xor dedups at
  * attempt 10, a failed fuse attempt retries its seed over the unique
  * keys.  The shard row sorts its keys as unsigned and dedups them first,
- * as np.unique does in dist._build_shard_kernel, so the bytes do not
- * depend on arrival order.
+ * as np.unique does, so the bytes do not depend on arrival order.
  *
  * Compiled with FilterProbe.java into one jar by
- * fastfilter_spark/functions/native.py and wired by operators/dist.py
- * build_filter_rows: groupBy(shard).agg(collect_list(key)), then this
- * class as a UDF returning the FILTER_TABLE_SCHEMA struct.
+ * fastfilter_spark/functions/native.py (Spark's bundled Janino) and
+ * wired by operators/dist.py build_filter_rows:
+ * groupBy(shard).agg(collect_list(key)), then this class as a UDF
+ * returning the FILTER_TABLE_SCHEMA struct.  Janino ignores type
+ * arguments and emits no bridge methods, hence the Object signatures.
  */
 package fastfilter_spark;
 
@@ -27,7 +28,6 @@ import java.security.MessageDigest;
 import java.security.NoSuchAlgorithmException;
 import java.util.Arrays;
 
-import org.apache.spark.sql.Row;
 import org.apache.spark.sql.RowFactory;
 import org.apache.spark.sql.api.java.UDF2;
 import org.apache.spark.sql.expressions.UserDefinedFunction;
@@ -37,7 +37,7 @@ import org.apache.spark.sql.types.DataType;
 import scala.collection.Iterator;
 import scala.collection.Seq;
 
-public final class FilterBuild implements UDF2<Integer, Seq<Object>, Row> {
+public final class FilterBuild implements UDF2<Object, Object, Object> {
     private static final long serialVersionUID = 1L;
 
     /* kernels.py: splitmix64 and the seed-chain start counters */
@@ -83,9 +83,11 @@ public final class FilterBuild implements UDF2<Integer, Seq<Object>, Row> {
         return populate(keys, kind, arity).toBytes();
     }
 
+    /* (shard int, keys array<bigint>) -> the filter-table Row */
     @Override
-    public Row call(Integer shard, Seq<Object> column) {
+    public Object call(Object shard, Object keyList) {
         long t0 = System.nanoTime();
+        Seq<?> column = (Seq<?>) keyList;
         long rows = column.size();
         long[] keys = unique(column);
         Filter f = populate(keys, kind, arity);
@@ -97,9 +99,9 @@ public final class FilterBuild implements UDF2<Integer, Seq<Object>, Row> {
     }
 
     /** A shard's collected keys, np.unique'd. */
-    private static long[] unique(Seq<Object> column) {
+    private static long[] unique(Seq<?> column) {
         long[] k = new long[column.size()];
-        Iterator<Object> it = column.iterator();
+        Iterator<?> it = column.iterator();
         for (int i = 0; it.hasNext(); i++) {
             k[i] = (Long) it.next() ^ Long.MIN_VALUE;
         }

@@ -1,6 +1,6 @@
 /* fastfilter_spark JVM probe: membership of one key in a sharded xor /
- * binary-fuse filter, evaluated inside Spark's JVM so the key never
- * crosses into a Python worker.
+ * binary-fuse filter or in a sketches.Bloom, evaluated inside Spark's
+ * JVM so the key never crosses into a Python worker.
  *
  * contain() is the ffkernel.c probe written again in Java:
  * murmur64(key + seed), then three Lemire reductions (xor,
@@ -11,20 +11,19 @@
  * shard by Spark's own XXH64.hashLong(key, 42), the function that
  * F.xxhash64 runs in dist.keys_with_shard, so routing matches the build
  * bit for bit.  A null key is never a member, nor is any key routed to
- * a shard that holds no key.
+ * a shard that holds no key.  bloomContains() is sketches.Bloom.contains.
  *
  * Compiled on demand with FilterBuild.java into one jar by
- * fastfilter_spark/functions/native.py (javac against the pyspark
- * jars) and wired by operators/dist.py
- * broadcast_probe: ADD JAR, one JVM Broadcast of the shard payloads,
- * functions.udf.  The broadcast value holds JDK arrays only, because in
- * local mode the executors read the driver's object while loading this
- * class through another class loader.
+ * fastfilter_spark/functions/native.py (Spark's bundled Janino against
+ * the pyspark jars) and wired by operators/dist.py broadcast_probe: ADD
+ * JAR, one JVM Broadcast of the payload, functions.udf.  The broadcast
+ * value holds JDK arrays only, because in local mode the executors read
+ * the driver's object while loading this class through another class
+ * loader.  Janino ignores type arguments and emits no bridge methods,
+ * hence the Object signatures.
  */
 package fastfilter_spark;
 
-import java.lang.invoke.MethodHandles;
-import java.lang.invoke.VarHandle;
 import java.nio.ByteBuffer;
 import java.nio.ByteOrder;
 import java.util.List;
@@ -36,77 +35,89 @@ import org.apache.spark.sql.expressions.UserDefinedFunction;
 import org.apache.spark.sql.functions;
 import org.apache.spark.sql.types.DataTypes;
 
-public final class FilterProbe implements UDF1<Number, Boolean> {
+public final class FilterProbe implements UDF1<Object, Object> {
     private static final long serialVersionUID = 1L;
 
     /* Per shard, FIELDS longs: seed, arity (0: the shard holds no key),
      * then the layout ints (xor: blockLength, 0; fuse: SegmentLength,
-     * SegmentCountLength). */
+     * SegmentCountLength).  A Bloom filter has the two longs n_bits, k
+     * and one byte array, its bits. */
     private static final int FIELDS = 4;
 
-    private static final VarHandle U16 = MethodHandles.byteArrayViewVarHandle(
-        short[].class, ByteOrder.LITTLE_ENDIAN);
-    private static final VarHandle U32 = MethodHandles.byteArrayViewVarHandle(
-        int[].class, ByteOrder.LITTLE_ENDIAN);
-
-    /* {long[] per-shard fields, byte[][] per-shard fingerprints} */
-    private final Broadcast<Object[]> shards;
+    /* {long[] fields, byte[][] per-shard fingerprints or the Bloom bits} */
+    private final Broadcast<?> shards;
+    private final boolean bloom;
     private final boolean xor;
     private final int width;          /* fingerprint bytes: 1, 2 or 4 */
 
     private transient long[] params;
-    private transient byte[][] fingerprints;
+    private transient ByteBuffer[] cells;
 
     /** The driver-side factory: py4j instantiates it by reflection
      *  through the session's jar class loader, then calls
      *  {@link #payload} and {@link #udf}. */
     public FilterProbe() {
-        this(null, false, 0);
+        this(null, "bloom");
     }
 
-    private FilterProbe(Broadcast<Object[]> shards, boolean xor, int width) {
+    private FilterProbe(Broadcast<?> shards, String kind) {
         this.shards = shards;
-        this.xor = xor;
-        this.width = width;
+        this.bloom = kind.equals("bloom");
+        this.xor = kind.startsWith("xor");
+        this.width = bloom ? 1
+            : Integer.parseInt(kind.substring(xor ? 3 : 4)) / 8;
     }
 
-    /** The value to broadcast: {@code header} is FIELDS little-endian
-     *  longs per shard, {@code fingerprints} one array per shard. */
-    public Object[] payload(byte[] header, List<byte[]> fingerprints) {
+    /** The value to broadcast: {@code header} is the fields as
+     *  little-endian longs, {@code arrays} one byte[] per shard. */
+    public Object[] payload(byte[] header, List<?> arrays) {
         long[] fields = new long[header.length / 8];
         ByteBuffer.wrap(header).order(ByteOrder.LITTLE_ENDIAN)
             .asLongBuffer().get(fields);
-        return new Object[] {fields, fingerprints.toArray(new byte[0][])};
+        byte[][] bytes = new byte[arrays.size()][];
+        for (int i = 0; i < bytes.length; i++) {
+            bytes[i] = (byte[]) arrays.get(i);
+        }
+        return new Object[] {fields, bytes};
     }
 
-    /** A {@code long -> boolean} UDF probing the broadcast shards. */
-    public UserDefinedFunction udf(Broadcast<Object[]> shards, boolean xor,
-                                   int width) {
-        return functions.udf(new FilterProbe(shards, xor, width),
+    /** A {@code long -> boolean} UDF probing the broadcast payload of a
+     *  filter of {@code kind}: an xor or fuse kind, or "bloom". */
+    public UserDefinedFunction udf(Broadcast<?> shards, String kind) {
+        return functions.udf(new FilterProbe(shards, kind),
                              DataTypes.BooleanType);
     }
 
     /* The key is a Number, not a Long: Spark hands a SQL caller's INT
-     * or SMALLINT argument over unconverted, and its long value is the
-     * key the Arrow tier probes. */
+     * or SMALLINT argument over unconverted. */
     @Override
-    public Boolean call(Number key) {
+    public Object call(Object key) {
         if (key == null) {
             return Boolean.FALSE;
         }
         if (params == null) {
-            Object[] value = shards.value();
+            Object[] value = (Object[]) shards.value();
+            byte[][] bytes = (byte[][]) value[1];
+            ByteBuffer[] views = new ByteBuffer[bytes.length];
+            for (int i = 0; i < views.length; i++) {
+                views[i] = ByteBuffer.wrap(bytes[i])
+                    .order(ByteOrder.LITTLE_ENDIAN);
+            }
+            cells = views;
             params = (long[]) value[0];
-            fingerprints = (byte[][]) value[1];
         }
-        long k = key.longValue();
+        long k = ((Number) key).longValue();
+        return Boolean.valueOf(bloom ? bloomContains(k) : contain(k));
+    }
+
+    private boolean contain(long k) {
         /* pmod(xxhash64(key), S): the shard count is a power of two */
-        int s = (int) (XXH64.hashLong(k, 42L) & (fingerprints.length - 1));
+        int s = (int) (XXH64.hashLong(k, 42L) & (cells.length - 1));
         int o = s * FIELDS;
         if (params[o + 1] == 0) {
-            return Boolean.FALSE;
+            return false;
         }
-        byte[] fp = fingerprints[s];
+        ByteBuffer fp = cells[s];
         long h = murmur64(k + params[o]);
         int x = (int) (h ^ (h >>> 32));
         if (xor) {
@@ -135,15 +146,32 @@ public final class FilterProbe implements UDF1<Number, Boolean> {
         return (x & fpMask) == 0;
     }
 
-    private int cell(byte[] fp, int i) {
+    private int cell(ByteBuffer fp, int i) {
         switch (width) {
             case 1:
-                return fp[i] & 0xFF;
+                return fp.get(i) & 0xFF;
             case 2:
-                return (short) U16.get(fp, 2 * i) & 0xFFFF;
+                return fp.getShort(2 * i) & 0xFFFF;
             default:
-                return (int) U32.get(fp, 4 * i);
+                return fp.getInt(4 * i);
         }
+    }
+
+    /* sketches.Bloom.contains: bit (h1 + i*h2) mod n_bits for i < k,
+     * unsigned, h1 = murmur64(key), h2 = murmur64(key + 1) | 1, bits
+     * read LSB-first within each byte */
+    private boolean bloomContains(long key) {
+        long nBits = params[0];
+        long h1 = murmur64(key);
+        long h2 = murmur64(key + 1) | 1;
+        ByteBuffer bits = cells[0];
+        for (long i = 0; i < params[1]; i++) {
+            long p = Long.remainderUnsigned(h1 + i * h2, nBits);
+            if ((bits.get((int) (p >>> 3)) >> (int) (p & 7) & 1) == 0) {
+                return false;
+            }
+        }
+        return true;
     }
 
     static long murmur64(long h) {

@@ -10,12 +10,11 @@ stable hash, build each shard entirely inside one task with the exact
 reference algorithm, and define the distributed filter as the sharded
 collection.  The shard build runs inside Spark's JVM
 (``groupBy(shard).agg(collect_list(key))``, then the compiled
-native/FilterBuild.java UDF); without javac or a py4j JVM it is one
-``groupBy(shard).applyInPandas`` task per shard over operators/local.py.
-Both give the same bytes (``build_filter_rows``).  Each shard is a
-bona-fide reference filter over that shard's keys, so the per-shard
-fpp / bits-per-entry guarantees carry over unchanged and the overall
-fpp bound is identical.
+native/FilterBuild.java UDF, byte-identical to operators/local.py;
+``build_filter_rows``).  Each shard is a bona-fide reference filter
+over that shard's keys, so the per-shard fpp / bits-per-entry
+guarantees carry over unchanged and the overall fpp bound is
+identical.
 
 Scale design notes (targeting a 10^12-key Iceberg table, tested locally):
 
@@ -26,8 +25,7 @@ Scale design notes (targeting a 10^12-key Iceberg table, tested locally):
   pass — that would add a second full shuffle on the raw keys.
 - Shard count is chosen so a shard's keys + construction scratch fit
   comfortably in one executor task; default target is 2^22 keys/shard
-  (~380 MB of heap on the JVM tier, ~130 MB in the Python worker on the
-  Python tier; SCALE.md).
+  (~380 MB of executor heap; SCALE.md).
 - Shard ids are ``pmod(xxhash64(key), 2^bits)`` with Spark's own
   xxhash64 (``keys_with_shard``, ``shard_of_hash``) — uniform for any
   input distribution, and skew-free because the route hash is
@@ -39,78 +37,46 @@ Scale design notes (targeting a 10^12-key Iceberg table, tested locally):
   binary, lineage...)`` in a parquet "filter table", and broadcast for
   probe-side use.
 - Probing is a JVM UDF over the broadcast shard list
-  (native/FilterProbe.java, compiled with javac at first use): route each
-  probe key by the same hash prefix, gather 3 or 4 fingerprint cells,
-  xor, compare — the key never crosses into Python.  Used via
-  ``df.filter(sf.contains_udf(spark)(col))`` this is the distributed
-  analog of a broadcast left-semi join with the exact hash table
-  replaced by a 9-bit/key approximate one.  ``broadcast_probe`` is the
-  one broadcast probe path; without javac or a py4j JVM it serves the
-  same probe as a scalar Arrow UDF, and the Bloom probe
-  (sketch_agg.bloom_contains_udf) runs through its Arrow tier too.
+  (native/FilterProbe.java; both Java sources are compiled into one jar
+  at first use by the Janino compiler Spark ships, functions/native.py):
+  route each probe key by the same hash prefix, gather 3 or 4
+  fingerprint cells, xor, compare — the key never crosses into Python.
+  Used via ``df.filter(sf.contains_udf(spark)(col))`` this is the
+  distributed analog of a broadcast left-semi join with the exact hash
+  table replaced by a 9-bit/key approximate one.  ``broadcast_probe`` is
+  the one broadcast probe path; the Bloom probe
+  (sketch_agg.bloom_contains_udf) runs through it too.
 
 Checkpoint/resume (BASELINE.json:north_rule): ``build_sharded`` with a
-``checkpoint_dir`` writes each shard's row as soon as its build task
-finishes (partitioned parquet append); a rerun reads the directory,
-skips finished shards, and builds only the missing ones.  Idempotent by
-shard id; per-shard lineage (input_rows, distinct keys, seed, attempts,
-build_ms) is stored alongside the payload.
+``checkpoint_dir`` appends the built rows to that parquet directory in
+one write job.  Spark's default committer (FileOutputCommitter, algorithm
+version 1) publishes a job's files only when the whole job commits, so
+a build that fails part-way leaves no readable row behind and its rerun
+builds every shard again.  What a rerun resumes is a table an earlier
+job committed: it reads the directory, checks it against the current
+input, reuses the shards it holds and builds only the shards it lacks.
+Idempotent by shard id; per-shard lineage (input_rows, distinct keys,
+seed, build_ms) is stored alongside the payload.
 """
 
 from __future__ import annotations
 
 import math
 import os
-import time
-import uuid
 from dataclasses import dataclass
 from typing import Iterable
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
-    BinaryType, BooleanType, DoubleType, IntegerType, LongType, StringType,
-    StructField, StructType,
+    BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
+    StructType,
 )
 
 from fastfilter_spark.functions import kernels as K
 from fastfilter_spark.functions import native
-from fastfilter_spark.operators.local import (
-    build_filter, empty_filter, filter_from_bytes,
-)
-
-# Worker-process-global cache of decoded probe payloads (see
-# broadcast_probe); python workers are reused across tasks, so
-# this amortizes deserialization to once per worker per filter.  Bounded
-# LRU: long-lived workers probing many distinct filters must not
-# accumulate every shard list forever (each can be GBs at high
-# shard_bits).  4 concurrent filters per worker covers realistic probe
-# fan-in; an evicted filter just re-deserializes on next touch.
-_WORKER_CACHE_MAX = 4
-_worker_filter_cache: dict = {}
-
-
-def _worker_cache_put(token: str, entry) -> None:
-    if token in _worker_filter_cache:
-        return
-    while len(_worker_filter_cache) >= _WORKER_CACHE_MAX:
-        # dicts iterate in insertion order -> least-recently-used first
-        # (_worker_cache_get re-inserts on hit)
-        _worker_filter_cache.pop(next(iter(_worker_filter_cache)))
-    _worker_filter_cache[token] = entry
-
-
-def _worker_cache_get(token: str):
-    """LRU read: a hit re-inserts the key so eviction order tracks
-    recency of USE, not insertion — with >max filters in rotation the
-    hottest one must not be evicted while stale ones persist (each
-    re-deserialization can be GBs at high shard_bits)."""
-    entry = _worker_filter_cache.pop(token, None)
-    if entry is not None:
-        _worker_filter_cache[token] = entry
-    return entry
+from fastfilter_spark.operators.local import empty_filter, filter_from_bytes
 
 # One row per shard; `payload` is the reference wire format (to_bytes).
 FILTER_TABLE_SCHEMA = StructType([
@@ -215,32 +181,22 @@ def _contain_routed(filters: list, keys: np.ndarray,
     return out
 
 
-def broadcast_probe(spark: SparkSession, payload, decode):
+def broadcast_probe(spark: SparkSession, payload) -> "_JvmProbe":
     """The library's one broadcast probe: a ``long -> boolean`` Column
-    function whose ``tier`` says where it runs.  A null key is never a
-    member: it probes False on both tiers.
+    function over ``payload``, a ShardedFilter of an xor/fuse kind or a
+    ``sketches.Bloom``, evaluated inside Spark's JVM by
+    native/FilterProbe.java.  A null key is never a member: it probes
+    False.
 
-    ``"jvm"``: a ShardedFilter of an xor/fuse kind probes inside
-    Spark's JVM when the session has a py4j JVM and ``javac`` built the
-    probe jar (``native.probe_jar``).  The jar is added to the session
-    once (``ADD JAR``); the driver parses each shard's header
+    The jar (``native.probe_jar``) is added to the session once (``ADD
+    JAR``).  For a ShardedFilter the driver parses each shard's header
     (``filter_from_bytes(view=True)``) and one JVM Broadcast carries
     seed, arity, layout ints and fingerprint bytes per shard; the UDF
-    (native/FilterProbe.java) routes each key by Spark's own xxhash64,
-    as the build does, so the key never crosses into Python.
-
-    ``"arrow"`` (the Bloom filter; no ``javac``; Spark Connect):
-    ``payload`` is broadcast once (torrent distribution).  Each python
-    worker calls ``decode(payload)`` at most once per returned UDF and
-    keeps the result, a callable ``uint64 keys -> bool bits``, in the
-    bounded worker cache under a token minted here; without it every
-    task would re-deserialize the payload.  Nulls are masked on the
-    Arrow side — a pandas Series or numpy conversion of a column with
-    one null turns the whole batch into float64 and rounds every key
-    above 2^53."""
-    factory = (_jvm_factory(spark, "FilterProbe")
-               if isinstance(payload, ShardedFilter) else None)
-    if factory is not None:
+    routes each key by Spark's own xxhash64, as the build does, so the
+    key never crosses into Python.  For a Bloom filter the Broadcast
+    carries n_bits, k and the bit array."""
+    factory = _jvm_factory(spark, "FilterProbe")
+    if isinstance(payload, ShardedFilter):
         filters = payload._filters()
         xor = payload.kind.startswith("xor")
         # arity 0 marks an empty shard, which probes False
@@ -249,51 +205,33 @@ def broadcast_probe(spark: SparkSession, payload, decode):
              [f.seed, 0 if f.empty else f.arity, f.segment_length,
               f.segment_count_length]
              for f in filters], dtype="<u8")
-        prints = [f.fingerprints.astype(
+        arrays = [f.fingerprints.astype(
             f.fingerprints.dtype.newbyteorder("<"), copy=False).tobytes()
             for f in filters]
-        bc = spark.sparkContext._jsc.broadcast(
-            factory.payload(fields.tobytes(), prints))
-        return _JvmProbe(spark.sparkContext, factory.udf(
-            bc, xor, filters[0].fingerprints.itemsize))
-
-    token = uuid.uuid4().hex
-    bc = spark.sparkContext.broadcast(payload)
-
-    @F.arrow_udf(BooleanType())
-    def contains(keys: pa.Array) -> pa.Array:
-        contain = _worker_cache_get(token)
-        if contain is None:
-            contain = decode(bc.value)
-            _worker_cache_put(token, contain)
-        bits = contain(K.to_uint64(
-            keys.fill_null(0).to_numpy(zero_copy_only=False)))
-        if keys.null_count:
-            bits &= keys.is_valid().to_numpy(zero_copy_only=False)
-        return pa.array(bits)
-
-    contains.tier = "arrow"
-    return contains
+        kind = payload.kind
+    else:
+        fields = np.array([payload.n_bits, payload.k], dtype="<u8")
+        arrays = [payload.bits.tobytes()]
+        kind = "bloom"
+    bc = spark.sparkContext._jsc.broadcast(
+        factory.payload(fields.tobytes(), arrays))
+    return _JvmProbe(spark.sparkContext, factory.udf(bc, kind))
 
 
 def _jvm_factory(spark: SparkSession, name: str):
     """The session's driver-side factory of the jar class ``name``
-    (``FilterProbe`` or ``FilterBuild``), or None when the session has
-    no py4j JVM (Spark Connect) or there is no jar: the one place the
-    probe and the build choose between the JVM tier and their Python
-    fallback.  The class is looked up through the session's jar class
-    loader, which ``ADD JAR`` extends, whatever py4j thread asks."""
-    jsession = getattr(spark, "_jsparkSession", None)
-    jar = native.probe_jar() if jsession is not None else None
-    if jar is None:
-        return None
+    (``FilterProbe`` or ``FilterBuild``), looked up through the
+    session's jar class loader, which ``ADD JAR`` extends, whatever py4j
+    thread asks.  Raises RuntimeError when the session has no py4j JVM
+    or the jar does not compile (``native.probe_jar``)."""
+    jar = native.probe_jar(spark)
     sc = spark.sparkContext
     if os.path.basename(jar) not in sc._jsc.sc().listJars().mkString(" "):
         spark.sql(f"ADD JAR '{jar}'")
     jvm, gateway = sc._jvm, sc._gateway
     cls = jvm.java.lang.Class.forName(
         f"fastfilter_spark.{name}", True,
-        jsession.sharedState().jarClassLoader())
+        spark._jsparkSession.sharedState().jarClassLoader())
     return cls.getConstructor(gateway.new_array(jvm.java.lang.Class, 0)) \
         .newInstance(gateway.new_array(jvm.java.lang.Object, 0))
 
@@ -301,8 +239,6 @@ def _jvm_factory(spark: SparkSession, name: str):
 class _JvmProbe:
     """A compiled JVM probe UDF as a Column function: ``probe(col)``
     casts the key column to long."""
-
-    tier = "jvm"
 
     def __init__(self, sc, judf):
         self.sc = sc
@@ -334,70 +270,24 @@ def choose_shard_bits(approx_distinct: int, target_keys_per_shard: int = 1 << 22
         math.log2(approx_distinct / target_keys_per_shard))))
 
 
-def _build_shard_kernel(kind: str, num_shards: int, arity: int = 3):
-    """The Python tier's grouped-map kernel (``build_filter_rows``):
-    one shard's keys -> np.unique dedup -> exact reference populate
-    (operators/local.py) -> one filter-table row.
-
-    np.unique both dedups (the Spark-scale replacement for the
-    reference's lazy sort-and-dedup, xorfilter.h:24-34; the in-kernel
-    duplicate-tolerance path is still implemented and tested in local.py)
-    and makes the key order — hence the filter bytes — independent of
-    partition/arrival order.
-
-    (A packed-binary-chunk shuffle variant was measured and REJECTED: it
-    moves the same bytes through the Python boundary twice more, and the
-    Arrow columnar shuffle of plain long rows is already cheaper.)
-    """
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.perf_counter()
-        shard = int(pdf["shard"].iloc[0])
-        raw = K.to_uint64(pdf["key"].to_numpy())
-        keys = np.unique(raw)
-        filt = build_filter(keys, kind, arity=arity)
-        payload = filt.to_bytes()
-        ms = (time.perf_counter() - t0) * 1e3
-        return pd.DataFrame({
-            "shard": [shard], "kind": [kind], "num_shards": [num_shards],
-            "input_rows": [int(raw.size)], "distinct_keys": [int(keys.size)],
-            "seed": [np.uint64(filt.seed).astype(np.int64).item()],
-            "size_bytes": [int(filt.size_in_bytes())],
-            "build_ms": [ms], "payload": [payload],
-        })
-
-    return build
-
-
 def keys_with_shard(df: DataFrame, key_col: str, shard_bits: int) -> DataFrame:
     """Project to (key long, shard int) — entirely JVM-side.
 
     ``pmod(xxhash64(key), S)`` stays inside whole-stage codegen, so the
-    scan -> project -> shuffle stage never crosses into Python; on the
-    JVM build tier no stage does, and on the Python tier only the
-    per-shard kernel runs there.
+    scan -> project -> shuffle stage never crosses into Python, and the
+    shard build after it runs in the JVM too.
 
     Null keys, and keys whose cast yields null (a malformed string with
-    ANSI mode off), are dropped here, JVM-side: on the Python tier one
-    null in a shard's Arrow int64 column turns it into float64 in the
-    kernel, which then builds that shard over keys rounded to 53 bits
-    (false negatives for every key above 2^53) plus a bogus key.  A null is
-    never a member, so dropping it is exact.
+    ANSI mode off), are dropped here, JVM-side: in ``probe_via_join``'s
+    Arrow hand-off one null in a shard's int64 column would turn it
+    into float64 and round every key above 2^53.  A null is never a
+    member, so dropping it is exact.
     """
     key = F.col(key_col).cast(LongType())
     return df.select(
         key.alias("key"),
         F.pmod(F.xxhash64(key), F.lit(1 << shard_bits))
         .cast(IntegerType()).alias("shard")).where(F.col("key").isNotNull())
-
-
-class SqlProbeName(str):
-    """A registered probe's SQL function name, with the probe's tier."""
-
-    def __new__(cls, name: str, tier: str):
-        self = super().__new__(cls, name)
-        self.tier = tier
-        return self
 
 
 @dataclass
@@ -458,37 +348,27 @@ class ShardedFilter:
         filter (``broadcast_probe``; a null key probes False).
 
         A probe routes each key to its shard, then does 3 or 4 gathers
-        + xor + compare (xorfilter.h:96-108, binaryfusefilter.h:178-187).
-        ``tier`` is ``"jvm"`` when that runs inside Spark's JVM (the
-        key column is cast to long and never reaches Python), or
-        ``"arrow"`` for the Arrow UDF fallback, where each worker
-        deserializes the shards once per UDF.
+        + xor + compare (xorfilter.h:96-108, binaryfusefilter.h:178-187)
+        inside Spark's JVM: the key column is cast to long and never
+        reaches Python.
         """
-        def decode(sf):
-            filters = sf._filters()
-            return lambda keys: _contain_routed(filters, keys, sf.shard_bits)
-
-        return broadcast_probe(spark, self, decode)
+        return broadcast_probe(spark, self)
 
     def register_sql_udf(self, spark: SparkSession,
                          name: str = "ff_contains"):
         """Expose the probe to pure-SQL users:
         ``spark.sql("SELECT * FROM t WHERE ff_contains(key)")``.
 
-        Registers the exact UDF :meth:`contains_udf` returns.  On the
-        JVM tier the SQL argument is a BIGINT key (cast other key
-        types in the query).  Re-registering under the same name
-        replaces the previous filter — the SQL twin of rebinding a
-        variable.  Returns the registered name, a ``str`` whose
-        ``tier`` attribute is the probe's, so callers can thread it
-        into query strings.
+        Registers the JVM UDF :meth:`contains_udf` wraps; its SQL
+        argument is an integral key (cast other key types in the
+        query).  Re-registering under the same name replaces the
+        previous filter — the SQL twin of rebinding a variable.
+        Returns the registered name, so callers can thread it into
+        query strings.
         """
-        probe = self.contains_udf(spark)
-        if probe.tier == "jvm":
-            spark._jsparkSession.udf().register(name, probe.judf)
-        else:
-            spark.udf.register(name, probe)
-        return SqlProbeName(name, probe.tier)
+        spark._jsparkSession.udf().register(
+            name, self.contains_udf(spark).judf)
+        return name
 
     # -- sizing -----------------------------------------------------------
 
@@ -543,12 +423,12 @@ def build_sharded_table(
              -> collect_list -> FilterBuild UDF      [reference populate]
              -> 2^bits tiny rows
 
-    (Python tier: the shuffle feeds ``applyInPandas`` instead, one
-    grouped-map call per shard; see ``build_filter_rows``.)
-
-    With ``checkpoint_dir`` the filter table is appended per-shard to
-    parquet and a rerun builds only missing shards (resume-by-shard-id,
+    With ``checkpoint_dir`` the built rows are appended to that parquet
+    directory, and a rerun over a table an earlier job committed builds
+    only the shards it lacks (resume-by-shard-id,
     BASELINE.json:north_rule) after validating the input is unchanged.
+    Rows become readable only when the write job commits, so a failed
+    build leaves nothing to resume (module docstring).
     """
     spark = df.sparkSession
     # argument errors fail HERE on the driver, not minutes later inside
@@ -878,15 +758,6 @@ def probe_via_join(probes: DataFrame, key_col: str,
         probe, schema="key long, member boolean")
 
 
-def build_tier(spark: SparkSession) -> str:
-    """Where ``build_filter_rows`` builds the shards in ``spark``:
-    ``"jvm"`` (the compiled FilterBuild UDF) or ``"python"`` (the
-    grouped-map pandas kernel, when there is no ``javac`` or no py4j
-    JVM)."""
-    return "jvm" if _jvm_factory(spark, "FilterBuild") is not None \
-        else "python"
-
-
 def build_filter_rows(keyed: DataFrame, kind: str,
                       num_shards: int, arity: int = 3) -> DataFrame:
     """Low-level: (key, shard) rows -> filter-table rows for the shards
@@ -895,18 +766,13 @@ def build_filter_rows(keyed: DataFrame, kind: str,
     builds 4-wise fuse shards; probes need no flag (deserialization
     infers arity from each payload's layout).
 
-    JVM tier (``build_tier``): ``groupBy(shard).agg(collect_list(key))``,
-    then native/FilterBuild.java as a UDF returning the
+    ``groupBy(shard).agg(collect_list(key))``, then
+    native/FilterBuild.java as a UDF returning the
     ``FILTER_TABLE_SCHEMA`` struct, so the keys never leave the JVM.
-    Python tier: ``groupBy(shard).applyInPandas`` over the same kernel
-    in operators/local.py.  Both give the same payload bytes."""
+    Its payload bytes are operators/local.py's ``build_filter(
+    np.unique(keys), kind, arity).to_bytes()``."""
     spark = keyed.sparkSession
-    factory = _jvm_factory(spark, "FilterBuild")
-    if factory is None:
-        return keyed.groupBy("shard").applyInPandas(
-            _build_shard_kernel(kind, num_shards, arity),
-            schema=FILTER_TABLE_SCHEMA)
-    judf = factory.udf(kind, num_shards, arity, FILTER_TABLE_SCHEMA.json())
+    judf = _jvm_factory(spark, "FilterBuild").udf(kind, num_shards, arity, FILTER_TABLE_SCHEMA.json())
     row = _jvm_apply(spark.sparkContext, judf, F.col("shard"), F.col("keys"))
     return keyed.groupBy("shard") \
         .agg(F.collect_list("key").alias("keys")) \
@@ -931,8 +797,7 @@ def semi_join_prune(fact: DataFrame, fact_key: str, sf: ShardedFilter,
     dim too large to broadcast belongs to ``probe_via_join``, the
     driver-free path built for that regime.
     """
-    # where(udf): the JVM filters the (wide) fact rows; on the Arrow
-    # tier only the key column crosses to Python
+    # where(udf): the JVM filters the (wide) fact rows
     pruned = fact.where(sf.contains_udf(fact.sparkSession)(F.col(fact_key)))
     # bind the dim side explicitly: an unbound F.col(dim_key) is ambiguous
     # whenever fact has a same-named column (incl. fact_key == dim_key)

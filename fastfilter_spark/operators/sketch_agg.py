@@ -305,24 +305,23 @@ def bloom_contains_udf(bloom: Bloom, spark):
     longs.  Probe the same column TYPE as the build: Spark's xxhash64
     of a long and of its string form differ.
 
-    The UDF is the Arrow tier of the library's one broadcast probe
-    (``dist.broadcast_probe``): wire bytes broadcast once, decoded at
-    most once per python worker, no driver-side collect of probe keys.
-    A null probe key probes False (never a member: ``_keyed_long``
-    drops source nulls before the build).  On the hashed path the key
-    stays null for a null source — Spark's xxhash64(NULL) is 42, not
-    NULL — and a failed cast is null too, so the Arrow-side null mask
-    answers both.
+    The UDF is the library's one broadcast probe
+    (``dist.broadcast_probe``): the bit array is broadcast once and
+    native/FilterProbe.java reads it inside the JVM, so no key crosses
+    into Python.  A null probe key probes False (never a member:
+    ``_keyed_long`` drops source nulls before the build).  On the hashed
+    path the key stays null for a null source — Spark's xxhash64(NULL)
+    is 42, not NULL — and a failed cast is null too, so the probe's null
+    check answers both.
     """
-    contains = broadcast_probe(spark, bloom.to_bytes(),
-                               lambda blob: Bloom.from_bytes(blob).contains)
+    contains = broadcast_probe(spark, bloom)
     hashed = bool(getattr(bloom, "spark_hashed_input", False))
 
     def probe(col):
         if isinstance(col, str):
             col = F.col(col)   # accept a column name like F.* builtins
         return contains(F.when(col.isNotNull(), F.xxhash64(col)) if hashed
-                        else col.cast("long"))
+                        else col)
 
     return probe
 

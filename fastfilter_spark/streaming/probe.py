@@ -23,12 +23,10 @@ Semantics (from the filters' one-sided error):
   across that bound, never over-drop.
 
 Each micro-batch is probed executor-side via the broadcast
-``contains_udf`` (inside the JVM; the Arrow UDF fallback ships only
-the key column to Python; a null key is never a member, so
-``drop_members`` keeps its row) and survivors append to a parquet
-sink dir —
-at deployment scale point the sink at the object-store/Iceberg
-landing table instead.
+``contains_udf`` (inside the JVM, so no column crosses into Python; a
+null key is never a member, so ``drop_members`` keeps its row) and
+survivors append to a parquet sink dir — at deployment scale point the
+sink at the object-store/Iceberg landing table instead.
 """
 
 from __future__ import annotations

@@ -4,7 +4,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-import fastfilter_spark.operators.dist as dist
 from fastfilter_spark.operators.dist import build_sharded, probe_via_join
 from fastfilter_spark.operators.skew import salted_agg
 
@@ -48,27 +47,6 @@ def test_salted_agg_salt_is_deterministic(spark, sf_dir):
         F.sum(F.col("l_quantity").cast("long")).alias("q"))
     assert sorted(map(tuple, out.collect())) == \
         sorted(map(tuple, exact.collect()))
-
-
-def test_worker_filter_cache_is_bounded():
-    """Long-lived workers probing many filters must not grow the
-    deserialized-shard cache without bound (ADVICE.md dist.py:71)."""
-    saved = dict(dist._worker_filter_cache)
-    try:
-        dist._worker_filter_cache.clear()
-        for i in range(dist._WORKER_CACHE_MAX * 3):
-            dist._worker_cache_put(f"tok{i}", [i])
-        assert len(dist._worker_filter_cache) == dist._WORKER_CACHE_MAX
-        # most-recent tokens survive
-        last = f"tok{dist._WORKER_CACHE_MAX * 3 - 1}"
-        assert dist._worker_filter_cache[last] == [
-            dist._WORKER_CACHE_MAX * 3 - 1]
-        # re-putting an existing token is a no-op, not a duplicate
-        dist._worker_cache_put(last, [-1])
-        assert dist._worker_filter_cache[last] != [-1]
-    finally:
-        dist._worker_filter_cache.clear()
-        dist._worker_filter_cache.update(saved)
 
 
 def test_probe_via_join_rejects_duplicate_shard_rows(spark, sf_dir):

@@ -10,10 +10,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from fastfilter_spark.functions import kernels as K
 from fastfilter_spark.operators.dist import (
-    ShardedFilter, build_sharded, choose_shard_bits, semi_join_prune,
-    shard_of_hash,
+    build_sharded, choose_shard_bits, semi_join_prune, shard_of_hash,
 )
 
 
@@ -119,9 +117,8 @@ def test_driver_and_udf_probe_agree(spark, lineitem):
 
 def test_one_broadcast_probe_site():
     """Every broadcast probe goes through dist.broadcast_probe: the
-    library broadcasts from one function — the Python broadcast of the
-    Arrow tier and the JVM broadcast of the compiled probe alike — so
-    swapping the probe implementation is one edit."""
+    library broadcasts from one line, the JVM broadcast of the compiled
+    probe, so swapping the probe implementation is one edit."""
     import inspect
     import pathlib
 
@@ -136,59 +133,23 @@ def test_one_broadcast_probe_site():
              for i, line in enumerate(p.read_text().splitlines(), 1)
              if "sparkContext.broadcast(" in line
              or "_jsc.broadcast(" in line]
-    assert len(sites) == 2 and set(sites) <= inside, sites
+    assert len(sites) == 1 and set(sites) <= inside, sites
 
 
 def test_probe_tier_is_jvm(spark):
-    """With javac present every xor/fuse probe runs inside the JVM: a
-    silent fallback to the Arrow UDF would cost a Python round trip
-    per batch without any other symptom."""
-    import shutil
-    if shutil.which("javac") is None:
-        pytest.skip("no javac: the probe runs as an Arrow UDF")
+    """Every xor/fuse probe runs inside the JVM: the plan has no Python
+    evaluation node, which would cost a Python round trip per batch
+    without any other symptom."""
     sf, _ = build_sharded(spark.range(1000), "id", kind="fuse8",
                           shard_bits=1)
-    assert sf.contains_udf(spark).tier == "jvm"
-    assert sf.register_sql_udf(spark, "ff_contains_tier").tier == "jvm"
+    probed = spark.range(1000).where(sf.contains_udf(spark)("id"))
+    assert probed.count() == 1000
+    plan = probed._jdf.queryExecution().executedPlan().toString()
+    for node in ("ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, (node, plan)
+    assert sf.register_sql_udf(spark, "ff_contains_tier") \
+        == "ff_contains_tier"
     # SQL hands an INT argument to the UDF unconverted
     assert spark.sql("SELECT count(*) AS c FROM range(1000) "
                      "WHERE ff_contains_tier(CAST(id AS INT))").first().c \
         == 1000
-
-
-def test_probe_falls_back_to_arrow(spark, monkeypatch):
-    """A failed probe-jar compile falls back to the Arrow UDF.  Both
-    tiers give contain_np's bits for every kind, arity 4 included, over
-    shards of ~500 keys: large enough that each offset window of the
-    cell map reaches past the segment's low bits."""
-    from fastfilter_spark.functions import native
-    from fastfilter_spark.operators.local import build_filter
-    keys = np.arange(-3000, 3000, dtype=np.int64) * 2654435761
-    members = K.to_uint64(keys[::3])
-    routed = shard_of_hash(members, 2)
-    filters = {(kind, arity): ShardedFilter(kind, 2, [
-        build_filter(members[routed == s], kind, arity=arity).to_bytes()
-        for s in range(4)])
-        for kind, arity in [("fuse8", 3), ("fuse16", 3), ("fuse32", 3),
-                            ("fuse8", 4), ("fuse16", 4), ("xor8", 3),
-                            ("xor16", 3)]}
-    probe_keys = spark.createDataFrame(
-        [(int(k),) for k in keys] + [(None,)], "k long")
-
-    def bits(probe):
-        rows = probe_keys.select("k", probe("k").alias("m")).collect()
-        return sorted(((r["k"], r["m"]) for r in rows),
-                      key=lambda km: (km[0] is not None, km[0] or 0))
-
-    jvm = {case: bits(sf.contains_udf(spark))
-           for case, sf in filters.items()}
-    monkeypatch.setattr(native, "probe_jar", lambda: None)
-    for case, sf in filters.items():
-        probe = sf.contains_udf(spark)
-        assert probe.tier == "arrow"
-        arrow = bits(probe)
-        assert arrow == jvm[case], case
-        assert arrow[0] == (None, False)
-        assert [m for _, m in arrow[1:]] == \
-            sf.contain_np(np.sort(keys)).tolist(), case
-    assert sf.register_sql_udf(spark, "ff_contains_tier").tier == "arrow"

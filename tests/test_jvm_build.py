@@ -1,9 +1,8 @@
 """The JVM shard build (native/FilterBuild.java) against the Python one.
 
-With a probe jar, ``dist.build_filter_rows`` builds every shard inside
-Spark's JVM (``collect_list`` + one compiled UDF); without one it keeps
-the grouped-map pandas kernel.  The Java builder is ffkernel.c's build
-route written again, so its bytes must be the native tier's exactly:
+``dist.build_filter_rows`` builds every shard inside Spark's JVM
+(``collect_list`` + one compiled UDF).  The Java builder is ffkernel.c's
+build route written again, so its bytes must be the native tier's exactly:
 the pinned digests of tests/test_wire_digests.py hold for it too, and
 its fuse/xor sizing must equal operators/local.py's, whose
 ``math.log`` Java's ``StrictMath.log`` stands in for.
@@ -11,28 +10,22 @@ its fuse/xor sizing must equal operators/local.py's, whose
 
 import array
 import hashlib
-import shutil
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from fastfilter_spark.functions import kernels as K
-from fastfilter_spark.functions import native
 from fastfilter_spark.operators import dist
 from fastfilter_spark.operators.local import (
     build_filter, fuse_layout, fuse_segment_length, xor_block_length,
 )
 from tests import test_wire_digests as W
 
-pytestmark = pytest.mark.skipif(shutil.which("javac") is None,
-                                reason="no javac: the build runs in Python")
 
 @pytest.fixture(scope="module")
 def jbuild(spark):
-    factory = dist._jvm_factory(spark, "FilterBuild")
-    assert factory is not None, "javac present but no FilterBuild class"
-    return factory
+    return dist._jvm_factory(spark, "FilterBuild")
 
 
 def _jvm_bytes(jbuild, keys: np.ndarray, kind: str, arity: int) -> bytes:
@@ -93,31 +86,6 @@ def test_jvm_sizing_matches_python_for_every_size(jbuild):
             n = hi
 
 
-def test_build_tier_is_jvm_and_falls_back_to_python(spark, monkeypatch):
-    """The build reports the tier it takes; without the jar it takes the
-    grouped map and gives the same payloads for every kind."""
-    keys = spark.range(-4000, 4000).select(
-        (F.col("id") * 2654435761).alias("k"))
-    dups = keys.union(keys.limit(500))
-    assert dist.build_tier(spark) == "jvm"
-    jvm = {case: dist.build_sharded(dups, "k", kind=case[0], shard_bits=2,
-                                    arity=case[1])
-           for case in W.KINDS}
-    monkeypatch.setattr(native, "probe_jar", lambda: None)
-    assert dist.build_tier(spark) == "python"
-    for case, (sf, table) in jvm.items():
-        py_sf, py_table = dist.build_sharded(dups, "k", kind=case[0],
-                                             shard_bits=2, arity=case[1])
-        assert py_sf.payloads == sf.payloads, case
-        rows = {r["shard"]: r.asDict() for r in table.collect()}
-        py_rows = {r["shard"]: r.asDict() for r in py_table.collect()}
-        for s, r in rows.items():
-            r.pop("build_ms"), py_rows[s].pop("build_ms")
-            assert r == py_rows[s], (case, s)
-    assert "FlatMapGroupsInPandas" in \
-        py_table._jdf.queryExecution().executedPlan().toString()
-
-
 def test_jvm_build_plan_has_one_exchange_and_no_python(spark):
     keys = spark.range(20_000).select(F.xxhash64("id").alias("key"))
     built = dist.build_filter_rows(dist.keys_with_shard(keys, "key", 2),
@@ -132,8 +100,7 @@ def test_jvm_build_plan_has_one_exchange_and_no_python(spark):
         assert node not in plan, (node, plan)
 
 
-@pytest.mark.parametrize("tier", ["jvm", "arrow"])
-def test_absent_shard_rows_probe_false(spark, monkeypatch, tier):
+def test_absent_shard_rows_probe_false(spark):
     """A filter table whose shards 1 and 3 have no row at all (no key
     routed there), not an empty filter: probe_via_join answers False for
     every key routed there, and the broadcast probe over complete_filter
@@ -151,10 +118,7 @@ def test_absent_shard_rows_probe_false(spark, monkeypatch, tier):
               dist.probe_via_join(probes, "k", table).collect()}
     assert not any(joined[int(k)] for k in ids[routed % 2 == 1])
     assert all(joined[int(k)] for k in members)
-    if tier == "arrow":
-        monkeypatch.setattr(native, "probe_jar", lambda: None)
     probe = dist.complete_filter(rows, "fuse8", 4).contains_udf(spark)
-    assert probe.tier == tier
     broadcast = {r["k"]: r["m"]
                  for r in probes.select("k", probe("k").alias("m"))
                  .collect()}
@@ -162,20 +126,28 @@ def test_absent_shard_rows_probe_false(spark, monkeypatch, tier):
 
 
 def test_jvm_build_rows_match_python_kernel(spark):
-    """The lineage columns match the pandas kernel's: input_rows counts
-    duplicates, distinct_keys does not, seed is the two's-complement
-    long of the winning seed, size_bytes is the in-core size."""
-    raw = np.concatenate([np.arange(3000), np.arange(100)]) * 7919
+    """Every kind's rows match operators/local.py's build over each
+    shard's np.unique'd keys: the payload bytes, and the lineage columns
+    (input_rows counts duplicates, distinct_keys does not, seed is the
+    two's-complement long of the winning seed, size_bytes is the
+    in-core size)."""
+    raw = np.concatenate([np.arange(-1500, 1500), np.arange(100)]) * 7919
     df = spark.createDataFrame([(int(k),) for k in raw], "key long")
-    rows = dist.build_filter_rows(dist.keys_with_shard(df, "key", 1),
-                                  "xor16", 2).collect()
     routed = dist.shard_of_hash(K.to_uint64(raw), 1)
-    for r in rows:
-        keys = np.unique(K.to_uint64(raw[routed == r["shard"]]))
-        f = build_filter(keys, "xor16")
-        assert (r["kind"], r["num_shards"]) == ("xor16", 2)
-        assert r["input_rows"] == int((routed == r["shard"]).sum())
-        assert r["distinct_keys"] == keys.size
-        assert r["seed"] == np.uint64(f.seed).astype(np.int64).item()
-        assert r["size_bytes"] == f.size_in_bytes()
-        assert bytes(r["payload"]) == f.to_bytes()
+    for kind, arity in W.KINDS:
+        rows = dist.build_filter_rows(dist.keys_with_shard(df, "key", 1),
+                                      kind, 2, arity=arity).collect()
+        assert sorted(r["shard"] for r in rows) == [0, 1]
+        for r in rows:
+            _check_row(r, raw[routed == r["shard"]], kind, arity)
+
+
+def _check_row(r, raw: np.ndarray, kind: str, arity: int) -> None:
+    keys = np.unique(K.to_uint64(raw))
+    f = build_filter(keys, kind, arity=arity)
+    assert (r["kind"], r["num_shards"]) == (kind, 2)
+    assert r["input_rows"] == raw.size
+    assert r["distinct_keys"] == keys.size
+    assert r["seed"] == np.uint64(f.seed).astype(np.int64).item()
+    assert r["size_bytes"] == f.size_in_bytes()
+    assert bytes(r["payload"]) == f.to_bytes(), (kind, arity)

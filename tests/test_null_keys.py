@@ -6,9 +6,6 @@ uncastable) keys JVM-side, and every probe surface answers False for a
 null key: a null is never a member.
 """
 
-import contextlib
-from unittest import mock
-
 import numpy as np
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -16,7 +13,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from fastfilter_spark.functions import kernels as K
-from fastfilter_spark.functions import native
 from fastfilter_spark.operators.dist import (
     FILTER_TABLE_SCHEMA, ShardedFilter, build_sharded,
     build_sharded_from_bucketed, build_sharded_table, probe_via_join,
@@ -113,17 +109,6 @@ def _sharded(members: list, shard_bits: int, kind: str,
     return ShardedFilter(kind=kind, shard_bits=shard_bits, payloads=payloads)
 
 
-@contextlib.contextmanager
-def _probe_tier(tier: str):
-    """Run the broadcast probes on ``tier``: "arrow" makes the probe
-    jar unavailable, as on a host without javac."""
-    if tier == "jvm":
-        yield "jvm" if native.probe_jar() else "arrow"
-    else:
-        with mock.patch.object(native, "probe_jar", lambda: None):
-            yield "arrow"
-
-
 class _Serving:
     """Maintainer stand-in for StreamingFilterProbe: a log that has
     advanced once, serving one fixed ShardedFilter."""
@@ -151,11 +136,11 @@ _KINDS = [("fuse8", 3), ("fuse16", 3), ("fuse32", 3), ("fuse8", 4),
           suppress_health_check=[HealthCheck.too_slow])
 def test_probe_surfaces_agree(spark, tmp_path_factory, members, others,
                               shard_bits):
-    """One ShardedFilter of each kind through all five probe surfaces,
-    on both probe tiers, gives the same membership bit for every row:
-    members (duplicated) probe True, null keys False, and every other
-    key its driver-side contain_np bit.  Shards without members hold
-    the empty filter (shard_bits 3 leaves some empty)."""
+    """One ShardedFilter of each kind through all five probe surfaces
+    gives the same membership bit for every row: members (duplicated)
+    probe True, null keys False, and every other key its driver-side
+    contain_np bit.  Shards without members hold the empty filter
+    (shard_bits 3 leaves some empty)."""
     probe_keys = members + members[:5] + others + [None]
     rows = [(i, k) for i, k in enumerate(probe_keys)]
     df = spark.createDataFrame(rows, _ID_KEY).repartition(2)
@@ -185,33 +170,27 @@ def test_probe_surfaces_agree(spark, tmp_path_factory, members, others,
         assert [joined.get(k, False) for k in probe_keys] == want, \
             (kind, arity)
 
-        for tier in ("jvm", "arrow"):
-            case = (kind, arity, tier)
-            with _probe_tier(tier) as expected:
-                probe = sf.contains_udf(spark)
-                assert probe.tier == expected, case
-                got = {r["id"]: r["m"] for r in df.select(
-                    "id", probe("k").alias("m")).collect()}
-                assert [got[i] for i in range(len(probe_keys))] == want, case
+        case = (kind, arity)
+        probe = sf.contains_udf(spark)
+        got = {r["id"]: r["m"] for r in df.select(
+            "id", probe("k").alias("m")).collect()}
+        assert [got[i] for i in range(len(probe_keys))] == want, case
 
-                # the streaming sink, served this one filter:
-                # drop_members keeps exactly the False rows (null keys
-                # included), keep_members the True
-                for mode, kept_want in (
-                        ("drop_members", [not w for w in want]),
-                        ("keep_members", want)):
-                    out = str(tmp_path_factory.mktemp(mode))
-                    StreamingFilterProbe(_Serving(sf), "k", out, mode=mode) \
-                        .process_batch(df, 0)
-                    assert bits_of(r["id"] for r in spark.read.parquet(
-                        out).collect()) == kept_want, case + (mode,)
+        # the streaming sink, served this one filter: drop_members
+        # keeps exactly the False rows (null keys included),
+        # keep_members the True
+        for mode, kept_want in (("drop_members", [not w for w in want]),
+                                ("keep_members", want)):
+            out = str(tmp_path_factory.mktemp(mode))
+            StreamingFilterProbe(_Serving(sf), "k", out, mode=mode) \
+                .process_batch(df, 0)
+            assert bits_of(r["id"] for r in spark.read.parquet(
+                out).collect()) == kept_want, case + (mode,)
 
-                name = sf.register_sql_udf(spark, "ff_contains_prop")
-                assert name.tier == expected, case
-                got = {r["id"]: r["m"] for r in spark.sql(
-                    f"SELECT id, {name}(k) AS m FROM probe_surfaces_t")
-                    .collect()}
-                assert [got[i] for i in range(len(probe_keys))] == want, case
+        name = sf.register_sql_udf(spark, "ff_contains_prop")
+        got = {r["id"]: r["m"] for r in spark.sql(
+            f"SELECT id, {name}(k) AS m FROM probe_surfaces_t").collect()}
+        assert [got[i] for i in range(len(probe_keys))] == want, case
 
-                assert bits_of(r["id"] for r in semi_join_prune(
-                    df, "k", sf, dim, "k").collect()) == want, case
+        assert bits_of(r["id"] for r in semi_join_prune(
+            df, "k", sf, dim, "k").collect()) == want, case

@@ -101,14 +101,12 @@ def test_partition_pruning_on_partitioned_table(spark, tmp_path):
 def test_build_has_single_exchange(spark, lineitem):
     """One shuffle total in the construction plan (the groupBy(shard));
     a second Exchange would mean an accidental extra repartition."""
-    keyed = keys_with_shard(lineitem, "l_orderkey", 2)
-    from fastfilter_spark.operators.dist import (
-        FILTER_TABLE_SCHEMA, _build_shard_kernel)
-    built = keyed.groupBy("shard").applyInPandas(
-        _build_shard_kernel("fuse8", 4), schema=FILTER_TABLE_SCHEMA)
+    from fastfilter_spark.operators.dist import build_filter_rows
+    built = build_filter_rows(keys_with_shard(lineitem, "l_orderkey", 2),
+                              "fuse8", 4)
     plan = _plan(built)
     assert plan.count("Exchange") <= 2  # initial + AQE re-plan reuse line
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInPandas" not in plan
 
 
 def test_bucketed_source_build_is_shuffle_free(spark, lineitem, tmp_path):

@@ -7,7 +7,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-import fastfilter_spark.operators.dist as dist
 from fastfilter_spark.operators.dist import (
     build_sharded, build_sharded_table, semi_join_prune,
 )
@@ -88,27 +87,6 @@ def test_bloom_probe_null_keys_are_false(spark, string_keys):
     expect = {(str(i) if string_keys else i) for i in range(1000)
               if i % 3 != 0}
     assert expect <= members               # zero false negatives
-
-
-# ---------------------------------------------------------------------------
-# ADVICE: worker cache is true LRU, not FIFO
-# ---------------------------------------------------------------------------
-
-def test_worker_cache_hit_refreshes_recency():
-    saved = dict(dist._worker_filter_cache)
-    try:
-        dist._worker_filter_cache.clear()
-        for i in range(dist._WORKER_CACHE_MAX):
-            dist._worker_cache_put(f"t{i}", [i])
-        # touch the oldest -> it must now survive the next eviction
-        assert dist._worker_cache_get("t0") == [0]
-        dist._worker_cache_put("fresh", [99])
-        assert "t0" in dist._worker_filter_cache
-        assert "t1" not in dist._worker_filter_cache  # true LRU victim
-        assert dist._worker_cache_get("missing") is None
-    finally:
-        dist._worker_filter_cache.clear()
-        dist._worker_filter_cache.update(saved)
 
 
 # ---------------------------------------------------------------------------
