@@ -15,29 +15,33 @@
  *
  * Compiled with FilterProbe.java into one jar by
  * fastfilter_spark/functions/native.py (Spark's bundled Janino) and
- * wired by operators/dist.py build_filter_rows:
- * groupBy(shard).agg(collect_list(key)), then this class as a UDF
- * returning the FILTER_TABLE_SCHEMA struct.  Janino ignores type
- * arguments and emits no bridge methods, hence the Object signatures.
+ * wired by operators/dist.py build_filter_rows as a typed aggregate:
+ * groupBy(shard).agg(this Aggregator over the key column).  Its buffer
+ * is a growable primitive long[] (Keys, a bean for the map-side
+ * partial's encoder); finish() builds the shard and returns the
+ * FILTER_TABLE_SCHEMA row without its shard column.  Janino ignores
+ * type arguments and emits no bridge methods, hence the Object
+ * signatures.
  */
 package fastfilter_spark;
 
+import java.io.Serializable;
 import java.nio.ByteBuffer;
 import java.nio.ByteOrder;
 import java.security.MessageDigest;
 import java.security.NoSuchAlgorithmException;
 import java.util.Arrays;
 
+import org.apache.spark.sql.Encoder;
+import org.apache.spark.sql.Encoders;
 import org.apache.spark.sql.RowFactory;
-import org.apache.spark.sql.api.java.UDF2;
+import org.apache.spark.sql.expressions.Aggregator;
 import org.apache.spark.sql.expressions.UserDefinedFunction;
 import org.apache.spark.sql.functions;
 import org.apache.spark.sql.types.DataType;
+import org.apache.spark.sql.types.StructType;
 
-import scala.collection.Iterator;
-import scala.collection.Seq;
-
-public final class FilterBuild implements UDF2<Object, Object, Object> {
+public final class FilterBuild extends Aggregator<Object, Object, Object> {
     private static final long serialVersionUID = 1L;
 
     /* kernels.py: splitmix64 and the seed-chain start counters */
@@ -52,25 +56,28 @@ public final class FilterBuild implements UDF2<Object, Object, Object> {
     private final String kind;
     private final int numShards;
     private final int arity;
+    private final String rowJson;
 
     /** The driver-side factory: py4j instantiates it by reflection
-     *  through the session's jar class loader, then calls {@link #udf}. */
+     *  through the session's jar class loader, then calls {@link #udaf}. */
     public FilterBuild() {
-        this(null, 0, 3);
+        this(null, 0, 3, null);
     }
 
-    private FilterBuild(String kind, int numShards, int arity) {
+    private FilterBuild(String kind, int numShards, int arity,
+                        String rowJson) {
         this.kind = kind;
         this.numShards = numShards;
         this.arity = arity;
+        this.rowJson = rowJson;
     }
 
-    /** A {@code (shard int, keys array<bigint>) -> struct} UDF whose
-     *  struct is {@code schemaJson} (dist.FILTER_TABLE_SCHEMA). */
-    public UserDefinedFunction udf(String kind, int numShards, int arity,
-                                   String schemaJson) {
-        return functions.udf(new FilterBuild(kind, numShards, arity),
-                             DataType.fromJson(schemaJson)).asNonNullable();
+    /** A {@code bigint -> struct} aggregate whose struct is
+     *  {@code rowJson} (dist.FILTER_TABLE_SCHEMA without shard). */
+    public UserDefinedFunction udaf(String kind, int numShards, int arity,
+                                   String rowJson) {
+        return functions.udaf(new FilterBuild(kind, numShards, arity, rowJson),
+                              erase(Encoders.LONG())).asNonNullable();
     }
 
     /** build_filter(keys, kind, arity).to_bytes() over little-endian
@@ -83,54 +90,143 @@ public final class FilterBuild implements UDF2<Object, Object, Object> {
         return populate(keys, kind, arity).toBytes();
     }
 
-    /* (shard int, keys array<bigint>) -> the filter-table Row */
+    /* ---- the aggregate ---------------------------------------------------- */
+
+    /** A shard's keys so far, duplicates included: the first {@code n}
+     *  slots of a growable array.  The bean property is the filled
+     *  prefix, the only part the partial's encoder writes. */
+    public static final class Keys implements Serializable {
+        private static final long serialVersionUID = 1L;
+        long[] keys = new long[16];
+        int n;
+
+        public long[] getKeys() {
+            return n == keys.length ? keys : Arrays.copyOf(keys, n);
+        }
+
+        public void setKeys(long[] keys) {
+            this.keys = keys;
+            this.n = keys.length;
+        }
+
+        void grow(int need) {
+            if (need > keys.length) {
+                keys = Arrays.copyOf(keys,
+                    Math.max(need, keys.length + (keys.length >> 1)));
+            }
+        }
+    }
+
     @Override
-    public Object call(Object shard, Object keyList) {
+    public Object zero() {
+        return new Keys();
+    }
+
+    @Override
+    public Object reduce(Object buffer, Object key) {
+        Keys b = (Keys) buffer;
+        b.grow(b.n + 1);
+        b.keys[b.n++] = (Long) key;
+        return b;
+    }
+
+    @Override
+    public Object merge(Object left, Object right) {
+        Keys a = (Keys) left;
+        Keys b = (Keys) right;
+        if (a.n < b.n) {            /* copy the smaller one */
+            Keys t = a;
+            a = b;
+            b = t;
+        }
+        a.grow(a.n + b.n);
+        System.arraycopy(b.keys, 0, a.keys, a.n, b.n);
+        a.n += b.n;
+        return a;
+    }
+
+    /* the shard's keys -> (kind, num_shards, input_rows, distinct_keys,
+     * seed, size_bytes, build_ms, payload) */
+    @Override
+    public Object finish(Object buffer) {
         long t0 = System.nanoTime();
-        Seq<?> column = (Seq<?>) keyList;
-        long rows = column.size();
-        long[] keys = unique(column);
+        Keys b = (Keys) buffer;
+        long rows = b.n;
+        long[] keys = uniqueInPlace(b.keys, b.n);
+        b.keys = new long[0];       /* let the peel reuse the memory */
+        b.n = 0;
         Filter f = populate(keys, kind, arity);
         byte[] payload = f.toBytes();
         double ms = (System.nanoTime() - t0) / 1e6;
-        return RowFactory.create(shard, kind, numShards, rows,
-                                 (long) keys.length, f.seed, f.sizeInBytes(),
-                                 ms, payload);
+        return RowFactory.create(kind, numShards, rows, (long) keys.length,
+                                 f.seed, f.sizeInBytes(), ms, payload);
     }
 
-    /** A shard's collected keys, np.unique'd. */
-    private static long[] unique(Seq<?> column) {
-        long[] k = new long[column.size()];
-        Iterator<?> it = column.iterator();
-        for (int i = 0; it.hasNext(); i++) {
-            k[i] = (Long) it.next() ^ Long.MIN_VALUE;
-        }
-        return uniqueFlipped(k);
+    @Override
+    public Encoder<Object> bufferEncoder() {
+        return erase(Encoders.bean(Keys.class));
+    }
+
+    @Override
+    public Encoder<Object> outputEncoder() {
+        return erase(Encoders.row((StructType) DataType.fromJson(rowJson)));
+    }
+
+    @SuppressWarnings("unchecked")
+    private static Encoder<Object> erase(Encoder<?> e) {
+        return (Encoder<Object>) e;
     }
 
     /** np.unique over uint64: sorted as unsigned, duplicates dropped. */
     static long[] unique(long[] raw) {
-        long[] k = new long[raw.length];
-        for (int i = 0; i < k.length; i++) {
-            k[i] = raw[i] ^ Long.MIN_VALUE;
-        }
-        return uniqueFlipped(k);
+        return uniqueInPlace(Arrays.copyOf(raw, raw.length), raw.length);
     }
 
-    /* sorts sign-flipped keys (signed order = unsigned order of the
-     * keys), dedups and flips back in place */
-    private static long[] uniqueFlipped(long[] k) {
-        Arrays.sort(k);
-        int n = 0;
-        for (int i = 0; i < k.length; i++) {
-            if (n == 0 || k[i] != k[n - 1]) {
-                k[n++] = k[i];
+    /* an LSD radix sort of a[0, n) by byte, which orders the raw keys
+     * as unsigned, then the duplicates dropped; sorts in a (or in its
+     * scratch twin) and returns an array of exactly the unique keys */
+    private static long[] uniqueInPlace(long[] a, int n) {
+        if (n == 0) {
+            return new long[0];
+        }
+        int[][] count = new int[8][256];
+        for (int i = 0; i < n; i++) {
+            long v = a[i];
+            for (int d = 0; d < 8; d++) {
+                count[d][(int) (v >>> (8 * d)) & 0xFF]++;
             }
         }
-        for (int i = 0; i < n; i++) {
-            k[i] ^= Long.MIN_VALUE;
+        long[] src = a;
+        long[] dst = null;
+        for (int d = 0; d < 8; d++) {
+            int shift = 8 * d;
+            int[] c = count[d];
+            if (c[(int) (src[0] >>> shift) & 0xFF] == n) {
+                continue;           /* every key shares this byte */
+            }
+            if (dst == null) {
+                dst = new long[n];
+            }
+            for (int j = 0, sum = 0; j < 256; j++) {
+                int t = c[j];
+                c[j] = sum;
+                sum += t;
+            }
+            for (int i = 0; i < n; i++) {
+                long v = src[i];
+                dst[c[(int) (v >>> shift) & 0xFF]++] = v;
+            }
+            long[] t = src;
+            src = dst;
+            dst = t;
         }
-        return n == k.length ? k : Arrays.copyOf(k, n);
+        int u = 1;
+        for (int i = 1; i < n; i++) {
+            if (src[i] != src[u - 1]) {
+                src[u++] = src[i];
+            }
+        }
+        return u == src.length ? src : Arrays.copyOf(src, u);
     }
 
     /* ---- sizing: local.xor_block_length and local.fuse_layout ---------- */
@@ -280,6 +376,7 @@ public final class FilterBuild implements UDF2<Object, Object, Object> {
             if (p.peel() == keys.length) {
                 break;
             }
+            p = null;               /* unreachable before the next attempt */
             rng += GAMMA;
             seed = splitmix(rng);
         }
@@ -305,12 +402,14 @@ public final class FilterBuild implements UDF2<Object, Object, Object> {
                 long[] uniq = unique(current);
                 if (uniq.length < current.length) {
                     current = uniq;
+                    p = null;
                     p = fuseAttempt(current, seed, layout, arity);
                 }
             }
             if (p.peeled == current.length) {
                 break;
             }
+            p = null;               /* unreachable before the next attempt */
             rng += GAMMA;
             seed = splitmix(rng);
         }

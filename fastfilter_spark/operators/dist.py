@@ -8,13 +8,14 @@ sequential global fixpoint, so the idiomatic distributed construction is
 *sharded*: route every key to one of S independent sub-filters by a
 stable hash, build each shard entirely inside one task with the exact
 reference algorithm, and define the distributed filter as the sharded
-collection.  The shard build runs inside Spark's JVM
-(``groupBy(shard).agg(collect_list(key))``, then the compiled
-native/FilterBuild.java UDF, byte-identical to operators/local.py;
-``build_filter_rows``).  Each shard is a bona-fide reference filter
-over that shard's keys, so the per-shard fpp / bits-per-entry
-guarantees carry over unchanged and the overall fpp bound is
-identical.
+collection.  The shard build runs inside Spark's JVM as one typed
+aggregate, ``groupBy(shard).agg(...)`` of the compiled
+native/FilterBuild.java, whose buffer is a primitive ``long[]`` of the
+shard's keys and whose finish is the build, byte-identical to
+operators/local.py (``build_filter_rows``).  Each shard is a bona-fide
+reference filter over that shard's keys, so the per-shard fpp /
+bits-per-entry guarantees carry over unchanged and the overall fpp
+bound is identical.
 
 Scale design notes (targeting a 10^12-key Iceberg table, tested locally):
 
@@ -23,9 +24,12 @@ Scale design notes (targeting a 10^12-key Iceberg table, tested locally):
   ``np.unique`` does; a key's shard is a pure function of the key, so
   shard-local dedup is globally exact).  No separate ``dropDuplicates``
   pass — that would add a second full shuffle on the raw keys.
-- Shard count is chosen so a shard's keys + construction scratch fit
-  comfortably in one executor task; default target is 2^22 keys/shard
-  (~380 MB of executor heap; SCALE.md).
+- Shard count is chosen from the input's row count, duplicates
+  included, as the reference sizes a filter by the raw key count it is
+  handed: a shard then buffers at most about ``target_keys_per_shard``
+  rows, and its keys + construction scratch fit in one executor task.
+  For a file scan the count reads parquet footers, not the keys.
+  Default target 2^22 rows/shard (SCALE.md gives the heap it needs).
 - Shard ids are ``pmod(xxhash64(key), 2^bits)`` with Spark's own
   xxhash64 (``keys_with_shard``, ``shard_of_hash``) — uniform for any
   input distribution, and skew-free because the route hash is
@@ -90,6 +94,8 @@ FILTER_TABLE_SCHEMA = StructType([
     StructField("build_ms", DoubleType(), False),
     StructField("payload", BinaryType(), False),
 ])
+# what FilterBuild's aggregate returns per shard; groupBy adds the shard
+_BUILD_ROW_SCHEMA = StructType(FILTER_TABLE_SCHEMA.fields[1:])
 
 
 def _input_fingerprint(df: DataFrame) -> str | None:
@@ -256,18 +262,21 @@ def _jvm_apply(sc, judf, *cols: Column) -> Column:
     return JColumn(judf.apply(_to_seq(sc, list(cols), _to_java_column)))
 
 
-def choose_shard_bits(approx_distinct: int, target_keys_per_shard: int = 1 << 22,
+def choose_shard_bits(rows: int, target_keys_per_shard: int = 1 << 22,
                       max_bits: int = 16) -> int:
-    """Smallest power-of-two shard count keeping shards under the target.
+    """Smallest power-of-two shard count keeping each shard's share of
+    ``rows`` input rows (duplicates included) under the target.
 
-    2^22 keys/shard ~= 32 MB of keys + ~100 MB peel scratch per task —
-    safely inside a default executor; raise ``max_bits`` for 10^12 keys
-    (2^16 shards x 2^22 keys covers ~3x10^11; 2^20 shards covers 4x10^12).
+    A shard's build buffers every row routed to it, so the target bounds
+    the build task's heap: ~56 B per key at the peel, and a 2^22-row
+    shard builds in a 576 MB heap (SCALE.md).  Raise ``max_bits`` for
+    10^12 rows (2^16 shards x 2^22 rows covers ~3x10^11; 2^20 shards
+    covers 4x10^12).
     """
-    if approx_distinct <= target_keys_per_shard:
+    if rows <= target_keys_per_shard:
         return 0
     return min(max_bits, max(0, math.ceil(
-        math.log2(approx_distinct / target_keys_per_shard))))
+        math.log2(rows / target_keys_per_shard))))
 
 
 def keys_with_shard(df: DataFrame, key_col: str, shard_bits: int) -> DataFrame:
@@ -379,15 +388,14 @@ class ShardedFilter:
         return self.size_in_bytes() * 8.0 / max(1, n_keys)
 
 
-def _resolve_shard_bits(df: DataFrame, key_col: str,
-                        shard_bits: int | None,
+def _resolve_shard_bits(df: DataFrame, shard_bits: int | None,
                         target_keys_per_shard: int) -> int:
-    """Explicit shard_bits, or sized from an approx-distinct scan."""
+    """Explicit shard_bits, or sized from the input's row count: the
+    exact upper bound on the keys one shard's build buffers, and for a
+    file scan a metadata read, not a second pass over the keys."""
     if shard_bits is not None:
         return shard_bits
-    approx = df.select(F.approx_count_distinct(key_col).alias("n")) \
-               .collect()[0]["n"]
-    return choose_shard_bits(approx, target_keys_per_shard)
+    return choose_shard_bits(df.count(), target_keys_per_shard)
 
 
 def build_sharded_table(
@@ -412,15 +420,19 @@ def build_sharded_table(
     write it to parquet/Iceberg, read it back, join-probe it; nothing
     larger than the query plan ever lands on the driver.
 
-    Shards that received zero keys produce no row (groupBy emits
-    non-empty groups only); ``probe_via_join`` treats an absent shard as
-    all-non-member, which is exact for an empty shard.  Plan shape (one
-    shuffle; the shard column is JVM-side inside whole-stage codegen):
+    Without ``shard_bits`` the shard count is
+    ``choose_shard_bits(df.count(), target_keys_per_shard)``: the
+    target counts input rows, duplicates included, so it bounds what one
+    shard's build buffers.  Shards that received zero keys produce no
+    row (groupBy emits non-empty groups only); ``probe_via_join`` treats
+    an absent shard as all-non-member, which is exact for an empty
+    shard.  Plan shape (one shuffle; the shard column is JVM-side inside
+    whole-stage codegen):
 
         scan -> select(key, shard = pmod(xxhash64(key), S))
-             -> partial collect_list(key) per shard  [map side]
-             -> groupBy(shard)                       [THE shuffle]
-             -> collect_list -> FilterBuild UDF      [reference populate]
+             -> partial FilterBuild agg: long[] per shard  [map side]
+             -> groupBy(shard)                             [THE shuffle]
+             -> merge long[]s -> unique -> populate        [FilterBuild finish]
              -> 2^bits tiny rows
 
     With ``checkpoint_dir`` the built rows are appended to that parquet
@@ -441,8 +453,7 @@ def build_sharded_table(
         # mirror FuseFilter.build — arity=5 must not pass the driver
         # check only to fail minutes later inside a shard task
         raise ValueError(f"arity must be 3 or 4, got {arity}")
-    shard_bits = _resolve_shard_bits(df, key_col, shard_bits,
-                                     target_keys_per_shard)
+    shard_bits = _resolve_shard_bits(df, shard_bits, target_keys_per_shard)
     num_shards = 1 << shard_bits
 
     keyed = keys_with_shard(df, key_col, shard_bits)
@@ -599,10 +610,11 @@ def build_sharded(
     MATERIALIZED on the driver for broadcast probing
     (``contains_udf``); when the filter is too large to broadcast and
     probing goes through ``probe_via_join``, use ``build_sharded_table``
-    instead (same build plan, no driver materialization).
+    instead (same build plan, no driver materialization).  Without
+    ``shard_bits``, ``target_keys_per_shard`` counts input rows,
+    duplicates included (``build_sharded_table``).
     """
-    shard_bits = _resolve_shard_bits(df, key_col, shard_bits,
-                                     target_keys_per_shard)
+    shard_bits = _resolve_shard_bits(df, shard_bits, target_keys_per_shard)
     table = build_sharded_table(
         df, key_col, kind=kind, shard_bits=shard_bits,
         checkpoint_dir=checkpoint_dir, validate_checkpoint=validate_checkpoint,
@@ -766,17 +778,18 @@ def build_filter_rows(keyed: DataFrame, kind: str,
     builds 4-wise fuse shards; probes need no flag (deserialization
     infers arity from each payload's layout).
 
-    ``groupBy(shard).agg(collect_list(key))``, then
-    native/FilterBuild.java as a UDF returning the
-    ``FILTER_TABLE_SCHEMA`` struct, so the keys never leave the JVM.
-    Its payload bytes are operators/local.py's ``build_filter(
-    np.unique(keys), kind, arity).to_bytes()``."""
+    ``groupBy(shard).agg(...)`` of native/FilterBuild.java, a typed JVM
+    aggregate: each shard's keys gather into a primitive ``long[]``
+    (map-side partials included), and its finish builds the shard, so
+    the keys never leave the JVM.  Its payload bytes are
+    operators/local.py's ``build_filter(np.unique(keys), kind,
+    arity).to_bytes()``."""
     spark = keyed.sparkSession
-    judf = _jvm_factory(spark, "FilterBuild").udf(kind, num_shards, arity, FILTER_TABLE_SCHEMA.json())
-    row = _jvm_apply(spark.sparkContext, judf, F.col("shard"), F.col("keys"))
-    return keyed.groupBy("shard") \
-        .agg(F.collect_list("key").alias("keys")) \
-        .select(row.alias("row")).select("row.*")
+    judf = _jvm_factory(spark, "FilterBuild").udaf(
+        kind, num_shards, arity, _BUILD_ROW_SCHEMA.json())
+    row = _jvm_apply(spark.sparkContext, judf, F.col("key"))
+    return keyed.groupBy("shard").agg(row.alias("row")) \
+        .select("shard", "row.*")
 
 
 def semi_join_prune(fact: DataFrame, fact_key: str, sf: ShardedFilter,

@@ -28,6 +28,58 @@ def test_choose_shard_bits():
     assert choose_shard_bits(1 << 60) == 16  # capped
 
 
+def _sql_plans(spark, fn) -> list[str]:
+    """Physical plan text of every SQL execution ``fn()`` runs, read
+    from the session's SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+    seen = max([e.executionId() for e in executions()], default=-1)
+    fn()
+    return [e.physicalPlanDescription() for e in executions()
+            if e.executionId() > seen]
+
+
+def test_shard_sizing_counts_input_rows(spark):
+    """Without shard_bits a build sizes its shards by input rows,
+    duplicates included: those are what a shard's build buffers.  A
+    4x-duplicated input gets choose_shard_bits(rows, target), more
+    shards than its distinct count asks for; a duplicate-free one keeps
+    the shard count the distinct count gives."""
+    ids = np.arange(3000, dtype=np.int64) * 2654435761
+    dup = spark.createDataFrame([(int(k),) for k in np.repeat(ids, 4)],
+                                "k long")
+    sf, table = build_sharded(dup, "k", target_keys_per_shard=1000)
+    assert sf.shard_bits == choose_shard_bits(ids.size * 4, 1000) == 4
+    assert choose_shard_bits(ids.size, 1000) == 2
+    rows = table.collect()
+    assert sum(r["input_rows"] for r in rows) == ids.size * 4
+    assert sum(r["distinct_keys"] for r in rows) == ids.size
+    assert sf.contain_np(ids).all()
+
+    uniq = spark.createDataFrame([(int(k),) for k in ids], "k long")
+    sf, _ = build_sharded(uniq, "k", target_keys_per_shard=1000)
+    approx = uniq.select(F.approx_count_distinct("k")).first()[0]
+    assert sf.shard_bits == choose_shard_bits(approx, 1000) == 2
+
+
+def test_shard_sizing_runs_no_hll_scan(spark, lineitem):
+    """Sizing reads the input's row count, not an approx-distinct (HLL)
+    scan of the keys: no plan the build runs holds one, and the build
+    itself is the jar's aggregate."""
+    plans = _sql_plans(spark, lambda: build_sharded(
+        lineitem, "l_orderkey", target_keys_per_shard=1000))
+    assert any("count(" in p for p in plans), plans
+    assert any("filterbuild(" in p for p in plans), plans
+    for p in plans:
+        assert "approx_count_distinct" not in p, p
+        assert "HyperLogLogPlusPlus" not in p, p
+
+
 @pytest.mark.parametrize("kind,shard_bits", [("fuse8", 2), ("xor8", 1),
                                              ("fuse16", 0)])
 def test_sharded_no_false_negatives(spark, lineitem, kind, shard_bits):

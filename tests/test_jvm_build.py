@@ -1,7 +1,8 @@
 """The JVM shard build (native/FilterBuild.java) against the Python one.
 
 ``dist.build_filter_rows`` builds every shard inside Spark's JVM
-(``collect_list`` + one compiled UDF).  The Java builder is ffkernel.c's
+(``groupBy(shard)`` + one compiled typed aggregate).  The Java builder
+is ffkernel.c's
 build route written again, so its bytes must be the native tier's exactly:
 the pinned digests of tests/test_wire_digests.py hold for it too, and
 its fuse/xor sizing must equal operators/local.py's, whose
@@ -18,7 +19,7 @@ from pyspark.sql import functions as F
 from fastfilter_spark.functions import kernels as K
 from fastfilter_spark.operators import dist
 from fastfilter_spark.operators.local import (
-    build_filter, fuse_layout, fuse_segment_length, xor_block_length,
+    filter_from_bytes, fuse_layout, fuse_segment_length, xor_block_length,
 )
 from tests import test_wire_digests as W
 
@@ -87,6 +88,8 @@ def test_jvm_sizing_matches_python_for_every_size(jbuild):
 
 
 def test_jvm_build_plan_has_one_exchange_and_no_python(spark):
+    """The build is one typed JVM aggregate, map-side partial then final
+    around the one Exchange: no collect_list buffer and no Python node."""
     keys = spark.range(20_000).select(F.xxhash64("id").alias("key"))
     built = dist.build_filter_rows(dist.keys_with_shard(keys, "key", 2),
                                    "fuse8", 4)
@@ -95,8 +98,12 @@ def test_jvm_build_plan_has_one_exchange_and_no_python(spark):
     plan = built._jdf.queryExecution().executedPlan().toString() \
         .split("== Initial Plan ==")[0]
     assert plan.count("Exchange") == 1, plan
+    assert plan.count("ObjectHashAggregate") == 2, plan
+    assert "partial_filterbuild(key" in plan, plan
+    assert plan.count("filterbuild(key") == 2, plan
+    assert "collect_list" not in plan, plan
     for node in ("FlatMapGroupsInPandas", "ArrowEvalPython",
-                 "BatchEvalPython"):
+                 "BatchEvalPython", "Python"):
         assert node not in plan, (node, plan)
 
 
@@ -125,13 +132,20 @@ def test_absent_shard_rows_probe_false(spark):
     assert broadcast == joined
 
 
-def test_jvm_build_rows_match_python_kernel(spark):
-    """Every kind's rows match operators/local.py's build over each
-    shard's np.unique'd keys: the payload bytes, and the lineage columns
-    (input_rows counts duplicates, distinct_keys does not, seed is the
-    two's-complement long of the winning seed, size_bytes is the
-    in-core size)."""
-    raw = np.concatenate([np.arange(-1500, 1500), np.arange(100)]) * 7919
+def test_jvm_build_rows_match_python_kernel(spark, jbuild):
+    """Every kind's rows hold FilterBuild.toBytes over each shard's
+    np.unique'd keys, and the lineage columns match (input_rows counts
+    duplicates, distinct_keys does not, seed is the two's-complement
+    long of the winning seed, size_bytes is the in-core size).  The
+    expected bytes come from the JVM kernel, which the pinned native
+    digests hold, so the test reads the same with or without a C
+    compiler.  The keys span both signs and the int64 extremes, so the
+    aggregate's radix unique meets every byte position."""
+    edges = np.array([0, -1, 1, 2**63 - 1, -2**63, -2**63 + 1],
+                     dtype=np.int64)
+    raw = np.concatenate([np.arange(-1500, 1500, dtype=np.int64) * 7919,
+                          np.arange(100, dtype=np.int64) * 7919,
+                          edges, edges])
     df = spark.createDataFrame([(int(k),) for k in raw], "key long")
     routed = dist.shard_of_hash(K.to_uint64(raw), 1)
     for kind, arity in W.KINDS:
@@ -139,15 +153,29 @@ def test_jvm_build_rows_match_python_kernel(spark):
                                       kind, 2, arity=arity).collect()
         assert sorted(r["shard"] for r in rows) == [0, 1]
         for r in rows:
-            _check_row(r, raw[routed == r["shard"]], kind, arity)
+            _check_row(jbuild, r, raw[routed == r["shard"]], kind, arity)
 
 
-def _check_row(r, raw: np.ndarray, kind: str, arity: int) -> None:
+def test_jvm_build_rows_hold_pinned_native_bytes(spark):
+    """One shard over the pinned ``contiguous`` input (unique and
+    sorted, so the aggregate's unique leaves it as is) builds the
+    native tier's pinned bytes for every kind."""
+    keys = W._inputs()["contiguous"].astype(np.int64)
+    df = spark.createDataFrame([(int(k),) for k in keys], "key long")
+    for kind, arity in W.KINDS:
+        (row,) = dist.build_filter_rows(dist.keys_with_shard(df, "key", 0),
+                                        kind, 1, arity=arity).collect()
+        assert hashlib.sha256(bytes(row["payload"])).hexdigest() == \
+            W.NATIVE[f"{kind}/a{arity}/contiguous"], (kind, arity)
+
+
+def _check_row(jbuild, r, raw: np.ndarray, kind: str, arity: int) -> None:
     keys = np.unique(K.to_uint64(raw))
-    f = build_filter(keys, kind, arity=arity)
+    payload = _jvm_bytes(jbuild, keys, kind, arity)
+    f = filter_from_bytes(payload, kind)
     assert (r["kind"], r["num_shards"]) == (kind, 2)
     assert r["input_rows"] == raw.size
     assert r["distinct_keys"] == keys.size
     assert r["seed"] == np.uint64(f.seed).astype(np.int64).item()
     assert r["size_bytes"] == f.size_in_bytes()
-    assert bytes(r["payload"]) == f.to_bytes(), (kind, arity)
+    assert bytes(r["payload"]) == payload, (kind, arity)

@@ -99,14 +99,25 @@ def test_partition_pruning_on_partitioned_table(spark, tmp_path):
 
 
 def test_build_has_single_exchange(spark, lineitem):
-    """One shuffle total in the construction plan (the groupBy(shard));
-    a second Exchange would mean an accidental extra repartition."""
+    """One shuffle total in the construction plan (the groupBy(shard)),
+    around the jar's typed aggregate (FilterBuild): a map-side partial
+    below the Exchange, the final build above it, no collect_list and
+    no Python node.  A second Exchange would mean an accidental extra
+    repartition."""
     from fastfilter_spark.operators.dist import build_filter_rows
     built = build_filter_rows(keys_with_shard(lineitem, "l_orderkey", 2),
                               "fuse8", 4)
     plan = _plan(built)
     assert plan.count("Exchange") <= 2  # initial + AQE re-plan reuse line
     assert "FlatMapGroupsInPandas" not in plan
+    built.collect()
+    final = built._jdf.queryExecution().executedPlan().toString() \
+        .split("== Initial Plan ==")[0]
+    assert final.count("Exchange") == 1, final
+    above, below = final.split("Exchange", 1)
+    assert "partial_filterbuild(" in below, final
+    assert "filterbuild(" in above.replace("partial_filterbuild(", ""), final
+    assert "collect_list" not in final and "Python" not in final, final
 
 
 def test_bucketed_source_build_is_shuffle_free(spark, lineitem, tmp_path):

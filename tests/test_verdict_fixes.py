@@ -109,9 +109,18 @@ def test_fuse_arity4_build(bits):
     assert f4.arity == 4
     assert f4.contain(keys).all()
 
-    probes = np.random.default_rng(3).integers(1 << 40, 1 << 62, 200_000,
-                                               dtype=np.uint64)
-    assert f4.contain(probes).mean() <= (2.0 ** -bits) * 1.35
+    # enough probes to expect 512 false positives at the 2^-bits rate:
+    # a correct filter then exceeds the 1.35x bound with probability
+    # below exp(-0.35^2 * 512 / 2.35) ~ 3e-12 (Chernoff), where 200,000
+    # probes at 16 bits expected 3 hits and allowed at most 4
+    n_probes = max(200_000, 512 << bits)
+    rng = np.random.default_rng(3)
+    hits = 0
+    for lo in range(0, n_probes, 1 << 22):
+        probes = rng.integers(1 << 40, 1 << 62, min(1 << 22, n_probes - lo),
+                              dtype=np.uint64)
+        hits += int(f4.contain(probes).sum())
+    assert hits / n_probes <= (2.0 ** -bits) * 1.35
 
     bpe = f4.fingerprints.nbytes * 8 / n
     predicted = fuse_size_factor(4, n) * bits
