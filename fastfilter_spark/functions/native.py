@@ -1,22 +1,21 @@
-"""Native (C) kernel loader for the filter hot loops, and the JVM jar.
+"""Native (C) build kernel loader for the driver-local build, and the
+JVM jar.
 
 Compiles fastfilter_spark/native/ffkernel.c on first use with the system
 C compiler into a content-addressed cached .so (atomic rename, safe for
-concurrent executor python workers on one host) and exposes thin
-ctypes wrappers.  The C kernel is optional: if no compiler / the
-compile fails, ``get_kernel()`` returns None and callers fall back to
-the numpy implementations in operators/local.py.  The two paths are
-differential-tested (tests/test_native.py) — probes agree bit-for-bit,
-builds succeed on identical seed chains (any valid peel order yields a
-correct filter; see operators/local.py module docstring).
+concurrent processes on one host) and exposes thin ctypes wrappers.
+The kernel builds only, and it is optional: without a compiler
+``get_kernel()`` returns None and operators/local.py builds in numpy.
+The two builds are differential-tested (tests/test_native.py) on
+identical seed chains; the probe is numpy on every host.
 
 The same cache holds the JVM jar: ``probe_jar(spark)`` compiles
-fastfilter_spark/native/FilterProbe.java (the broadcast probe) and
+fastfilter_spark/native/FilterProbe.java (every Spark-side probe) and
 FilterBuild.java (the shard build) into one jar with the Janino
 compiler Spark ships for its own code generation, run inside the
 session's JVM over py4j, so any host that runs Spark can build it.
 operators/dist.py loads it into the Spark session; every shard build
-and broadcast probe runs there.
+and Spark-side probe runs there.
 """
 
 from __future__ import annotations
@@ -346,40 +345,6 @@ class _Kernel:
                _ptr(ocell, _c_i32p), _ptr(mixed, _c_u64p),
                _ptr(g0, _c_i32p), _ptr(g1, _c_i32p), _ptr(g2, _c_i32p),
                _ptr(fp, fptr))
-
-    # ---- probes ----
-
-    def fuse_contain(self, keys: np.ndarray, seed: int, seg_len: int,
-                     seg_cnt_len: int, fp: np.ndarray,
-                     arity: int = 3) -> np.ndarray:
-        n = keys.size
-        keys = np.ascontiguousarray(keys, dtype=np.uint64)
-        fp = np.ascontiguousarray(fp)
-        out = np.empty(n, dtype=np.uint8)
-        fn = ({1: self.lib.ff_fuse_contain8_4,
-               2: self.lib.ff_fuse_contain16_4,
-               4: self.lib.ff_fuse_contain32_4}
-              if arity == 4 else
-              {1: self.lib.ff_fuse_contain8, 2: self.lib.ff_fuse_contain16,
-               4: self.lib.ff_fuse_contain32})[fp.itemsize]
-        fptr = {1: _c_u8p, 2: _c_u16p, 4: _c_u32p}[fp.itemsize]
-        fn(_ptr(keys, _c_u64p), ctypes.c_int64(n), ctypes.c_uint64(seed),
-           ctypes.c_uint32(seg_len), ctypes.c_uint32(seg_cnt_len),
-           _ptr(fp, fptr), _ptr(out, _c_u8p))
-        return out.astype(bool)
-
-    def xor_contain(self, keys: np.ndarray, seed: int, block_length: int,
-                    fp: np.ndarray) -> np.ndarray:
-        n = keys.size
-        keys = np.ascontiguousarray(keys, dtype=np.uint64)
-        fp = np.ascontiguousarray(fp)
-        out = np.empty(n, dtype=np.uint8)
-        fn = {1: self.lib.ff_xor_contain8,
-              2: self.lib.ff_xor_contain16}[fp.itemsize]
-        fptr = {1: _c_u8p, 2: _c_u16p}[fp.itemsize]
-        fn(_ptr(keys, _c_u64p), ctypes.c_int64(n), ctypes.c_uint64(seed),
-           ctypes.c_uint32(block_length), _ptr(fp, fptr), _ptr(out, _c_u8p))
-        return out.astype(bool)
 
 
 def get_kernel() -> _Kernel | None:

@@ -1,5 +1,5 @@
-/* fastfilter_spark native kernel: hot loops for filter construction and
- * membership probes.
+/* fastfilter_spark native kernel: hot loops for filter construction
+ * (only: the probes are FilterProbe.java and numpy's contain).
  *
  * From-scratch implementation of the standard xor/binary-fuse building
  * blocks (murmur3 finalizer mixing, Lemire range reduction, 3-regular
@@ -10,10 +10,9 @@
  * (a duplicate retry re-runs prepare), C owns the per-attempt loops.
  *
  * Compiled on demand by fastfilter_spark/functions/native.py with
- * `cc -O3 -march=native -shared -fPIC`; everything is optional — the
- * numpy kernels in operators/local.py are the portable fallback and the
- * two paths are differential-tested against each other
- * (tests/test_native.py).
+ * `cc -O3 -march=native -shared -fPIC`; it is optional — the numpy
+ * build in operators/local.py is the portable fallback, differential-
+ * tested against it (tests/test_native.py).
  */
 
 #include <stdint.h>
@@ -230,45 +229,6 @@ ASSIGN_IMPL(ff_assign8, uint8_t)
 ASSIGN_IMPL(ff_assign16, uint16_t)
 ASSIGN_IMPL(ff_assign32, uint32_t)
 
-/* ---- membership probes ------------------------------------------------ */
-
-#define FUSE_CONTAIN_IMPL(NAME, T)                                       \
-void NAME(const uint64_t *keys, int64_t n, uint64_t seed,                \
-          uint32_t segment_length, uint32_t seg_count_length,            \
-          const T *fp, uint8_t *out) {                                   \
-    uint32_t mask = segment_length - 1;                                  \
-    for (int64_t i = 0; i < n; i++) {                                    \
-        uint64_t h = mm64(keys[i] + seed);                               \
-        T f = (T)(h ^ (h >> 32));                                        \
-        uint32_t a = (uint32_t)(((unsigned __int128)h * seg_count_length) >> 64); \
-        uint32_t b = (a + segment_length) ^ ((uint32_t)(h >> 18) & mask);\
-        uint32_t c = (a + 2 * segment_length) ^ ((uint32_t)h & mask);    \
-        out[i] = (uint8_t)((T)(f ^ fp[a] ^ fp[b] ^ fp[c]) == 0);         \
-    }                                                                    \
-}
-
-FUSE_CONTAIN_IMPL(ff_fuse_contain8, uint8_t)
-FUSE_CONTAIN_IMPL(ff_fuse_contain16, uint16_t)
-FUSE_CONTAIN_IMPL(ff_fuse_contain32, uint32_t)
-
-#define XOR_CONTAIN_IMPL(NAME, T)                                        \
-void NAME(const uint64_t *keys, int64_t n, uint64_t seed,                \
-          uint32_t block_length, const T *fp, uint8_t *out) {            \
-    for (int64_t i = 0; i < n; i++) {                                    \
-        uint64_t h = mm64(keys[i] + seed);                               \
-        T f = (T)(h ^ (h >> 32));                                        \
-        uint32_t a = lemire_reduce((uint32_t)h, block_length);           \
-        uint32_t b = lemire_reduce((uint32_t)rot64(h, 21), block_length) \
-                     + block_length;                                     \
-        uint32_t c = lemire_reduce((uint32_t)rot64(h, 42), block_length) \
-                     + 2 * block_length;                                 \
-        out[i] = (uint8_t)((T)(f ^ fp[a] ^ fp[b] ^ fp[c]) == 0);         \
-    }                                                                    \
-}
-
-XOR_CONTAIN_IMPL(ff_xor_contain8, uint8_t)
-XOR_CONTAIN_IMPL(ff_xor_contain16, uint16_t)
-
 /* ---- 4-wise binary fuse (arity 4) -------------------------------------
  *
  * The reference ships arity-4 sizing constants but only the 3-wise hash
@@ -413,21 +373,3 @@ void NAME(int64_t np, const int32_t *ocell,                              \
 ASSIGN4_IMPL(ff_assign8_4, uint8_t)
 ASSIGN4_IMPL(ff_assign16_4, uint16_t)
 ASSIGN4_IMPL(ff_assign32_4, uint32_t)
-
-#define FUSE_CONTAIN4_IMPL(NAME, T)                                      \
-void NAME(const uint64_t *keys, int64_t n, uint64_t seed,                \
-          uint32_t segment_length, uint32_t seg_count_length,            \
-          const T *fp, uint8_t *out) {                                   \
-    uint32_t mask = segment_length - 1;                                  \
-    for (int64_t i = 0; i < n; i++) {                                    \
-        uint64_t h = mm64(keys[i] + seed);                               \
-        T f = (T)(h ^ (h >> 32));                                        \
-        uint32_t a, b, c, d;                                             \
-        FUSE4_CELLS(h, a, b, c, d);                                      \
-        out[i] = (uint8_t)((T)(f ^ fp[a] ^ fp[b] ^ fp[c] ^ fp[d]) == 0); \
-    }                                                                    \
-}
-
-FUSE_CONTAIN4_IMPL(ff_fuse_contain8_4, uint8_t)
-FUSE_CONTAIN4_IMPL(ff_fuse_contain16_4, uint16_t)
-FUSE_CONTAIN4_IMPL(ff_fuse_contain32_4, uint32_t)

@@ -40,16 +40,14 @@ Scale design notes (targeting a 10^12-key Iceberg table, tested locally):
   fingerprints), persisted as one row per shard ``(shard, kind, payload
   binary, lineage...)`` in a parquet "filter table", and broadcast for
   probe-side use.
-- Probing is a JVM UDF over the broadcast shard list
-  (native/FilterProbe.java; both Java sources are compiled into one jar
-  at first use by the Janino compiler Spark ships, functions/native.py):
+- Every Spark-side probe is native/FilterProbe.java over the payloads
+  as stored (compiled with FilterBuild.java into one jar, native.py):
   route each probe key by the same hash prefix, gather 3 or 4
   fingerprint cells, xor, compare — the key never crosses into Python.
-  Used via ``df.filter(sf.contains_udf(spark)(col))`` this is the
-  distributed analog of a broadcast left-semi join with the exact hash
-  table replaced by a 9-bit/key approximate one.  ``broadcast_probe`` is
-  the one broadcast probe path; the Bloom probe
-  (sketch_agg.bloom_contains_udf) runs through it too.
+  ``broadcast_probe`` (``df.filter(sf.contains_udf(spark)(col))``, and
+  sketch_agg.bloom_contains_udf) is a broadcast left-semi join with the
+  exact hash table replaced by a 9-bit/key approximate one;
+  ``probe_via_join`` cogroups the keys with the filter table by shard.
 
 Checkpoint/resume (BASELINE.json:north_rule): ``build_sharded`` with a
 ``checkpoint_dir`` appends the built rows to that parquet directory in
@@ -71,7 +69,6 @@ from dataclasses import dataclass
 from typing import Iterable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
@@ -175,18 +172,6 @@ def shard_of_hash(keys_u64: np.ndarray, shard_bits: int) -> np.ndarray:
     return (h % (1 << shard_bits)).astype(np.int32)  # numpy % is pmod
 
 
-def _contain_routed(filters: list, keys: np.ndarray,
-                    shard_bits: int) -> np.ndarray:
-    """Membership bits for uint64 ``keys``: route each key to its shard
-    filter by the build's hash, then probe shard by shard."""
-    out = np.zeros(keys.size, dtype=bool)
-    shards = shard_of_hash(keys, shard_bits)
-    for s in np.unique(shards):
-        m = shards == s
-        out[m] = filters[s].contain(keys[m])
-    return out
-
-
 def broadcast_probe(spark: SparkSession, payload) -> "_JvmProbe":
     """The library's one broadcast probe: a ``long -> boolean`` Column
     function over ``payload``, a ShardedFilter of an xor/fuse kind or a
@@ -195,32 +180,15 @@ def broadcast_probe(spark: SparkSession, payload) -> "_JvmProbe":
     False.
 
     The jar (``native.probe_jar``) is added to the session once (``ADD
-    JAR``).  For a ShardedFilter the driver parses each shard's header
-    (``filter_from_bytes(view=True)``) and one JVM Broadcast carries
-    seed, arity, layout ints and fingerprint bytes per shard; the UDF
-    routes each key by Spark's own xxhash64, as the build does, so the
-    key never crosses into Python.  For a Bloom filter the Broadcast
-    carries n_bits, k and the bit array."""
+    JAR``).  One JVM Broadcast carries the payloads as stored, which
+    FilterProbe parses once per executor; it routes each key by Spark's
+    own xxhash64, as the build does."""
     factory = _jvm_factory(spark, "FilterProbe")
     if isinstance(payload, ShardedFilter):
-        filters = payload._filters()
-        xor = payload.kind.startswith("xor")
-        # arity 0 marks an empty shard, which probes False
-        fields = np.array(
-            [[f.seed, 0 if f.empty else 3, f.block_length, 0] if xor else
-             [f.seed, 0 if f.empty else f.arity, f.segment_length,
-              f.segment_count_length]
-             for f in filters], dtype="<u8")
-        arrays = [f.fingerprints.astype(
-            f.fingerprints.dtype.newbyteorder("<"), copy=False).tobytes()
-            for f in filters]
-        kind = payload.kind
+        payloads, kind = payload.payloads, payload.kind
     else:
-        fields = np.array([payload.n_bits, payload.k], dtype="<u8")
-        arrays = [payload.bits.tobytes()]
-        kind = "bloom"
-    bc = spark.sparkContext._jsc.broadcast(
-        factory.payload(fields.tobytes(), arrays))
+        payloads, kind = [payload.to_bytes()], "bloom"
+    bc = spark.sparkContext._jsc.broadcast(list(payloads))
     return _JvmProbe(spark.sparkContext, factory.udf(bc, kind))
 
 
@@ -284,13 +252,12 @@ def keys_with_shard(df: DataFrame, key_col: str, shard_bits: int) -> DataFrame:
 
     ``pmod(xxhash64(key), S)`` stays inside whole-stage codegen, so the
     scan -> project -> shuffle stage never crosses into Python, and the
-    shard build after it runs in the JVM too.
+    shard build or join probe after it runs in the JVM too.
 
     Null keys, and keys whose cast yields null (a malformed string with
-    ANSI mode off), are dropped here, JVM-side: in ``probe_via_join``'s
-    Arrow hand-off one null in a shard's int64 column would turn it
-    into float64 and round every key above 2^53.  A null is never a
-    member, so dropping it is exact.
+    ANSI mode off), are dropped here, JVM-side: a null is never a
+    member, so dropping it is exact, and the shard build and the join
+    probe then read every key as a primitive long.
     """
     key = F.col(key_col).cast(LongType())
     return df.select(
@@ -343,14 +310,16 @@ class ShardedFilter:
 
     # -- probing ----------------------------------------------------------
 
-    def _filters(self):
-        return [filter_from_bytes(p, self.kind, view=True)
-                for p in self.payloads]
-
     def contain_np(self, keys) -> np.ndarray:
         """Driver-side vectorized probe (for tests / small batches)."""
-        return _contain_routed(self._filters(),
-                               K.to_uint64(np.asarray(keys)), self.shard_bits)
+        keys = K.to_uint64(np.asarray(keys))
+        out = np.zeros(keys.size, dtype=bool)
+        shards = shard_of_hash(keys, self.shard_bits)
+        for s in np.unique(shards):
+            m = shards == s
+            out[m] = filter_from_bytes(self.payloads[s], self.kind,
+                                       view=True).contain(keys[m])
+        return out
 
     def contains_udf(self, spark: SparkSession):
         """``long -> boolean`` Column function probing the broadcast
@@ -541,33 +510,28 @@ def build_sharded_table(
             # matching payload can never probe an inserted key negative
             # (the zero-false-negative guarantee), so any miss proves
             # the payload was built by incompatible code or over
-            # different keys.  Cost: one tiny sample job + a few
-            # KB..MB payload rows to the driver.
-            sample = keyed.select("shard", "key").limit(256).collect()
-            by_shard: dict[int, list] = {}
-            for r in sample:
-                s = int(r["shard"])
-                if s in done:
-                    by_shard.setdefault(s, []).append(r["key"])
-            check = sorted(by_shard)[:4]
-            if check:
-                pay = {int(r["shard"]): bytes(r["payload"])
-                       for r in existing
-                       .where(F.col("shard").isin([int(c) for c in check]))
-                       .select("shard", "payload").collect()}
-                for s in check:
-                    filt = filter_from_bytes(pay[s], kind, view=True)
-                    ks = K.to_uint64(np.asarray(by_shard[s],
-                                                dtype=np.int64))
-                    if not bool(filt.contain(ks).all()):
-                        raise ValueError(
-                            f"checkpoint_dir {checkpoint_dir}: shard {s} "
-                            "payload probes FALSE for keys present in the "
-                            "current input — the checkpoint was built over "
-                            "different keys or by an incompatible library "
-                            "version; resuming would produce false "
-                            "negatives.  Use a fresh directory (or "
-                            "validate_checkpoint=False to override)")
+            # different keys.  Cost: one tiny sample job and one
+            # probe_via_join against the sampled shards' rows.
+            sample = {r["key"]: r["shard"] for r in
+                      keyed.select("key", "shard").limit(256).collect()
+                      if r["shard"] in done}
+            if sample:
+                probes = spark.createDataFrame(
+                    [(k,) for k in sample], "key long")
+                resumed = existing.where(
+                    F.col("shard").isin(sorted(set(sample.values()))))
+                miss = probe_via_join(probes, "key", resumed, num_shards) \
+                    .where(~F.col("member")).first()
+                if miss is not None:
+                    raise ValueError(
+                        f"checkpoint_dir {checkpoint_dir}: shard "
+                        f"{sample[miss['key']]} "
+                        "payload probes FALSE for keys present in the "
+                        "current input — the checkpoint was built over "
+                        "different keys or by an incompatible library "
+                        "version; resuming would produce false "
+                        "negatives.  Use a fresh directory (or "
+                        "validate_checkpoint=False to override)")
         if done:
             keyed = keyed.where(~F.col("shard").isin([int(s) for s in done]))
 
@@ -707,16 +671,18 @@ def probe_via_join(probes: DataFrame, key_col: str,
 
     The broadcast probe (``contains_udf``) needs every executor to hold
     the whole filter — fine for dim-table pruning (MBs) but not for a
-    10^12-key filter table (~TB, SCALE.md).  Here each task receives ONE
-    shard's payload row plus that shard's probe keys, so memory per task
-    is one sub-filter + its probes regardless of total filter size.
+    10^12-key filter table (~TB, SCALE.md).  Here a JVM cogroup
+    (native/FilterProbe.java ``join``) hands each task ONE shard's
+    payload row, which it parses, and streams that shard's probe keys
+    through the broadcast probe's contain: memory per task is one
+    sub-filter regardless of total filter size.
 
-    Returns (key, member boolean); rows with keys only (no extra
-    columns) — join back on key for row-level filtering.  Null (and
-    uncastable) probe keys are dropped by the shard projection, so they
-    get no output row; a left join back on key reads them as
-    non-members, which is what the broadcast probes return for them.
-    An explicit ``num_shards`` that differs from the table's raises
+    Returns (key, member) rows; join back on key for row-level
+    filtering.  Null (and uncastable) probe keys are dropped by the
+    shard projection, so they get no output row; a left join back on
+    key reads them as non-members, as the broadcast probes answer.  A
+    shard with no table row probes False.  Two rows for one shard, or
+    an explicit ``num_shards`` that differs from the table's, raise
     inside the probe task.
     """
     if num_shards is None:
@@ -732,42 +698,11 @@ def probe_via_join(probes: DataFrame, key_col: str,
         if filter_table.storageLevel == StorageLevel.NONE:
             filter_table = filter_table.localCheckpoint()
         num_shards = filter_table.select(F.first("num_shards")).first()[0]
-    shard_bits = int(math.log2(num_shards))
-    keyed = keys_with_shard(probes, key_col, shard_bits)
-
-    def probe(key, probe_pdf: pd.DataFrame, filt_pdf: pd.DataFrame) \
-            -> pd.DataFrame:
-        if len(probe_pdf) == 0:
-            return pd.DataFrame({"key": [], "member": []}).astype(
-                {"key": "int64", "member": "bool"})
-        keys = K.to_uint64(probe_pdf["key"].to_numpy())
-        if len(filt_pdf) == 0:  # shard never built => no members
-            return pd.DataFrame({"key": keys.view(np.int64),
-                                 "member": np.zeros(keys.size, dtype=bool)})
-        if len(filt_pdf) > 1:
-            # mirror from_filter_table's duplicate-shard error: probing an
-            # arbitrary row could pick a stale payload (e.g. overlapping
-            # checkpoint appends) and silently return false negatives
-            raise ValueError(
-                f"filter table has {len(filt_pdf)} rows for shard "
-                f"{int(filt_pdf['shard'].iloc[0])} (overlapping builds "
-                "appending to one checkpoint_dir?); deduplicate the table "
-                "(latest-wins) before probing")
-        if int(filt_pdf["num_shards"].iloc[0]) != num_shards:
-            # keys were routed by the caller's num_shards: against a
-            # table built with another count most members land in the
-            # wrong shard and silently probe False
-            raise ValueError(
-                f"num_shards={num_shards} but the filter table was built "
-                f"with num_shards={int(filt_pdf['num_shards'].iloc[0])}")
-        f = filter_from_bytes(bytes(filt_pdf["payload"].iloc[0]),
-                              filt_pdf["kind"].iloc[0], view=True)
-        return pd.DataFrame({"key": keys.view(np.int64),
-                             "member": f.contain(keys)})
-
-    return keyed.groupBy("shard").cogroup(
-        filter_table.groupBy("shard")).applyInPandas(
-        probe, schema="key long, member boolean")
+    keyed = keys_with_shard(probes, key_col, int(math.log2(num_shards)))
+    table = filter_table.select("shard", "kind", "num_shards", "payload")
+    spark = probes.sparkSession
+    return DataFrame(_jvm_factory(spark, "FilterProbe").join(
+        keyed._jdf, table._jdf, num_shards), spark)
 
 
 def build_filter_rows(keyed: DataFrame, kind: str,

@@ -17,7 +17,8 @@ against the compiled C library used as a black-box oracle):
 - identical serialization header layout (little-endian),
 - zero false negatives and the same fpp/bits-per-entry guarantees.
 
-Two execution tiers share the exact same seed-retry semantics:
+Two build tiers share the exact same seed-retry semantics (the probe,
+``contain``, is numpy on both):
 
 - **native** (default when a C compiler exists): the hot loops run in
   fastfilter_spark/native/ffkernel.c via ctypes — segment/bucket-ordered
@@ -310,10 +311,6 @@ class XorFilter:
         keys = K.to_uint64(keys)
         if self.empty:
             return np.zeros(keys.size, dtype=bool)
-        nat = native.get_kernel()
-        if nat is not None:
-            return nat.xor_contain(keys, self.seed, self.block_length,
-                                   self.fingerprints)
         hashes = K.mix_split(keys, self.seed)
         dtype = self.fingerprints.dtype
         f = K.fingerprint64(hashes).astype(dtype)
@@ -518,11 +515,6 @@ class FuseFilter:
         keys = K.to_uint64(keys)
         if self.empty:
             return np.zeros(keys.size, dtype=bool)
-        nat = native.get_kernel()
-        if nat is not None:
-            return nat.fuse_contain(keys, self.seed, self.segment_length,
-                                    self.segment_count_length,
-                                    self.fingerprints, arity=self.arity)
         hashes = K.mix_split(keys, self.seed)
         f = K.fingerprint64(hashes).astype(self.fingerprints.dtype)
         index = K.fuse_index_quad if self.arity == 4 else K.fuse_index_triple
@@ -661,14 +653,8 @@ def filter_from_bytes(buf: bytes, kind: str, view: bool = False):
     """``view=True``: zero-copy deserialization (see
     XorFilter.from_bytes) — the probe paths use it so broadcast payload
     bytes stay the only copy per worker."""
-    if kind == "xor8":
-        return XorFilter.from_bytes(buf, 8, view=view)
-    if kind == "xor16":
-        return XorFilter.from_bytes(buf, 16, view=view)
-    if kind == "fuse8":
-        return FuseFilter.from_bytes(buf, 8, view=view)
-    if kind == "fuse16":
-        return FuseFilter.from_bytes(buf, 16, view=view)
-    if kind == "fuse32":
-        return FuseFilter.from_bytes(buf, 32, view=view)
+    if kind in ("xor8", "xor16"):
+        return XorFilter.from_bytes(buf, int(kind[3:]), view=view)
+    if kind in ("fuse8", "fuse16", "fuse32"):
+        return FuseFilter.from_bytes(buf, int(kind[4:]), view=view)
     raise ValueError(f"unknown filter kind: {kind}")

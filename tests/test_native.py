@@ -3,8 +3,9 @@
 Both implement the same algorithms (SURVEY.md §2); any valid peel order
 yields a correct filter, so cross-path guarantees are behavioral:
 identical winning seeds (peelability is a set property), zero false
-negatives both ways, byte-level self-consistency within a path, and
-bit-identical probe results on each other's filters.
+negatives both ways and byte-level self-consistency within a path.  The
+kernel builds only; the probe is numpy on every host.  The lints at the
+end need no loaded kernel.
 """
 
 import os
@@ -18,8 +19,8 @@ from fastfilter_spark.functions.native import get_kernel
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-pytestmark = pytest.mark.skipif(get_kernel() is None,
-                                reason="no C compiler available")
+needs_kernel = pytest.mark.skipif(get_kernel() is None,
+                                  reason="no C compiler available")
 
 
 def _numpy_build(kind: str, keys: np.ndarray):
@@ -41,6 +42,7 @@ def _numpy_build(kind: str, keys: np.ndarray):
     return out.stdout
 
 
+@needs_kernel
 @pytest.mark.parametrize("kind", ["xor8", "xor16", "fuse8", "fuse16", "fuse32"])
 def test_native_vs_numpy_same_seed_and_guarantees(kind):
     from fastfilter_spark.operators.local import (
@@ -56,34 +58,12 @@ def test_native_vs_numpy_same_seed_and_guarantees(kind):
     # zero false negatives on both
     assert nat_f.contain(keys).all()
     assert np_f.contain(keys).all()
-    # native probe of the numpy-built filter (cross-path) still has zero
-    # false negatives — probes only depend on (seed, fingerprints)
+    # the probe of the numpy-built filter, re-read from its bytes, still
+    # has zero false negatives — probes only depend on (seed, fingerprints)
     assert filter_from_bytes(np_bytes, kind).contain(keys).all()
 
 
-def test_native_probe_matches_numpy_probe_bitwise():
-    """Same filter bytes, both probe paths, random probes -> identical."""
-    from fastfilter_spark.operators.local import build_filter
-    keys = np.arange(50_000, dtype=np.uint64)
-    f = build_filter(keys, "fuse8")
-    probes = np.random.default_rng(3).integers(
-        0, 1 << 63, size=200_000, dtype=np.uint64)
-    nat = get_kernel()
-    got_native = nat.fuse_contain(probes, f.seed, f.segment_length,
-                                  f.segment_count_length, f.fingerprints)
-    # numpy path: call the pure-python logic directly
-    from fastfilter_spark.functions import kernels as K
-    hashes = K.mix_split(probes, f.seed)
-    fv = K.fingerprint64(hashes).astype(f.fingerprints.dtype)
-    g0, g1, g2 = K.fuse_index_triple(hashes, f.segment_length,
-                                     f.segment_length_mask,
-                                     f.segment_count_length)
-    fp = f.fingerprints
-    got_numpy = (fv ^ fp[g0.astype(np.int64)] ^ fp[g1.astype(np.int64)]
-                 ^ fp[g2.astype(np.int64)]) == 0
-    assert (got_native == got_numpy).all()
-
-
+@needs_kernel
 def test_native_duplicate_tolerance():
     from fastfilter_spark.operators.local import build_filter
     keys = np.concatenate([np.arange(5000, dtype=np.uint64),
@@ -92,6 +72,7 @@ def test_native_duplicate_tolerance():
     assert f.contain(keys).all()
 
 
+@needs_kernel
 def test_native_fpp_bound():
     from fastfilter_spark.operators.local import build_filter
     f = build_filter(np.arange(100_000, dtype=np.uint64), "fuse8")
@@ -119,6 +100,7 @@ def _numpy_build4(keys: np.ndarray, bits: int) -> bytes:
     return out.stdout
 
 
+@needs_kernel
 @pytest.mark.parametrize("bits", [8, 16, 32])
 def test_native_arity4_vs_numpy(bits):
     """The 4-wise native kernel (ff_fuse_prepare4/ff_peel_pre4) must be
@@ -135,15 +117,16 @@ def test_native_arity4_vs_numpy(bits):
     assert np_f.arity == 4              # arity inferred from layout
     assert nat_f.seed == np_f.seed      # identical seed chain
     assert len(nat_f.to_bytes()) == len(np_bytes)
-    # cross-tier: native probe of the numpy-built filter and vice versa
+    # cross-tier: each tier's filter probes its keys with zero misses
     assert nat_f.contain(keys).all()
-    assert np_f.contain(keys).all()     # np_f probes natively here
+    assert np_f.contain(keys).all()
     rng = np.random.default_rng(11)
     others = rng.integers(0, 1 << 63, size=300_000, dtype=np.uint64)
     bound = {8: 2**-8, 16: 2**-16, 32: 2**-32}[bits]
     assert np_f.contain(others).mean() <= bound * 2 + 3e-6
 
 
+@needs_kernel
 def test_native_arity4_index_map_matches_numpy():
     """The cell maps fuse_prepare returns must agree element-wise with the
     numpy tier's for both arities (this is what guarantees cross-tier
@@ -236,6 +219,7 @@ def test_probe_source_compiles_warning_free():
     assert res.returncode == 0, res.stderr
 
 
+@needs_kernel
 def test_native_arity4_emit_path():
     """>= EMIT_MIN_N keys exercises the emit-cells peel + sequential
     assign variant (oc0..oc3 streams)."""
@@ -247,6 +231,7 @@ def test_native_arity4_emit_path():
     assert f.contain(keys).all()
 
 
+@needs_kernel
 def test_native_arity4_duplicates():
     from fastfilter_spark.operators.local import FuseFilter
     keys = np.concatenate([np.arange(5000, dtype=np.uint64),
@@ -255,6 +240,7 @@ def test_native_arity4_duplicates():
     assert f.contain(keys).all()
 
 
+@needs_kernel
 def test_native_arity4_peels_beyond_shard_sizes():
     """Regression for the round-3 peelability fix: offset windows drawn
     from the mulhi-driving high bits left ~78% of rows unpeelable at

@@ -116,9 +116,9 @@ def test_probe_via_join_builds_unmaterialized_table_once(spark):
     plan = io.StringIO()
     with contextlib.redirect_stdout(plan):
         out.explain()
-    # the build is a FlatMapGroupsInPandas; the probe's cogroup is a
-    # FlatMapCoGroupsInPandas
-    assert "FlatMapGroupsInPandas" not in plan.getvalue(), \
+    # the build is the FilterBuild aggregate (partial_filterbuild and
+    # filterbuild in the plan); the probe reads the checkpointed rows
+    assert "filterbuild(" not in plan.getvalue(), \
         "the probe re-runs the build"
     assert out.where(F.col("member")).count() == 20_000
 
