@@ -245,6 +245,25 @@ _XXP4 = 0x85EBCA77C2B2AE63
 _XXP5 = 0x27D4EB2F165667C5
 
 
+def murmur3_int(values: np.ndarray, seed: int = 42) -> np.ndarray:
+    """Murmur3_x86_32 of 4-byte ints as uint32 — the bits of Spark's
+    ``F.hash(intCol)`` (default seed 42), the hash Spark's
+    HashPartitioning and ``bucketBy`` take ``pmod`` of."""
+    k = np.asarray(values).astype(np.uint32) * np.uint32(0xCC9E2D51)
+    k = (k << np.uint32(15)) | (k >> np.uint32(17))
+    k *= np.uint32(0x1B873593)
+    h = np.uint32(seed) ^ k
+    h = (h << np.uint32(13)) | (h >> np.uint32(19))
+    h = h * np.uint32(5) + np.uint32(0xE6546B64)
+    h ^= np.uint32(4)           # the input length in bytes
+    h ^= h >> np.uint32(16)
+    h *= np.uint32(0x85EBCA6B)
+    h ^= h >> np.uint32(13)
+    h *= np.uint32(0xC2B2AE35)
+    h ^= h >> np.uint32(16)
+    return h
+
+
 def xxhash64_long(values: np.ndarray, seed: int = 42) -> np.ndarray:
     """XXH64 of a single 8-byte little-endian long — bit-identical to
     Spark's ``F.xxhash64(longCol)`` (default seed 42).

@@ -10,12 +10,13 @@ The two builds are differential-tested (tests/test_native.py) on
 identical seed chains; the probe is numpy on every host.
 
 The same cache holds the JVM jar: ``probe_jar(spark)`` compiles
-fastfilter_spark/native/FilterProbe.java (every Spark-side probe) and
-FilterBuild.java (the shard build) into one jar with the Janino
-compiler Spark ships for its own code generation, run inside the
+fastfilter_spark/native/FilterProbe.java (every Spark-side probe),
+FilterBuild.java (the shard build) and SketchFold.java (the HLL,
+count-min, Bloom, theta, KLL and KMV folds) into one jar with the
+Janino compiler Spark ships for its own code generation, run inside the
 session's JVM over py4j, so any host that runs Spark can build it.
-operators/dist.py loads it into the Spark session; every shard build
-and Spark-side probe runs there.
+operators/dist.py loads it into the Spark session; every shard build,
+Spark-side probe and JVM sketch fold runs there.
 """
 
 from __future__ import annotations
@@ -35,7 +36,8 @@ _NATIVE_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "native")
 _SRC = os.path.join(_NATIVE_DIR, "ffkernel.c")
 _JAVA_SRCS = [os.path.join(_NATIVE_DIR, f)
-              for f in ("FilterProbe.java", "FilterBuild.java")]
+              for f in ("FilterProbe.java", "FilterBuild.java",
+                        "SketchFold.java")]
 _kernel = None
 _tried = False
 
@@ -114,9 +116,10 @@ def _compile() -> str | None:
 
 
 def probe_jar(spark) -> str:
-    """The JVM probe and build (native/FilterProbe.java and
-    FilterBuild.java) as one jar, compiled once per content hash by
-    Janino inside ``spark``'s JVM against pyspark's jars.  Raises
+    """The JVM probe, build and sketch folds (native/FilterProbe.java,
+    FilterBuild.java and SketchFold.java) as one jar, compiled once per
+    content hash by Janino inside ``spark``'s JVM against pyspark's
+    jars.  Raises
     RuntimeError for a session without a py4j JVM (Spark Connect) or a
     failed compile."""
     if getattr(spark, "_jsparkSession", None) is None:

@@ -13,7 +13,8 @@
  * keys.  The shard row sorts its keys as unsigned and dedups them first,
  * as np.unique does, so the bytes do not depend on arrival order.
  *
- * Compiled with FilterProbe.java into one jar by
+ * Compiled with FilterProbe.java and SketchFold.java (which reuses its
+ * radix unique and splitmix64) into one jar by
  * fastfilter_spark/functions/native.py (Spark's bundled Janino) and
  * wired by operators/dist.py build_filter_rows as a typed aggregate:
  * groupBy(shard).agg(this Aggregator over the key column).  Its buffer
@@ -45,7 +46,7 @@ public final class FilterBuild extends Aggregator<Object, Object, Object> {
     private static final long serialVersionUID = 1L;
 
     /* kernels.py: splitmix64 and the seed-chain start counters */
-    private static final long GAMMA = 0x9E3779B97F4A7C15L;
+    static final long GAMMA = 0x9E3779B97F4A7C15L;
     private static final long XOR_RNG_START = 1L;
     private static final long FUSE_RNG_START = 0x726B2B9D438B9D4DL;
     private static final int XOR_SORT_ITERATIONS = 10;
@@ -185,7 +186,7 @@ public final class FilterBuild extends Aggregator<Object, Object, Object> {
     /* an LSD radix sort of a[0, n) by byte, which orders the raw keys
      * as unsigned, then the duplicates dropped; sorts in a (or in its
      * scratch twin) and returns an array of exactly the unique keys */
-    private static long[] uniqueInPlace(long[] a, int n) {
+    static long[] uniqueInPlace(long[] a, int n) {
         if (n == 0) {
             return new long[0];
         }
@@ -433,7 +434,7 @@ public final class FilterBuild extends Aggregator<Object, Object, Object> {
         return p;
     }
 
-    private static long splitmix(long z) {
+    static long splitmix(long z) {
         z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L;
         z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL;
         return z ^ (z >>> 31);

@@ -14,8 +14,9 @@
  * Two probes share them: this class as a UDF over one JVM Broadcast of
  * the payloads (dist.broadcast_probe), and join(), a cogroup of the keys
  * with the filter table by shard (dist.probe_via_join).  Compiled with
- * FilterBuild.java into one jar by functions/native.py (Spark's bundled
- * Janino) and added with ADD JAR.  The broadcast value holds JDK types
+ * FilterBuild.java and SketchFold.java into one jar by
+ * functions/native.py (Spark's bundled Janino) and added with ADD JAR.
+ * The broadcast value holds JDK types
  * only (a List of byte[]): in local mode the executors read the driver's
  * object while loading this class through another class loader.  Janino
  * ignores type arguments and emits no bridge methods, hence the Object

@@ -194,10 +194,10 @@ def broadcast_probe(spark: SparkSession, payload) -> "_JvmProbe":
 
 def _jvm_factory(spark: SparkSession, name: str):
     """The session's driver-side factory of the jar class ``name``
-    (``FilterProbe`` or ``FilterBuild``), looked up through the
-    session's jar class loader, which ``ADD JAR`` extends, whatever py4j
-    thread asks.  Raises RuntimeError when the session has no py4j JVM
-    or the jar does not compile (``native.probe_jar``)."""
+    (``FilterProbe``, ``FilterBuild`` or ``SketchFold``), looked up
+    through the session's jar class loader, which ``ADD JAR`` extends,
+    whatever py4j thread asks.  Raises RuntimeError when the session has
+    no py4j JVM or the jar does not compile (``native.probe_jar``)."""
     jar = native.probe_jar(spark)
     sc = spark.sparkContext
     if os.path.basename(jar) not in sc._jsc.sc().listJars().mkString(" "):
@@ -610,25 +610,51 @@ def complete_filter(rows: Iterable, kind: str,
     return ShardedFilter.from_filter_table(rows)
 
 
+def _bucket_keys(num_buckets: int) -> list[int]:
+    """For each bucket id s < ``num_buckets`` (a power of two), the
+    smallest int b >= 0 that Spark buckets into s: pmod(murmur3(b),
+    num_buckets) == s, the partition id of HashPartitioning and
+    ``bucketBy`` alike."""
+    keys = np.full(num_buckets, -1, dtype=np.int64)
+    lo = 0
+    while (keys < 0).any():
+        b = np.arange(lo, lo + 8 * num_buckets, dtype=np.int64)
+        ids, first = np.unique(K.murmur3_int(b) & np.uint32(num_buckets - 1),
+                               return_index=True)
+        ids = ids.astype(np.int64)
+        new = keys[ids] < 0
+        keys[ids[new]] = b[first[new]]
+        lo += b.size
+    return keys.tolist()
+
+
 def write_bucketed_keys(df: DataFrame, key_col: str, shard_bits: int,
                         table_name: str, mode: str = "overwrite") -> None:
     """Persist the key stream as a SHARD-BUCKETED table: the write pays
     the shuffle once, and every subsequent ``build_sharded_from_bucketed``
     is completely shuffle-free (Catalyst sees the scan's
-    HashPartitioning(shard) already satisfies the shard grouping's
+    HashPartitioning already satisfies the shard grouping's
     distribution — asserted in tests/test_plans.py).  This is the
     SCALE.md deployment for a 10^12-key corpus that gets re-filtered
     repeatedly: an Iceberg/bucketBy layout choice, not an engine change.
 
-    The keyed frame is hash-partitioned by ``shard`` into exactly the
-    bucket count first: a bucket id is that same hash, so each write
+    The table is (key long, bucket int), bucketed by ``bucket``: Spark's
+    bucket id is pmod(murmur3(bucket), 2^bits), not the bucket value, so
+    a shard is stored as the int whose bucket id is the shard
+    (``_bucket_keys``), and 2^bits shards fill 2^bits buckets, one shard
+    each.  The keyed frame is hash-partitioned by ``bucket`` into
+    exactly the bucket count first, by that same hash, so each write
     task holds one bucket and writes one file (straight off the scan,
     every task wrote one file per bucket it held).
     """
     num_buckets = 1 << shard_bits
+    spark = df.sparkSession
+    bucket_of = spark.createDataFrame(
+        list(enumerate(_bucket_keys(num_buckets))), "shard int, bucket int")
     keyed = keys_with_shard(df, key_col, shard_bits) \
-        .repartition(num_buckets, "shard")
-    keyed.write.bucketBy(num_buckets, "shard").sortBy("shard") \
+        .join(F.broadcast(bucket_of), "shard").select("key", "bucket") \
+        .repartition(num_buckets, "bucket")
+    keyed.write.bucketBy(num_buckets, "bucket").sortBy("bucket") \
         .mode(mode).saveAsTable(table_name)
 
 
@@ -638,7 +664,9 @@ def build_sharded_from_bucketed(spark: SparkSession, table_name: str,
     """Shuffle-free filter-table build over a ``write_bucketed_keys``
     table.  Bucket spec (count + column) is read from the catalog and
     validated; returns the filter-table DataFrame (pair with
-    ``probe_via_join`` / ``ShardedFilter.from_filter_table``)."""
+    ``probe_via_join`` / ``ShardedFilter.from_filter_table``).  Each
+    bucket builds as one group, and its shard id is its bucket id,
+    pmod(hash(bucket), count), a projection after the build."""
     desc = {r["col_name"]: r["data_type"]
             for r in spark.sql(f"DESCRIBE EXTENDED {table_name}").collect()}
     try:
@@ -649,18 +677,20 @@ def build_sharded_from_bucketed(spark: SparkSession, table_name: str,
         raise ValueError(
             f"{table_name}: bucket count {num_buckets} must be a power "
             "of two (write with write_bucketed_keys)")
-    # exact match, not substring: a table bucketed by shard_id or by
-    # (key, shard) would pass a loose check but NOT satisfy the
-    # shard grouping's distribution — Catalyst would silently reinsert the
+    # exact match, not substring: a table bucketed by shard or by
+    # (key, bucket) would pass a loose check but NOT satisfy the
+    # grouping's distribution — Catalyst would silently reinsert the
     # Exchange this function exists to avoid
     bucket_cols = [c.strip(" `") for c in
                    desc.get("Bucket Columns", "").strip("[]").split(",")]
-    if bucket_cols != ["shard"]:
+    if bucket_cols != ["bucket"]:
         raise ValueError(
             f"{table_name} is bucketed by {bucket_cols}, not by exactly "
-            "the shard column (write with write_bucketed_keys)")
-    return build_filter_rows(spark.table(table_name), kind, num_buckets,
-                             arity=arity)
+            "the bucket column (write with write_bucketed_keys)")
+    keyed = spark.table(table_name).select(
+        "key", F.col("bucket").alias("shard"))
+    return build_filter_rows(keyed, kind, num_buckets, arity=arity) \
+        .withColumn("shard", F.pmod(F.hash("shard"), F.lit(num_buckets)))
 
 
 def probe_via_join(probes: DataFrame, key_col: str,

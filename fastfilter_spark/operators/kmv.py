@@ -16,15 +16,16 @@ expressed directly as DataFrame algebra, which buys three things at
 100 TB:
 
 - **Map-side reduction to O(k) rows per fold task** before any
-  shuffle: ``mapInPandas`` folds each task's batches into its running
-  bottom-k, so the exchange moves ``<= k * fold_tasks`` 8-byte rows
-  instead of the distinct key set (the groupBy-distinct alternative
-  shuffles every distinct key — terabytes at 10^12 keys).  Fold tasks
-  are sized by input bytes, not scan splits (``plans.size_python_fold``):
-  a Python task has a fixed start-up cost (~0.07 CPU-s on CPython 3.11
-  with the zip-invalidation hook in ``fastfilter_spark/_worker.py``), so
-  a small input folds in ``ceil(bytes / spark.sql.files.openCostInBytes)``
-  tasks while a large one keeps one task per input partition.
+  shuffle: native/SketchFold.java's ``bottomK``, a narrow
+  ``Dataset.mapPartitions`` inside Spark's JVM, folds each task's rows
+  into its running bottom-k, so the exchange moves ``<= k * fold_tasks``
+  8-byte rows instead of the distinct key set (the groupBy-distinct
+  alternative shuffles every distinct key — terabytes at 10^12 keys).
+  Fold tasks are sized by input bytes, not scan splits
+  (``plans.size_python_fold``): every task has a fixed start-up cost,
+  so a small input folds in
+  ``ceil(bytes / spark.sql.files.openCostInBytes)`` tasks while a large
+  one keeps one task per input partition.
 - **Everything after the fold is exact integer arithmetic** (the
   estimator divides in DECIMAL(38,0) / HUGEINT), so results are
   bit-identical under any partitioning and hash-checkable by a DuckDB
@@ -47,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fastfilter_spark.operators.dist import _jvm_factory
 from fastfilter_spark.plans import size_python_fold
 
 __all__ = ["portable_hash60", "bottomk_hashes", "kmv_distinct",
@@ -84,9 +86,11 @@ def bottomk_hashes(df: DataFrame, key_col: str, k: int,
     single-column DataFrame ``h: long`` (``< k`` rows when the input
     has fewer distinct keys; null keys are ignored).
 
-    Plan shape: one narrow ``mapInPandas`` pass folds every fold task's
-    rows to its own bottom-k (numpy ``np.unique`` keeps the running set
-    sorted, so each batch merge is O(batch log batch)), then a global
+    Plan shape: one narrow JVM ``mapPartitions`` pass folds every fold
+    task's rows to its own k smallest distinct hashes in signed order,
+    as ``np.unique`` orders int64 (a buffer of at least 2k values
+    sorted, deduplicated and cut to k when it fills; once k are kept, a
+    hash at or above the k-th is dropped on arrival), then a global
     ``TakeOrderedAndProject`` over the ``<= k * fold_tasks`` survivors.
     No wide exchange of the key set ever happens.
     """
@@ -104,18 +108,9 @@ def _bottomk_partials(df: DataFrame, key_col: str, k: int,
     h = hash_expr if hash_expr is not None \
         else portable_hash60(F.col(key_col))
     hashed = df.select(h.alias("h")).where(F.col("h").isNotNull())
-
-    def fold(batches):
-        import numpy as np
-        import pandas as pd
-        best = np.empty(0, dtype=np.int64)
-        for pdf in batches:
-            vals = pdf["h"].to_numpy(dtype=np.int64, copy=False)
-            best = np.unique(np.concatenate([best, vals]))[:k]
-        if len(best):
-            yield pd.DataFrame({"h": best})
-
-    return size_python_fold(hashed).mapInPandas(fold, schema="h long")
+    spark = df.sparkSession
+    return DataFrame(_jvm_factory(spark, "SketchFold").bottomK(
+        size_python_fold(hashed)._jdf, k), spark)
 
 
 def kmv_distinct(df: DataFrame, key_col: str, k: int = 1024,

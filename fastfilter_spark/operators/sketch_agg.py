@@ -1,22 +1,34 @@
 """Distributed mergeable-sketch aggregation (the UDAF layer).
 
 Pattern: map-side partials + tree merge — the classic mergeable-UDAF
-physical plan, expressed with ``mapInPandas`` so each task folds all of
-its Arrow batches into ONE sketch and emits one binary row:
+physical plan, a narrow per-task fold so each task folds all of its
+rows into ONE sketch and emits one binary row:
 
     scan -> [coalesce: small inputs only]          [no shuffle]
-         -> mapInPandas(partial per fold task)
-         -> [optional tree level: groupBy(bucket) merge]
+         -> fold (partial per fold task)
+         -> [optional tree level: repartition + merge per task]
          -> collect tiny blobs -> driver merge
 
+The fold runs inside Spark's JVM when every sketch of the call is a
+HyperLogLog, CountMin, Bloom, ThetaKMV or KLL (``_jvm_empties``):
+native/SketchFold.java is a ``Dataset.mapPartitions`` that starts each
+sketch from its empty sketch's ``to_bytes()``, made once on the driver,
+and emits the bytes functions/sketches.py would (KLL: with the same
+compaction rule and an exact ``n``; its bytes depend on fold order).
+Its tree level merges in the same class, so such a plan has no Python
+node.  Any other sketch (t-digest, Misra-Gries, AMS, or a mix holding
+one) folds in ``mapInPandas`` as before, and so does the grouped
+``sketch_by_key``.
+
 Fold tasks are sized by input bytes, not by scan splits
-(``plans.size_python_fold``): every Python task pays a fixed start-up
-cost (~0.07 CPU-s on CPython 3.11 with the zip-invalidation hook in
-``fastfilter_spark/_worker.py``, ~0.27 without it), which dwarfs the
-rows of a small input, so an input estimated below
-``defaultParallelism`` x ``spark.sql.files.openCostInBytes`` bytes folds
-in ``ceil(bytes / openCostInBytes)`` tasks.  Larger inputs, and inputs
-Spark cannot size, fold one partial per input partition.
+(``plans.size_python_fold``): every task pays a fixed start-up cost
+(~0.07 CPU-s for a Python task on CPython 3.11 with the
+zip-invalidation hook in ``fastfilter_spark/_worker.py``, a few ms for
+a JVM one), which dwarfs the rows of a small input, so an input
+estimated below ``defaultParallelism`` x
+``spark.sql.files.openCostInBytes`` bytes folds in
+``ceil(bytes / openCostInBytes)`` tasks.  Larger inputs, and
+inputs Spark cannot size, fold one partial per input partition.
 
 Map-side partial aggregation means the shuffle (if any) moves only
 one sketch blob per fold task (KBs), never rows — the property that
@@ -26,7 +38,8 @@ fanout 64, the tree is depth 2 and the driver merges <=64 blobs.
 Merge associativity/commutativity of every sketch (functions/sketches.py)
 is what makes the result independent of partition order; verified by
 tests/test_sketches.py over shuffled partitionings per
-BASELINE.json:north_rule.
+BASELINE.json:north_rule, and the JVM folds' bytes by
+tests/test_jvm_sketch_fold.py.
 """
 
 from __future__ import annotations
@@ -42,7 +55,7 @@ from fastfilter_spark.functions.sketches import (
     Bloom, CountMin, HyperLogLog, KLL, MisraGries, TDigest, ThetaKMV,
     sketch_from_bytes,
 )
-from fastfilter_spark.operators.dist import broadcast_probe
+from fastfilter_spark.operators.dist import _jvm_factory, broadcast_probe
 from fastfilter_spark.plans import size_python_fold
 
 def sketch_column(df: DataFrame, col: str, factory: Callable[[], object],
@@ -97,16 +110,53 @@ def _named_merge_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                             "sketch": [s.to_bytes() for s in accs.values()]})
 
 
+# the sketches native/SketchFold.java folds byte for byte (KLL: with n
+# exact), and the column types it reads as long / as double
+_JVM_SKETCHES = (HyperLogLog, CountMin, Bloom, ThetaKMV, KLL)
+_LONG_TYPES = ("tinyint", "smallint", "int", "bigint")
+_DOUBLE_TYPES = _LONG_TYPES + ("float", "double")
+
+
+def _jvm_empties(src: DataFrame, col: str, factories: dict,
+                 as_float: bool) -> list[bytes] | None:
+    """Each factory's empty sketch as ``to_bytes()`` when SketchFold can
+    fold them all (every sketch one of ``_JVM_SKETCHES``, only KLL on
+    ``as_float``, an integral or, on ``as_float``, floating column), else
+    None: the Python fold then runs."""
+    sketches = [f() for f in factories.values()]
+    if as_float:
+        ok = all(type(s) is KLL for s in sketches)
+        types = _DOUBLE_TYPES
+    else:
+        ok = all(type(s) in _JVM_SKETCHES for s in sketches)
+        types = _LONG_TYPES
+    if not ok or dict(src.dtypes)[col] not in types:
+        return None
+    return [s.to_bytes() for s in sketches]
+
+
+def _fold(df: DataFrame, col: str, factories: dict,
+          as_float: bool) -> tuple[DataFrame, bool]:
+    """(name, blob) rows, one per factory per fold task that saw data,
+    and whether SketchFold (not a Python worker) folded them."""
+    # nulls are dropped JVM-side BEFORE the fold: a nullable long column
+    # with any null reaching pandas arrives as float64, and a float64
+    # round-trip silently corrupts 64-bit keys above 2^53
+    src = size_python_fold(
+        df.select(F.col(col).alias(col)).dropna(subset=[col]))
+    empties = _jvm_empties(src, col, factories, as_float)
+    if empties is None:
+        return src.mapInPandas(_multi_partial_map(factories, col, as_float),
+                               schema=_NAMED_BLOB_SCHEMA), False
+    spark = df.sparkSession
+    return DataFrame(_jvm_factory(spark, "SketchFold").fold(
+        src._jdf, list(factories), empties, as_float), spark), True
+
+
 def _sketch_partials(df: DataFrame, col: str, factories: dict,
                      as_float: bool) -> DataFrame:
     """(name, blob) rows, one per factory per fold task that saw data."""
-    # nulls are dropped JVM-side BEFORE the Arrow boundary: a nullable
-    # long column with any null reaching pandas arrives as float64, and
-    # a float64 round-trip silently corrupts 64-bit keys above 2^53
-    src = df.select(F.col(col).alias(col)).dropna(subset=[col])
-    return size_python_fold(src).mapInPandas(
-        _multi_partial_map(factories, col, as_float),
-        schema=_NAMED_BLOB_SCHEMA)
+    return _fold(df, col, factories, as_float)[0]
 
 
 def multi_sketch_column(df: DataFrame, col: str,
@@ -124,18 +174,22 @@ def multi_sketch_column(df: DataFrame, col: str,
     Returns {name: merged sketch} for names that saw data; names whose
     input was empty are absent (callers keep their running state).
     """
-    partials = _sketch_partials(df, col, factories, as_float)
+    partials, jvm = _fold(df, col, factories, as_float)
     # merge-tree sizing: defaultParallelism bounds the fold task count
     # of any input the coalesce sizing touches, and approximates it for
     # the rest, without df.rdd.getNumPartitions(), which would convert
     # the analyzed plan to an RDD just to read a number.
     # Underestimating only means more blobs per merge bucket — blobs
     # are KBs, so any estimate in the right order of magnitude is fine.
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
+    spark = df.sparkSession
+    n_parts = spark.sparkContext.defaultParallelism
     if n_parts > tree_fanout:
         buckets = max(1, math.ceil(n_parts / tree_fanout))
-        partials = partials.repartition(buckets) \
-            .mapInPandas(_named_merge_map, schema=_NAMED_BLOB_SCHEMA)
+        partials = partials.repartition(buckets)
+        partials = (DataFrame(_jvm_factory(spark, "SketchFold")
+                              .merge(partials._jdf), spark) if jvm
+                    else partials.mapInPandas(_named_merge_map,
+                                              schema=_NAMED_BLOB_SCHEMA))
     merged: dict[str, object] = {}
     for r in partials.collect():
         sk = sketch_from_bytes(bytes(r["sketch"]))

@@ -11,6 +11,18 @@ shard per micro-batch — and the result after any batch is
 byte-identical to a from-scratch batch build over the same key set
 (np.unique in the shard kernel makes bytes order-invariant).
 
+Each log append also writes ``filters/_seq.json``, a sidecar holding
+the append's seq and the log's part-file listing (name, size,
+``mtime_ns``), through a temp file and one ``os.replace``.  A
+maintainer with no memo of its own (a fresh one, as every restart or
+new process builds) takes its next seq from the sidecar while the log's
+``*.parquet`` listing matches it exactly, and otherwise runs the Spark
+``max(seq)`` read, which still raises on a bad log: no sidecar, an
+unreadable one, another writer's file, a part file rewritten in place
+or a ``compact()`` swap (the swapped-in directory has no sidecar) all
+fall through.  Spark's reads skip ``_``-prefixed files, and readers such
+as the streaming probe's refresh never write the sidecar.
+
 Also provided: streaming sketch aggregation via ``foreachBatch`` — each
 micro-batch folds into mergeable sketches (functions/sketches.py), the
 classic monoid pattern that Structured Streaming cannot express with
@@ -19,6 +31,7 @@ built-in aggregates.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from typing import Callable
@@ -31,6 +44,7 @@ from fastfilter_spark.operators.dist import (
     FILTER_TABLE_SCHEMA, ShardedFilter, build_filter_rows, complete_filter,
     keys_with_shard,
 )
+from fastfilter_spark.plans import size_python_fold
 
 # filter-table LOG row: one filter row per (shard, micro-batch that
 # touched it); reads resolve latest-wins by `seq`, a log-local
@@ -56,7 +70,8 @@ class IncrementalFilterMaintainer:
     observed metric names the touched shards, rebuilds ONLY those from
     their full key sets (partition-pruned read), and APPENDS the rebuilt
     rows stamped with a log-local monotonic ``seq`` (restart-safe, see
-    TABLE_LOG_SCHEMA), memoised against the log's file listing.  Readers
+    TABLE_LOG_SCHEMA), memoised against the log's file listing and
+    recorded in the log's seq sidecar (module docstring).  Readers
     resolve latest-wins per shard, so untouched shards keep serving
     their previous rows, and no batch row or payload is ever collected
     to the driver: per-batch cost is touched shards only, regardless of
@@ -77,6 +92,8 @@ class IncrementalFilterMaintainer:
         self.shard_bits = shard_bits
         self.keys_dir = os.path.join(base_dir, "keys")
         self.table_dir = os.path.join(base_dir, "filters")
+        # Spark's file listing skips "_"- and "."-prefixed names
+        self.seq_sidecar = os.path.join(self.table_dir, "_seq.json")
         # compact inside the batch callback every N batches: foreachBatch
         # is driver-serial per query, so this can never race an append
         self.compact_every = compact_every
@@ -96,22 +113,60 @@ class IncrementalFilterMaintainer:
         """Log-local monotonic sequence: max existing + 1 (survives
         stream restarts with fresh checkpoints, unlike batch_id).  The
         memo answers only while the log's part files are exactly those
-        recorded at this maintainer's last append or read; any other
-        writer, compact(), recovered swap or corrupt file changes that
-        set and falls through to a Spark max(seq) over the log."""
+        recorded at this maintainer's last append or read; a maintainer
+        without one asks the log's seq sidecar (``_sidecar_seq``).  Any
+        other writer, compact(), recovered swap or corrupt file changes
+        that listing and falls through to a Spark max(seq) over the
+        log."""
         files = self._log_files()
         if not files:
             return 1
         if files == self._seq_memo[0]:
             return self._seq_memo[1] + 1
-        # NO broad except: a read error defaulting to seq=1 would stamp
-        # new rows BELOW the existing max, so latest-wins would serve
-        # stale shard payloads (silent false negatives).  Only an empty
-        # or missing log maps to 1; read errors propagate (retryable).
-        cur = int(spark.read.schema(TABLE_LOG_SCHEMA)
-                  .parquet(self.table_dir).agg(F.max("seq")).first()[0] or 0)
+        cur = self._sidecar_seq(files)
+        if cur is None:
+            # NO broad except: a read error defaulting to seq=1 would
+            # stamp new rows BELOW the existing max, so latest-wins
+            # would serve stale shard payloads (silent false negatives).
+            # Only an empty or missing log maps to 1; read errors
+            # propagate (retryable).
+            cur = int(spark.read.schema(TABLE_LOG_SCHEMA)
+                      .parquet(self.table_dir).agg(F.max("seq"))
+                      .first()[0] or 0)
         self._seq_memo = (files, cur)
         return cur + 1
+
+    def _listing(self, files) -> dict:
+        """{part-file name: [size, mtime_ns]} of the log's ``files``."""
+        out = {}
+        for name in sorted(files):
+            st = os.stat(os.path.join(self.table_dir, name))
+            out[name] = [st.st_size, st.st_mtime_ns]
+        return out
+
+    def _write_sidecar(self, files, seq: int) -> None:
+        """Record ``seq`` as the max seq of the log whose part files are
+        ``files``: a temp file, then one ``os.replace``."""
+        body = json.dumps({"seq": seq, "files": self._listing(files)})
+        tmp = os.path.join(self.table_dir, "._seq.json.tmp")
+        with open(tmp, "w") as f:
+            f.write(body)
+        os.replace(tmp, self.seq_sidecar)
+
+    def _sidecar_seq(self, files) -> int | None:
+        """The seq the sidecar records, while the log's part files are
+        exactly the ones it lists, each with its recorded size and
+        mtime; None for a missing or unreadable sidecar or any other
+        listing (another writer's file, a compact() swap, a part file
+        rewritten in place)."""
+        try:
+            with open(self.seq_sidecar) as f:
+                side = json.load(f)
+            if side["files"] != self._listing(files):
+                return None
+            return int(side["seq"])
+        except (OSError, ValueError, KeyError, TypeError):
+            return None
 
     # -- foreachBatch entry ----------------------------------------------
 
@@ -150,7 +205,9 @@ class IncrementalFilterMaintainer:
         rebuilt.withColumn("batch_id", F.lit(int(batch_id)).cast("long")) \
             .withColumn("seq", F.lit(seq).cast("long")) \
             .write.mode("append").parquet(self.table_dir)
-        self._seq_memo = (self._log_files(), seq)
+        files = self._log_files()
+        self._seq_memo = (files, seq)
+        self._write_sidecar(files, seq)
         self._batches_seen += 1
         if self.compact_every and self._batches_seen % self.compact_every == 0:
             self.compact(spark)
@@ -182,8 +239,11 @@ class IncrementalFilterMaintainer:
         The input_rows tiebreak makes the winner deterministic when a
         re-delivered batch logs the same shard twice at one seq
         (identical payload, but the later row saw the re-appended keys,
-        so its input_rows is higher)."""
-        log = spark.read.schema(TABLE_LOG_SCHEMA).parquet(self.table_dir)
+        so its input_rows is higher).  The read is sized by its bytes
+        (``plans.size_python_fold``): a small log resolves in one
+        partition, with no Exchange under the Window."""
+        log = size_python_fold(
+            spark.read.schema(TABLE_LOG_SCHEMA).parquet(self.table_dir))
         w = Window.partitionBy("shard").orderBy(
             F.desc("seq"), F.desc("input_rows"))
         return (log.withColumn("_rn", F.row_number().over(w))

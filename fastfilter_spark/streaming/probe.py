@@ -26,7 +26,9 @@ Each micro-batch is probed executor-side via the broadcast
 ``contains_udf`` (inside the JVM, so no column crosses into Python; a
 null key is never a member, so ``drop_members`` keeps its row) and
 survivors append to a parquet sink dir — at deployment scale point the
-sink at the object-store/Iceberg landing table instead.
+sink at the object-store/Iceberg landing table instead.  The append is
+sized by the batch's input bytes (``plans.size_python_fold``), so a
+small micro-batch writes one file.
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fastfilter_spark.plans import size_python_fold
 from fastfilter_spark.streaming.incremental import (
     IncrementalFilterMaintainer,
 )
@@ -121,7 +124,9 @@ class StreamingFilterProbe:
             is_member = self._udf(F.col(self.probe_col))
             out = batch_df.where(~is_member if self.mode == "drop_members"
                                  else is_member)
-        out.write.mode("append").parquet(self.out_dir)
+        # sized by its input bytes: a small micro-batch appends one file,
+        # not one per input split, each with its own chmod forks
+        size_python_fold(out).write.mode("append").parquet(self.out_dir)
         self._last_batch_id = batch_id
 
     def attach(self, stream_df: DataFrame, checkpoint: str):

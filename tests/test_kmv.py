@@ -128,12 +128,12 @@ def test_bottomk_validates_k(spark):
 
 def test_bottomk_plan_has_no_wide_exchange_of_keys(spark):
     """The fold must reduce per partition BEFORE any exchange: the only
-    shuffle inputs are the <= k*parts survivors (mapInPandas comes
-    below the exchange in the plan)."""
+    shuffle inputs are the <= k*parts survivors (the JVM fold's
+    MapPartitions comes below the exchange in the plan)."""
     df = _df(spark, _keys("k", 100), 4)
     plan = bottomk_hashes(df, "key", 8)._jdf.queryExecution() \
         .executedPlan().toString()
-    i_map = plan.find("MapInPandas")
+    i_map = plan.find("MapPartitions")
     i_ex = plan.find("Exchange")
     assert i_map != -1
     # tree prints root-first: the exchange must be ABOVE (printed

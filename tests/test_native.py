@@ -195,8 +195,8 @@ def test_kernel_compiles_warning_free():
 
 def test_probe_source_compiles_warning_free():
     """Every Java source of the jar (FilterProbe.java, the JVM probe;
-    FilterBuild.java, the JVM shard build) builds clean under javac
-    -Xlint:all.  The classpath is pyspark's jars minus derby and
+    FilterBuild.java, the JVM shard build; SketchFold.java, the JVM
+    sketch folds) builds clean under javac -Xlint:all.  The classpath is pyspark's jars minus derby and
     scala-compiler, whose manifests name Class-Path jars pyspark does
     not ship (javac's path lint reports those, not this source)."""
     import glob

@@ -174,6 +174,40 @@ def test_bucketed_write_is_one_file_per_bucket(spark, lineitem):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+def test_bucketed_write_fills_every_bucket_with_one_shard(spark, lineitem):
+    """An 8-shard write fills 8 of 8 buckets, bucket id = shard id: each
+    bucket file holds exactly the keys that route to its shard, and the
+    build over the table names its 8 shards 0..7."""
+    import os
+    import re
+
+    from fastfilter_spark.operators.dist import (
+        build_sharded_from_bucketed, write_bucketed_keys,
+    )
+    table = "keys_bucketed_fill_test"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    try:
+        write_bucketed_keys(lineitem, "l_orderkey", 3, table)
+        loc = {r["col_name"]: r["data_type"] for r in
+               spark.sql(f"DESCRIBE EXTENDED {table}").collect()}["Location"]
+        path = re.sub(r"^file:(//)?", "", loc)
+        files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        buckets = [int(re.search(r"_(\d{5})\.", f).group(1)) for f in files]
+        assert buckets == list(range(8)), files
+        want = keys_with_shard(lineitem, "l_orderkey", 3)
+        for f, b in zip(files, buckets):
+            got = spark.read.parquet(os.path.join(path, f)).select("key")
+            assert got.exceptAll(want.where(F.col("shard") == b)
+                                 .select("key")).count() == 0
+            assert want.where(F.col("shard") == b).select("key") \
+                .exceptAll(got).count() == 0
+        built = build_sharded_from_bucketed(spark, table, kind="fuse8")
+        assert sorted(r.shard for r in built.select("shard").collect()) \
+            == list(range(8))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 def test_build_sharded_from_bucketed_rejects_unbucketed(spark, lineitem):
     from fastfilter_spark.operators.dist import build_sharded_from_bucketed
     table = "keys_plain_plan_test"

@@ -4,7 +4,9 @@ sketches, driven by a bounded file stream with availableNow triggers
 rebuild on a test box)."""
 
 import glob
+import json
 import os
+import shutil
 
 import numpy as np
 import pytest
@@ -302,7 +304,9 @@ def test_second_micro_batch_collects_nothing(spark, tmp_path):
     and the seq read after it collect nothing to the driver: the touched
     shards come from the key-store write's observed metric and the seq
     from the memo of the log's file listing.  A fresh maintainer over an
-    existing log collects exactly once, for its seq read."""
+    existing log reads its seq from the log's sidecar and collects
+    nothing either; with a sidecar that no longer matches the log it
+    collects exactly once, for its seq read."""
     from tests.conftest import poison_collect, spy_collect
     base = str(tmp_path / "inc")
     maint = IncrementalFilterMaintainer(base, key_col="value",
@@ -318,7 +322,70 @@ def test_second_micro_batch_collects_nothing(spark, tmp_path):
     with spy_collect(collected):
         fresh.process_batch(_keys(spark, 3000, 4000), 2)
         assert fresh._next_seq(spark) == 4
+    assert collected == [], collected
+
+    with open(fresh.seq_sidecar) as f:
+        side = json.load(f)
+    side["files"].popitem()
+    with open(fresh.seq_sidecar, "w") as f:
+        json.dump(side, f)
+    stale = IncrementalFilterMaintainer(base, key_col="value",
+                                        kind="fuse8", shard_bits=2)
+    with spy_collect(collected):
+        stale.process_batch(_keys(spark, 4000, 4500), 3)
+        assert stale._next_seq(spark) == 5
     assert collected == [["max(seq)"]], collected
+
+
+def _truncate_sidecar(maint, spark):
+    with open(maint.seq_sidecar, "r+") as f:
+        f.truncate(len(f.read()) // 2)
+
+
+def _foreign_part_file(maint, spark):
+    """A valid log part file the sidecar does not list (another writer)."""
+    name = next(iter(maint._log_files()))
+    shutil.copy(os.path.join(maint.table_dir, name),
+                os.path.join(maint.table_dir, "part-foreign.parquet"))
+
+
+def _rewrite_in_place(maint, spark):
+    """A part file rewritten under its own name: the same bytes, a new
+    mtime."""
+    path = os.path.join(maint.table_dir, next(iter(maint._log_files())))
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+
+
+def _compact(maint, spark):
+    maint.compact(spark)
+
+
+@pytest.mark.parametrize("change", [_truncate_sidecar, _foreign_part_file,
+                                    _rewrite_in_place, _compact])
+def test_unmatched_sidecar_falls_back_to_one_spark_read(spark, tmp_path,
+                                                        change):
+    """A truncated sidecar, another writer's part file, a part file
+    rewritten in place and a log just swapped by compact() each make a
+    fresh maintainer read its seq with exactly one Spark read, and the
+    resolved filter equals a from-scratch build over the key store."""
+    from fastfilter_spark.operators.dist import build_sharded
+    from tests.conftest import spy_collect
+    base = str(tmp_path / "inc")
+    maint = IncrementalFilterMaintainer(base, key_col="value",
+                                        kind="fuse8", shard_bits=2)
+    maint.process_batch(_keys(spark, 0, 2000), 0)
+    maint.process_batch(_keys(spark, 2000, 3000), 1)
+    change(maint, spark)
+    collected = []
+    fresh = IncrementalFilterMaintainer(base, key_col="value",
+                                        kind="fuse8", shard_bits=2)
+    with spy_collect(collected):
+        fresh.process_batch(_keys(spark, 3000, 3500), 2)
+    assert collected == [["max(seq)"]], collected
+    keys_df = spark.read.parquet(fresh.keys_dir)
+    batch_sf, _ = build_sharded(keys_df, "key", kind="fuse8", shard_bits=2)
+    assert fresh.current_filter(spark).payloads == batch_sf.payloads
 
 
 def test_seq_memo_never_hides_another_writer(spark, tmp_path):

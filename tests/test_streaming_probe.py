@@ -213,3 +213,22 @@ def test_mode_validation():
         StreamingFilterProbe(None, "k", "/tmp/x", mode="bogus")
     with pytest.raises(ValueError, match="refresh_every"):
         StreamingFilterProbe(None, "k", "/tmp/x", refresh_every=0)
+
+
+def test_small_micro_batch_appends_one_sink_file(spark, tmp_path,
+                                                 maintained):
+    """The sink append is sized by the batch's input bytes: a small
+    batch read from four files writes one file, with every survivor."""
+    src = str(tmp_path / "four")
+    _member_keys(spark, 0, 1000).union(_novel_keys(spark, 3000)) \
+        .repartition(4).write.parquet(src)
+    batch = spark.read.parquet(src)
+    out = str(tmp_path / "out")
+    StreamingFilterProbe(maintained, "value", out,
+                         mode="drop_members").process_batch(batch, 0)
+    files = [f for f in os.listdir(out) if f.endswith(".parquet")]
+    assert len(files) == 1, files
+    members = _member_keys(spark, 0, 1000)
+    kept = spark.read.parquet(out)
+    assert kept.join(members, "value").count() == 0
+    assert kept.count() >= 3000 - 60        # fpp 2^-8 of the novel keys
