@@ -49,20 +49,24 @@ Scale design notes (targeting a 10^12-key Iceberg table, tested locally):
   exact hash table replaced by a 9-bit/key approximate one;
   ``probe_via_join`` cogroups the keys with the filter table by shard.
 
-Checkpoint/resume (BASELINE.json:north_rule): ``build_sharded`` with a
-``checkpoint_dir`` appends the built rows to that parquet directory in
-one write job.  Spark's default committer (FileOutputCommitter, algorithm
+Checkpoint (BASELINE.json:north_rule): ``build_sharded`` with a
+``checkpoint_dir`` writes the built rows to that parquet directory in
+one write job, then a build manifest (``_filter_build.json``: kind,
+shard count, arity, input fingerprint) through the session's Hadoop
+FileSystem.  Spark's default committer (FileOutputCommitter, algorithm
 version 1) publishes a job's files only when the whole job commits, so
-a build that fails part-way leaves no readable row behind and its rerun
-builds every shard again.  What a rerun resumes is a table an earlier
-job committed: it reads the directory, checks it against the current
-input, reuses the shards it holds and builds only the shards it lacks.
-Idempotent by shard id; per-shard lineage (input_rows, distinct keys,
+a build that fails part-way leaves no readable row and no manifest, and
+its rerun builds every shard.  The reference builds each filter once
+over the whole key set, so the unit a rerun reuses is a whole committed
+build: a directory with a manifest that matches the request and the
+input is returned as it stands; one holding files but no manifest is
+refused, never extended.  Per-shard lineage (input_rows, distinct keys,
 seed, build_ms) is stored alongside the payload.
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 from dataclasses import dataclass
@@ -96,19 +100,18 @@ _BUILD_ROW_SCHEMA = StructType(FILTER_TABLE_SCHEMA.fields[1:])
 
 
 def _input_fingerprint(df: DataFrame) -> str | None:
-    """Cheap dataset identity for checkpoint resume: sha256 over the
+    """Cheap dataset identity for a checkpoint rerun: sha256 over the
     scan's file listing (path + size + mtime where the file is locally
     stat-able).  Metadata-only — no Spark job runs.  Returns ``None``
     when the plan has no file scan (in-memory input) or listing fails;
-    callers then fall back to the authoritative per-shard recount.
+    a rerun then falls back to the authoritative per-shard recount.
 
     Paths are content-addressed in practice (parquet part files carry
     writer UUIDs), so a matching listing means the same dataset unless
     someone rewrote a file IN PLACE with the same name — stat info
     catches that for local files; for remote filesystems a same-name
-    in-place rewrite is the one case this fast path cannot see, which
-    is why validate_checkpoint's recount remains the fallback and the
-    override story.
+    in-place rewrite is the one case this fast path cannot see (pin the
+    read to a snapshot, SCALE.md).
 
     The hash also covers the NORMALIZED analyzed plan (expression ids
     stripped — they vary per session): two different queries over the
@@ -140,21 +143,46 @@ def _input_fingerprint(df: DataFrame) -> str | None:
     return h.hexdigest()
 
 
-def _fingerprint_path(checkpoint_dir: str) -> str:
-    local = checkpoint_dir[7:] if checkpoint_dir.startswith("file://") else (
-        checkpoint_dir[5:] if checkpoint_dir.startswith("file:")
-        else checkpoint_dir)
-    # leading underscore: Spark's parquet reader treats _-prefixed files
-    # as hidden, so the sidecar never pollutes the filter table read
-    return os.path.join(local, "_input_fingerprint")
+# the manifest a checkpoint_dir holds once its build committed; Spark's
+# parquet reader skips _-prefixed names, so it never enters a table read
+_MANIFEST = "_filter_build.json"
 
 
-def _read_fingerprint(path: str) -> str | None:
-    try:
-        with open(path) as f:
-            return f.read().strip() or None
-    except OSError:
+def _checkpoint_paths(spark: SparkSession, checkpoint_dir: str):
+    """(Hadoop FileSystem, directory Path, manifest Path) of
+    ``checkpoint_dir`` under the session's Hadoop conf, so a local path,
+    file://, hdfs:// and s3a:// are read and written alike."""
+    sc = spark.sparkContext
+    path = sc._jvm.org.apache.hadoop.fs.Path
+    directory = path(checkpoint_dir)
+    return (directory.getFileSystem(sc._jsc.hadoopConfiguration()),
+            directory, path(directory, _MANIFEST))
+
+
+def _read_manifest(fs, manifest) -> dict | None:
+    if not fs.exists(manifest):
         return None
+    stream = fs.open(manifest)
+    try:
+        return json.loads(bytes(stream.readAllBytes()))
+    finally:
+        stream.close()
+
+
+def _write_manifest(fs, manifest, fields: dict) -> None:
+    stream = fs.create(manifest, True)
+    try:
+        stream.write(json.dumps(fields).encode())
+    finally:
+        stream.close()
+
+
+def _holds_files(fs, directory) -> bool:
+    """Whether ``directory`` holds a name Spark's file listing reads
+    (one not starting with ``_`` or ``.``)."""
+    return fs.exists(directory) and any(
+        not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(directory))
 
 
 def shard_of_hash(keys_u64: np.ndarray, shard_bits: int) -> np.ndarray:
@@ -374,7 +402,6 @@ def build_sharded_table(
     shard_bits: int | None = None,
     target_keys_per_shard: int = 1 << 22,
     checkpoint_dir: str | None = None,
-    validate_checkpoint: bool = True,
     arity: int = 3,
 ) -> DataFrame:
     """Build the filter TABLE without materializing payloads on the
@@ -404,12 +431,16 @@ def build_sharded_table(
              -> merge long[]s -> unique -> populate        [FilterBuild finish]
              -> 2^bits tiny rows
 
-    With ``checkpoint_dir`` the built rows are appended to that parquet
-    directory, and a rerun over a table an earlier job committed builds
-    only the shards it lacks (resume-by-shard-id,
-    BASELINE.json:north_rule) after validating the input is unchanged.
-    Rows become readable only when the write job commits, so a failed
-    build leaves nothing to resume (module docstring).
+    With ``checkpoint_dir`` the directory holds exactly one committed
+    build (module docstring).  Absent or without files, it gets the
+    built rows, then the manifest.  With a manifest, a rerun returns the
+    stored table, building nothing, once the request and the input
+    match it: ``ValueError`` on another kind, shard count or arity, on
+    a different input (the input fingerprint, else a per-shard recount
+    of input rows) and on a stored payload that probes a current key
+    False (a spot check of up to 256 keys).  A directory holding files
+    but no manifest raises ``ValueError``; it is never overwritten or
+    extended.
     """
     spark = df.sparkSession
     # argument errors fail HERE on the driver, not minutes later inside
@@ -426,135 +457,81 @@ def build_sharded_table(
     num_shards = 1 << shard_bits
 
     keyed = keys_with_shard(df, key_col, shard_bits)
+    if checkpoint_dir is None:
+        return build_filter_rows(keyed, kind, num_shards, arity=arity)
 
-    done: set[int] = set()
-    requested_validation = validate_checkpoint
-    if checkpoint_dir is not None:
-        try:
-            existing = spark.read.schema(FILTER_TABLE_SCHEMA) \
-                .parquet(checkpoint_dir)
-            meta = existing.select(
-                "shard", "kind", "num_shards", "input_rows").collect()
-        except Exception:
-            meta = []
-        if meta:
-            # resume only into a COMPATIBLE checkpoint: mixing kinds or
-            # shard counts would deserialize old payloads with the new
-            # parameters — silent garbage membership bits
-            kinds = {r["kind"] for r in meta}
-            shard_counts = {r["num_shards"] for r in meta}
-            if kinds != {kind} or shard_counts != {num_shards}:
-                raise ValueError(
-                    f"checkpoint_dir {checkpoint_dir} holds an incompatible "
-                    f"build (kind={sorted(kinds)}, num_shards="
-                    f"{sorted(shard_counts)}) vs requested "
-                    f"(kind={kind}, num_shards={num_shards}); "
-                    "use a fresh directory")
-            if kind.startswith("fuse"):
-                # FILTER_TABLE_SCHEMA stores no arity column, but each
-                # payload's wire layout determines it — inspect one row
-                # so an arity-3 checkpoint cannot silently resume into a
-                # mixed-arity table when arity=4 was requested
-                sample = existing.select("payload").first()["payload"]
-                stored_arity = filter_from_bytes(bytes(sample), kind).arity
-                if stored_arity != arity:
-                    raise ValueError(
-                        f"checkpoint_dir {checkpoint_dir} holds "
-                        f"{stored_arity}-wise {kind} payloads but "
-                        f"arity={arity} was requested; use a fresh "
-                        "directory")
-            done = {r["shard"] for r in meta}
-        if done and validate_checkpoint:
-            # input-identity check: a resume against a CHANGED/GROWN input
-            # would silently reuse stale shard payloads — new keys routed
-            # to a 'done' shard would get false negatives, breaking the
-            # zero-false-negative guarantee.
-            #
-            # FAST PATH first: a dataset fingerprint (file listing hash)
-            # persisted at first build.  Matching it is metadata-only —
-            # no job, no O(input) scan per resume; only a missing or
-            # mismatching fingerprint falls through to the authoritative
-            # per-shard recount below.
-            fp_stored = _read_fingerprint(_fingerprint_path(checkpoint_dir))
-            if fp_stored is not None and fp_stored == _input_fingerprint(df):
-                validate_checkpoint = False
-        if done and validate_checkpoint:
-            # Stored input_rows is the
-            # exact pre-dedup row count the kernel saw, so recount the
-            # current input per shard (map-side partial agg; only key+
-            # shard columns scan) and require equality for done shards.
-            stored = {r["shard"]: r["input_rows"] for r in meta}
-            current = {r["shard"]: r["n"] for r in
-                       keyed.groupBy("shard").agg(F.count("*").alias("n"))
-                       .collect()}
-            bad = {s: (stored[s], current.get(s, 0))
-                   for s in done if stored[s] != current.get(s, 0)}
-            if bad:
-                ex = dict(list(sorted(bad.items()))[:4])
-                raise ValueError(
-                    f"checkpoint_dir {checkpoint_dir} was built from a "
-                    f"different input: per-shard row counts differ on "
-                    f"{len(bad)} completed shard(s) "
-                    f"(shard: (checkpointed, current)) {ex}; resuming "
-                    "would reuse stale payloads and produce false "
-                    "negatives — use a fresh directory "
-                    "(or validate_checkpoint=False to override)")
-        if done and requested_validation:
-            # behavioral spot-check, run even when the fingerprint fast
-            # path skipped the recount: row counts and input identity
-            # CANNOT catch a payload that is stale because the CODE
-            # changed under it (e.g. a 4-wise cell map from an older
-            # kernel version — same input, same counts, same layout,
-            # different hash mapping).  Probe a small sample of current
-            # input keys against their resumed shard payloads: a
-            # matching payload can never probe an inserted key negative
-            # (the zero-false-negative guarantee), so any miss proves
-            # the payload was built by incompatible code or over
-            # different keys.  Cost: one tiny sample job and one
-            # probe_via_join against the sampled shards' rows.
-            sample = {r["key"]: r["shard"] for r in
-                      keyed.select("key", "shard").limit(256).collect()
-                      if r["shard"] in done}
-            if sample:
-                probes = spark.createDataFrame(
-                    [(k,) for k in sample], "key long")
-                resumed = existing.where(
-                    F.col("shard").isin(sorted(set(sample.values()))))
-                miss = probe_via_join(probes, "key", resumed, num_shards) \
-                    .where(~F.col("member")).first()
-                if miss is not None:
-                    raise ValueError(
-                        f"checkpoint_dir {checkpoint_dir}: shard "
-                        f"{sample[miss['key']]} "
-                        "payload probes FALSE for keys present in the "
-                        "current input — the checkpoint was built over "
-                        "different keys or by an incompatible library "
-                        "version; resuming would produce false "
-                        "negatives.  Use a fresh directory (or "
-                        "validate_checkpoint=False to override)")
-        if done:
-            keyed = keyed.where(~F.col("shard").isin([int(s) for s in done]))
+    fs, directory, manifest_path = _checkpoint_paths(spark, checkpoint_dir)
+    manifest = _read_manifest(fs, manifest_path)
+    if manifest is None:
+        if _holds_files(fs, directory):
+            raise ValueError(
+                f"checkpoint_dir {checkpoint_dir} holds files but no "
+                f"committed build ({_MANIFEST}): a table another writer "
+                "or an older library version wrote, or one cut by hand; "
+                "use a fresh directory")
+        fingerprint = _input_fingerprint(df)
+        build_filter_rows(keyed, kind, num_shards, arity=arity) \
+            .write.mode("append").parquet(checkpoint_dir)
+        _write_manifest(fs, manifest_path, {
+            "kind": kind, "num_shards": num_shards, "arity": arity,
+            "input": fingerprint})
+        return spark.read.schema(FILTER_TABLE_SCHEMA).parquet(checkpoint_dir)
 
-    if len(done) < num_shards:
-        built = build_filter_rows(keyed, kind, num_shards, arity=arity)
-        if checkpoint_dir is not None:
-            built.write.mode("append").parquet(checkpoint_dir)
-            # persist the dataset fingerprint once so later resumes can
-            # validate input identity without an O(input) recount job
-            fp_path = _fingerprint_path(checkpoint_dir)
-            if _read_fingerprint(fp_path) is None:
-                fp = _input_fingerprint(df)
-                if fp is not None:
-                    try:
-                        with open(fp_path, "w") as f:
-                            f.write(fp)
-                    except OSError:
-                        pass  # non-local checkpoint fs: recount fallback
-            table = spark.read.schema(FILTER_TABLE_SCHEMA).parquet(checkpoint_dir)
-        else:
-            table = built
-    else:
-        table = spark.read.schema(FILTER_TABLE_SCHEMA).parquet(checkpoint_dir)
+    # reuse only a COMPATIBLE build: reading its payloads with other
+    # parameters would give silent garbage membership bits
+    if (manifest["kind"], manifest["num_shards"]) != (kind, num_shards):
+        raise ValueError(
+            f"checkpoint_dir {checkpoint_dir} holds an incompatible build "
+            f"(kind={manifest['kind']}, num_shards={manifest['num_shards']})"
+            f" vs requested (kind={kind}, num_shards={num_shards}); "
+            "use a fresh directory")
+    if manifest["arity"] != arity:
+        raise ValueError(
+            f"checkpoint_dir {checkpoint_dir} holds {manifest['arity']}-wise "
+            f"{kind} payloads but arity={arity} was requested; use a fresh "
+            "directory")
+    table = spark.read.schema(FILTER_TABLE_SCHEMA).parquet(checkpoint_dir)
+    stored_input = manifest["input"]
+    if stored_input is None or stored_input != _input_fingerprint(df):
+        # input identity: reusing payloads built over another input
+        # would give false negatives for its new keys.  Stored
+        # input_rows is the exact pre-dedup row count each shard's build
+        # saw (a shard with no row saw none), so recount the current
+        # input per shard (map-side partial agg over key + shard only)
+        stored = {r["shard"]: r["input_rows"] for r in
+                  table.select("shard", "input_rows").collect()}
+        current = {r["shard"]: r["n"] for r in
+                   keyed.groupBy("shard").agg(F.count("*").alias("n"))
+                   .collect()}
+        bad = {s: (stored.get(s, 0), current.get(s, 0))
+               for s in stored.keys() | current.keys()
+               if stored.get(s, 0) != current.get(s, 0)}
+        if bad:
+            ex = dict(sorted(bad.items())[:4])
+            raise ValueError(
+                f"checkpoint_dir {checkpoint_dir} was built from a "
+                f"different input: per-shard row counts differ on "
+                f"{len(bad)} shard(s) (shard: (checkpointed, current)) "
+                f"{ex}; reusing it would produce false negatives — use "
+                "a fresh directory")
+    # behavioural spot check, run even when the fingerprint matched: row
+    # counts and input identity CANNOT see a payload that is stale
+    # because the CODE changed under it (e.g. a 4-wise cell map from an
+    # older kernel version — same input, same counts, another hash
+    # mapping).  A matching payload never probes an inserted key False,
+    # so one miss among a few current keys proves the payload was built
+    # by incompatible code or over different keys.
+    miss = probe_via_join(keyed.select("key").limit(256), "key", table,
+                          num_shards).where(~F.col("member")).first()
+    if miss is not None:
+        shard = shard_of_hash(K.to_uint64(np.array([miss["key"]])),
+                              shard_bits)[0]
+        raise ValueError(
+            f"checkpoint_dir {checkpoint_dir}: shard {shard} payload "
+            "probes FALSE for keys present in the current input — the "
+            "checkpoint was built over different keys or by an "
+            "incompatible library version; reusing it would produce "
+            "false negatives.  Use a fresh directory")
     return table
 
 
@@ -565,7 +542,6 @@ def build_sharded(
     shard_bits: int | None = None,
     target_keys_per_shard: int = 1 << 22,
     checkpoint_dir: str | None = None,
-    validate_checkpoint: bool = True,
     arity: int = 3,
 ) -> tuple[ShardedFilter, DataFrame]:
     """Build a sharded filter over ``df[key_col]`` (int64 keys).
@@ -576,13 +552,13 @@ def build_sharded(
     probing goes through ``probe_via_join``, use ``build_sharded_table``
     instead (same build plan, no driver materialization).  Without
     ``shard_bits``, ``target_keys_per_shard`` counts input rows,
-    duplicates included (``build_sharded_table``).
+    duplicates included; ``checkpoint_dir`` holds one committed build,
+    which a matching rerun reuses as it stands (``build_sharded_table``).
     """
     shard_bits = _resolve_shard_bits(df, shard_bits, target_keys_per_shard)
     table = build_sharded_table(
         df, key_col, kind=kind, shard_bits=shard_bits,
-        checkpoint_dir=checkpoint_dir, validate_checkpoint=validate_checkpoint,
-        arity=arity)
+        checkpoint_dir=checkpoint_dir, arity=arity)
 
     return complete_filter(table.collect(), kind, 1 << shard_bits), table
 
@@ -597,7 +573,7 @@ def complete_filter(rows: Iterable, kind: str,
     emits non-empty groups only), so an oversized explicit shard_bits
     or a young incremental stream still yields a complete filter.
     ``from_filter_table`` itself keeps refusing missing shards: there
-    they mean a partial checkpoint table."""
+    they mean a table cut short by hand."""
     rows = [r.asDict() for r in rows]
     present = {r["shard"] for r in rows}
     if len(present) < num_shards:
@@ -738,8 +714,8 @@ def probe_via_join(probes: DataFrame, key_col: str,
 def build_filter_rows(keyed: DataFrame, kind: str,
                       num_shards: int, arity: int = 3) -> DataFrame:
     """Low-level: (key, shard) rows -> filter-table rows for the shards
-    PRESENT in ``keyed`` (no completeness requirement — used by
-    checkpoint resume and streaming incremental rebuild).  ``arity=4``
+    PRESENT in ``keyed`` (no completeness requirement — used by the
+    streaming incremental rebuild of touched shards).  ``arity=4``
     builds 4-wise fuse shards; probes need no flag (deserialization
     infers arity from each payload's layout).
 

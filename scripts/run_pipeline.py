@@ -10,8 +10,11 @@ run via
         --out /tmp/filter_out
 
 Synthesizes the webpages table (or reads --input parquet with the same
-schema), builds a sharded filter over the url keys with
-checkpoint/resume + lineage, probes it, and prints a JSON summary.
+schema), builds a sharded filter over the url keys into the --out
+checkpoint directory with per-shard lineage, probes it, and prints a
+JSON summary.  A rerun with the same --out and input reuses the
+committed table; one over another input, or into a directory holding
+files but no build manifest, raises ValueError.
 """
 
 from __future__ import annotations

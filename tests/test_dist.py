@@ -2,9 +2,13 @@
 
 Mirrors the reference lifecycle assertions (tests/unit.c:38-101) at the
 distributed layer: zero false negatives, fpp bound, byte-level
-partition-order invariance, checkpoint resume, semi-join pruning
+partition-order invariance, checkpoint reuse, semi-join pruning
 exactness.
 """
+
+import glob
+import json
+import os
 
 import numpy as np
 import pytest
@@ -126,13 +130,112 @@ def test_checkpoint_resume(spark, lineitem, tmp_path):
     assert a.payloads == b.payloads
     assert tb.count() == 4
 
-    # partial resume: drop shards 2,3 from the checkpoint, rebuild only those
+    # a table cut short by hand holds no manifest: refused, not extended
     kept = spark.read.parquet(ckpt).where(F.col("shard") < 2)
     tmp2 = str(tmp_path / "filters2")
     kept.write.parquet(tmp2)
-    c, tc = build_sharded(lineitem, "l_orderkey", kind="fuse8", shard_bits=2,
-                          checkpoint_dir=tmp2)
-    assert c.payloads == a.payloads
+    files = sorted(os.listdir(tmp2))
+    with pytest.raises(ValueError, match="no committed build"):
+        build_sharded(lineitem, "l_orderkey", kind="fuse8", shard_bits=2,
+                      checkpoint_dir=tmp2)
+    assert sorted(os.listdir(tmp2)) == files
+
+
+def _part_files(path) -> list[str]:
+    return sorted(glob.glob(os.path.join(path, "*.parquet")))
+
+
+def _manifest(ckpt) -> dict:
+    with open(os.path.join(ckpt, "_filter_build.json")) as f:
+        return json.load(f)
+
+
+def _rerun(spark, df, **kw):
+    """(SQL plans run, filter) of a checkpointed ``build_sharded``."""
+    out = []
+    plans = _sql_plans(spark, lambda: out.append(
+        build_sharded(df, "key", **kw)[0]))
+    return plans, out[0]
+
+
+def test_checkpoint_rerun_runs_no_build(spark, tmp_path):
+    """A matching rerun over a committed file-backed table reads its
+    manifest, skips the recount (the input fingerprint matches) and
+    runs only the spot check and the payload collect."""
+    src = str(tmp_path / "keys")
+    spark.range(20000).select(F.xxhash64("id").alias("key")) \
+        .write.parquet(src)
+    keys = spark.read.parquet(src)
+    ckpt = str(tmp_path / "ck")
+    a, _ = build_sharded(keys, "key", shard_bits=2, checkpoint_dir=ckpt)
+    manifest = _manifest(ckpt)
+    assert manifest["kind"] == "fuse8" and manifest["num_shards"] == 4
+    assert manifest["arity"] == 3 and manifest["input"] is not None
+    plans, b = _rerun(spark, keys, shard_bits=2, checkpoint_dir=ckpt)
+    assert not any("filterbuild(" in p for p in plans), plans
+    assert len(plans) <= 2, plans
+    assert b.payloads == a.payloads
+
+
+def test_checkpoint_with_empty_shards_is_not_rebuilt(spark, tmp_path):
+    """20 keys over 16 shards leave some shards without a row.  Those
+    shards are empty, not missing: a rerun builds nothing and writes no
+    file."""
+    keys = spark.createDataFrame([(i * 7919,) for i in range(20)],
+                                 "key long")
+    ckpt = str(tmp_path / "ck")
+    a, table = build_sharded(keys, "key", shard_bits=4, checkpoint_dir=ckpt)
+    assert table.count() < 16
+    files = _part_files(ckpt)
+    for _ in range(2):
+        plans, b = _rerun(spark, keys, shard_bits=4, checkpoint_dir=ckpt)
+        assert not any("filterbuild(" in p for p in plans), plans
+        assert _part_files(ckpt) == files
+        assert b.payloads == a.payloads
+
+
+def test_checkpoint_file_uri_round_trip(spark, lineitem, tmp_path):
+    """A file:// checkpoint_dir: the manifest is written and read back
+    through the Hadoop FileSystem, and the rerun reuses the table."""
+    ckpt = (tmp_path / "ck").as_uri()
+    keys = lineitem.select(F.col("l_orderkey").alias("key"))
+    a, _ = build_sharded(keys, "key", shard_bits=1, checkpoint_dir=ckpt)
+    assert _manifest(tmp_path / "ck")["num_shards"] == 2
+    plans, b = _rerun(spark, keys, shard_bits=1, checkpoint_dir=ckpt)
+    assert not any("filterbuild(" in p for p in plans), plans
+    assert b.payloads == a.payloads
+
+
+def test_checkpoint_refuses_foreign_parquet(spark, tmp_path):
+    """A directory holding parquet files but no manifest (another
+    writer's table, or one an older library version wrote) is refused
+    and left as it is."""
+    ckpt = str(tmp_path / "foreign")
+    spark.range(10).write.parquet(ckpt)
+    files = sorted(os.listdir(ckpt))
+    keys = spark.range(100).select(F.col("id").alias("key"))
+    with pytest.raises(ValueError, match="use a fresh directory"):
+        build_sharded(keys, "key", shard_bits=1, checkpoint_dir=ckpt)
+    assert sorted(os.listdir(ckpt)) == files
+
+
+def test_checkpoint_in_memory_rerun_reuses_by_recount(spark, tmp_path):
+    """An in-memory input has no file listing, so its manifest stores
+    no input fingerprint: the rerun recounts rows per shard and reuses
+    the table when they match (run_pipeline.py reruns on synthesized
+    input rely on this); a changed input is refused."""
+    keys = spark.createDataFrame([(i * 104729,) for i in range(500)],
+                                 "key long")
+    ckpt = str(tmp_path / "ck")
+    a, _ = build_sharded(keys, "key", shard_bits=2, checkpoint_dir=ckpt)
+    assert _manifest(ckpt)["input"] is None
+    plans, b = _rerun(spark, keys, shard_bits=2, checkpoint_dir=ckpt)
+    assert not any("filterbuild(" in p for p in plans), plans
+    assert any("count(" in p for p in plans), plans
+    assert b.payloads == a.payloads
+    with pytest.raises(ValueError, match="different input"):
+        build_sharded(keys.limit(499), "key", shard_bits=2,
+                      checkpoint_dir=ckpt)
 
 
 def test_semi_join_prune_exact(spark, sf_dir):
