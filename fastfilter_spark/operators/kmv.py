@@ -18,14 +18,15 @@ expressed directly as DataFrame algebra, which buys three things at
 - **Map-side reduction to O(k) rows per fold task** before any
   shuffle: native/SketchFold.java's ``bottomK``, a narrow
   ``Dataset.mapPartitions`` inside Spark's JVM, folds each task's rows
-  into its running bottom-k, so the exchange moves ``<= k * fold_tasks``
-  8-byte rows instead of the distinct key set (the groupBy-distinct
-  alternative shuffles every distinct key — terabytes at 10^12 keys).
-  Fold tasks are sized by input bytes, not scan splits
-  (``plans.size_python_fold``): every task has a fixed start-up cost,
-  so a small input folds in
+  into its running bottom-k, so the merge exchange moves
+  ``<= k * fold_tasks`` 8-byte rows instead of the distinct key set
+  (the groupBy-distinct alternative shuffles every distinct key —
+  terabytes at 10^12 keys).  Fold tasks are sized by input bytes, not
+  scan splits (``plans.size_python_fold``): every task has a fixed
+  start-up cost, so a small input folds in
   ``ceil(bytes / spark.sql.files.openCostInBytes)`` tasks while a large
-  one keeps one task per input partition.
+  one keeps one task per input partition.  A one-task fold needs no
+  merge and no exchange at all.
 - **Everything after the fold is exact integer arithmetic** (the
   estimator divides in DECIMAL(38,0) / HUGEINT), so results are
   bit-identical under any partitioning and hash-checkable by a DuckDB
@@ -49,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fastfilter_spark.operators.dist import _jvm_factory
-from fastfilter_spark.plans import size_python_fold
+from fastfilter_spark.plans import fold_partitions, size_python_fold
 
 __all__ = ["portable_hash60", "bottomk_hashes", "kmv_distinct",
            "kmv_jaccard", "HMAX60"]
@@ -90,27 +91,42 @@ def bottomk_hashes(df: DataFrame, key_col: str, k: int,
     task's rows to its own k smallest distinct hashes in signed order,
     as ``np.unique`` orders int64 (a buffer of at least 2k values
     sorted, deduplicated and cut to k when it fills; once k are kept, a
-    hash at or above the k-th is dropped on arrival), then a global
-    ``TakeOrderedAndProject`` over the ``<= k * fold_tasks`` survivors.
-    No wide exchange of the key set ever happens.
+    hash at or above the k-th is dropped on arrival).  When the fold
+    sizing runs it as one task (``plans.fold_partitions`` is 1), those
+    rows are the answer and the plan has no exchange; otherwise one
+    more bottom-k pass over the ``<= k * fold_tasks`` partials, gathered
+    into one partition, merges them.  No wide exchange of the key set
+    ever happens; the rows come in ascending ``h`` order.
     """
-    partials = _bottomk_partials(df, key_col, k, hash_expr)
-    # distinct() first: the same hash can survive in several fold tasks'
-    # bottom-k; the sets are tiny so this exchange is O(k * fold_tasks)
-    return partials.distinct().orderBy("h").limit(k)
+    partials, one_task = _bottomk_partials(df, key_col, k, hash_expr)
+    return partials if one_task else _merge_bottomk(partials, k)
+
+
+def _bottomk(hashes: DataFrame, k: int) -> DataFrame:
+    """Each task's k smallest distinct values of ``hashes``' first
+    column, as ascending ``h: long`` rows (native/SketchFold.java)."""
+    spark = hashes.sparkSession
+    return DataFrame(_jvm_factory(spark, "SketchFold").bottomK(
+        hashes._jdf, k), spark)
+
+
+def _merge_bottomk(partials: DataFrame, k: int) -> DataFrame:
+    """The bottom-k of bottom-k partials: one more pass over them, in
+    one partition (the same hash may sit in several partials)."""
+    return _bottomk(partials.repartition(1), k)
 
 
 def _bottomk_partials(df: DataFrame, key_col: str, k: int,
-                      hash_expr=None) -> DataFrame:
-    """Each fold task's own bottom-k as ``h: long`` rows."""
+                      hash_expr=None) -> tuple[DataFrame, bool]:
+    """Each fold task's own bottom-k as ``h: long`` rows, and whether
+    the fold runs as one task."""
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
     h = hash_expr if hash_expr is not None \
         else portable_hash60(F.col(key_col))
     hashed = df.select(h.alias("h")).where(F.col("h").isNotNull())
-    spark = df.sparkSession
-    return DataFrame(_jvm_factory(spark, "SketchFold").bottomK(
-        size_python_fold(hashed)._jdf, k), spark)
+    return (_bottomk(size_python_fold(hashed), k),
+            fold_partitions(hashed) == 1)
 
 
 def kmv_distinct(df: DataFrame, key_col: str, k: int = 1024,
@@ -152,7 +168,7 @@ def kmv_jaccard(df_a: DataFrame, df_b: DataFrame, key_col: str,
     """
     ba = bottomk_hashes(df_a, key_col, k, hash_expr=hash_expr)
     bb = bottomk_hashes(df_b, key_col, k, hash_expr=hash_expr)
-    bu = ba.union(bb).distinct().orderBy("h").limit(k)
+    bu = _merge_bottomk(ba.union(bb), k)
     both = (bu.join(ba, "h", "left_semi")
               .join(bb, "h", "left_semi"))
     est = F.expr("CAST(CAST(matches AS DECIMAL(38,0)) "

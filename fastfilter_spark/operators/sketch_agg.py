@@ -153,12 +153,6 @@ def _fold(df: DataFrame, col: str, factories: dict,
         src._jdf, list(factories), empties, as_float), spark), True
 
 
-def _sketch_partials(df: DataFrame, col: str, factories: dict,
-                     as_float: bool) -> DataFrame:
-    """(name, blob) rows, one per factory per fold task that saw data."""
-    return _fold(df, col, factories, as_float)[0]
-
-
 def multi_sketch_column(df: DataFrame, col: str,
                         factories: dict[str, Callable[[], object]],
                         as_float: bool = False,

@@ -11,17 +11,9 @@ shard per micro-batch — and the result after any batch is
 byte-identical to a from-scratch batch build over the same key set
 (np.unique in the shard kernel makes bytes order-invariant).
 
-Each log append also writes ``filters/_seq.json``, a sidecar holding
-the append's seq and the log's part-file listing (name, size,
-``mtime_ns``), through a temp file and one ``os.replace``.  A
-maintainer with no memo of its own (a fresh one, as every restart or
-new process builds) takes its next seq from the sidecar while the log's
-``*.parquet`` listing matches it exactly, and otherwise runs the Spark
-``max(seq)`` read, which still raises on a bad log: no sidecar, an
-unreadable one, another writer's file, a part file rewritten in place
-or a ``compact()`` swap (the swapped-in directory has no sidecar) all
-fall through.  Spark's reads skip ``_``-prefixed files, and readers such
-as the streaming probe's refresh never write the sidecar.
+A maintainer takes its next seq from the log's own part files: one
+pyarrow read of their ``seq`` column, no Spark job, whenever their
+listing differs from the one it last appended or read.
 
 Also provided: streaming sketch aggregation via ``foreachBatch`` — each
 micro-batch folds into mergeable sketches (functions/sketches.py), the
@@ -31,11 +23,12 @@ built-in aggregates.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 from typing import Callable
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
@@ -70,8 +63,7 @@ class IncrementalFilterMaintainer:
     observed metric names the touched shards, rebuilds ONLY those from
     their full key sets (partition-pruned read), and APPENDS the rebuilt
     rows stamped with a log-local monotonic ``seq`` (restart-safe, see
-    TABLE_LOG_SCHEMA), memoised against the log's file listing and
-    recorded in the log's seq sidecar (module docstring).  Readers
+    TABLE_LOG_SCHEMA), memoised against the log's file listing.  Readers
     resolve latest-wins per shard, so untouched shards keep serving
     their previous rows, and no batch row or payload is ever collected
     to the driver: per-batch cost is touched shards only, regardless of
@@ -92,8 +84,6 @@ class IncrementalFilterMaintainer:
         self.shard_bits = shard_bits
         self.keys_dir = os.path.join(base_dir, "keys")
         self.table_dir = os.path.join(base_dir, "filters")
-        # Spark's file listing skips "_"- and "."-prefixed names
-        self.seq_sidecar = os.path.join(self.table_dir, "_seq.json")
         # compact inside the batch callback every N batches: foreachBatch
         # is driver-serial per query, so this can never race an append
         self.compact_every = compact_every
@@ -102,71 +92,37 @@ class IncrementalFilterMaintainer:
         self._seq_memo = (frozenset(), 0)
 
     def _log_files(self) -> frozenset:
-        """Names of the log's parquet part files; empty when the log dir
+        """Names of the log's parquet part files, skipping the "_"- and
+        "."-prefixed names Spark's reader skips; empty when the log dir
         is missing or holds none (e.g. mid-compact): 'empty log'."""
         if not os.path.isdir(self.table_dir):
             return frozenset()
         return frozenset(name for name in os.listdir(self.table_dir)
-                         if name.endswith(".parquet"))
+                         if name.endswith(".parquet")
+                         and not name.startswith(("_", ".")))
 
     def _next_seq(self, spark: SparkSession) -> int:
         """Log-local monotonic sequence: max existing + 1 (survives
         stream restarts with fresh checkpoints, unlike batch_id).  The
-        memo answers only while the log's part files are exactly those
-        recorded at this maintainer's last append or read; a maintainer
-        without one asks the log's seq sidecar (``_sidecar_seq``).  Any
-        other writer, compact(), recovered swap or corrupt file changes
-        that listing and falls through to a Spark max(seq) over the
-        log."""
+        memo answers while the log's part files are exactly those
+        recorded at this maintainer's last append or read; any other
+        listing (a fresh maintainer, another writer, compact()) reads
+        the ``seq`` column of those files with pyarrow, on the driver
+        and with no Spark job (``spark`` is unused)."""
         files = self._log_files()
         if not files:
             return 1
-        if files == self._seq_memo[0]:
-            return self._seq_memo[1] + 1
-        cur = self._sidecar_seq(files)
-        if cur is None:
+        if files != self._seq_memo[0]:
             # NO broad except: a read error defaulting to seq=1 would
             # stamp new rows BELOW the existing max, so latest-wins
             # would serve stale shard payloads (silent false negatives).
             # Only an empty or missing log maps to 1; read errors
-            # propagate (retryable).
-            cur = int(spark.read.schema(TABLE_LOG_SCHEMA)
-                      .parquet(self.table_dir).agg(F.max("seq"))
-                      .first()[0] or 0)
-        self._seq_memo = (files, cur)
-        return cur + 1
-
-    def _listing(self, files) -> dict:
-        """{part-file name: [size, mtime_ns]} of the log's ``files``."""
-        out = {}
-        for name in sorted(files):
-            st = os.stat(os.path.join(self.table_dir, name))
-            out[name] = [st.st_size, st.st_mtime_ns]
-        return out
-
-    def _write_sidecar(self, files, seq: int) -> None:
-        """Record ``seq`` as the max seq of the log whose part files are
-        ``files``: a temp file, then one ``os.replace``."""
-        body = json.dumps({"seq": seq, "files": self._listing(files)})
-        tmp = os.path.join(self.table_dir, "._seq.json.tmp")
-        with open(tmp, "w") as f:
-            f.write(body)
-        os.replace(tmp, self.seq_sidecar)
-
-    def _sidecar_seq(self, files) -> int | None:
-        """The seq the sidecar records, while the log's part files are
-        exactly the ones it lists, each with its recorded size and
-        mtime; None for a missing or unreadable sidecar or any other
-        listing (another writer's file, a compact() swap, a part file
-        rewritten in place)."""
-        try:
-            with open(self.seq_sidecar) as f:
-                side = json.load(f)
-            if side["files"] != self._listing(files):
-                return None
-            return int(side["seq"])
-        except (OSError, ValueError, KeyError, TypeError):
-            return None
+            # (a corrupt or zero-byte part file) propagate (retryable).
+            seqs = pq.read_table([os.path.join(self.table_dir, name)
+                                  for name in sorted(files)],
+                                 columns=["seq"])["seq"]
+            self._seq_memo = (files, pc.max(seqs).as_py() or 0)
+        return self._seq_memo[1] + 1
 
     # -- foreachBatch entry ----------------------------------------------
 
@@ -205,9 +161,7 @@ class IncrementalFilterMaintainer:
         rebuilt.withColumn("batch_id", F.lit(int(batch_id)).cast("long")) \
             .withColumn("seq", F.lit(seq).cast("long")) \
             .write.mode("append").parquet(self.table_dir)
-        files = self._log_files()
-        self._seq_memo = (files, seq)
-        self._write_sidecar(files, seq)
+        self._seq_memo = (self._log_files(), seq)
         self._batches_seen += 1
         if self.compact_every and self._batches_seen % self.compact_every == 0:
             self.compact(spark)

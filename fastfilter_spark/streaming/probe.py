@@ -71,8 +71,10 @@ class StreamingFilterProbe:
     def _refresh(self, spark: SparkSession) -> None:
         """Reload the filter snapshot iff the maintainer's log advanced
         (seq probe = a listing of the log dir while it still holds the
-        files the maintainer last appended or read, else one small
-        parquet column read; payloads re-broadcast only on change)."""
+        files the maintainer last appended or read, else a pyarrow read
+        of the part files' ``seq`` column on the driver, no Spark job;
+        a changed seq then costs one Spark ``current_filter`` read and a
+        re-broadcast of the payloads)."""
         try:
             seq = self.maintainer._next_seq(spark)
         except Exception:

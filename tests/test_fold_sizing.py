@@ -15,7 +15,7 @@ from fastfilter_spark.functions.sketches import (
 )
 from fastfilter_spark.operators.kmv import _bottomk_partials, bottomk_hashes
 from fastfilter_spark.operators.sketch_agg import (
-    _by_key_partials, _sketch_partials, sketch_column,
+    _by_key_partials, _fold, sketch_column,
 )
 from fastfilter_spark.plans import fold_partitions, size_python_fold
 from tests.conftest import sql_conf
@@ -64,10 +64,10 @@ def test_four_file_input_folds_in_one_python_task(spark, inputs):
     assert fold_partitions(df) == 1
     assert size_python_fold(df).rdd.getNumPartitions() == 1
     passes = {
-        "hll": _sketch_partials(df, "k", {"s": HyperLogLog}, False),
-        "cms": _sketch_partials(df, "k", {"s": CountMin}, False),
-        "kll": _sketch_partials(df, "k", {"s": KLL}, True),
-        "kmv": _bottomk_partials(df, "u", 64),
+        "hll": _fold(df, "k", {"s": HyperLogLog}, False)[0],
+        "cms": _fold(df, "k", {"s": CountMin}, False)[0],
+        "kll": _fold(df, "k", {"s": KLL}, True)[0],
+        "kmv": _bottomk_partials(df, "u", 64)[0],
         "by_key": _by_key_partials(df, ["u"], "k", HyperLogLog, False, 64),
     }
     for name, partials in passes.items():

@@ -48,7 +48,7 @@ def test_bottomk_partitioning_invariance(spark):
         b = [r.h for r in
              bottomk_hashes(_df(spark, keys, 13), "key", 64).collect()]
         partials = [count_partials(_bottomk_partials(
-            _df(spark, keys, n), "key", 64)) for n in (1, 13)]
+            _df(spark, keys, n), "key", 64)[0]) for n in (1, 13)]
     assert partials == [1, 13]
     assert sorted(a) == sorted(b) == sorted({_h60(s) for s in keys})[:64]
 
@@ -129,13 +129,30 @@ def test_bottomk_validates_k(spark):
 def test_bottomk_plan_has_no_wide_exchange_of_keys(spark):
     """The fold must reduce per partition BEFORE any exchange: the only
     shuffle inputs are the <= k*parts survivors (the JVM fold's
-    MapPartitions comes below the exchange in the plan)."""
+    MapPartitions comes below the exchange in the plan; this unsized
+    input's partials merge in a second MapPartitions above it)."""
     df = _df(spark, _keys("k", 100), 4)
     plan = bottomk_hashes(df, "key", 8)._jdf.queryExecution() \
         .executedPlan().toString()
-    i_map = plan.find("MapPartitions")
+    i_map = plan.rfind("MapPartitions")
     i_ex = plan.find("Exchange")
     assert i_map != -1
     # tree prints root-first: the exchange must be ABOVE (printed
     # before) the map-side fold, i.e. consume its output
     assert i_ex == -1 or i_ex < i_map
+
+
+def test_kmv_distinct_over_one_task_fold_has_no_exchange(spark):
+    """A sized input small enough to fold in one task needs no merge:
+    the fold's rows are the bottom-k, and the estimate's global
+    aggregate reads that single partition without a shuffle."""
+    from fastfilter_spark.plans import fold_partitions
+    keys = spark.range(0, 2000, 1, 4).select(
+        F.concat(F.lit("doc-"), F.col("id")).alias("key"))
+    assert fold_partitions(keys) == 1
+    est = kmv_distinct(keys, "key", k=64)
+    row = est.first()
+    plan = est._jdf.queryExecution().executedPlan().toString()
+    assert "MapPartitions" in plan and "Exchange" not in plan, plan
+    kth = sorted({_h60(f"doc-{i}") for i in range(2000)})[63]
+    assert (row.n_min, row.kth_hash) == (64, kth)

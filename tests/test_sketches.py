@@ -157,7 +157,7 @@ def test_spark_hll_vs_exact(spark, lineitem):
 
 def test_spark_hll_partition_order_invariance(spark, lineitem):
     from fastfilter_spark.functions.sketches import HyperLogLog
-    from fastfilter_spark.operators.sketch_agg import _sketch_partials
+    from fastfilter_spark.operators.sketch_agg import _fold
     from tests.conftest import count_partials, one_fold_task_per_partition
     keyed = lineitem.select(F.col("l_orderkey").cast("long").alias("k"))
     # the fold sizing would run this tiny input as ONE task, which
@@ -166,8 +166,8 @@ def test_spark_hll_partition_order_invariance(spark, lineitem):
     with one_fold_task_per_partition(spark):
         ins = (keyed.repartition(3), keyed.repartition(11, "k"))
         a, b = (sketch_column(d, "k", lambda: HyperLogLog(11)) for d in ins)
-        partials = [count_partials(_sketch_partials(
-            d, "k", {"s": lambda: HyperLogLog(11)}, False)) for d in ins]
+        partials = [count_partials(_fold(
+            d, "k", {"s": lambda: HyperLogLog(11)}, False)[0]) for d in ins]
     assert partials == [3, 11]
     assert a.to_bytes() == b.to_bytes()
 

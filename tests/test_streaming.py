@@ -304,9 +304,8 @@ def test_second_micro_batch_collects_nothing(spark, tmp_path):
     and the seq read after it collect nothing to the driver: the touched
     shards come from the key-store write's observed metric and the seq
     from the memo of the log's file listing.  A fresh maintainer over an
-    existing log reads its seq from the log's sidecar and collects
-    nothing either; with a sidecar that no longer matches the log it
-    collects exactly once, for its seq read."""
+    existing log reads its seq from the log's part files and collects
+    nothing either, and no append leaves a file beside them."""
     from tests.conftest import poison_collect, spy_collect
     base = str(tmp_path / "inc")
     maint = IncrementalFilterMaintainer(base, key_col="value",
@@ -323,27 +322,13 @@ def test_second_micro_batch_collects_nothing(spark, tmp_path):
         fresh.process_batch(_keys(spark, 3000, 4000), 2)
         assert fresh._next_seq(spark) == 4
     assert collected == [], collected
-
-    with open(fresh.seq_sidecar) as f:
-        side = json.load(f)
-    side["files"].popitem()
-    with open(fresh.seq_sidecar, "w") as f:
-        json.dump(side, f)
-    stale = IncrementalFilterMaintainer(base, key_col="value",
-                                        kind="fuse8", shard_bits=2)
-    with spy_collect(collected):
-        stale.process_batch(_keys(spark, 4000, 4500), 3)
-        assert stale._next_seq(spark) == 5
-    assert collected == [["max(seq)"]], collected
-
-
-def _truncate_sidecar(maint, spark):
-    with open(maint.seq_sidecar, "r+") as f:
-        f.truncate(len(f.read()) // 2)
+    assert {n for n in os.listdir(fresh.table_dir)
+            if not n.startswith(".")} == fresh._log_files() | {"_SUCCESS"}
 
 
 def _foreign_part_file(maint, spark):
-    """A valid log part file the sidecar does not list (another writer)."""
+    """A valid log part file this maintainer did not write (another
+    writer's)."""
     name = next(iter(maint._log_files()))
     shutil.copy(os.path.join(maint.table_dir, name),
                 os.path.join(maint.table_dir, "part-foreign.parquet"))
@@ -361,14 +346,39 @@ def _compact(maint, spark):
     maint.compact(spark)
 
 
-@pytest.mark.parametrize("change", [_truncate_sidecar, _foreign_part_file,
-                                    _rewrite_in_place, _compact])
-def test_unmatched_sidecar_falls_back_to_one_spark_read(spark, tmp_path,
-                                                        change):
-    """A truncated sidecar, another writer's part file, a part file
-    rewritten in place and a log just swapped by compact() each make a
-    fresh maintainer read its seq with exactly one Spark read, and the
-    resolved filter equals a from-scratch build over the key store."""
+def _leftover_sidecar(maint, spark):
+    """The seq sidecar an older version of the log wrote, listing the
+    current part files but claiming a higher seq."""
+    listing = {}
+    for name in sorted(maint._log_files()):
+        st = os.stat(os.path.join(maint.table_dir, name))
+        listing[name] = [st.st_size, st.st_mtime_ns]
+    with open(os.path.join(maint.table_dir, "_seq.json"), "w") as f:
+        json.dump({"seq": 99, "files": listing}, f)
+
+
+def _underscore_part_file(maint, spark):
+    """A "_"-prefixed parquet file holding a higher seq: Spark's reader
+    skips it, so the seq read must too."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    name = next(iter(maint._log_files()))
+    t = pq.read_table(os.path.join(maint.table_dir, name))
+    t = t.set_column(t.schema.get_field_index("seq"), "seq",
+                     pc.add(t["seq"], 97))
+    pq.write_table(t, os.path.join(maint.table_dir, "_stale.parquet"))
+
+
+@pytest.mark.parametrize("change", [_foreign_part_file, _rewrite_in_place,
+                                    _compact, _leftover_sidecar,
+                                    _underscore_part_file])
+def test_fresh_maintainer_reads_seq_without_spark(spark, tmp_path, change):
+    """Another writer's part file, a part file rewritten in place, a log
+    just swapped by compact(), a leftover seq sidecar and a "_"-prefixed
+    parquet file each leave a fresh maintainer's seq to the log's part
+    files: its micro-batch collects nothing, its seq read runs no Spark
+    job, the seq follows the log's max, and the resolved filter equals a
+    from-scratch build over the key store."""
     from fastfilter_spark.operators.dist import build_sharded
     from tests.conftest import spy_collect
     base = str(tmp_path / "inc")
@@ -382,10 +392,33 @@ def test_unmatched_sidecar_falls_back_to_one_spark_read(spark, tmp_path,
                                         kind="fuse8", shard_bits=2)
     with spy_collect(collected):
         fresh.process_batch(_keys(spark, 3000, 3500), 2)
-    assert collected == [["max(seq)"]], collected
+    assert collected == [], collected
+
+    sc = spark.sparkContext
+    group = f"fresh_seq_{change.__name__}"
+    sc.setJobGroup(group, group)
+    try:
+        seq = IncrementalFilterMaintainer(base)._next_seq(spark)
+    finally:
+        sc.setJobGroup("fresh_seq_done", "")
+    assert seq == 4
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
     keys_df = spark.read.parquet(fresh.keys_dir)
     batch_sf, _ = build_sharded(keys_df, "key", kind="fuse8", shard_bits=2)
     assert fresh.current_filter(spark).payloads == batch_sf.payloads
+
+
+def test_next_seq_raises_on_zero_byte_part_file(spark, tmp_path):
+    """A zero-byte part file (a truncated write) is a read error, not an
+    empty log: the seq read raises instead of answering from the rest."""
+    maint = IncrementalFilterMaintainer(str(tmp_path / "inc"),
+                                        key_col="value", kind="fuse8",
+                                        shard_bits=2)
+    maint.process_batch(_keys(spark, 0, 1000), 0)
+    open(os.path.join(maint.table_dir, "part-empty.parquet"), "wb").close()
+    with pytest.raises(Exception):
+        IncrementalFilterMaintainer(maint.base_dir)._next_seq(spark)
 
 
 def test_seq_memo_never_hides_another_writer(spark, tmp_path):
